@@ -9,131 +9,6 @@ package graft
   * the first query absorbs JVM/classloader startup.
   */
 object Bench {
-  /** The headline is EVERY oracle query except the sf-gated exact
-    * quadratic pair (see quadraticExact below): scan-agg, star joins,
-    * dim chains, window top-N, rollup/pivot/percentiles, text analysis
-    * (native hash expressions), the full dedup suite incl. survivor
-    * selection, similarity (brute + LSH + IVF top-k), multimodal,
-    * profiling, sketches, sampling, training-prep, and the three
-    * end-to-end pipeline marts — so a regression in ANY operator
-    * family shows up in BENCH, not just in CORRECTNESS.
-    */
-  private[graft] val headline = Seq(
-    "q01_pricing_summary", "q02_conditional_agg", "q03_kpi_ratios",
-    "q04_star_broadcast",
-    "q05_region_year_revenue", "q06_left_join_cast_key",
-    "q07_full_outer_coalesce", "q08_union_distinct", "q09_top_parts",
-    "q10_topn_per_group", "q11_filter_complex", "q12_case_chain_categories",
-    "q13_string_funcs", "q14_date_funcs", "q15_date_spine", "q16_time_spine",
-    "q17_token_stats",
-    "q18_text_quality", "q19_lang_id", "q20_fingerprint",
-    "q110_gopher_rules", "q111_filter_funnel",
-    "q95_bpe_pretokens", "q107_bpe_merges", "q124_bpe_apply",
-    "q154_bpe_pack_ids", "q155_multimodal_pack",
-    "q69_pii_redaction", "q71_heavy_hitters", "q72_stop_shingles", "q21_exact_dedup",
-    "q22_jaccard_pairs", "q23_minhash_sig", "q24_minhash_lsh_pairs",
-    "q112_cross_dedup", "q115_lsh_recall", "q160_containment_pairs",
-    "q235_winnow_pairs", "q244_lsh_tuning", "q248_record_linkage", "q257_weighted_jaccard",
-    "q25_simhash_pairs", "q26_cosine_neardup", "q27_ann_topk",
-    "q114_filtered_ann",
-    "q109_hard_negatives",
-    "q28_ann_lsh_buckets", "q108_random_projection",
-    "q29_binary_features", "q56_media_decode",
-    "q60_media_resize", "q61_audio_features", "q89_png_pixels",
-    "q118_jpeg_pixels", "q127_jpeg_progressive", "q119_video_frames",
-    "q123_gif_pixels", "q200_mjpeg_frames", "q213_adpcm_audio",
-    "q217_g711_audio", "q225_resonator_bands", "q232_mfcc", "q258_tiff_pixels",
-    "q156_image_dedup_clusters", "q279_ssim_pairs",
-    "q30_summary_stats",
-    "q31_null_dup_profile", "q84_correlation_matrix", "q85_chi2_association",
-    "q241_benford_audit", "q245_k_anonymity", "q267_t_closeness",
-    "q274_poisson_bootstrap", "q246_score_auc", "q278_average_precision",
-    "q105_source_divergence", "q106_moments", "q250_signal_mi",
-    "q32_json_extract", "q33_ann_lsh_topk", "q34_rollup", "q35_setops",
-    "q37_pivot",
-    "q36_semi_anti", "q83_unpivot", "q38_percentiles", "q239_hist_quantiles", "q39_neardup_dedup",
-    "q58_salted_join_agg", "q59_incremental_refresh",
-    "q40_approx_sketches", "q222_kmv_overlap", "q228_cms_frequencies",
-    "q236_countsketch_frequencies",
-    "q230_kmv_cardinality",
-    "q41_asof_join", "q42_interval_pairs",
-    "q43_dedup_clusters", "q57_dedup_clusters_star",
-    "q126_quality_survivors", "q44_window_suite",
-    "q45_cube", "q87_grouping_sets", "q88_relative_rank",
-    "q223_zorder_skipping", "q247_bloom_skipping",
-    "q46_sessions", "q70_gap_fill_locf", "q47_vocab_topk", "q48_tfidf_topterms",
-    "q49_label_centroids", "q50_edit_distance_pairs", "q51_histogram",
-    "q52_ngram_positions", "q53_ann_ivf_topk", "q54_bigram_surprise",
-    "q204_trigram_kn", "q205_lm_agreement", "q237_kn_perplexity",
-    "q238_zipf_fit", "q208_mrl_recall",
-    "q209_ngram_diversity", "q214_nsw_topk", "q215_nsw_recall",
-    "q216_graph_vs_ivf", "q218_pca_power", "q219_pca_project",
-    "q224_multiprobe_lsh", "q227_hnsw_vs_nsw",
-    "q55_stratified_sample", "q86_weighted_sample", "q113_tempered_sample",
-    "q234_weighted_reservoir", "q240_stratified_reservoir",
-    "q100_pq_encode", "q101_pq_adc_topk", "q117_ivf_pq_topk",
-    "q125_ivf_pq_filtered", "q153_ivfpq_residual_topk",
-    "q158_pq_recon_profile", "q159_pq_kmeans_ladder", "q231_opq_rung", "q275_rvq_ladder", "q233_hilbert_skipping",
-    "q120_hybrid_rrf",
-    "q75_semantic_dedup", "q90_semantic_dedup_auto", "q202_semdedup",
-    "q203_semdedup_overlap", "q210_soft_dedup_weights",
-    "q211_semantic_decontamination", "q212_decon_method_overlap",
-    "q76_mixture_sample",
-    "q77_winsorized_stats", "q82_winsorized_rankselect",
-    "q78_scd2_history", "q79_bm25_topk", "q80_exact_stratum_sample",
-    "q91_bloom_decontamination", "q92_robust_stats",
-    "q221_isotonic_calibration", "q229_isotonic_gate", "q271_platt_calibration", "q276_conformal_band", "q260_ece_calibration", "q226_rag_chunks",
-    "q62_decontamination", "q63_repetition_stats",
-    "q64_pack_offsets", "q65_quantize_stats", "q68_pack_segments",
-    "q81_chunk_spans", "q93_cdc_chunks", "q94_cdc_dedup_stats",
-    "q96_duplicated_spans", "q97_dup_span_stats",
-    "q98_corpus_shuffle", "q99_epoch_allocation", "q116_token_budget",
-    "q121_dsir_selection", "q252_set_cover", "q283_herding_coreset",
-    "q102_kmeans_fit", "q249_dbscan_grid", "q103_ngram_novelty",
-    "q104_quality_logit",
-    "q66_pipeline_mart",
-    "q73_pipeline_airport_mart", "q74_pipeline_route_mart",
-    "q122_jsonl_roundtrip", "q130_warc_roundtrip", "q131_orc_roundtrip",
-    "q243_avro_roundtrip",
-    "q220_zip_webdataset",
-    "q128_para_dedup", "q129_ccnet_buckets",
-    "q132_sq8_topk", "q136_ivf_sq8_topk", "q133_pagerank", "q256_personalized_pagerank", "q269_hits",
-    "q134_url_dedup", "q135_cluster_balanced", "q137_domain_stats",
-    "q138_corpus_diff", "q139_curation_funnel", "q140_simhash_recall",
-    "q141_quality_ensemble", "q142_cohort_retention", "q264_kaplan_meier", "q288_logrank", "q143_collocations",
-    "q144_event_funnel", "q145_triangle_count", "q146_item_neighbors",
-    "q147_event_transitions", "q255_adamic_adar", "q259_apriori_funnel", "q148_sq8_error_profile", "q149_ann_fidelity",
-    "q150_signal_spearman", "q261_kendall_tau", "q151_dup_source_matrix",
-    "q152_image_neardup",
-    "q157_tokenizer_source_stats",
-    "q161_lpa_communities", "q162_bucket_batching", "q163_dataset_card",
-    "q164_wordpiece_compare", "q201_unigram_lm",
-    "q206_tokenizer_optimal_gap", "q207_unigram_pack_ids",
-    "q165_ann_ndcg", "q166_feature_hashing",
-    "q167_dedup_roi", "q168_minhash_estimate", "q169_decayed_popularity",
-    "q170_contamination_spans", "q171_span_scrub",
-    "q172_waterfill_mixture", "q272_doremi_mixture", "q173_apportion_eval", "q174_mp4_metadata",
-    "q175_jaccard_prefix", "q176_binary_ann", "q177_tar_webdataset",
-    "q178_rolling_anomaly", "q242_ewma_anomaly", "q270_holt_winters", "q281_stl_strength", "q273_acf_audit", "q280_mann_kendall", "q253_theil_sen", "q254_cusum_changepoint", "q179_shard_manifest", "q251_rendezvous_shards", "q180_gate_kappa", "q263_mcnemar_gates",
-    "q188_mlm_mask_plan", "q189_boilerplate_filter", "q190_crawl_schedule",
-    "q191_dedup_method_matrix", "q192_vocab_growth", "q193_ann_mrr",
-    "q194_source_gini", "q195_leakfree_split", "q196_wilson_ranking", "q289_btl_arena",
-    "q197_embedding_drift", "q198_flatten_resample",
-    "q199_pack_boundary_stats",
-    "q181_ivf_bin_topk", "q265_rerank_cascade", "q182_mmr_topk", "q183_perceptron_gate", "q268_logit_gate", "q277_feature_shapley", "q282_quantile_regression",
-    "q184_ivf_nprobe_curve", "q185_embedding_outliers", "q262_ari_agreement", "q186_kcore",
-    "q187_cuped_experiment", "q284_sequential_ab", "q285_ipw_ate", "q286_regression_discontinuity", "q287_diff_in_diff",
-    "q290_ann_frontier", "q291_hll_cardinality", "q292_ams_f2",
-    "q293_naive_bayes", "q294_gini_stump", "q295_cochran_armitage",
-    "q296_bh_fdr", "q297_good_turing", "q298_brier_decomposition",
-    "q299_propensity_blocks", "q300_hll_overlap", "q301_mann_whitney",
-    "q302_permutation_test", "q303_welch_ttest", "q304_jackknife_se",
-    "q305_degree_assortativity", "q306_median_ci", "q307_capture_recapture",
-    "q308_audio_neardup", "q309_ivf_drift", "q310_hdr_quantiles",
-    "q311_blocklist", "q312_blocklist_scrub", "q313_otsu_gate",
-    "q314_psi_drift",
-    "q67_percentiles_rankselect")
-
   /** Exact quadratic baselines: correct, oracle-gated, and the right
     * thing to measure at sf≤0.1, but NOT the scale path — above that
     * the bench measures their LSH/banded counterparts (q24/q25/q28/
@@ -231,8 +106,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // the headline is EVERY registered query, in registry order, except
+    // the sf-gated exact quadratic set — so a regression in ANY operator
+    // family shows up in BENCH, not just in CORRECTNESS
     val requested = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").toSeq).getOrElse(headline)
+      .map(_.split(",").toSeq).getOrElse(SparkEntry.names)
     val sf = "sf([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(sfDir)
       .map(_.group(1).toDouble)
     val names =
@@ -353,6 +231,12 @@ object Bench {
       if (ts.isEmpty) n -> Timing(-1.0, 0.0, 0.0)
       else n -> ts.minBy(_.wall)
     }
+    // a query that failed in ANY pass is listed and makes the run
+    // untrusted: a failed run has no wall to add to `total`, so without
+    // this a broken query would only make the bench read faster
+    val failed = names.zipWithIndex.collect {
+      case (n, i) if allPasses.exists(_(i)._2.wall < 0) => n
+    }
     // drift = ratio of slowest pass total to fastest pass total; > 1.5
     // means the recorded mins may still be contaminated — rerun idle
     val passTotals = allPasses.map(_.map(_._2.wall).filter(_ >= 0).sum)
@@ -404,7 +288,9 @@ object Bench {
     val totalTask = results.map(_._2.task).sum
     val totalCpu = results.map(_._2.cpu).sum
     val contJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val untrusted = contended.nonEmpty || passDrift > 1.5 || extCpu > 0.15
+    val failJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val untrusted = failed.nonEmpty || contended.nonEmpty || passDrift > 1.5 ||
+      extCpu > 0.15
     // Self-label vs the committed idle-box lineage: three of four
     // driver captures in r5-r8 were uniformly contention-inflated with
     // every in-JVM self-trust flag green. Comparing this run's total
@@ -437,7 +323,7 @@ object Bench {
       s""","committed_ref":"$f","committed_total_sec":${r3(v)},"vs_committed":${r3(ratio)}"""
     }.getOrElse("")
     val (cal1t, cal32t) = calibrate()
-    val meta = s""""cpu_sec":${r3(totalCpu)},"task_total_sec":${r3(totalTask)},"contended":$contJson,"passes":$passes,"pass_drift":${r3(passDrift)},"ext_cpu":${r3(extCpu)},"cal_1t_sec":${r3(cal1t)},"cal_32t_sec":${r3(cal32t)},"untrusted":$untrusted$committedMeta,"sf":"$sfDir""""
+    val meta = s""""cpu_sec":${r3(totalCpu)},"task_total_sec":${r3(totalTask)},"contended":$contJson,"failed":$failJson,"passes":$passes,"pass_drift":${r3(passDrift)},"ext_cpu":${r3(extCpu)},"cal_1t_sec":${r3(cal1t)},"cal_32t_sec":${r3(cal32t)},"untrusted":$untrusted$committedMeta,"sf":"$sfDir""""
     val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"task_sec":$ts,$meta}"""
     // Persist the full line (all query names, wall + task maps) to a
     // file for the round artifacts...

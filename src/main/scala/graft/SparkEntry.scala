@@ -22,6 +22,9 @@ object SparkEntry {
     Relational.all.find(_.name == "q05_region_year_revenue").get
       .run(spark, "/root/testdata/sf0.001")
 
+  /** Every registered query name, in registry order. */
+  def names: Seq[String] = registry.map(_.name)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Q.toQueryMap(registry)

@@ -129,7 +129,8 @@ object Orchestrator {
     TaskDef("stream_ingest", Nil, () =>
       graft.streaming.StreamIngest.ingestOnce(spark, watchDir,
         graft.pipeline.FlightSchema.flightData,
-        s"$wh/bronze/stream_flights", s"$wh/_checkpoints/stream_flights")),
+        graft.pipeline.Warehouse.streamBronze.at(wh),
+        graft.pipeline.Warehouse.streamCheckpoint.at(wh))),
     TaskDef("incremental_fold", Seq("stream_ingest"), () => {
       graft.pipeline.Incremental.foldNewFiles(
         spark, wh, watchDir, airportsCsv, carriersCsv)

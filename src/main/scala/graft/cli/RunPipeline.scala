@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.core.{GraftSession, ParquetTable}
 import graft.pipeline._
 import graft.quality.Expectations
@@ -13,13 +13,8 @@ import graft.quality.Expectations
   *     <stage: bronze|silver|gold|export|all|incremental> <flightsCsv>
   *     <airportsCsv> <carriersCsv> <warehouseDir> [--validate]
   *
-  * Writes partitioned parquet via the TableFormat facade:
-  *   bronze/flights (partition_date), silver/flights
-  *   (FLIGHT_DATE would explode file counts at daily grain ×
-  *   airline — the reference's choice; we partition by AIRLINE_CODE
-  *   only and sort within partitions by date), gold dims/fact/marts
-  *   (the daily marts partitioned so `incremental` can swap months
-  *   in-place — see pipeline.Incremental).
+  * Every table goes where `pipeline.Warehouse` declares it, with that
+  * entry's partitioning and write shaping.
   *
   * `gate` is the per-stage quality hook (FlightSuites under
   * --validate); stages are public so specs and schedulers can drive
@@ -27,65 +22,39 @@ import graft.quality.Expectations
   */
 object RunPipeline {
 
-  type Gate = (DataFrame, Seq[Expectations.Expectation], String) => Unit
+  type Gate = Warehouse.Gate
   val noGate: Gate = (_, _, _) => ()
 
   def runBronze(spark: SparkSession, flightsCsv: String, airportsCsv: String,
       carriersCsv: String, wh: String, gate: Gate = noGate): Unit = {
     val bronze = Bronze.ingest(spark, flightsCsv, airportsCsv, carriersCsv)
-    gate(bronze, graft.quality.FlightSuites.bronze, "bronze")
-    ParquetTable.write(bronze, s"$wh/bronze/flights", Seq("partition_date"))
+    Warehouse.bronze.gate(gate, bronze)
+    Warehouse.bronze.write(bronze, wh)
   }
 
   def runSilver(spark: SparkSession, wh: String, gate: Gate = noGate): Unit = {
-    val silver = Silver.transform(ParquetTable.read(spark, s"$wh/bronze/flights"))
-    gate(silver, graft.quality.FlightSuites.silver, "silver")
-    ParquetTable.write(
-      silver.repartition(silver("AIRLINE_CODE"))
-        .sortWithinPartitions("FLIGHT_DATE"),
-      s"$wh/silver/flights", Seq("AIRLINE_CODE"))
+    val silver = Silver.transform(Warehouse.bronze.read(spark, wh))
+    Warehouse.silver.gate(gate, silver)
+    Warehouse.silver.write(silver, wh)
   }
 
   def runGold(spark: SparkSession, wh: String, gate: Gate = noGate): Unit = {
-    val silver = ParquetTable.read(spark, s"$wh/silver/flights")
-    val dimDate = GoldDims.dimDate(spark)
-    val dimTime = GoldDims.dimTime(spark)
-    val dimAirline = GoldDims.dimAirline(silver)
-    val dimAirport = GoldDims.dimAirport(silver)
-    val dimRoute = GoldDims.dimRoute(silver)
-    Seq("dim_date" -> dimDate, "dim_time" -> dimTime,
-      "dim_airline" -> dimAirline, "dim_airport" -> dimAirport,
-      "dim_route" -> dimRoute).foreach { case (n, d) =>
-      ParquetTable.write(d, s"$wh/gold/$n")
-    }
-    gate(dimDate, graft.quality.FlightSuites.dimDate, "dim_date")
-    gate(dimTime, graft.quality.FlightSuites.dimTime, "dim_time")
-    gate(dimAirport, graft.quality.FlightSuites.dimAirport, "dim_airport")
-    gate(dimRoute, graft.quality.FlightSuites.dimRoute, "dim_route")
+    val silver = Warehouse.silver.read(spark, wh)
+    val dims = Warehouse.dims(spark, silver)
+    dims.tables.foreach { case (t, d) => t.write(d, wh) }
+    dims.tables.foreach { case (t, d) => t.gate(gate, d) }
 
-    val fact = FactFlights.build(silver, dimDate, dimAirport, dimAirline, dimRoute)
-    gate(fact, graft.quality.FlightSuites.factFlights, "fact_flights")
-    ParquetTable.write(
-      fact.repartition(fact("DATE_KEY")), s"$wh/gold/fact_flights",
-      Seq("DATE_KEY"))
+    val fact = dims.fact(silver)
+    Warehouse.fact.gate(gate, fact)
+    Warehouse.fact.write(fact, wh)
 
-    val factR = ParquetTable.read(spark, s"$wh/gold/fact_flights")
-    ParquetTable.write(
-      Marts.dailyAirlinePerformance(factR, dimDate, dimAirline),
-      s"$wh/gold/daily_airline_performance", Seq("YEAR", "MONTH"))
-    ParquetTable.write(
-      Marts.dailyAirportPerformance(factR, dimDate, dimAirport),
-      s"$wh/gold/daily_airport_performance", Seq("FLIGHT_DATE"))
-    ParquetTable.write(
-      Marts.routePerformance(factR, dimDate, dimRoute, dimAirline),
-      s"$wh/gold/route_performance", Seq("YEAR", "MONTH"))
+    val factR = Warehouse.fact.read(spark, wh)
+    Warehouse.marts.foreach(m => m.table.write(m.build(factR, dims), wh))
   }
 
   def runExport(spark: SparkSession, wh: String): Unit =
-    Seq("daily_airline_performance", "daily_airport_performance",
-      "route_performance").foreach { mart =>
-      ParquetTable.exportCsv(
-        ParquetTable.read(spark, s"$wh/gold/$mart"), s"$wh/export/$mart")
+    Warehouse.marts.foreach { m =>
+      ParquetTable.exportCsv(m.table.read(spark, wh), m.exportAt(wh))
     }
 
   def main(args: Array[String]): Unit = {

@@ -1,8 +1,9 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.core.{GraftSession, ParquetTable}
-import graft.quality.{Expectations, FlightSuites}
+import graft.core.GraftSession
+import graft.pipeline.Warehouse
+import graft.quality.Expectations
 import graft.quality.Expectations.ValidationReport
 
 /** One-shot validation sweep over every warehouse layer — the
@@ -13,6 +14,7 @@ import graft.quality.Expectations.ValidationReport
   *
   *   spark-submit --class graft.cli.RunValidations <jar> <warehouseDir>
   *
+  * The layers and their suites are `pipeline.Warehouse`'s entries.
   * Each suite is ONE aggregation pass over its table (see
   * quality.Expectations), so the whole sweep costs one scan per layer.
   * A missing table is reported and counts as a failure — a monthly
@@ -26,31 +28,16 @@ object RunValidations {
     */
   def validateAll(spark: SparkSession, wh: String)
       : Seq[(String, Option[ValidationReport])] = {
-    val suites = Seq(
-      "bronze/flights" -> FlightSuites.bronze,
-      "silver/flights" -> FlightSuites.silver,
-      "gold/dim_date" -> FlightSuites.dimDate,
-      "gold/dim_time" -> FlightSuites.dimTime,
-      "gold/dim_airline" -> FlightSuites.dimAirline,
-      "gold/dim_airport" -> FlightSuites.dimAirport,
-      "gold/dim_route" -> FlightSuites.dimRoute,
-      "gold/fact_flights" -> FlightSuites.factFlights)
     // corpus-side layers validate only when present — a flights-only
     // warehouse is complete without them, but a landed corpus is
     // gated exactly like the marts (see quality.CorpusSuites)
-    val corpusSuites = Seq(
-      "corpus/documents" -> graft.quality.CorpusSuites.documents,
-      "corpus/embeddings" -> graft.quality.CorpusSuites.embeddings())
-      .filter { case (table, _) =>
-        new java.io.File(s"$wh/$table").isDirectory
+    (Warehouse.validated ++ Warehouse.corpus.filter(_.exists(spark, wh)))
+      .map { t =>
+        val report =
+          try Some(Expectations.validate(t.read(spark, wh), t.suite))
+          catch { case _: org.apache.spark.sql.AnalysisException => None }
+        t.path -> report
       }
-    (suites ++ corpusSuites).map { case (table, suite) =>
-      val report =
-        try Some(Expectations.validate(
-          ParquetTable.read(spark, s"$wh/$table"), suite))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      table -> report
-    }
   }
 
   /** True iff every layer exists and every check passed. */

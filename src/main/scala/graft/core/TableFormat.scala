@@ -22,6 +22,20 @@ object ParquetTable extends TableFormat {
   override def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** Whether anything exists at `path`, on whatever filesystem its
+    * URI names (a bare path, `file:`, `hdfs:`, …).
+    */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Recursively delete the table directory at `path`, if any. */
+  def drop(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
   override def write(df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)

@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Snapshot-versioned parquet table: the minimal lakehouse commit
@@ -13,17 +12,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   table/
   *     v00001/            immutable snapshot (parquet)
   *     v00002/
-  *     _commits/00002     zero-byte marker, created atomically
+  *     _commits/00002     commit marker ([[MarkerLog]])
   * }}}
   *
-  * Commit protocol: write the snapshot directory first, then create
-  * the commit marker with an atomic create-if-absent. Readers resolve
-  * "latest" from the marker directory, so a half-written snapshot
-  * (writer died mid-parquet-job) is invisible — its marker never
-  * appeared. Concurrent writers race on the marker create; the loser
-  * gets version N+2. Snapshots are immutable → time travel is just
-  * reading an older vNNNNN directory; `vacuum` drops superseded
-  * snapshots once readers age out.
+  * Commit protocol: write the snapshot directory first, then claim
+  * the version in the `_commits` [[MarkerLog]]. Readers resolve
+  * "latest" from that log, so a half-written snapshot (writer died
+  * mid-parquet-job) is invisible — its marker never appeared.
+  * Concurrent writers race on the marker create; the loser drops its
+  * snapshot and gets version N+2. Snapshots are immutable → time
+  * travel is just reading an older vNNNNN directory; `vacuum` drops
+  * superseded snapshots once readers age out.
   *
   * At 100 TB this is the same write amplification as any
   * copy-on-write format: one full rewrite per overwrite-commit. The
@@ -32,20 +31,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object VersionedTable {
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def versionDir(path: String, v: Int): String = f"$path/v$v%05d"
-  private def markerDir(path: String) = new Path(s"$path/_commits")
+  private def commits(spark: SparkSession, path: String) =
+    MarkerLog(spark, s"$path/_commits")
 
   /** Committed versions, ascending (empty for a fresh path). */
-  def versions(spark: SparkSession, path: String): Seq[Int] = {
-    val f = fs(spark, path)
-    val md = markerDir(path)
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq
-      .map(_.getPath.getName).filter(_.forall(_.isDigit)).map(_.toInt).sorted
-  }
+  def versions(spark: SparkSession, path: String): Seq[Int] =
+    commits(spark, path).names
+      .filter(_.forall(_.isDigit)).map(_.toInt).sorted
 
   def latestVersion(spark: SparkSession, path: String): Option[Int] =
     versions(spark, path).lastOption
@@ -56,7 +49,7 @@ object VersionedTable {
   def commit(df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil, maxAttempts: Int = 5): Int = {
     val spark = df.sparkSession
-    val f = fs(spark, path)
+    val log = commits(spark, path)
     var attempt = 0
     while (attempt < maxAttempts) {
       val v = latestVersion(spark, path).getOrElse(0) + 1 + attempt
@@ -64,18 +57,11 @@ object VersionedTable {
       val w = df.write.mode(SaveMode.ErrorIfExists)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(snapDir)
-      f.mkdirs(markerDir(path))
-      // atomic create-if-absent claims the version number
-      val marker = new Path(markerDir(path), f"$v%05d")
-      try {
-        f.create(marker, false).close()
-        return v
-      } catch {
-        case _: java.io.IOException =>
-          // lost the race: drop our orphan snapshot and retry higher
-          f.delete(new Path(snapDir), true)
-          attempt += 1
-      }
+      // atomic create-if-absent claims the version number; on a lost
+      // race drop our orphan snapshot and retry higher
+      if (log.create(f"$v%05d")) return v
+      ParquetTable.drop(spark, snapDir)
+      attempt += 1
     }
     sys.error(s"VersionedTable.commit: lost $maxAttempts version races at $path")
   }
@@ -128,11 +114,10 @@ object VersionedTable {
     * open files readable), while new readers no longer see it.
     */
   def vacuum(spark: SparkSession, path: String, keepLast: Int = 1): Unit = {
-    val f = fs(spark, path)
-    val vs = versions(spark, path)
-    vs.dropRight(keepLast).foreach { v =>
-      f.delete(new Path(markerDir(path), f"$v%05d"), false)
-      f.delete(new Path(versionDir(path, v)), true)
+    val log = commits(spark, path)
+    versions(spark, path).dropRight(keepLast).foreach { v =>
+      log.delete(f"$v%05d")
+      ParquetTable.drop(spark, versionDir(path, v))
     }
   }
 }

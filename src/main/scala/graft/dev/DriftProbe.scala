@@ -61,7 +61,7 @@ object DriftProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.local(appName = "graft-drift")
     val queries = graft.SparkEntry.queries
-    val names = graft.Bench.headline.filter(queries.contains)
+    val names = graft.SparkEntry.names
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.VersionedTable
+import graft.core.{MarkerLog, VersionedTable}
 import graft.operators.AnnIndex
 
 /** Continuous-ingest maintenance of the stored ANN index — the
@@ -12,9 +11,8 @@ import graft.operators.AnnIndex
   * current so query-time cost never regresses to "re-encode the
   * corpus".
   *
-  * Per newly landed `*.parquet` vector file (the same marker-log
-  * protocol as [[Incremental.foldNewFiles]] — listing diff, atomic
-  * create-if-absent markers, crash-safe because re-encoding an
+  * Per newly landed `*.parquet` vector file (tracked by a
+  * [[graft.core.MarkerLog]] fold, crash-safe because re-encoding an
   * unmarked file under the frozen model reproduces identical rows):
   *
   *  1. the batch's raw vectors APPEND to the `vectors/` table (the
@@ -43,16 +41,17 @@ import graft.operators.AnnIndex
   *
   * Steady-state ingest is therefore O(delta) END TO END, and retrains
   * are explicit, versioned, amortized events — never a per-batch
-  * surprise. The rows-at-last-build watermark lives in a zero-byte
-  * marker name (bounded driver-side metadata, like the fold markers).
+  * surprise. The rows-at-last-build watermark is a marker name in a
+  * second MarkerLog (bounded driver-side metadata, like the fold
+  * markers).
   *
   * Layout under `indexDir`:
   * {{{
   *   codebooks/ centroids/    VersionedTable model generations
   *   codes/ cells/            append-only (AnnIndex layout)
   *   vectors/                 append-only raw vectors (retrain corpus)
-  *   _folded_files/<name>     zero-byte fold markers
-  *   _model/rows_at_build_<n> zero-byte retrain watermark
+  *   _folded_files/<name>     MarkerLog of folded files
+  *   _model/rows_at_build_<n> MarkerLog holding the retrain watermark
   * }}}
   */
 object AnnIndexPipeline {
@@ -60,27 +59,17 @@ object AnnIndexPipeline {
   final case class FoldResult(file: String, rows: Long, action: String)
 
   private def vectorsDir(ix: String) = s"$ix/vectors"
-  private def modelMetaDir(ix: String) = s"$ix/_model"
+  private def modelLog(spark: SparkSession, ix: String) =
+    MarkerLog(spark, s"$ix/_model")
 
-  private def hfs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def rowsAtLastBuild(spark: SparkSession, ix: String): Option[Long] = {
-    val dir = new Path(modelMetaDir(ix))
-    val fs = hfs(spark, ix)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+  private def rowsAtLastBuild(spark: SparkSession, ix: String): Option[Long] =
+    modelLog(spark, ix).names
       .collect { case s if s.startsWith("rows_at_build_") =>
         s.stripPrefix("rows_at_build_").toLong }
       .sorted.lastOption
-  }
 
-  private def recordBuild(spark: SparkSession, ix: String, rows: Long): Unit = {
-    val fs = hfs(spark, ix)
-    fs.mkdirs(new Path(modelMetaDir(ix)))
-    fs.create(new Path(modelMetaDir(ix), s"rows_at_build_$rows"), false)
-      .close()
-  }
+  private def recordBuild(spark: SparkSession, ix: String, rows: Long): Unit =
+    modelLog(spark, ix).create(s"rows_at_build_$rows")
 
   /** Fold every not-yet-processed `*.parquet` vector file (schema:
     * idCol, vecCol, …) from `watchDir` into the stored index.
@@ -93,14 +82,8 @@ object AnnIndexPipeline {
       maxImbalance: Double = Double.PositiveInfinity): Seq[FoldResult] = {
     require(retrainGrowth > 1.0, "retrainGrowth must exceed 1")
     require(maxImbalance > 1.0, "maxImbalance must exceed 1 (balanced)")
-    val logDir = new Path(s"$indexDir/_folded_files")
-    val fs = hfs(spark, indexDir)
-    fs.mkdirs(logDir)
-    val files = hfs(spark, watchDir).listStatus(new Path(watchDir)).toSeq
-      .map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(".parquet"))
-      .sortBy(_.getName)
-    files.filterNot(f => fs.exists(new Path(logDir, f.getName))).map { f =>
+    val folded = MarkerLog(spark, s"$indexDir/_folded_files")
+    folded.foldNew(watchDir, ".parquet") { f =>
       val batch = spark.read.parquet(f.toString)
         .select(col(idCol), col(vecCol))
       val nBatch = batch.count()
@@ -136,7 +119,6 @@ object AnnIndexPipeline {
               "retrain_drift"
             } else "append"
         }
-      fs.create(new Path(logDir, f.getName), false).close()
       FoldResult(f.getName, nBatch, action)
     }
   }

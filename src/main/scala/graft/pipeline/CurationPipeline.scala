@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.{MarkerLog, ParquetTable}
 import graft.functions.{TextFns, UrlFns}
 
 /** Continuous-ingest CURATION pipeline — the standing-DAG form of
@@ -13,8 +13,8 @@ import graft.functions.{TextFns, UrlFns}
   * survivors accumulate into a curated corpus with an auditable
   * per-batch funnel record.
   *
-  * Per newly landed file (marker-log tracking, the
-  * [[Incremental.foldNewFiles]] protocol — idempotent, crash-safe):
+  * Per newly landed file (tracked by a [[graft.core.MarkerLog]] fold
+  * under `curDir/_folded_files` — idempotent, crash-safe):
   *
   *  1. in-batch URL dedup — canonical URL ([[UrlFns.canonicalizeUrl]])
   *     keyed, min doc_id survives;
@@ -41,32 +41,17 @@ object CurationPipeline {
   private def hashesDir(c: String) = s"$c/hashes"
   private def metricsDir(c: String) = s"$c/metrics"
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Fold every not-yet-processed `*.parquet` batch file (schema:
     * doc_id, url, lang, source, text) from `watchDir` into the
     * curated corpus. Idempotent across re-runs.
     */
   def foldNewDocFiles(spark: SparkSession, curDir: String,
-      watchDir: String, keepLangs: Seq[String]): Seq[FunnelResult] = {
-    val logDir = new Path(s"$curDir/_folded_files")
-    val watch = new Path(watchDir)
-    val fs = watch.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(logDir)
-    val files = fs.listStatus(watch).toSeq.map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(".parquet"))
-      .sortBy(_.getName)
-    files.filterNot(f => fs.exists(new Path(logDir, f.getName)))
-      .map { f =>
-        val r = curateBatch(spark, curDir,
-          spark.read.parquet(f.toString), f.getName, keepLangs)
-        fs.create(new Path(logDir, f.getName), false).close()
-        r
+      watchDir: String, keepLangs: Seq[String]): Seq[FunnelResult] =
+    MarkerLog(spark, s"$curDir/_folded_files")
+      .foldNew(watchDir, ".parquet") { f =>
+        curateBatch(spark, curDir, spark.read.parquet(f.toString),
+          f.getName, keepLangs)
       }
-  }
 
   /** One batch through stages 1–4 (exposed for non-file ingest). */
   def curateBatch(spark: SparkSession, curDir: String, batch: DataFrame,
@@ -93,7 +78,7 @@ object CurationPipeline {
     // stage 4b: cross-corpus exact dedup against STORED hashes only —
     // the curated text is never re-read
     val staged0 =
-      if (exists(spark, hashesDir(curDir)))
+      if (ParquetTable.exists(spark, hashesDir(curDir)))
         inBatch.join(
           Forget.readAppendDir(spark, hashesDir(curDir)).select(col("h"))
             .distinct().withColumn("__seen", lit(1)),

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.{MarkerLog, ParquetTable}
 import graft.operators.Dedup
 import graft.operators.Dedup.MinHashParams
 
@@ -12,11 +12,9 @@ import graft.operators.Dedup.MinHashParams
   * READS a materialized bands/sets index) and a standing pipeline
   * that must KEEP that index current as document batches land.
   *
-  * Per newly landed file (marker-log file tracking, the exact
-  * [[Incremental.foldNewFiles]] protocol — listing diff, atomic
-  * create-if-absent markers, crash-safe because a re-fold of an
-  * unmarked file reproduces the same verdicts and the survivor append
-  * is keyed by doc id):
+  * Per newly landed file (tracked by a [[graft.core.MarkerLog]] fold,
+  * crash-safe because a re-fold of an unmarked file reproduces the
+  * same verdicts and the survivor append is keyed by doc id):
   *
   *  1. IN-BATCH near-dedup: drop every doc matching a lower-id doc in
   *     the same batch (the q39 survivor rule, via
@@ -41,7 +39,7 @@ import graft.operators.Dedup.MinHashParams
   *   sets/      (doc_id, shingle_set)           append-only
   *   corpus/    (doc_id, text)                  append-only (kept docs)
   *   verdicts/  (doc_id, src_file, keep, dup_scope, dup_of, jaccard)
-  *   _folded_files/<name>                       zero-byte markers
+  *   _folded_files/<name>                       MarkerLog of folded files
   * }}}
   */
 object DedupIndexPipeline {
@@ -59,11 +57,6 @@ object DedupIndexPipeline {
   private def audioMediaDir(ix: String) = s"$ix/audio_media"
   private def audioVerdictsDir(ix: String) = s"$ix/audio_verdicts"
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Fold every not-yet-processed `*.parquet` doc file (schema:
     * doc_id, text, …) from `watchDir` into the index. Returns one
     * [[FoldResult]] per newly folded file; idempotent — a second
@@ -71,23 +64,13 @@ object DedupIndexPipeline {
     */
   def foldNewDocFiles(spark: SparkSession, indexDir: String,
       watchDir: String, n: Int, tau: Double, p: MinHashParams,
-      maxBucket: Int = 10000): Seq[FoldResult] = {
-    val logDir = new Path(s"$indexDir/_folded_files")
-    val watch = new Path(watchDir)
-    val fs = watch.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(logDir)
-    val files = fs.listStatus(watch).toSeq.map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(".parquet"))
-      .sortBy(_.getName)
-    files.filterNot(f => fs.exists(new Path(logDir, f.getName)))
-      .map { f =>
-        val r = foldBatch(spark, indexDir,
+      maxBucket: Int = 10000): Seq[FoldResult] =
+    MarkerLog(spark, s"$indexDir/_folded_files")
+      .foldNew(watchDir, ".parquet") { f =>
+        foldBatch(spark, indexDir,
           spark.read.parquet(f.toString).select(col("doc_id"), col("text")),
           f.getName, n, tau, p, maxBucket)
-        fs.create(new Path(logDir, f.getName), false).close()
-        r
       }
-  }
 
   /** One batch through steps 1–3. Exposed for direct (non-file)
     * ingest paths; [[foldNewDocFiles]] is the standing-DAG entry.
@@ -105,7 +88,7 @@ object DedupIndexPipeline {
     // 2. cross-corpus verdicts against the STORED index (absent on
     // the bootstrap fold — everything is new corpus)
     val bestCross =
-      if (exists(spark, bandsDir(indexDir)))
+      if (ParquetTable.exists(spark, bandsDir(indexDir)))
         bestMatch(Dedup.crossNearDupsFromIndex(
           Forget.readAppendDir(spark, bandsDir(indexDir)),
           Forget.readAppendDir(spark, setsDir(indexDir)),
@@ -170,7 +153,7 @@ object DedupIndexPipeline {
   //   media/          (media_id, content)                append-only
   //   image_verdicts/ (media_id, src_file, keep, dup_scope, dup_of,
   //                    hamming)
-  //   _folded_media/<name>                               markers
+  //   _folded_media/<name>                               MarkerLog
   // }}}
   // ---------------------------------------------------------------
 
@@ -200,22 +183,12 @@ object DedupIndexPipeline {
 
   private def foldNewFpFiles(spark: SparkSession, indexDir: String,
       watchDir: String, markerLog: String,
-      fold: (DataFrame, String) => FoldResult): Seq[FoldResult] = {
-    val logDir = new Path(s"$indexDir/$markerLog")
-    val watch = new Path(watchDir)
-    val fs = watch.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(logDir)
-    val files = fs.listStatus(watch).toSeq.map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(".parquet"))
-      .sortBy(_.getName)
-    files.filterNot(f => fs.exists(new Path(logDir, f.getName)))
-      .map { f =>
-        val r = fold(spark.read.parquet(f.toString)
+      fold: (DataFrame, String) => FoldResult): Seq[FoldResult] =
+    MarkerLog(spark, s"$indexDir/$markerLog")
+      .foldNew(watchDir, ".parquet") { f =>
+        fold(spark.read.parquet(f.toString)
           .select(col("media_id"), col("content")), f.getName)
-        fs.create(new Path(logDir, f.getName), false).close()
-        r
       }
-  }
 
   /** One image batch through the fold: fingerprint, in-batch drop
     * (lower-id survivor, best match = lowest hamming), cross-corpus
@@ -277,7 +250,7 @@ object DedupIndexPipeline {
     val afterInSig = sig.join(bestIn.select("media_id"), Seq("media_id"),
       "left_anti")
     val bestCross =
-      if (exists(spark, fpsD))
+      if (ParquetTable.exists(spark, fpsD))
         bestMatch(Dedup.crossFingerprintDups(
           Forget.readAppendDir(spark, fpsD), afterInSig,
           "media_id", fpCol, maxHamming, maxBucket, bandBits)

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.ParquetTable
 
 /** Incremental pipeline refresh — the capability the reference CLAIMS
   * ("incremental processing", README.md:75) but implements as a full
@@ -51,6 +50,11 @@ import graft.core.ParquetTable
   * Silver is partitioned by AIRLINE_CODE, but its partitions are
   * sorted within by FLIGHT_DATE, so the touched-date filter prunes at
   * parquet row-group grain rather than rescanning history.
+  *
+  * Every table touched here, with its partitioning and write shaping,
+  * is the [[Warehouse]] entry the batch stages write, so a fold and a
+  * full rebuild produce the same layout; folded source files are
+  * recorded in [[Warehouse.foldLog]], a `core.MarkerLog`.
   */
 object Incremental {
 
@@ -73,17 +77,14 @@ object Incremental {
     // silver transform run once, not per action
     val silverDelta = Silver.transform(bronzeDelta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val silverPath = s"$wh/silver/flights"
 
     // insert-if-absent merge: only rows whose natural key is new reach
     // the append. The existing-key side is key-columns-only (column-
     // pruned scan); the join is delta ⋈ keys, never history × history.
-    val fresh = {
-      val fs = new org.apache.hadoop.fs.Path(silverPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(silverPath))) silverDelta
+    val fresh =
+      if (!Warehouse.silver.exists(spark, wh)) silverDelta
       else {
-        val existingKeys = ParquetTable.read(spark, silverPath)
+        val existingKeys = Warehouse.silver.read(spark, wh)
           .select(silverNaturalKey.map(c => col(c).as(s"__ek_$c")): _*)
         // NULL-SAFE key equality: the pipeline produces NULL key
         // columns by design (unparseable FL_DATE, missing scheduled
@@ -95,24 +96,12 @@ object Incremental {
             .reduce(_ && _),
           "left_anti")
       }
-    }
-    ParquetTable.append(
-      fresh.repartition(fresh("AIRLINE_CODE"))
-        .sortWithinPartitions("FLIGHT_DATE"),
-      silverPath, Seq("AIRLINE_CODE"))
+    Warehouse.silver.append(fresh, wh)
 
     // dims: tiny outputs, rebuilt from full silver (see object doc)
-    val silver = ParquetTable.read(spark, silverPath)
-    val dimDate = GoldDims.dimDate(spark)
-    val dimTime = GoldDims.dimTime(spark)
-    val dimAirline = GoldDims.dimAirline(silver)
-    val dimAirport = GoldDims.dimAirport(silver)
-    val dimRoute = GoldDims.dimRoute(silver)
-    Seq("dim_date" -> dimDate, "dim_time" -> dimTime,
-      "dim_airline" -> dimAirline, "dim_airport" -> dimAirport,
-      "dim_route" -> dimRoute).foreach { case (n, d) =>
-      ParquetTable.write(d, s"$wh/gold/$n")
-    }
+    val silver = Warehouse.silver.read(spark, wh)
+    val dims = Warehouse.dims(spark, silver)
+    dims.tables.foreach { case (t, d) => t.write(d, wh) }
 
     // fact rebuild for the touched days FROM MERGED SILVER (see object
     // doc). The date list is a bounded partition enumeration (≤ the
@@ -122,26 +111,21 @@ object Incremental {
     val touchedDates = silverDelta.select(col("FLIGHT_DATE"))
       .distinct().collect().map(_.getDate(0)).toSeq
     silverDelta.unpersist(blocking = false)
-    val factUpdate = FactFlights.build(
-      silver.filter(col("FLIGHT_DATE").isin(touchedDates: _*)),
-      dimDate, dimAirport, dimAirline, dimRoute)
-    ParquetTable.overwritePartitions(
-      factUpdate.repartition(factUpdate("DATE_KEY")),
-      s"$wh/gold/fact_flights", Seq("DATE_KEY"))
+    Warehouse.fact.overwritePartitions(
+      dims.fact(silver.filter(col("FLIGHT_DATE").isin(touchedDates: _*))), wh)
 
     val months = touchedDates.filter(_ != null).map { d =>
       val ld = d.toLocalDate
       ld.getYear * 100 + ld.getMonthValue
     }.distinct.sorted
-    refreshMarts(spark, wh, months, dimDate, dimAirline, dimAirport, dimRoute)
+    refreshMarts(spark, wh, months, dims)
   }
 
   /** Stream-ingest → incremental handoff: fold every CSV in `watchDir`
-    * that has not been folded yet through [[run]], then record it in a
-    * marker-file log (`bronze/_folded_files/<name>`, zero-byte files
-    * created atomically — the same create-if-absent protocol as
-    * `core.VersionedTable`'s commit markers). Returns (file, touched
-    * months) per newly folded file.
+    * that has not been folded yet through [[run]], recording each in
+    * the warehouse's fold log (`Warehouse.foldLog`, a
+    * `core.MarkerLog` at `bronze/_folded_files`). Returns (file,
+    * touched months) per newly folded file.
     *
     * This is the batch half of the streaming story: the checkpointed
     * `streaming.StreamIngest` run lands raw rows exactly-once in the
@@ -150,27 +134,12 @@ object Incremental {
     * re-folds that file on the next invocation — harmless, because
     * re-delivery is a natural-key-merge no-op (see object doc), so the
     * end result is exactly-once without coordination.
-    *
-    * Scale: the new-file decision is a FILESYSTEM LISTING diffed
-    * against the marker log — no data scan; compute is O(new files),
-    * the same discipline as the file-source checkpoint itself.
     */
   def foldNewFiles(spark: SparkSession, wh: String, watchDir: String,
-      airportsCsv: String, carriersCsv: String): Seq[(String, Seq[Int])] = {
-    val logDir = new org.apache.hadoop.fs.Path(s"$wh/bronze/_folded_files")
-    val watch = new org.apache.hadoop.fs.Path(watchDir)
-    val fs = watch.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(logDir)
-    val csvs = fs.listStatus(watch).toSeq.map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(".csv"))
-      .sortBy(_.getName)
-    csvs.filterNot(p => fs.exists(new org.apache.hadoop.fs.Path(logDir, p.getName)))
-      .map { p =>
-        val months = run(spark, wh, p.toString, airportsCsv, carriersCsv)
-        fs.create(new org.apache.hadoop.fs.Path(logDir, p.getName), false).close()
-        p.toString -> months
-      }
-  }
+      airportsCsv: String, carriersCsv: String): Seq[(String, Seq[Int])] =
+    Warehouse.foldLog(spark, wh).foldNew(watchDir, ".csv") { p =>
+      p.toString -> run(spark, wh, p.toString, airportsCsv, carriersCsv)
+    }
 
   /** Recompute and swap in the mart partitions for the given yyyyMM
     * months (already enumerated on the driver — a DataFrame-derived
@@ -180,25 +149,15 @@ object Incremental {
     * touched month are included.
     */
   def refreshMarts(spark: SparkSession, wh: String, months: Seq[Int],
-      dimDate: DataFrame, dimAirline: DataFrame, dimAirport: DataFrame,
-      dimRoute: DataFrame): Seq[Int] = {
+      dims: Warehouse.Dims): Seq[Int] = {
     if (months.isEmpty) return months
 
     // month ranges as a partition-prunable predicate on DATE_KEY
-    val fact = ParquetTable.read(spark, s"$wh/gold/fact_flights")
-    val monthFacts = fact.filter(
+    val monthFacts = Warehouse.fact.read(spark, wh).filter(
       months.map(ym => col("DATE_KEY").between(ym * 100L + 1, ym * 100L + 31))
         .reduce(_ || _))
-
-    ParquetTable.overwritePartitions(
-      Marts.dailyAirlinePerformance(monthFacts, dimDate, dimAirline),
-      s"$wh/gold/daily_airline_performance", Seq("YEAR", "MONTH"))
-    ParquetTable.overwritePartitions(
-      Marts.dailyAirportPerformance(monthFacts, dimDate, dimAirport),
-      s"$wh/gold/daily_airport_performance", Seq("FLIGHT_DATE"))
-    ParquetTable.overwritePartitions(
-      Marts.routePerformance(monthFacts, dimDate, dimRoute, dimAirline),
-      s"$wh/gold/route_performance", Seq("YEAR", "MONTH"))
+    Warehouse.marts.foreach(m =>
+      m.table.overwritePartitions(m.build(monthFacts, dims), wh))
     months
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Bronze, FactFlights, GoldDims, Marts, Silver}
+import graft.pipeline.{Bronze, Marts, Silver, Warehouse}
 import Portable._
 
 /** End-to-end flight-pipeline oracle: runs the REAL production lineage
@@ -25,14 +25,18 @@ import Portable._
   *    NULL airline name from the left lookup join — a real NULL group
   *    key in both engines.
   *
-  * The fixture paths are compile-time constants (the driver's (spark,
-  * sfDir) contract points at the TPC-H testdata, not the flight
-  * fixtures) — this query is the one place the q-corpus touches the
-  * pipeline's own input format.
+  * The fixture directory is fixed, not an argument (the driver's
+  * (spark, sfDir) contract points at the TPC-H testdata, not the
+  * flight fixtures): the checkout's test fixtures, resolved to an
+  * absolute path from the working directory (the checkout root), so
+  * the oracle SQL names the same directory the engine reads. This
+  * query is the one place the q-corpus touches the pipeline's own
+  * input format.
   */
 object PipelineQueries {
 
-  private val FIX = "/root/repo/src/test/resources/fixtures"
+  private val FIX =
+    new java.io.File("src/test/resources/fixtures").getAbsolutePath
 
   /** The real production lineage over the fixture CSVs, shared by the
     * mart oracles below.
@@ -42,19 +46,15 @@ object PipelineQueries {
       s"$FIX/flights.csv", s"$FIX/L_AIRPORT_ID.csv",
       s"$FIX/L_UNIQUE_CARRIERS.csv", inferSchema = false)
     val silver = Silver.transform(bronze)
-    val dimDate = GoldDims.dimDate(s)
-    val dimAirline = GoldDims.dimAirline(silver)
-    val dimAirport = GoldDims.dimAirport(silver)
-    val dimRoute = GoldDims.dimRoute(silver)
-    val fact = FactFlights.build(silver, dimDate, dimAirport, dimAirline, dimRoute)
-    (fact, dimDate, dimAirline, dimAirport, dimRoute)
+    val dims = Warehouse.dims(s, silver)
+    (dims.fact(silver), dims)
   }
 
   private val q66 = Q(
     "q66_pipeline_mart",
     (s, dir) => {
-      val (fact, dimDate, dimAirline, _, _) = buildWarehouse(s)
-      Marts.dailyAirlinePerformance(fact, dimDate, dimAirline)
+      val (fact, d) = buildWarehouse(s)
+      Marts.dailyAirlinePerformance(fact, d.date, d.airline)
         .select(
           col("FLIGHT_DATE"), col("YEAR"), col("MONTH"),
           col("DAY_OF_WEEK_NAME"), col("IS_WEEKEND"),
@@ -181,8 +181,8 @@ object PipelineQueries {
   private val q73 = Q(
     "q73_pipeline_airport_mart",
     (s, dir) => {
-      val (fact, dimDate, _, dimAirport, _) = buildWarehouse(s)
-      Marts.dailyAirportPerformance(fact, dimDate, dimAirport)
+      val (fact, d) = buildWarehouse(s)
+      Marts.dailyAirportPerformance(fact, d.date, d.airport)
         .select(col("FLIGHT_DATE"), col("AIRPORT_CODE"), col("AIRPORT_NAME"),
           col("TOTAL_DEPARTURES"), col("CANCELLED_DEPARTURES"),
           pround(col("AVG_DEPARTURE_DELAY"), 6).as("AVG_DEPARTURE_DELAY"),
@@ -260,8 +260,8 @@ object PipelineQueries {
   private val q74 = Q(
     "q74_pipeline_route_mart",
     (s, dir) => {
-      val (fact, dimDate, dimAirline, _, dimRoute) = buildWarehouse(s)
-      Marts.routePerformance(fact, dimDate, dimRoute, dimAirline)
+      val (fact, d) = buildWarehouse(s)
+      Marts.routePerformance(fact, d.date, d.route, d.airline)
         .select(col("YEAR"), col("MONTH"), col("ROUTE_CODE"), col("ROUTE_NAME"),
           col("ORIGIN_AIRPORT_CODE"), col("DEST_AIRPORT_CODE"),
           col("AIRLINE_CODE"), col("AIRLINE_NAME"),

@@ -30,7 +30,9 @@ import graft.operators.{Opq, Similarity}
 class Sweep10xSpec extends SparkSpec {
 
   private val src = "/root/testdata/sf0.1"
-  private val dst = "/root/repo/target/scaled/sf1.0"
+  // the checkout under test's own scaled dir (the working directory
+  // is the checkout root)
+  private val dst = new java.io.File("target/scaled/sf1.0").getAbsolutePath
   // q-family constants (SimilarityQueries): QMOD/K/SEEDMOD/NPROBE and
   // the q214/q227 knobs
   private val QMOD = 50; private val K = 5
