@@ -1,5 +1,7 @@
 package graft.cli
 
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import graft.core.GraftSession
 import graft.pipeline.Warehouse
@@ -73,13 +75,18 @@ object RunValidations {
     header + sections.mkString
   }
 
-  /** Write the report under the warehouse and return its path. */
-  def writeReport(results: Seq[(String, Option[ValidationReport])],
-      wh: String): java.nio.file.Path = {
-    val dir = java.nio.file.Paths.get(wh, "_validation")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(
-      dir.resolve("report.md"), renderReport(results, wh))
+  /** Write the report to `<wh>/_validation/report.md` through the
+    * warehouse's Hadoop filesystem (so `file:`/`hdfs:` warehouses work
+    * like local paths) and return its fully qualified path.
+    */
+  def writeReport(spark: SparkSession,
+      results: Seq[(String, Option[ValidationReport])], wh: String): Path = {
+    val p = new Path(wh, "_validation/report.md")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write(renderReport(results, wh).getBytes(UTF_8))
+    finally out.close()
+    fs.makeQualified(p)
   }
 
   def main(args: Array[String]): Unit = {
@@ -98,7 +105,7 @@ object RunValidations {
     }
     val ok = allPassed(results)
     val (p, t) = (results.count(_._2.exists(_.success)), results.size)
-    println(s"[quality] $p/$t suites passed; report: ${writeReport(results, wh)}")
+    println(s"[quality] $p/$t suites passed; report: ${writeReport(spark, results, wh)}")
     spark.stop()
     sys.exit(if (ok) 0 else 1)
   }

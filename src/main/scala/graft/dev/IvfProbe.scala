@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val spark = graft.core.GraftSession.local(appName = "ivfprobe")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/target/scaled/sf1.0")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      new java.io.File("target/scaled/sf1.0").getAbsolutePath)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
     for (seedMod <- args.map(_.toInt)) {

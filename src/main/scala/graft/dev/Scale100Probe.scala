@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * cells vs √n, capped buckets). One JSON line per op on stdout —
   * the "would it survive 100×" question answered with data.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/repo/target/scaled/sf10 \
+  * Usage, from the checkout root (reads target/scaled/sf10 unless
+  * SPARK_GRAFT_SF_DIR names another directory):
   *   sbt "runMain graft.dev.Scale100Probe [op ...]"
   */
 object Scale100Probe {
@@ -34,7 +35,7 @@ object Scale100Probe {
   def main(args: Array[String]): Unit = {
     val spark = graft.core.GraftSession.local(appName = "scale100")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/repo/target/scaled/sf10")
+      new java.io.File("target/scaled/sf10").getAbsolutePath)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val nDocs = docs.count()

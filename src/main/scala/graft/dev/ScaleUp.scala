@@ -26,7 +26,7 @@ object ScaleUp {
     val spark = graft.core.GraftSession.local(appName = "graft-scaleup")
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_SCALE_DST",
-      "/root/repo/target/scaled/sf1.0")
+      new java.io.File("target/scaled/sf1.0").getAbsolutePath)
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
     val stride = 1000000000L // far above any sf0.1 key
 

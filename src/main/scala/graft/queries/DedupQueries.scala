@@ -1,6 +1,8 @@
 package graft.queries
 
+import scala.concurrent.duration.DurationInt
 import org.apache.spark.sql.functions._
+import graft.core.Overlap
 import graft.core.Tables.Tpch
 import graft.functions.TextFns
 import graft.functions.TextFns.P
@@ -1392,14 +1394,9 @@ object DedupQueries {
       // materialize the four detectors CONCURRENTLY — they are
       // independent jobs over the same checkpointed input, so nothing
       // serializes them but the old eager per-detector count()s
-      val defs = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration._
-        Await.result(Future.sequence(lazyDefs.map { case (n, df) =>
-          Future(n -> df.localCheckpoint(true))
-        }), 30.minutes)
-      }
+      val defs = Overlap.all(lazyDefs.map { case (n, df) =>
+        () => n -> df.localCheckpoint(true)
+      }, 30.minutes)
       val counts = defs.map { case (n, df) => n -> df.count() }.toMap
       val rows = for {
         i <- defs.indices; j <- (i + 1) until defs.length

@@ -1,6 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Overlap
 import graft.core.Tables.Tpch
 import graft.operators.Similarity
 import Portable._
@@ -28,6 +31,162 @@ object SimilarityQueries {
        | list_transform($v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
        | (x, y) -> x + y)""".stripMargin
 
+  // -- Recall kit: the steps the ANN-evaluation queries share (q149,
+  //    q159, q165, q184, q193, q208, q215, q216, q224, q227, q231,
+  //    q265, q290). Each measures approximate indexes against the
+  //    exact brute-force top-K of the pinned queries (vec_id % QMOD
+  //    = 0): recall@K = |approx top-K ∩ exact top-K| / |exact top-K|.
+  //    Their independent arms run through core.Overlap. Spark side:
+  //    [[exactTopK]], [[cosineTopK]], [[hitCount]], [[recallRow]] and,
+  //    next to the PQ CTEs, [[pqTopK]]. Each step has an oracle twin
+  //    below that emits the DuckDB SQL for it.
+
+  /** The exact baseline: brute cosine top-`k` (query_id, corpus_id),
+    * checkpointed so the brute scan runs once however many arms join
+    * it.
+    */
+  private def exactTopK(emb: DataFrame, queries: DataFrame, k: Int)
+      : DataFrame =
+    Similarity.topK(emb, queries, "vec_id", "embedding", k)
+      .select(col("query_id"), col("corpus_id")).localCheckpoint(true)
+
+  /** Per query, the top-`k` (query_id, corpus_id) of a scored frame by
+    * cosine desc, corpus_id asc.
+    */
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame = {
+    val byCosine = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("corpus_id").asc)
+    scored.withColumn("rk", row_number().over(byCosine))
+      .filter(col("rk") <= k).select(col("query_id"), col("corpus_id"))
+  }
+
+  /** How many of `top`'s pairs the exact baseline holds (one action). */
+  private def hitCount(top: DataFrame, exact: DataFrame): Long =
+    top.join(exact, Seq("query_id", "corpus_id")).count()
+
+  /** One lazy recall row: `label`, n_hits = |exact ∩ top|,
+    * n_total = |exact|, recall = n_hits / n_total at 4 places.
+    */
+  private def recallRow(label: Column, exact: DataFrame, top: DataFrame)
+      : DataFrame =
+    exact.join(top, Seq("query_id", "corpus_id"))
+      .agg(count(lit(1)).as("n_hits"))
+      .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_total"))))
+      .select(label, col("n_hits"), col("n_total"),
+        pround(col("n_hits").cast("double") / col("n_total"), 4)
+          .as("recall"))
+
+  /** Oracle CTE `v`: every vector with its norm. */
+  private def normCte(v: String) = s"""$v AS (
+        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
+        FROM embeddings)"""
+
+  /** Oracle cut: `cols` of the top-`k` rows of `src` per query_id by
+    * `order`, ties by corpus_id.
+    */
+  private def rankCutSql(cols: String, src: String, order: String,
+      k: Int) = s"""SELECT $cols
+        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                ORDER BY $order, corpus_id ASC) AS rank FROM $src)
+        WHERE rank <= $k"""
+
+  /** Oracle cut: the top-K (query_id, corpus_id) of `src` by cosine. */
+  private def rkCutSql(src: String) = s"""SELECT query_id, corpus_id FROM (
+          SELECT query_id, corpus_id,
+            row_number() OVER (PARTITION BY query_id
+              ORDER BY cosine DESC, corpus_id ASC) AS rk
+          FROM $src) WHERE rk <= $K"""
+
+  /** Oracle twin of [[exactTopK]] over the norm CTE `v`: every query ×
+    * corpus cosine in `scored`, its top-`k` in `exact`.
+    */
+  private def cosineExactCtes(v: String, scored: String, exact: String,
+      k: Int, materialized: Boolean = false) = s"""$scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
+        FROM (SELECT * FROM $v WHERE vec_id % $QMOD = 0) q
+        JOIN $v c ON q.vec_id != c.vec_id),
+      $exact AS ${if (materialized) "MATERIALIZED " else ""}(
+        ${rankCutSql("query_id, corpus_id", scored, "cosine DESC", k)})"""
+
+  /** Oracle `exact` as one CTE, norms computed inline: the brute
+    * cosine top-K.
+    */
+  private def bruteExactCte(materialized: Boolean = false) =
+    s"""exact AS ${if (materialized) "MATERIALIZED " else ""}(
+        SELECT query_id, corpus_id FROM (
+          SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+            row_number() OVER (PARTITION BY q.vec_id
+              ORDER BY ${dotSql("q.embedding", "c.embedding")}
+                  / (sqrt(${norm2Sql("q.embedding")})
+                     * sqrt(${norm2Sql("c.embedding")})) DESC,
+                c.vec_id ASC) AS rank
+          FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
+          JOIN embeddings c ON c.vec_id != q.vec_id)
+        WHERE rank <= $K)"""
+
+  /** Oracle |exact ∩ m| as a scalar subquery. */
+  private def hitsSql(exact: String, m: String) =
+    s"""(SELECT count(*) FROM $exact e JOIN $m m
+            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)"""
+
+  /** Oracle twin of [[recallRow]]s: per (label value, top-K CTE or
+    * subquery), n_hits against `exact`, n_total from `tot`, recall.
+    */
+  private def recallSql(label: String, arms: Seq[(String, String)],
+      exact: String, tot: String) = {
+    val rows = arms.map { case (v, m) => s"""
+        SELECT $v AS $label,
+          ${hitsSql(exact, m)}
+            AS n_hits, n_total FROM $tot""" }
+    s"""SELECT $label, n_hits, n_total,
+        ${proundSql("CAST(n_hits AS DOUBLE) / n_total", 4)} AS recall
+      FROM (${rows.mkString("\n        UNION ALL")})
+      ORDER BY $label"""
+  }
+
+  /** Oracle SQ8 codes: per-dim scales and each vector's int8 code `q`
+    * in `enc8`.
+    */
+  private def sq8CodesCtes =
+    s"""dims AS (SELECT unnest(generate_series(1, $SQ_DIMS)) AS pos),
+      scales AS (
+        SELECT pos, max(abs(CAST(embedding[pos] AS DOUBLE))) AS s
+        FROM embeddings CROSS JOIN dims GROUP BY pos),
+      sarr AS (SELECT list(s ORDER BY pos) AS sc FROM scales),
+      enc8 AS (
+        SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
+          i -> CASE WHEN sc[i] = 0 THEN CAST(0 AS BIGINT)
+               ELSE CAST(floor(CAST(embedding[i] AS DOUBLE) * 127.0
+                 / sc[i] + 0.5) AS BIGINT) END) AS q
+        FROM embeddings CROSS JOIN sarr)"""
+
+  /** Oracle SQ8 top-`k` (`cols`) by integer dot product, in `sq8`. */
+  private def sq8TopCtes(cols: String, k: Int) = s"""$sq8CodesCtes,
+      scored8 AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+          list_reduce(list_prepend(CAST(0 AS BIGINT),
+            list_transform(list_zip(q.q, c.q), pr -> pr[1] * pr[2])),
+            (x, y) -> x + y) AS iscore
+        FROM (SELECT * FROM enc8 WHERE vec_id % $QMOD = 0) q
+        JOIN enc8 c ON q.vec_id != c.vec_id),
+      sq8 AS (
+        ${rankCutSql(cols, "scored8", "iscore DESC", k)})"""
+
+  /** Oracle binary top-`k` by hamming distance of the sign bits, in
+    * `binm`.
+    */
+  private def binTopCtes(k: Int) = s"""binh AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+          list_reduce(list_prepend(0,
+            list_transform(generate_series(1, $SQ_DIMS),
+              i -> CASE WHEN (q.embedding[i] > 0) != (c.embedding[i] > 0)
+                   THEN 1 ELSE 0 END)), (x, y) -> x + y) AS hamming
+        FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
+        JOIN embeddings c ON q.vec_id != c.vec_id),
+      binm AS (
+        ${rankCutSql("query_id, corpus_id", "binh", "hamming ASC", k)})"""
+
   // -- V1: exact cosine near-dup pairs ---------------------------------
   private val CTAU = 0.4
   private val q26 = Q(
@@ -41,9 +200,7 @@ object SimilarityQueries {
         .select(col("v1"), col("v2"), pround(col("cosine"), 6).as("cosine"))
         .orderBy(col("v1"), col("v2"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings)
+    Some(s"""WITH ${normCte("v")}
       SELECT a.vec_id AS v1, b.vec_id AS v2,
         ${proundSql(s"${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm)", 6)} AS cosine
       FROM v a JOIN v b ON a.vec_id < b.vec_id
@@ -63,9 +220,7 @@ object SimilarityQueries {
           pround(col("cosine"), 6).as("cosine"))
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
           ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
@@ -162,9 +317,7 @@ object SimilarityQueries {
           pround(col("cosine"), 6).as("cosine"))
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -210,9 +363,7 @@ object SimilarityQueries {
           SEEDMOD, SDTAU)
         .orderBy(col("vec_id"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -252,9 +403,7 @@ object SimilarityQueries {
           seedMod = 0, SDTAU, nprobe = 2)
         .orderBy(col("vec_id"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       mcte AS (
         SELECT GREATEST(CAST(round(sqrt(count(*))) AS BIGINT), 1) AS m
         FROM embeddings),
@@ -321,6 +470,38 @@ object SimilarityQueries {
           FROM scored_cw)
         WHERE rn = 1)"""
 
+  /** PQ/ADC top-`k` of `queries` over the √n-donor codebook: q101's
+    * index, the PQ rung of the recall queries.
+    */
+  private def pqTopK(emb: DataFrame, queries: DataFrame, k: Int)
+      : DataFrame = {
+    val cb = Similarity.pqCodebooks(emb, "vec_id", "embedding", PQ_M,
+      seedMod = 0)
+    Similarity.pqAdcTopK(
+      Similarity.pqEncode(emb, "vec_id", "embedding", PQ_M, cb),
+      queries, "vec_id", "embedding", PQ_M, cb, k)
+  }
+
+  /** Oracle PQ/ADC top-`k` over [[pqBaseSql]]: per-query subspace
+    * distance tables (`adc`), order-pinned code sums (`dists`), and
+    * the cut (`cols`) in `name`.
+    */
+  private def pqAdcCtes(name: String, cols: String, k: Int) = s"""adc AS (
+        SELECT s.vec_id AS query_id, s.sub, c.cw,
+          ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
+            AS qd
+        FROM subs s JOIN codebook c USING (sub)
+        WHERE s.vec_id % $QMOD = 0),
+      dists AS (
+        SELECT a.query_id, e.vec_id AS corpus_id,
+          list_reduce(list_prepend(CAST(0 AS DOUBLE),
+            list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
+        FROM enc e JOIN adc a ON e.sub = a.sub AND e.cw = a.cw
+        WHERE a.query_id != e.vec_id
+        GROUP BY a.query_id, e.vec_id),
+      $name AS (
+        ${rankCutSql(cols, "dists", "adist ASC", k)})"""
+
   private val q100 = Q(
     "q100_pq_encode",
     (s, dir) => {
@@ -350,11 +531,8 @@ object SimilarityQueries {
     "q101_pq_adc_topk",
     (s, dir) => {
       val t = Tpch(s, dir)
-      val cb = Similarity.pqCodebooks(
-        t.embeddings, "vec_id", "embedding", PQ_M, seedMod = 0)
-      val enc = Similarity.pqEncode(t.embeddings, "vec_id", "embedding", PQ_M, cb)
       val queries = t.embeddings.filter(col("vec_id") % PQ_QMOD === 0)
-      Similarity.pqAdcTopK(enc, queries, "vec_id", "embedding", PQ_M, cb, PQ_K)
+      pqTopK(t.embeddings, queries, PQ_K)
         .select(col("query_id"), col("rank"), col("corpus_id"),
           pround(col("adist"), 6).as("adist"))
         .orderBy(col("query_id"), col("rank"))
@@ -519,9 +697,7 @@ object SimilarityQueries {
     sd_cv AS (
       SELECT cluster, list(c ORDER BY pos) AS cvec
       FROM sd_cent$SD_ITERS GROUP BY cluster),
-    sd_v AS (
-      SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-      FROM embeddings),
+    ${normCte("sd_v")},
     sd_m AS MATERIALIZED (
       SELECT a.vec_id, a.cluster,
         list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -676,9 +852,7 @@ object SimilarityQueries {
       }.mkString(",\n      ")
       val visUnion = (1 to NSW_HOPS).map(h => s"SELECT * FROM x$h")
         .mkString("SELECT * FROM f0 UNION ALL ", " UNION ALL ", "")
-      s"""v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      s"""${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -761,28 +935,16 @@ object SimilarityQueries {
       val nsw = Similarity.nswTopK(t.embeddings, queries, "vec_id",
           "embedding", SEEDMOD, NPROBE, NSW_DEG, NSW_BEAM, NSW_HOPS, K)
         .select(col("query_id"), col("corpus_id")).localCheckpoint(true)
-      val exact = Similarity.topK(t.embeddings, queries, "vec_id",
-          "embedding", K)
-        .select(col("query_id"), col("corpus_id")).localCheckpoint(true)
+      val exact = exactTopK(t.embeddings, queries, K)
       val nq = queries.count()
-      val hits = nsw.join(exact, Seq("query_id", "corpus_id")).count()
+      val hits = hitCount(nsw, exact)
       Seq(("nsw", K, nq, hits,
           BigDecimal(hits) / BigDecimal(K * nq)))
         .toDF("method", "k", "n_queries", "n_hits", "recall")
         .select(col("method"), col("k"), col("n_queries"), col("n_hits"),
           pround(col("recall").cast("double"), 6).as("recall"))
     },
-    Some(s"""WITH exact AS (
-        SELECT query_id, corpus_id FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY ${dotSql("q.embedding", "c.embedding")}
-                  / (sqrt(${norm2Sql("q.embedding")})
-                     * sqrt(${norm2Sql("c.embedding")})) DESC,
-                c.vec_id ASC) AS rank
-          FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
-          JOIN embeddings c ON c.vec_id != q.vec_id)
-        WHERE rank <= $K),
+    Some(s"""WITH ${bruteExactCte()},
       nsw AS (SELECT query_id, corpus_id
         FROM (${q214.oracle.get})),
       hits AS (
@@ -930,72 +1092,48 @@ object SimilarityQueries {
       val t = Tpch(s, dir)
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
       val nq = queries.count()
-      val exact = Similarity.topK(t.embeddings, queries, "vec_id",
-          "embedding", K)
-        .select(col("query_id"), col("corpus_id")).localCheckpoint(true)
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("corpus_id").asc)
-      def arm(name: String, vis: org.apache.spark.sql.DataFrame) = {
+      val exact = exactTopK(t.embeddings, queries, K)
+      def arm(name: String, vis: DataFrame) = {
         val v = vis.localCheckpoint(true)
-        val top = v.withColumn("rk", row_number().over(wr))
-          .filter(col("rk") <= K)
-          .select(col("query_id"), col("corpus_id"))
-        val hits = top.join(exact, Seq("query_id", "corpus_id")).count()
+        val hits = hitCount(cosineTopK(v, K), exact)
         (name, nq, v.count(), hits, hits.toDouble / (K * nq))
       }
       // one shared scaffold for all three arms: the cell assignment,
       // probe ranking, and each layer's edge graph are identical
       // deterministic structures, previously rebuilt per arm (the
-      // level-0 graph three times, the l=1 graph twice). Arms then run
-      // CONCURRENTLY — each is a chain of tiny checkpoint jobs whose
-      // cost is driver/scheduling latency, so overlapping them
-      // back-fills the idle executors (guide §2.6).
+      // level-0 graph three times, the l=1 graph twice)
       val sc = Similarity.walkScaffold(t.embeddings, queries, "vec_id",
         "embedding", SEEDMOD, NPROBE)
       val edges0 = Similarity.levelEdges(sc, NSW_DEG, 0)
       val edgesL = (1 to H2_LEVELS)
         .map(l => l -> Similarity.levelEdges(sc, NSW_DEG, l)).toMap
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      val armsF = Seq(
-        Future(arm("hnsw", Similarity.hnswScoredOn(sc, edges0, edgesL,
-          NSW_BEAM, NSW_HOPS, HNSW_UP, 1))),
+      Overlap.all(Seq(
+        () => arm("hnsw", Similarity.hnswScoredOn(sc, edges0, edgesL,
+          NSW_BEAM, NSW_HOPS, HNSW_UP, 1)),
         // the log-layered arm: 2 upper layers, NARROWER level-0 beam —
         // strictly fewer scored candidates at ≥ the 1-layer recall
         // (the H2_BEAM measurement note)
-        Future(arm("hnsw2", Similarity.hnswScoredOn(sc, edges0, edgesL,
-          H2_BEAM, NSW_HOPS, HNSW_UP, H2_LEVELS))),
-        Future(arm("nsw", Similarity.nswScoredOn(sc, edges0,
+        () => arm("hnsw2", Similarity.hnswScoredOn(sc, edges0, edgesL,
+          H2_BEAM, NSW_HOPS, HNSW_UP, H2_LEVELS)),
+        () => arm("nsw", Similarity.nswScoredOn(sc, edges0,
           NSW_BEAM, NSW_HOPS))))
-      val arms = try Await.result(Future.sequence(armsF),
-        scala.concurrent.duration.Duration(20, "min"))
-      finally pool.shutdown()
-      arms
         .toDF("method", "n_queries", "n_scored", "n_hits", "recall")
         .select(col("method"), col("n_queries"), col("n_scored"),
           col("n_hits"), pround(col("recall"), 6).as("recall"))
         .orderBy(col("method"))
     },
-    Some(s"""WITH $nswCtes,
+    Some {
+      // |top-K of the arm's scored set ∩ exact|
+      def hits(vis: String) = s"""(SELECT count(*) FROM exact e JOIN (
+            ${rkCutSql(s"$vis WHERE corpus_id != query_id")}) t
+            ON t.query_id = e.query_id AND t.corpus_id = e.corpus_id)"""
+      s"""WITH $nswCtes,
       $hnswCtes,
       ${hnswLayerCtes("h2", H2_LEVELS, HNSW_UP, NSW_HOPS, H2_BEAM,
         "h2vis")},
       nq AS (SELECT count(*) AS n
         FROM embeddings WHERE vec_id % $QMOD = 0),
-      exact AS MATERIALIZED (
-        SELECT query_id, corpus_id FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY ${dotSql("q.embedding", "c.embedding")}
-                  / (sqrt(${norm2Sql("q.embedding")})
-                     * sqrt(${norm2Sql("c.embedding")})) DESC,
-                c.vec_id ASC) AS rank
-          FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
-          JOIN embeddings c ON c.vec_id != q.vec_id)
-        WHERE rank <= $K)
+      ${bruteExactCte(materialized = true)}
       SELECT method, CAST(nq.n AS BIGINT) AS n_queries,
         CAST(n_scored AS BIGINT) AS n_scored,
         CAST(n_hits AS BIGINT) AS n_hits,
@@ -1004,36 +1142,39 @@ object SimilarityQueries {
         SELECT 'hnsw' AS method,
           (SELECT count(*) FROM hvis WHERE corpus_id != query_id)
             AS n_scored,
-          (SELECT count(*) FROM exact e JOIN (
-            SELECT query_id, corpus_id FROM (
-              SELECT query_id, corpus_id,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, corpus_id ASC) AS rk
-              FROM hvis WHERE corpus_id != query_id) WHERE rk <= $K) t
-            ON t.query_id = e.query_id AND t.corpus_id = e.corpus_id)
+          ${hits("hvis")}
             AS n_hits
         UNION ALL
         SELECT 'hnsw2',
           (SELECT count(*) FROM h2vis WHERE corpus_id != query_id),
-          (SELECT count(*) FROM exact e JOIN (
-            SELECT query_id, corpus_id FROM (
-              SELECT query_id, corpus_id,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, corpus_id ASC) AS rk
-              FROM h2vis WHERE corpus_id != query_id) WHERE rk <= $K) t
-            ON t.query_id = e.query_id AND t.corpus_id = e.corpus_id)
+          ${hits("h2vis")}
         UNION ALL
         SELECT 'nsw',
           (SELECT count(*) FROM vis WHERE corpus_id != query_id),
-          (SELECT count(*) FROM exact e JOIN (
-            SELECT query_id, corpus_id FROM (
-              SELECT query_id, corpus_id,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, corpus_id ASC) AS rk
-              FROM vis WHERE corpus_id != query_id) WHERE rk <= $K) t
-            ON t.query_id = e.query_id AND t.corpus_id = e.corpus_id))
+          ${hits("vis")})
       CROSS JOIN nq
-      ORDER BY method"""))
+      ORDER BY method"""
+    })
+
+  /** Oracle CTE fragment after [[nswCtes]]: the IVF arm's scored
+    * candidates (`ivf_scored`) and the NSW walk's (`nsw_sc`), each with
+    * its cosine top-K. Shared by q216 and q290.
+    */
+  private lazy val prunedTopCtes: String = s"""ivf_scored AS (
+        SELECT p.query_id, a.vec_id AS corpus_id,
+          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
+            AS cosine
+        FROM probe p
+        JOIN assign a ON p.cell = a.cell AND a.vec_id != p.query_id
+        JOIN v q ON q.vec_id = p.query_id
+        JOIN v c ON c.vec_id = a.vec_id),
+      ivf_top AS (
+        ${rkCutSql("ivf_scored")}),
+      nsw_sc AS (
+        SELECT query_id, corpus_id, cosine FROM vis
+        WHERE corpus_id != query_id),
+      nsw_top AS (
+        ${rkCutSql("nsw_sc")})"""
 
   // -- V11c: GRAPH-vs-IVF efficiency matrix — the two pruned index
   //    families at the SAME frozen cell structure, measured on both
@@ -1052,84 +1193,31 @@ object SimilarityQueries {
       val t = Tpch(s, dir)
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
       val nq = queries.count()
-      // the three builds are independent — overlap them (guide §2.6):
-      // the brute exact fills the executors while the nsw walk's tiny
-      // checkpoint-job chain pays only driver latency (the q290 shape)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val exactF = Future(Similarity.topK(t.embeddings, queries, "vec_id",
-          "embedding", K)
-        .select(col("query_id"), col("corpus_id")).localCheckpoint(true))
-      val nswF = Future(Similarity.nswScored(t.embeddings, queries,
-          "vec_id", "embedding", SEEDMOD, NPROBE, NSW_DEG, NSW_BEAM,
-          NSW_HOPS)
-        .localCheckpoint(true))
-      // k beyond any cell size keeps EVERY scored candidate — the IVF
-      // arm's measured cost is this frame's row count
-      val ivfF = Future(Similarity.ivfTopK(t.embeddings, queries,
-          "vec_id", "embedding", SEEDMOD, NPROBE, Int.MaxValue)
-        .localCheckpoint(true))
-      val (exact, nswVis, ivfAll) =
-        try (Await.result(exactF, Duration(20, "min")),
-          Await.result(nswF, Duration(20, "min")),
-          Await.result(ivfF, Duration(20, "min")))
-        finally pool.shutdown()
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("corpus_id").asc)
-      val nswTop = nswVis.withColumn("rk", row_number().over(wr))
-        .filter(col("rk") <= K).select(col("query_id"), col("corpus_id"))
-      val ivfTop = ivfAll.filter(col("rank") <= K)
-        .select(col("query_id"), col("corpus_id"))
-      def arm(name: String, nScored: Long, top: org.apache.spark.sql.DataFrame) = {
-        val hits = top.join(exact, Seq("query_id", "corpus_id")).count()
+      val Seq(exact, nswVis, ivfAll) = Overlap.all(Seq(
+        () => exactTopK(t.embeddings, queries, K),
+        () => Similarity.nswScored(t.embeddings, queries, "vec_id",
+            "embedding", SEEDMOD, NPROBE, NSW_DEG, NSW_BEAM, NSW_HOPS)
+          .localCheckpoint(true),
+        // k beyond any cell size keeps EVERY scored candidate — the IVF
+        // arm's measured cost is this frame's row count
+        () => Similarity.ivfTopK(t.embeddings, queries, "vec_id",
+            "embedding", SEEDMOD, NPROBE, Int.MaxValue)
+          .localCheckpoint(true)))
+      def arm(name: String, nScored: Long, top: DataFrame) = {
+        val hits = hitCount(top, exact)
         (name, nq, nScored, hits, hits.toDouble / (K * nq))
       }
-      Seq(arm("ivf", ivfAll.count(), ivfTop),
-          arm("nsw", nswVis.count(), nswTop))
+      Seq(arm("ivf", ivfAll.count(), ivfAll.filter(col("rank") <= K)
+            .select(col("query_id"), col("corpus_id"))),
+          arm("nsw", nswVis.count(), cosineTopK(nswVis, K)))
         .toDF("method", "n_queries", "n_scored", "n_hits", "recall")
         .select(col("method"), col("n_queries"), col("n_scored"),
           col("n_hits"), pround(col("recall"), 6).as("recall"))
         .orderBy(col("method"))
     },
     Some(s"""WITH $nswCtes,
-      ivf_scored AS (
-        SELECT p.query_id, a.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-            AS cosine
-        FROM probe p
-        JOIN assign a ON p.cell = a.cell AND a.vec_id != p.query_id
-        JOIN v q ON q.vec_id = p.query_id
-        JOIN v c ON c.vec_id = a.vec_id),
-      ivf_top AS (
-        SELECT query_id, corpus_id FROM (
-          SELECT query_id, corpus_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, corpus_id ASC) AS rk
-          FROM ivf_scored) WHERE rk <= $K),
-      nsw_sc AS (
-        SELECT query_id, corpus_id, cosine FROM vis
-        WHERE corpus_id != query_id),
-      nsw_top AS (
-        SELECT query_id, corpus_id FROM (
-          SELECT query_id, corpus_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, corpus_id ASC) AS rk
-          FROM nsw_sc) WHERE rk <= $K),
-      exact AS (
-        SELECT query_id, corpus_id FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY ${dotSql("q.embedding", "c.embedding")}
-                  / (sqrt(${norm2Sql("q.embedding")})
-                     * sqrt(${norm2Sql("c.embedding")})) DESC,
-                c.vec_id ASC) AS rank
-          FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
-          JOIN embeddings c ON c.vec_id != q.vec_id)
-        WHERE rank <= $K),
+      $prunedTopCtes,
+      ${bruteExactCte()},
       nq AS (SELECT count(*) AS n
         FROM embeddings WHERE vec_id % $QMOD = 0)
       SELECT method, CAST(nq.n AS BIGINT) AS n_queries,
@@ -1184,36 +1272,16 @@ object SimilarityQueries {
       // ONE scored frame at the largest probe count serves the whole
       // curve via probe_idx filters — one corpus scan + bucket join
       // instead of one per arm (guide §1.2 "don't compute things
-      // twice"); the brute exact baseline overlaps with it (§2.6, the
-      // q149/q290 shape).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        val e = Similarity.topK(t.embeddings, queries, "vec_id",
-            "embedding", K)
-          .select(col("query_id"), col("corpus_id")).localCheckpoint(true)
-        (e, e.count())
-      }
-      val scAllF = Future(
+      // twice"); the brute exact baseline overlaps with it
+      val ((exact, nTotal), scAll) = Overlap(
+        { val e = exactTopK(t.embeddings, queries, K); (e, e.count()) },
         Similarity.mpLshScoredIdx(t.embeddings, queries, "vec_id",
             "embedding", NBITS, MPL_PROBES.max)
           .localCheckpoint(true))
-      val ((exact, nTotal), scAll) =
-        try Await.result(exactF.zip(scAllF), Duration(20, "min"))
-        finally pool.shutdown()
       val rows = MPL_PROBES.map { np =>
         val sc = scAll.filter(col("probe_idx") < np)
         val nScored = sc.count()
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("corpus_id").asc)
-        val top = sc.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= K)
-          .select(col("query_id"), col("corpus_id"))
-        val hits = top.join(exact, Seq("query_id", "corpus_id")).count()
+        val hits = hitCount(cosineTopK(sc, K), exact)
         (np, nScored, hits, nTotal, hits.toDouble / nTotal.toDouble)
       }
       rows.toDF("nprobe", "n_scored", "n_hits", "n_total", "recall")
@@ -1264,17 +1332,7 @@ object SimilarityQueries {
             AS ms
         FROM qv),
       ${MPL_PROBES.map(probesCte).mkString(",")},
-      exact AS MATERIALIZED (
-        SELECT query_id, corpus_id FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY ${dotSql("q.embedding", "c.embedding")}
-                  / (sqrt(${norm2Sql("q.embedding")})
-                     * sqrt(${norm2Sql("c.embedding")})) DESC,
-                c.vec_id ASC) AS rank
-          FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
-          JOIN embeddings c ON c.vec_id != q.vec_id)
-        WHERE rank <= $K),
+      ${bruteExactCte(materialized = true)},
       tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM exact)
       SELECT nprobe, n_scored, n_hits, n_total,
         ${proundSql("CAST(n_hits AS DOUBLE) / CAST(n_total AS DOUBLE)", 6)}
@@ -1514,9 +1572,7 @@ object SimilarityQueries {
           row_number() OVER (PARTITION BY vec_id
             ORDER BY d2, cluster) AS rk
         FROM sdc_dist$fin) WHERE rk = 1),
-    sdc_v AS (
-      SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-      FROM embeddings),
+    ${normCte("sdc_v")},
     sdc_m AS MATERIALIZED (
       SELECT a.vec_id, a.cluster, v.embedding, v.nrm
       FROM sdc_asg a JOIN sdc_v v USING (vec_id)),
@@ -1598,23 +1654,15 @@ object SimilarityQueries {
       val t = Tpch(s, dir)
       val emb = t.embeddings
       val queries = emb.filter(col("vec_id") % QMOD === 0)
-      val exact = Similarity.topK(emb, queries, "vec_id", "embedding",
-          MRL_K)
-        .select(col("query_id"), col("corpus_id"))
-        .localCheckpoint(true) // one brute scan, three rung joins
-      def trunc(df: org.apache.spark.sql.DataFrame, d: Int) =
+      val exact = exactTopK(emb, queries, MRL_K)
+      def trunc(df: DataFrame, d: Int) =
         df.select(col("vec_id"),
           slice(col("embedding"), 1, d).as("embedding"))
       val rows = MRL_DIMS.map { d =>
-        val top = Similarity.topK(trunc(emb, d), trunc(queries, d),
-            "vec_id", "embedding", MRL_K)
-          .select(col("query_id"), col("corpus_id"))
-        exact.join(top, Seq("query_id", "corpus_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_total"))))
-          .select(lit(d).as("dims"), col("n_hits"), col("n_total"),
-            pround(col("n_hits").cast("double") / col("n_total"), 4)
-              .as("recall"))
+        recallRow(lit(d).as("dims"), exact,
+          Similarity.topK(trunc(emb, d), trunc(queries, d), "vec_id",
+              "embedding", MRL_K)
+            .select(col("query_id"), col("corpus_id")))
       }
       rows.reduce(_.unionByName(_)).orderBy(col("dims").desc)
     },
@@ -1646,9 +1694,7 @@ object SimilarityQueries {
               ON ex.query_id = t.query_id AND ex.corpus_id = t.corpus_id)
               AS DOUBLE) / (SELECT count(*) FROM ex)""", 4)} AS recall"""
       }.mkString("\n        UNION ALL ")
-      s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      s"""WITH ${normCte("v")},
       ex AS MATERIALIZED (
         SELECT query_id, corpus_id FROM (
           SELECT query_id, corpus_id, row_number() OVER (
@@ -1790,9 +1836,7 @@ object SimilarityQueries {
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""WITH ${pqBaseSql},
-      v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -1901,9 +1945,7 @@ object SimilarityQueries {
           CAST(row_number() OVER (ORDER BY score DESC, doc_id ASC) AS INT)
             AS lex_rank
         FROM lexscored ORDER BY score DESC, doc_id ASC LIMIT $HY_LEGK),
-      v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      ${normCte("v")},
       vecscored AS (
         SELECT c.vec_id AS doc_id,
           ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
@@ -2062,9 +2104,7 @@ object SimilarityQueries {
           col("corpus_id"), col("iscore"))
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -2139,9 +2179,7 @@ object SimilarityQueries {
           col("n_chars"))
         .orderBy(col("cell"), col("sel_rank"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -2165,9 +2203,7 @@ object SimilarityQueries {
   // IVF assign as q117, residual r = x − centroid(cell) in exact
   // doubles, codebook/encode over the residuals (same √n donor rule).
   private def residualPqSql = s"""
-      v2 AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      ${normCte("v2")},
       seeds2 AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v2 WHERE vec_id % $SEEDMOD = 0),
@@ -2380,44 +2416,20 @@ object SimilarityQueries {
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
       // the three eager chains — brute exact baseline, trained
       // codebooks, seed codebooks — are independent until the final
-      // recall join: overlap them (guide §2.6, the q149/q290 shape).
-      // Each future yields the same deterministic frame it did
-      // serially.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        val e = Similarity.topK(t.embeddings, queries, "vec_id",
-            "embedding", SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-          // tiny (queries x K) and referenced once per rung plus the
-          // n_total agg: checkpoint so the brute scan runs ONCE
-          .localCheckpoint(true)
-        // hoisted: the 1-row exact-baseline count is shared by every rung
-        (e, e.agg(count(lit(1)).as("n_total")).localCheckpoint(true))
-      }
-      val cbKF = Future(Similarity.pqCodebooksKMeans(t.embeddings,
-        "vec_id", "embedding", PQ_M, PQKM_K, PQKM_ITERS))
-      val cbSF = Future(Similarity.pqCodebooksKMeans(t.embeddings,
-        "vec_id", "embedding", PQ_M, PQKM_K, 0))
-      val allF = for { a <- exactF; b <- cbKF; c <- cbSF } yield (a, b, c)
-      val ((exact, exactTotal), cbK, cbS) =
-        try Await.result(allF, Duration(20, "min"))
-        finally pool.shutdown()
-      def rung(name: String, cb: org.apache.spark.sql.DataFrame) = {
+      // recall join
+      val Seq(exact, cbK, cbS) = Overlap.all(Seq(
+        () => exactTopK(t.embeddings, queries, SQ_K),
+        () => Similarity.pqCodebooksKMeans(t.embeddings, "vec_id",
+          "embedding", PQ_M, PQKM_K, PQKM_ITERS),
+        () => Similarity.pqCodebooksKMeans(t.embeddings, "vec_id",
+          "embedding", PQ_M, PQKM_K, 0)))
+      def rung(name: String, cb: DataFrame) = {
         val enc = Similarity.pqEncode(t.embeddings, "vec_id", "embedding",
           PQ_M, cb)
-        val top = Similarity.pqAdcTopK(enc, queries, "vec_id", "embedding",
-            PQ_M, cb, SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-        exact.join(top, Seq("query_id", "corpus_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(exactTotal))
-          .select(lit(name).as("method"), col("n_hits"), col("n_total"),
-            pround(col("n_hits").cast("double") / col("n_total"), 4)
-              .as("recall"))
+        recallRow(lit(name).as("method"), exact,
+          Similarity.pqAdcTopK(enc, queries, "vec_id", "embedding", PQ_M,
+              cb, SQ_K)
+            .select(col("query_id"), col("corpus_id")))
       }
       rung("pq_kmeans", cbK).unionByName(rung("pq_seed", cbS))
         .orderBy(col("method"))
@@ -2512,34 +2524,11 @@ object SimilarityQueries {
       $iterCtes,
       ${rungSql("ks", "kcent0")},
       ${rungSql("km", s"kcent$PQKM_ITERS")},
-      v3 AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
-      scoredx3 AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-        FROM (SELECT * FROM v3 WHERE vec_id % $QMOD = 0) q
-        JOIN v3 c ON q.vec_id != c.vec_id),
-      exact3 AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank
-              FROM scoredx3)
-        WHERE rank <= $SQ_K),
+      ${normCte("v3")},
+      ${cosineExactCtes("v3", "scoredx3", "exact3", SQ_K)},
       tot3 AS (SELECT count(*) AS n_total FROM exact3)
-      SELECT method, n_hits, n_total,
-        ${proundSql("CAST(n_hits AS DOUBLE) / n_total", 4)} AS recall
-      FROM (
-        SELECT 'pq_kmeans' AS method,
-          (SELECT count(*) FROM exact3 e JOIN kmtop m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total FROM tot3
-        UNION ALL
-        SELECT 'pq_seed' AS method,
-          (SELECT count(*) FROM exact3 e JOIN kstop m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total FROM tot3)
-      ORDER BY method"""
+      ${recallSql("method", Seq("'pq_kmeans'" -> "kmtop",
+        "'pq_seed'" -> "kstop"), "exact3", "tot3")}"""
     })
 
   // -- V22b: OPQ rung — parametric optimized product quantization by
@@ -2567,24 +2556,12 @@ object SimilarityQueries {
       val emb = t.embeddings
       val queries = emb.filter(col("vec_id") % QMOD === 0)
       // the exact brute baseline and the train+encode chain are
-      // independent until the final recall join: overlap them (guide
-      // §2.6, the q159/q149/q290 shape). Each future yields the same
-      // deterministic frames it did serially.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      // exact float top-K on the ORIGINAL vectors: the shared recall
-      // denominator for both arms (a permutation preserves true
-      // cosine exactly; only the quantized approximations differ)
-      val exactF = Future {
-        val e = Similarity.topK(emb, queries, "vec_id", "embedding", SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-          .localCheckpoint(true)
-        (e, e.agg(count(lit(1)).as("n_total")).localCheckpoint(true))
-      }
-      val trainF = Future {
+      // independent until the final recall join. The exact float top-K
+      // is on the ORIGINAL vectors: the shared recall denominator for
+      // both arms (a permutation preserves true cosine exactly; only
+      // the quantized approximations differ)
+      val (exact, (rotQ, cbBoth, encBoth)) = Overlap(
+        exactTopK(emb, queries, SQ_K), {
         // transform model: d rows of exact-decimal energy → permutation
         // (bounded driver state, the k-means-centroid discipline)
         val perm = graft.operators.Opq.energySnakePerm(emb, "embedding",
@@ -2619,31 +2596,23 @@ object SimilarityQueries {
         val encBoth = Similarity.pqEncode(both, "vec_id", "embedding",
           2 * PQ_M, cbBoth).localCheckpoint(true)
         (rotQ, cbBoth, encBoth)
-      }
-      val allF = for { a <- exactF; b <- trainF } yield (a, b)
-      val ((exact, exactTotal), (rotQ, cbBoth, encBoth)) =
-        try Await.result(allF, Duration(20, "min"))
-        finally pool.shutdown()
+      })
       val cbId = cbBoth.filter(col("sub") < PQ_M)
       val cbOp = cbBoth.filter(col("sub") >= PQ_M)
         .withColumn("sub", (col("sub") - PQ_M).cast("int"))
       val encId = encBoth.filter(col("sub") < PQ_M)
       val encOp = encBoth.filter(col("sub") >= PQ_M)
         .withColumn("sub", (col("sub") - PQ_M).cast("int"))
-      def arm(name: String, enc: org.apache.spark.sql.DataFrame,
-          qs: org.apache.spark.sql.DataFrame,
-          cb: org.apache.spark.sql.DataFrame) = {
+      def arm(name: String, enc: DataFrame, qs: DataFrame, cb: DataFrame) = {
         val mse = enc.agg(sum(col("sdist").cast("decimal(28,8)"))
           .as("mse_sum"))
         val top = Similarity.pqAdcTopK(
             enc.select(col("vec_id"), col("sub"), col("cw")),
             qs, "vec_id", "embedding", PQ_M, cb, SQ_K)
           .select(col("query_id"), col("corpus_id"))
-        exact.join(top, Seq("query_id", "corpus_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(exactTotal))
+        recallRow(lit(name).as("method"), exact, top)
           .crossJoin(broadcast(mse))
-          .select(lit(name).as("method"), col("n_hits"), col("n_total"),
+          .select(col("method"), col("n_hits"), col("n_total"),
             col("mse_sum"))
       }
       // both arms evaluate in ONE action (their stage trees share the
@@ -2771,8 +2740,7 @@ object SimilarityQueries {
           WHERE rank <= $SQ_K),
         ${p}row AS (
           SELECT '$method' AS method,
-            (SELECT count(*) FROM exactq e JOIN ${p}top m
-              ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
+            ${hitsSql("exactq", s"${p}top")}
               AS n_hits,
             (SELECT n_total FROM totq) AS n_total,
             (SELECT mse_sum FROM ${p}mse) AS mse_sum)"""
@@ -2804,20 +2772,9 @@ object SimilarityQueries {
       ${subsSql("op", "rotv")},
       ${kmeansSql("id")},
       ${kmeansSql("op")},
-      vq AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
-      scoredq AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-        FROM (SELECT * FROM vq WHERE vec_id % $QMOD = 0) q
-        JOIN vq c ON q.vec_id != c.vec_id),
-      exactq AS MATERIALIZED (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank
-              FROM scoredq)
-        WHERE rank <= $SQ_K),
+      ${normCte("vq")},
+      ${cosineExactCtes("vq", "scoredq", "exactq", SQ_K,
+        materialized = true)},
       totq AS (SELECT count(*) AS n_total FROM exactq),
       ${armSql("id", "pq_kmeans")},
       ${armSql("op", "opq_snake")}
@@ -2969,182 +2926,56 @@ object SimilarityQueries {
     (s, dir) => {
       val t = Tpch(s, dir)
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
-      // independent rung builds overlap (guide §2.6, the q290 shape):
       // the brute exact top-K fills the executors while the codebook
-      // trainings and the residual chain — driver-latency-bound job
-      // sequences — back-fill the idle cores. Each future yields the
-      // same deterministic frame it did serially.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        Similarity.topK(t.embeddings, queries, "vec_id",
+      // trainings and the residual chain back-fill the idle cores
+      val Seq(exact, sq, pq, rpq, bin) = Overlap.all(Seq(
+        () => exactTopK(t.embeddings, queries, SQ_K),
+        () => Similarity.sqTopK(t.embeddings, queries, "vec_id",
             "embedding", SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-          // tiny (queries x K) and referenced once per rung plus the
-          // n_total agg: checkpoint so the brute scan runs ONCE
-          .localCheckpoint(true)
-      }
-      val sqF = Future {
-        Similarity.sqTopK(t.embeddings, queries, "vec_id",
-            "embedding", SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-      }
-      val pqF = Future {
-        val cb = Similarity.pqCodebooks(t.embeddings, "vec_id",
-          "embedding", PQ_M, seedMod = 0)
-        val enc = Similarity.pqEncode(t.embeddings, "vec_id", "embedding",
-          PQ_M, cb)
-        Similarity.pqAdcTopK(enc, queries, "vec_id", "embedding",
-            PQ_M, cb, SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-      }
-      // residual rung: q153's full composition (IVF cells + residual
-      // codes + per-cell LUTs) at the production nprobe — the measured
-      // answer to "what does residual encoding buy at the same m"
-      val rpqF = Future {
-        val seeds = Similarity.seedCentroids(
-          t.embeddings, "vec_id", "embedding", SEEDMOD)
-        val assigned = Similarity.ivfAssign(
-          t.embeddings, "vec_id", "embedding", seeds).localCheckpoint()
-        val res = Similarity.ivfResiduals(assigned, "vec_id", "embedding",
-          seeds)
-        val sm = Similarity.sqrtSeedMod(t.embeddings.count())
-        val rcb = Similarity.pqCodebooks(res, "vec_id", "rvec", PQ_M, sm)
-        val renc = Similarity.pqEncode(res, "vec_id", "rvec", PQ_M, rcb)
-        Similarity.ivfPqResidualTopK(renc,
-            assigned.select(col("vec_id"), col("cell")), seeds, queries,
-            "vec_id", "embedding", PQ_M, rcb, NPROBE, SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-      }
-      // binary rung: 1 bit/dim, hamming ranking — the floor of the
-      // ladder (what the cheapest possible code costs in recall)
-      val binF = Future {
-        Similarity.binTopK(t.embeddings, queries, "vec_id",
+          .select(col("query_id"), col("corpus_id")),
+        () => pqTopK(t.embeddings, queries, SQ_K)
+          .select(col("query_id"), col("corpus_id")),
+        // residual rung: q153's full composition (IVF cells + residual
+        // codes + per-cell LUTs) at the production nprobe — the
+        // measured answer to "what does residual encoding buy at the
+        // same m"
+        () => {
+          val seeds = Similarity.seedCentroids(
+            t.embeddings, "vec_id", "embedding", SEEDMOD)
+          val assigned = Similarity.ivfAssign(
+            t.embeddings, "vec_id", "embedding", seeds).localCheckpoint()
+          val res = Similarity.ivfResiduals(assigned, "vec_id",
+            "embedding", seeds)
+          val sm = Similarity.sqrtSeedMod(t.embeddings.count())
+          val rcb = Similarity.pqCodebooks(res, "vec_id", "rvec", PQ_M, sm)
+          val renc = Similarity.pqEncode(res, "vec_id", "rvec", PQ_M, rcb)
+          Similarity.ivfPqResidualTopK(renc,
+              assigned.select(col("vec_id"), col("cell")), seeds, queries,
+              "vec_id", "embedding", PQ_M, rcb, NPROBE, SQ_K)
+            .select(col("query_id"), col("corpus_id"))
+        },
+        // binary rung: 1 bit/dim, hamming ranking — the floor of the
+        // ladder (what the cheapest possible code costs in recall)
+        () => Similarity.binTopK(t.embeddings, queries, "vec_id",
             "embedding", SQ_DIMS, SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-      }
-      val allF = for {
-        a <- exactF; b <- sqF; c <- pqF; d <- rpqF; e <- binF
-      } yield (a, b, c, d, e)
-      val (exact, sq, pq, rpq, bin) =
-        try Await.result(allF, Duration(20, "min"))
-        finally pool.shutdown()
-      def row(name: String, m: org.apache.spark.sql.DataFrame) =
-        exact.join(m, Seq("query_id", "corpus_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(
-            exact.agg(count(lit(1)).as("n_total"))))
-          .select(lit(name).as("method"), col("n_hits"), col("n_total"),
-            pround(col("n_hits").cast("double") / col("n_total"), 4)
-              .as("recall"))
-      row("pq", pq).unionByName(row("sq8", sq))
-        .unionByName(row("ivfpq_res", rpq))
-        .unionByName(row("bin", bin)).orderBy(col("method"))
+          .select(col("query_id"), col("corpus_id"))))
+      Seq("pq" -> pq, "sq8" -> sq, "ivfpq_res" -> rpq, "bin" -> bin)
+        .map { case (name, m) => recallRow(lit(name).as("method"), exact, m) }
+        .reduce(_ unionByName _).orderBy(col("method"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
-      scoredx AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-        FROM (SELECT * FROM v WHERE vec_id % $QMOD = 0) q
-        JOIN v c ON q.vec_id != c.vec_id),
-      exact AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank
-              FROM scoredx)
-        WHERE rank <= $SQ_K),
-      dims AS (SELECT unnest(generate_series(1, $SQ_DIMS)) AS pos),
-      scales AS (
-        SELECT pos, max(abs(CAST(embedding[pos] AS DOUBLE))) AS s
-        FROM embeddings CROSS JOIN dims GROUP BY pos),
-      sarr AS (SELECT list(s ORDER BY pos) AS sc FROM scales),
-      enc8 AS (
-        SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
-          i -> CASE WHEN sc[i] = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(floor(CAST(embedding[i] AS DOUBLE) * 127.0
-                 / sc[i] + 0.5) AS BIGINT) END) AS q
-        FROM embeddings CROSS JOIN sarr),
-      scored8 AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          list_reduce(list_prepend(CAST(0 AS BIGINT),
-            list_transform(list_zip(q.q, c.q), pr -> pr[1] * pr[2])),
-            (x, y) -> x + y) AS iscore
-        FROM (SELECT * FROM enc8 WHERE vec_id % $QMOD = 0) q
-        JOIN enc8 c ON q.vec_id != c.vec_id),
-      sq8 AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY iscore DESC, corpus_id ASC) AS rank
-              FROM scored8)
-        WHERE rank <= $SQ_K),
+    Some(s"""WITH ${normCte("v")},
+      ${cosineExactCtes("v", "scoredx", "exact", SQ_K)},
+      ${sq8TopCtes("query_id, corpus_id", SQ_K)},
       $pqBaseSql,
-      adc AS (
-        SELECT s.vec_id AS query_id, s.sub, c.cw,
-          ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
-            AS qd
-        FROM subs s JOIN codebook c USING (sub)
-        WHERE s.vec_id % $QMOD = 0),
-      dists AS (
-        SELECT a.query_id, e.vec_id AS corpus_id,
-          list_reduce(list_prepend(CAST(0 AS DOUBLE),
-            list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
-        FROM enc e JOIN adc a ON e.sub = a.sub AND e.cw = a.cw
-        WHERE a.query_id != e.vec_id
-        GROUP BY a.query_id, e.vec_id),
-      pq AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY adist ASC, corpus_id ASC) AS rank FROM dists)
-        WHERE rank <= $SQ_K),
+      ${pqAdcCtes("pq", "query_id, corpus_id", SQ_K)},
       ${residualPqSql.trim},
       ${residualProbeSql(QMOD, NPROBE).trim},
       rtop AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY adist ASC, corpus_id ASC) AS rank FROM rdists)
-        WHERE rank <= $SQ_K),
-      binh AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          list_reduce(list_prepend(0,
-            list_transform(generate_series(1, $SQ_DIMS),
-              i -> CASE WHEN (q.embedding[i] > 0) != (c.embedding[i] > 0)
-                   THEN 1 ELSE 0 END)), (x, y) -> x + y) AS hamming
-        FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
-        JOIN embeddings c ON q.vec_id != c.vec_id),
-      binm AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY hamming ASC, corpus_id ASC) AS rank FROM binh)
-        WHERE rank <= $SQ_K),
+        ${rankCutSql("query_id, corpus_id", "rdists", "adist ASC", SQ_K)}),
+      ${binTopCtes(SQ_K)},
       tot AS (SELECT count(*) AS n_total FROM exact)
-      SELECT method, n_hits, n_total,
-        ${proundSql("CAST(n_hits AS DOUBLE) / n_total", 4)} AS recall
-      FROM (
-        SELECT 'pq' AS method,
-          (SELECT count(*) FROM exact e JOIN pq m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total FROM tot
-        UNION ALL
-        SELECT 'sq8' AS method,
-          (SELECT count(*) FROM exact e JOIN sq8 m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total FROM tot
-        UNION ALL
-        SELECT 'ivfpq_res' AS method,
-          (SELECT count(*) FROM exact e JOIN rtop m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total FROM tot
-        UNION ALL
-        SELECT 'bin' AS method,
-          (SELECT count(*) FROM exact e JOIN binm m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total FROM tot)
-      ORDER BY method"""))
+      ${recallSql("method", Seq("'pq'" -> "pq", "'sq8'" -> "sq8",
+        "'ivfpq_res'" -> "rtop", "'bin'" -> "binm"), "exact", "tot")}"""))
 
   // -- S25: nDCG@K of the compression rungs — the RANK-SENSITIVE
   //    fidelity metric next to q149's recall (recall counts set
@@ -3165,21 +2996,11 @@ object SimilarityQueries {
     (s, dir) => {
       val t = Tpch(s, dir)
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
-      val exact = Similarity.topK(t.embeddings, queries, "vec_id",
-          "embedding", SQ_K)
-        .select(col("query_id"), col("corpus_id"))
-        // tiny (queries x K) and referenced once per rung plus the
-        // n_total agg: checkpoint so the brute scan runs ONCE
-        .localCheckpoint(true)
+      val exact = exactTopK(t.embeddings, queries, SQ_K)
       val sq = Similarity.sqTopK(t.embeddings, queries, "vec_id",
           "embedding", SQ_K)
         .select(col("query_id"), col("corpus_id"), col("rank"))
-      val cb = Similarity.pqCodebooks(t.embeddings, "vec_id",
-        "embedding", PQ_M, seedMod = 0)
-      val enc = Similarity.pqEncode(t.embeddings, "vec_id", "embedding",
-        PQ_M, cb)
-      val pq = Similarity.pqAdcTopK(enc, queries, "vec_id", "embedding",
-          PQ_M, cb, SQ_K)
+      val pq = pqTopK(t.embeddings, queries, SQ_K)
         .select(col("query_id"), col("corpus_id"), col("rank"))
       val gains = array(NDCG_G.map(lit): _*)
       val nqDf = queries.agg(count(lit(1)).as("n_queries"))
@@ -3203,63 +3024,10 @@ object SimilarityQueries {
     Some {
       val gList = NDCG_G.mkString("[", ", ", "]")
       s"""WITH ${pqBaseSql},
-      v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
-      scoredx AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-            AS cosine
-        FROM (SELECT * FROM v WHERE vec_id % $QMOD = 0) q
-        JOIN v c ON q.vec_id != c.vec_id),
-      exact AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank
-              FROM scoredx)
-        WHERE rank <= $SQ_K),
-      dims AS (SELECT unnest(generate_series(1, $SQ_DIMS)) AS pos),
-      scales AS (
-        SELECT pos, max(abs(CAST(embedding[pos] AS DOUBLE))) AS s
-        FROM embeddings CROSS JOIN dims GROUP BY pos),
-      sarr AS (SELECT list(s ORDER BY pos) AS sc FROM scales),
-      enc8 AS (
-        SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
-          i -> CASE WHEN sc[i] = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(floor(CAST(embedding[i] AS DOUBLE) * 127.0
-                 / sc[i] + 0.5) AS BIGINT) END) AS q
-        FROM embeddings CROSS JOIN sarr),
-      scored8 AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          list_reduce(list_prepend(CAST(0 AS BIGINT),
-            list_transform(list_zip(q.q, c.q), pr -> pr[1] * pr[2])),
-            (x, y) -> x + y) AS iscore
-        FROM (SELECT * FROM enc8 WHERE vec_id % $QMOD = 0) q
-        JOIN enc8 c ON q.vec_id != c.vec_id),
-      sq8 AS (
-        SELECT query_id, corpus_id, rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY iscore DESC, corpus_id ASC) AS rank
-              FROM scored8)
-        WHERE rank <= $SQ_K),
-      adc AS (
-        SELECT s.vec_id AS query_id, s.sub, c.cw,
-          ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
-            AS qd
-        FROM subs s JOIN codebook c USING (sub)
-        WHERE s.vec_id % $QMOD = 0),
-      dists AS (
-        SELECT a.query_id, e.vec_id AS corpus_id,
-          list_reduce(list_prepend(CAST(0 AS DOUBLE),
-            list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
-        FROM enc e JOIN adc a ON e.sub = a.sub AND e.cw = a.cw
-        WHERE a.query_id != e.vec_id
-        GROUP BY a.query_id, e.vec_id),
-      pq AS (
-        SELECT query_id, corpus_id, rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY adist ASC, corpus_id ASC) AS rank FROM dists)
-        WHERE rank <= $SQ_K),
+      ${normCte("v")},
+      ${cosineExactCtes("v", "scoredx", "exact", SQ_K)},
+      ${sq8TopCtes("query_id, corpus_id, rank", SQ_K)},
+      ${pqAdcCtes("pq", "query_id, corpus_id, rank", SQ_K)},
       nq AS (
         SELECT count(*) AS n_queries FROM embeddings
         WHERE vec_id % $QMOD = 0),
@@ -3345,9 +3113,7 @@ object SimilarityQueries {
           col("corpus_id"), col("hamming"))
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+    Some(s"""WITH ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -3432,9 +3198,7 @@ object SimilarityQueries {
       }.mkString(",\n        ")
       val arms = (1 to MMR_K).map(st => s"SELECT * FROM sel$st")
         .mkString("\n        UNION ALL ")
-      s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      s"""WITH ${normCte("v")},
       scoredm AS (
         SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
           ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
@@ -3480,35 +3244,16 @@ object SimilarityQueries {
     (s, dir) => {
       val t = Tpch(s, dir)
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
-      val exact = Similarity.topK(t.embeddings, queries, "vec_id",
-          "embedding", SQ_K)
-        .select(col("query_id"), col("corpus_id"))
-        .localCheckpoint(true)
+      val exact = exactTopK(t.embeddings, queries, SQ_K)
       val rows = NPROBE_CURVE.map { np =>
-        val m = Similarity.ivfTopK(t.embeddings, queries, "vec_id",
-            "embedding", SEEDMOD, np, SQ_K)
-          .select(col("query_id"), col("corpus_id"))
-        exact.join(m, Seq("query_id", "corpus_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_total"))))
-          .select(lit(np).as("nprobe"), col("n_hits"), col("n_total"),
-            pround(col("n_hits").cast("double") / col("n_total"), 4)
-              .as("recall"))
+        recallRow(lit(np).as("nprobe"), exact,
+          Similarity.ivfTopK(t.embeddings, queries, "vec_id", "embedding",
+              SEEDMOD, np, SQ_K)
+            .select(col("query_id"), col("corpus_id")))
       }
       rows.reduce(_ unionByName _).orderBy(col("nprobe"))
     },
     Some {
-      def probeArm(np: Int) = s"""
-        SELECT $np AS nprobe,
-          (SELECT count(*) FROM exact e JOIN (
-            SELECT query_id, corpus_id
-            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, corpus_id ASC) AS rank
-                  FROM scored$np)
-            WHERE rank <= $SQ_K) m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
-            AS n_hits, n_total
-        FROM tot"""
       def scoredCte(np: Int) = s"""
       probe$np AS (
         SELECT query_id, cell FROM probeall WHERE rn <= $np),
@@ -3519,9 +3264,7 @@ object SimilarityQueries {
         JOIN assign a ON p.cell = a.cell AND a.vec_id != p.query_id
         JOIN v q ON q.vec_id = p.query_id
         JOIN v c ON c.vec_id = a.vec_id)"""
-      s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
+      s"""WITH ${normCte("v")},
       seeds AS (
         SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
         FROM v WHERE vec_id % $SEEDMOD = 0),
@@ -3540,22 +3283,12 @@ object SimilarityQueries {
                 s.cell ASC) AS rn
           FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
         WHERE rn <= ${NPROBE_CURVE.max}),
-      exscored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-        FROM (SELECT * FROM v WHERE vec_id % $QMOD = 0) q
-        JOIN v c ON q.vec_id != c.vec_id),
-      exact AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank FROM exscored)
-        WHERE rank <= $SQ_K),
+      ${cosineExactCtes("v", "exscored", "exact", SQ_K)},
       ${NPROBE_CURVE.map(scoredCte).mkString(",")},
       tot AS (SELECT count(*) AS n_total FROM exact)
-      SELECT nprobe, n_hits, n_total,
-        ${proundSql("CAST(n_hits AS DOUBLE) / n_total", 4)} AS recall
-      FROM (${NPROBE_CURVE.map(probeArm).mkString("\n        UNION ALL")})
-      ORDER BY nprobe"""
+      ${recallSql("nprobe", NPROBE_CURVE.map(np => s"$np" -> s"""(
+        ${rankCutSql("query_id, corpus_id", s"scored$np", "cosine DESC",
+          SQ_K)})"""), "exact", "tot")}"""
     })
 
   // -- V31: MRR@K of the compression rungs — the third retrieval-
@@ -3572,12 +3305,9 @@ object SimilarityQueries {
     (s, dir) => {
       val t = Tpch(s, dir)
       val queries = t.embeddings.filter(col("vec_id") % QMOD === 0)
-      val exact = Similarity.topK(t.embeddings, queries, "vec_id",
-          "embedding", SQ_K)
-        .select(col("query_id"), col("corpus_id"))
-        .localCheckpoint(true)
+      val exact = exactTopK(t.embeddings, queries, SQ_K)
       val nq = queries.count()
-      def row(name: String, m: org.apache.spark.sql.DataFrame) =
+      def row(name: String, m: DataFrame) =
         m.join(exact, Seq("query_id", "corpus_id"))
           .groupBy(col("query_id"))
           .agg(min(col("rank")).as("fr"))
@@ -3596,32 +3326,10 @@ object SimilarityQueries {
       row("bin", bin).unionByName(row("sq8", sq))
         .orderBy(col("method"))
     },
-    Some(s"""WITH v AS (
-        SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
-        FROM embeddings),
-      scoredx AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-        FROM (SELECT * FROM v WHERE vec_id % $QMOD = 0) q
-        JOIN v c ON q.vec_id != c.vec_id),
-      exact AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank
-              FROM scoredx)
-        WHERE rank <= $SQ_K),
+    Some(s"""WITH ${normCte("v")},
+      ${cosineExactCtes("v", "scoredx", "exact", SQ_K)},
       nq AS (SELECT count(*) AS n FROM v WHERE vec_id % $QMOD = 0),
-      dims AS (SELECT unnest(generate_series(1, $SQ_DIMS)) AS pos),
-      scales AS (
-        SELECT pos, max(abs(CAST(embedding[pos] AS DOUBLE))) AS s
-        FROM embeddings CROSS JOIN dims GROUP BY pos),
-      sarr AS (SELECT list(s ORDER BY pos) AS sc FROM scales),
-      enc8 AS (
-        SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
-          i -> CASE WHEN sc[i] = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(floor(CAST(embedding[i] AS DOUBLE) * 127.0
-                 / sc[i] + 0.5) AS BIGINT) END) AS q
-        FROM embeddings CROSS JOIN sarr),
+      $sq8CodesCtes,
       sqm AS (
         SELECT query_id, corpus_id, rank FROM (
           SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
@@ -3850,11 +3558,7 @@ object SimilarityQueries {
       val t = Tpch(s, dir)
       val emb = t.embeddings
       val queries = emb.filter(col("vec_id") % QMOD === 0)
-      val exact = Similarity.topK(emb, queries, "vec_id", "embedding", SQ_K)
-        .select(col("query_id"), col("corpus_id"))
-        .localCheckpoint(true)
-      val exactTotal = exact.agg(count(lit(1)).as("n_total"))
-        .localCheckpoint(true)
+      val exact = exactTopK(emb, queries, SQ_K)
       val s1 = Similarity.ivfBinTopK(emb, queries, "vec_id", "embedding",
           SQ_DIMS, SEEDMOD, NPROBE, CAS_C1)
         .select(col("query_id"), col("corpus_id"), col("rank"))
@@ -3862,8 +3566,7 @@ object SimilarityQueries {
       val scales = Similarity.sqScales(emb, "embedding")
       val codes = Similarity.sqEncode(emb, "vec_id", "embedding", scales)
         .localCheckpoint(true)
-      val w2 = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
+      val w2 = Window.partitionBy(col("query_id"))
         .orderBy(col("iscore").desc, col("corpus_id").asc)
       val s2 = s1
         .join(codes.select(col("vec_id").as("query_id"),
@@ -3877,38 +3580,26 @@ object SimilarityQueries {
         .localCheckpoint(true)
       val vn = emb.select(col("vec_id"), col("embedding"),
         sqrt(Similarity.norm2(col("embedding"))).as("nrm"))
-      val w3 = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("corpus_id").asc)
-      val s3 = s2.select(col("query_id"), col("corpus_id"))
+      val s3 = cosineTopK(s2.select(col("query_id"), col("corpus_id"))
         .join(vn.select(col("vec_id").as("query_id"),
           col("embedding").as("qv"), col("nrm").as("qn")), Seq("query_id"))
         .join(vn.select(col("vec_id").as("corpus_id"),
           col("embedding").as("cv"), col("nrm").as("cn")), Seq("corpus_id"))
         .select(col("query_id"), col("corpus_id"),
           (Similarity.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-            .as("cosine"))
-        .withColumn("r3", row_number().over(w3))
-        .filter(col("r3") <= SQ_K)
-      def stageRow(name: String, picks: org.apache.spark.sql.DataFrame,
-          kept: org.apache.spark.sql.DataFrame) = {
-        val hits = picks.join(exact, Seq("query_id", "corpus_id"))
-          .agg(count(lit(1)).as("n_hits"))
-        val nk = kept.agg(count(lit(1)).as("n_kept"))
-        hits.crossJoin(broadcast(exactTotal)).crossJoin(broadcast(nk))
-          .select(lit(name).as("stage"), col("n_kept"), col("n_hits"),
-            col("n_total"),
-            pround(col("n_hits").cast("double") / col("n_total"), 4)
-              .as("recall"))
-      }
+            .as("cosine")), SQ_K)
+      def stageRow(name: String, picks: DataFrame, kept: DataFrame) =
+        recallRow(lit(name).as("stage"), exact, picks)
+          .crossJoin(broadcast(kept.agg(count(lit(1)).as("n_kept"))))
+          .select(col("stage"), col("n_kept"), col("n_hits"),
+            col("n_total"), col("recall"))
       stageRow("s1_binary",
           s1.filter(col("rank") <= SQ_K)
             .select(col("query_id"), col("corpus_id")), s1)
         .unionByName(stageRow("s2_sq8",
           s2.filter(col("r2") <= SQ_K)
             .select(col("query_id"), col("corpus_id")), s2))
-        .unionByName(stageRow("s3_exact",
-          s3.select(col("query_id"), col("corpus_id")), s3))
+        .unionByName(stageRow("s3_exact", s3, s3))
         .orderBy(col("stage"))
     },
     Some(s"""WITH v AS MATERIALIZED (
@@ -4322,69 +4013,36 @@ object SimilarityQueries {
       val nq = queries.count()
       val nC = t.embeddings.count()
       val fullScan = nq * (nC - 1)
-      // independent arm builds overlap (guide §2.6): the brute exact
-      // top-K is the compute-heavy job that fills the executors, while
-      // the nsw walk and the codebook training are chains of tiny
-      // driver-latency-bound jobs — running them concurrently
-      // back-fills the idle cores. Each future yields the same
-      // deterministic frame it did serially.
-      // pool sized to the future count, and ONE combined Await below
-      // so the 20-minute budget is shared rather than re-granted per
-      // arm
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val exactF = Future {
-        val e = Similarity.topK(t.embeddings, queries, "vec_id",
-            "embedding", K)
-          .select(col("query_id"), col("corpus_id")).localCheckpoint(true)
-        (e, e.count())
-      }
-      // full-scan arms
-      val sqF = Future(Similarity.sqTopK(t.embeddings, queries, "vec_id",
-        "embedding", K))
-      val pqF = Future {
-        val cb = Similarity.pqCodebooks(t.embeddings, "vec_id",
-          "embedding", PQ_M, seedMod = 0)
-        val enc = Similarity.pqEncode(t.embeddings, "vec_id", "embedding",
-          PQ_M, cb)
-        Similarity.pqAdcTopK(enc, queries, "vec_id", "embedding",
-          PQ_M, cb, K)
-      }
-      val binF = Future(Similarity.binTopK(t.embeddings, queries,
-        "vec_id", "embedding", SQ_DIMS, K))
-      // pruned arms: measured candidate counts (q216's cost rule)
-      val ivfF = Future(Similarity.ivfTopK(t.embeddings, queries,
-          "vec_id", "embedding", SEEDMOD, NPROBE, Int.MaxValue)
-        .localCheckpoint(true))
-      val nswF = Future(Similarity.nswScored(t.embeddings, queries,
-          "vec_id", "embedding", SEEDMOD, NPROBE, NSW_DEG, NSW_BEAM,
-          NSW_HOPS)
-        .localCheckpoint(true))
-      val allF = for {
-        a <- exactF; b <- sqF; c <- pqF; d <- binF; e <- ivfF; f <- nswF
-      } yield (a, b, c, d, e, f)
-      val ((exact, nTotal), sq, pq, bin, ivfAll, nswVis) =
-        try Await.result(allF, Duration(20, "min"))
-        finally pool.shutdown()
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("corpus_id").asc)
-      val nswTop = nswVis.withColumn("rk", row_number().over(wr))
-        .filter(col("rk") <= K)
+      // the brute exact top-K is the compute-heavy job that fills the
+      // executors, while the nsw walk and the codebook training are
+      // chains of tiny driver-latency-bound jobs
+      val Seq(exact, sq, pq, bin, ivfAll, nswVis) = Overlap.all(Seq(
+        () => exactTopK(t.embeddings, queries, K),
+        // full-scan arms
+        () => Similarity.sqTopK(t.embeddings, queries, "vec_id",
+          "embedding", K),
+        () => pqTopK(t.embeddings, queries, K),
+        () => Similarity.binTopK(t.embeddings, queries, "vec_id",
+          "embedding", SQ_DIMS, K),
+        // pruned arms: measured candidate counts (q216's cost rule)
+        () => Similarity.ivfTopK(t.embeddings, queries, "vec_id",
+            "embedding", SEEDMOD, NPROBE, Int.MaxValue)
+          .localCheckpoint(true),
+        () => Similarity.nswScored(t.embeddings, queries, "vec_id",
+            "embedding", SEEDMOD, NPROBE, NSW_DEG, NSW_BEAM, NSW_HOPS)
+          .localCheckpoint(true)))
+      val nTotal = exact.count()
       // ONE job for all five arm-hit counts: tag + union the tiny
       // (query, corpus) top-K frames, join the checkpointed exact
       // once, count per method — instead of five sequential actions
-      def tag(name: String, m: org.apache.spark.sql.DataFrame) =
+      def tag(name: String, m: DataFrame) =
         m.select(lit(name).as("method"), col("query_id"),
           col("corpus_id"))
       val hitCounts = tag("sq8", sq)
         .unionByName(tag("pq_adc", pq))
         .unionByName(tag("bin", bin))
         .unionByName(tag("ivf", ivfAll.filter(col("rank") <= K)))
-        .unionByName(tag("nsw", nswTop))
+        .unionByName(tag("nsw", cosineTopK(nswVis, K)))
         .join(exact, Seq("query_id", "corpus_id"))
         .groupBy(col("method")).agg(count(lit(1)).as("h"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -4412,97 +4070,12 @@ object SimilarityQueries {
         .orderBy(col("method"))
     },
     Some(s"""WITH $nswCtes,
-      ivf_scored AS (
-        SELECT p.query_id, a.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-            AS cosine
-        FROM probe p
-        JOIN assign a ON p.cell = a.cell AND a.vec_id != p.query_id
-        JOIN v q ON q.vec_id = p.query_id
-        JOIN v c ON c.vec_id = a.vec_id),
-      ivf_top AS (
-        SELECT query_id, corpus_id FROM (
-          SELECT query_id, corpus_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, corpus_id ASC) AS rk
-          FROM ivf_scored) WHERE rk <= $K),
-      nsw_sc AS (
-        SELECT query_id, corpus_id, cosine FROM vis
-        WHERE corpus_id != query_id),
-      nsw_top AS (
-        SELECT query_id, corpus_id FROM (
-          SELECT query_id, corpus_id,
-            row_number() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, corpus_id ASC) AS rk
-          FROM nsw_sc) WHERE rk <= $K),
-      scoredx AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
-            AS cosine
-        FROM (SELECT * FROM v WHERE vec_id % $QMOD = 0) q
-        JOIN v c ON q.vec_id != c.vec_id),
-      exact AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, corpus_id ASC) AS rank
-              FROM scoredx)
-        WHERE rank <= $K),
-      dims AS (SELECT unnest(generate_series(1, $SQ_DIMS)) AS pos),
-      scales AS (
-        SELECT pos, max(abs(CAST(embedding[pos] AS DOUBLE))) AS s
-        FROM embeddings CROSS JOIN dims GROUP BY pos),
-      sarr AS (SELECT list(s ORDER BY pos) AS sc FROM scales),
-      enc8 AS (
-        SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
-          i -> CASE WHEN sc[i] = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(floor(CAST(embedding[i] AS DOUBLE) * 127.0
-                 / sc[i] + 0.5) AS BIGINT) END) AS q
-        FROM embeddings CROSS JOIN sarr),
-      scored8 AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          list_reduce(list_prepend(CAST(0 AS BIGINT),
-            list_transform(list_zip(q.q, c.q), pr -> pr[1] * pr[2])),
-            (x, y) -> x + y) AS iscore
-        FROM (SELECT * FROM enc8 WHERE vec_id % $QMOD = 0) q
-        JOIN enc8 c ON q.vec_id != c.vec_id),
-      sq8 AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY iscore DESC, corpus_id ASC) AS rank
-              FROM scored8)
-        WHERE rank <= $K),
+      $prunedTopCtes,
+      ${cosineExactCtes("v", "scoredx", "exact", K)},
+      ${sq8TopCtes("query_id, corpus_id", K)},
       $pqBaseSql,
-      adc AS (
-        SELECT s.vec_id AS query_id, s.sub, c.cw,
-          ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
-            AS qd
-        FROM subs s JOIN codebook c USING (sub)
-        WHERE s.vec_id % $QMOD = 0),
-      dists AS (
-        SELECT a.query_id, e.vec_id AS corpus_id,
-          list_reduce(list_prepend(CAST(0 AS DOUBLE),
-            list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
-        FROM enc e JOIN adc a ON e.sub = a.sub AND e.cw = a.cw
-        WHERE a.query_id != e.vec_id
-        GROUP BY a.query_id, e.vec_id),
-      pqm AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY adist ASC, corpus_id ASC) AS rank FROM dists)
-        WHERE rank <= $K),
-      binh AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          list_reduce(list_prepend(0,
-            list_transform(generate_series(1, $SQ_DIMS),
-              i -> CASE WHEN (q.embedding[i] > 0) != (c.embedding[i] > 0)
-                   THEN 1 ELSE 0 END)), (x, y) -> x + y) AS hamming
-        FROM (SELECT * FROM embeddings WHERE vec_id % $QMOD = 0) q
-        JOIN embeddings c ON q.vec_id != c.vec_id),
-      binm AS (
-        SELECT query_id, corpus_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY hamming ASC, corpus_id ASC) AS rank FROM binh)
-        WHERE rank <= $K),
+      ${pqAdcCtes("pqm", "query_id, corpus_id", K)},
+      ${binTopCtes(K)},
       nqc AS (SELECT CAST(count(*) AS BIGINT) AS n
         FROM embeddings WHERE vec_id % $QMOD = 0),
       ncorp AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
@@ -4518,28 +4091,23 @@ object SimilarityQueries {
         UNION ALL
         SELECT 'sq8', (SELECT n_scored FROM fullscan),
           CAST($SQ_DIMS AS BIGINT),
-          (SELECT count(*) FROM exact e JOIN sq8 m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
+          ${hitsSql("exact", "sq8")}
         UNION ALL
         SELECT 'pq_adc', (SELECT n_scored FROM fullscan),
           CAST($PQ_M AS BIGINT),
-          (SELECT count(*) FROM exact e JOIN pqm m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
+          ${hitsSql("exact", "pqm")}
         UNION ALL
         SELECT 'bin', (SELECT n_scored FROM fullscan),
           CAST(${SQ_DIMS / 8} AS BIGINT),
-          (SELECT count(*) FROM exact e JOIN binm m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
+          ${hitsSql("exact", "binm")}
         UNION ALL
         SELECT 'ivf', (SELECT CAST(count(*) AS BIGINT) FROM ivf_scored),
           CAST(${4 * SQ_DIMS} AS BIGINT),
-          (SELECT count(*) FROM exact e JOIN ivf_top m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id)
+          ${hitsSql("exact", "ivf_top")}
         UNION ALL
         SELECT 'nsw', (SELECT CAST(count(*) AS BIGINT) FROM nsw_sc),
           CAST(${4 * SQ_DIMS + 8 * 2 * NSW_DEG} AS BIGINT),
-          (SELECT count(*) FROM exact e JOIN nsw_top m
-            ON e.query_id = m.query_id AND e.corpus_id = m.corpus_id))
+          ${hitsSql("exact", "nsw_top")})
       SELECT a.method, nqc.n AS n_queries, a.n_scored, a.bytes_per_vec,
         CAST(a.n_hits AS BIGINT) AS n_hits, tot.n_total,
         ${proundSql("CAST(a.n_hits AS DOUBLE) / CAST(tot.n_total AS DOUBLE)", 6)}

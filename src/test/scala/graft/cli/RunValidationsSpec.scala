@@ -21,4 +21,16 @@ class RunValidationsSpec extends SparkSpec {
     assert(results("silver/flights").isEmpty,
       "a missing flights layer is still reported, as missing")
   }
+
+  test("a file: URI warehouse gets its report at <wh>/_validation/report.md") {
+    val dir = Files.createTempDirectory("graft-report")
+    val wh = dir.toUri.toString.stripSuffix("/")
+    assert(wh.startsWith("file:"))
+    val results = RunValidations.validateAll(spark, wh)
+    RunValidations.writeReport(spark, results, wh)
+    val report = dir.resolve("_validation").resolve("report.md")
+    assert(Files.exists(report), s"no report under $dir")
+    assert(Files.readString(report) ===
+      RunValidations.renderReport(results, wh))
+  }
 }

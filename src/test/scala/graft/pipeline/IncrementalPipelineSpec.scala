@@ -189,7 +189,8 @@ class IncrementalPipelineSpec extends SparkSpec {
     assert(report.contains("7/8 suites passed"))
     assert(report.contains("## gold/fact_flights"))
     assert(report.contains("**FAIL** | between(SPEED_KM_H"))
-    val written = RunValidations.writeReport(results, wh)
-    assert(java.nio.file.Files.readString(written) === report)
+    val written = RunValidations.writeReport(spark, results, wh)
+    assert(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(written.toUri)) === report)
   }
 }
