@@ -947,6 +947,41 @@ object Dedup {
       simhashFromRows(shingleRowsFromSets(sets, idCol), idCol), idCol,
       "simhash", maxHamming, maxBucket, bandBits)
 
+  /** The band keys of a 64-bit fingerprint column: an array of
+    * `64/bandBits` struct(band_idx, band_val), band b holding bits
+    * [b·bandBits, (b+1)·bandBits). Two fingerprints within maxHamming
+    * bits are sure to share a band only while maxHamming is below the
+    * band count, so both conditions are checked here. The batch joins
+    * and the stream matchers ([[graft.streaming.StreamImageNearDup]],
+    * [[graft.streaming.StreamAudioNearDup]]) all band with this one
+    * expression, so a stored batch index and a stream agree on
+    * candidates.
+    */
+  def fpBandKeys(fp: Column, bandBits: Int, maxHamming: Int): Column = {
+    require(bandBits > 0 && 64 % bandBits == 0, "bandBits must divide 64")
+    val nBands = 64 / bandBits
+    require(maxHamming <= nBands - 1,
+      s"$nBands bands of $bandBits bits are lossless only for hamming <= ${nBands - 1}")
+    val mask = if (bandBits == 64) lit(-1L) else lit((1L << bandBits) - 1L)
+    array((0 until nBands).map(b =>
+      struct(lit(b).as("band_idx"),
+        shiftrightunsigned(fp, bandBits * b).bitwiseAND(mask)
+          .as("band_val"))): _*)
+  }
+
+  /** 64-bit fingerprint → per-band rows (id, fp, band_idx, band_val),
+    * hot buckets capped — the shared banding of [[fingerprintPairs]]
+    * and [[crossFingerprintDups]].
+    */
+  private def fpBands(fp: DataFrame, idCol: String, fpCol: String,
+      bandBits: Int, maxHamming: Int, maxBucket: Int): DataFrame =
+    capBuckets(
+      fp.select(col(idCol), col(fpCol),
+        explode(fpBandKeys(col(fpCol), bandBits, maxHamming)).as("band"))
+        .select(col(idCol), col(fpCol), col("band.band_idx"),
+          col("band.band_val")),
+      Seq("band_idx", "band_val"), maxBucket)
+
   /** Banded hamming join over ANY 64-bit fingerprint column — the
     * pair-generation engine [[simhashPairs]] documents, factored out so
     * every 64-bit sketch (text SimHash, image pHash, future audio
@@ -954,34 +989,10 @@ object Dedup {
     * bucket cap, and the pigeonhole guarantee. Output: `d1, d2,
     * hamming` with d1 < d2.
     */
-  /** 64-bit fingerprint → per-band rows (id, fp, band_idx, band_val),
-    * hot buckets capped — the shared banding of [[fingerprintPairs]]
-    * and [[crossFingerprintDups]].
-    */
-  private def fpBands(fp: DataFrame, idCol: String, fpCol: String,
-      bandBits: Int, maxBucket: Int): DataFrame = {
-    require(bandBits > 0 && 64 % bandBits == 0, "bandBits must divide 64")
-    val nBands = 64 / bandBits
-    val mask = if (bandBits == 64) lit(-1L) else lit((1L << bandBits) - 1L)
-    val bandCols = (0 until nBands).map(b =>
-      struct(lit(b).as("band_idx"),
-        shiftrightunsigned(col(fpCol), bandBits * b).bitwiseAND(mask)
-          .as("band_val")))
-    capBuckets(
-      fp.select(col(idCol), col(fpCol),
-        explode(array(bandCols: _*)).as("band"))
-        .select(col(idCol), col(fpCol), col("band.band_idx"),
-          col("band.band_val")),
-      Seq("band_idx", "band_val"), maxBucket)
-  }
-
   def fingerprintPairs(fp: DataFrame, idCol: String, fpCol: String,
       maxHamming: Int, maxBucket: Int = 10000,
       bandBits: Int = 16): DataFrame = {
-    val nBands = 64 / bandBits
-    require(maxHamming <= nBands - 1,
-      s"$nBands bands of $bandBits bits are lossless only for hamming <= ${nBands - 1}")
-    val bands = fpBands(fp, idCol, fpCol, bandBits, maxBucket)
+    val bands = fpBands(fp, idCol, fpCol, bandBits, maxHamming, maxBucket)
     bands.as("a")
       .join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -1008,11 +1019,8 @@ object Dedup {
   def crossFingerprintDups(corpusFp: DataFrame, batchFp: DataFrame,
       idCol: String, fpCol: String, maxHamming: Int,
       maxBucket: Int = 10000, bandBits: Int = 16): DataFrame = {
-    val nBands = 64 / bandBits
-    require(maxHamming <= nBands - 1,
-      s"$nBands bands of $bandBits bits are lossless only for hamming <= ${nBands - 1}")
-    val cb = fpBands(corpusFp, idCol, fpCol, bandBits, maxBucket)
-    val bb = fpBands(batchFp, idCol, fpCol, bandBits, maxBucket)
+    val cb = fpBands(corpusFp, idCol, fpCol, bandBits, maxHamming, maxBucket)
+    val bb = fpBands(batchFp, idCol, fpCol, bandBits, maxHamming, maxBucket)
     bb.as("b")
       .join(cb.as("c"),
         col("b.band_idx") === col("c.band_idx") &&

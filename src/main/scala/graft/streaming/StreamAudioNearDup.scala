@@ -3,29 +3,27 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
 
 /** Streaming AUDIO near-duplicate detection — the audio member of the
   * dedup matrix (exact/near × batch/stream × text/image/AUDIO):
   * surfaces WAV payloads whose Haitsma–Kalker fingerprint
   * ([[Multimodal.audioFingerprints]]: framed Goertzel bank →
   * sign-of-energy-delta bits) is within `maxHamming` bits of an
-  * EARLIER in-horizon clip, using the same 16-bit band keys as the
-  * batch path ([[graft.operators.Dedup.audioNearDupPairs]]), so a
-  * stored batch index and this stream agree on candidates.
+  * EARLIER in-horizon clip, using the batch path's band keys
+  * ([[graft.operators.Dedup.fpBandKeys]], as
+  * [[graft.operators.Dedup.audioNearDupPairs]]), so a stored batch
+  * index and this stream agree on candidates.
   *
   * Dataflow mirrors [[StreamImageNearDup]] exactly (one stateful
   * operator): per-row fingerprint in a mapPartitions (narrow map,
   * undecodable/too-short payloads drop), explode to (band_idx,
-  * band_val), flatMapGroupsWithState keyed on the bucket with 24-byte
-  * entries (id, event time, afp) — never audio bytes — horizon
-  * eviction by watermark, bucket death by EventTimeTimeout, and the
-  * `maxBucket` cap (a capped bucket stops ACCUMULATING but still
-  * verifies arrivals — the stream analogue of the batch whole-bucket
-  * drop). A pair sharing several bands emits one Match per shared
-  * band (distinct-consumer contract, as StreamNearDup).
+  * band_val), [[EventTimeState.horizon]] keyed on the bucket with
+  * 24-byte entries (id, event time, afp) — never audio bytes — and
+  * `maxBucket` as the horizon cap (the stream analogue of the batch
+  * whole-bucket drop). A pair sharing several bands emits one Match
+  * per shared band (distinct-consumer contract, as StreamNearDup).
   */
 object StreamAudioNearDup {
 
@@ -34,8 +32,6 @@ object StreamAudioNearDup {
 
   final case class BandRow(band_idx: Int, band_val: Long,
       media_id: Long, ts: Timestamp, afp: Long)
-
-  final case class BucketState(docs: List[(Long, Long, Long)])
 
   private val hashedSchema = StructType(Seq(
     StructField("media_id", LongType),
@@ -46,13 +42,9 @@ object StreamAudioNearDup {
       contentCol: String, coeffs: Seq[Double], frameLen: Int, hop: Int,
       maxHamming: Int, delaySeconds: Long,
       maxBucket: Int = 10000, bandBits: Int = 16): Dataset[Match] = {
-    require(bandBits > 0 && 64 % bandBits == 0, "bandBits must divide 64")
-    val nBands = 64 / bandBits
-    require(maxHamming <= nBands - 1,
-      s"$nBands bands are lossless only for hamming <= ${nBands - 1}")
+    val bandKeys = Dedup.fpBandKeys(col("afp"), bandBits, maxHamming)
     val spark = media.sparkSession
     import spark.implicits._
-    val delayMs = delaySeconds * 1000L
     val cArr = coeffs.toArray
 
     val hashed = media.select(col(idCol), col(tsCol), col(contentCol))
@@ -69,47 +61,19 @@ object StreamAudioNearDup {
         }
       }(Encoders.row(hashedSchema))
 
-    val mask = if (bandBits == 64) lit(-1L) else lit((1L << bandBits) - 1L)
-    val bandCols = (0 until nBands).map(b =>
-      struct(lit(b).as("band_idx"),
-        shiftrightunsigned(col("afp"), bandBits * b).bitwiseAND(mask)
-          .as("band_val")))
     val bandRows = hashed
       .select(col("media_id"), col("ts"), col("afp"),
-        explode(array(bandCols: _*)).as("band"))
+        explode(bandKeys).as("band"))
       .select(col("band.band_idx").as("band_idx"),
         col("band.band_val").as("band_val"),
         col("media_id"), col("ts"), col("afp"))
-      .withWatermark("ts", s"$delaySeconds seconds")
       .as[BandRow]
 
-    bandRows
-      .groupByKey(r => (r.band_idx, r.band_val))
-      .flatMapGroupsWithState[BucketState, Match](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((bandIdx, _), rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val wm = state.getCurrentWatermarkMs()
-            var kept = state.getOption.map(_.docs).getOrElse(Nil)
-              .filter(_._2 + delayMs > wm)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-            for (r <- rows.toSeq.sortBy(x => (x.ts.getTime, x.media_id))) {
-              for ((id, _, h) <- kept if id != r.media_id) {
-                val d = java.lang.Long.bitCount(h ^ r.afp)
-                if (d <= maxHamming)
-                  out += Match(r.media_id, r.ts, id, d, bandIdx)
-              }
-              if (kept.size < maxBucket && !kept.exists(_._1 == r.media_id))
-                kept = kept :+ ((r.media_id, r.ts.getTime, r.afp))
-            }
-            if (kept.isEmpty) state.remove()
-            else {
-              state.update(BucketState(kept))
-              state.setTimeoutTimestamp(kept.map(_._2).max + delayMs)
-            }
-            out.iterator
-          }
-      }
+    EventTimeState.horizon(bandRows)(r => (r.band_idx, r.band_val),
+        _.media_id, _.ts, _.afp, delaySeconds, maxBucket) { (r, id, h) =>
+      val d = java.lang.Long.bitCount(h ^ r.afp)
+      if (d <= maxHamming) Some(Match(r.media_id, r.ts, id, d, r.band_idx))
+      else None
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.CountMin
 
@@ -16,13 +15,13 @@ import graft.operators.CountMin
   * StreamCountMinSpec pins stream ≡ batch equality.
   *
   * State per (window, row) is one w-bounded bucket map (never the key
-  * universe, never buffered events); each item fans out to its d row
-  * keys BEFORE the shuffle, so update work spreads across executors
-  * exactly like the batch hash-agg. EventTimeTimeout emits the
-  * counters when the watermark closes the window and removes the
-  * state — downstream estimates run `CountMin.estimate` over the
-  * emitted rows, batch and stream interchangeably (counters from
-  * adjacent windows merge by addition, the CMS fold contract).
+  * universe, never buffered events), kept by
+  * [[EventTimeState.tumbling]]; each item fans out to its d row keys
+  * BEFORE the shuffle, so update work spreads across executors
+  * exactly like the batch hash-agg. Downstream estimates run
+  * `CountMin.estimate` over the emitted rows, batch and stream
+  * interchangeably (counters from adjacent windows merge by
+  * addition, the CMS fold contract).
   */
 object StreamCountMin {
 
@@ -41,32 +40,20 @@ object StreamCountMin {
     import spark.implicits._
     require(d >= 1 && d <= CountMin.maxDepth && w >= 2 &&
       windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .flatMap(it => (0 until d).map(i =>
-        Routed(it.ts, i, CountMin.bucketOf(it.h, i, w))))
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.row))
-      .flatMapGroupsWithState[CmsState, CounterRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, row), batch, state: GroupState[CmsState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            s.counts.iterator.map { case (bucket, cnt) =>
-              CounterRow(new Timestamp(winStart),
-                new Timestamp(winStart + winMs), row, bucket, cnt)
-            }
-          } else {
-            val counts = scala.collection.mutable.Map.empty[Long, Long]
-            state.getOption.foreach(s => counts ++= s.counts)
-            batch.foreach { r =>
-              counts(r.bucket) = counts.getOrElse(r.bucket, 0L) + 1L
-            }
-            state.update(CmsState(counts.toMap))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+    val routed = items.flatMap(it => (0 until d).map(i =>
+      Routed(it.ts, i, CountMin.bucketOf(it.h, i, w))))
+    EventTimeState.tumbling(routed)(_.ts, _.row, windowSeconds,
+        watermarkDelay) { (prev: Option[CmsState], batch) =>
+      val counts = scala.collection.mutable.Map.empty[Long, Long]
+      prev.foreach(s => counts ++= s.counts)
+      batch.foreach { r =>
+        counts(r.bucket) = counts.getOrElse(r.bucket, 0L) + 1L
       }
+      CmsState(counts.toMap)
+    } { (start, end, row, s) =>
+      s.counts.iterator.map { case (bucket, cnt) =>
+        CounterRow(start, end, row, bucket, cnt)
+      }
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.CountSketch
 
@@ -38,33 +37,21 @@ object StreamCountSketch {
     import spark.implicits._
     require(d >= 1 && d <= CountSketch.maxDepth && d % 2 == 1 && w >= 2 &&
       windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .flatMap(it => (0 until d).map(i =>
-        Routed(it.ts, i, CountSketch.bucketOf(it.h, i, w),
-          CountSketch.signOf(it.h, i))))
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.row))
-      .flatMapGroupsWithState[CsState, CounterRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, row), batch, state: GroupState[CsState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            s.counts.iterator.map { case (bucket, cnt) =>
-              CounterRow(new Timestamp(winStart),
-                new Timestamp(winStart + winMs), row, bucket, cnt)
-            }
-          } else {
-            val counts = scala.collection.mutable.Map.empty[Long, Long]
-            state.getOption.foreach(s => counts ++= s.counts)
-            batch.foreach { r =>
-              counts(r.bucket) = counts.getOrElse(r.bucket, 0L) + r.sgn
-            }
-            state.update(CsState(counts.toMap))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+    val routed = items.flatMap(it => (0 until d).map(i =>
+      Routed(it.ts, i, CountSketch.bucketOf(it.h, i, w),
+        CountSketch.signOf(it.h, i))))
+    EventTimeState.tumbling(routed)(_.ts, _.row, windowSeconds,
+        watermarkDelay) { (prev: Option[CsState], batch) =>
+      val counts = scala.collection.mutable.Map.empty[Long, Long]
+      prev.foreach(s => counts ++= s.counts)
+      batch.foreach { r =>
+        counts(r.bucket) = counts.getOrElse(r.bucket, 0L) + r.sgn
       }
+      CsState(counts.toMap)
+    } { (start, end, row, s) =>
+      s.counts.iterator.map { case (bucket, cnt) =>
+        CounterRow(start, end, row, bucket, cnt)
+      }
+    }
   }
 }

@@ -2,12 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming approximate frequent items (heavy hitters) per tumbling
   * window with BOUNDED state — the streaming twin of
   * `operators.HeavyHitters`. Per (window, shard) Misra-Gries
-  * summaries of capacity k are maintained in flatMapGroupsWithState
+  * summaries of capacity k are kept by [[EventTimeState.tumbling]]
   * and emitted when the event-time watermark closes the window.
   *
   * The batch operator recounts its candidates exactly in a second
@@ -23,8 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * total — never the vocabulary, never buffered events; sharding by
   * item hash spreads one window's state and update work across
   * executors (a single window key would funnel the whole stream
-  * through one task). EventTimeTimeout means state cannot outlive
-  * the watermark horizon.
+  * through one task).
   */
 object StreamFrequentItems {
 
@@ -44,46 +42,27 @@ object StreamFrequentItems {
       implicit spark: SparkSession): Dataset[FrequentItem] = {
     import spark.implicits._
     require(k > 0 && shards > 0 && windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey { it =>
-        val winStart = Math.floorDiv(it.ts.getTime, winMs) * winMs
-        val shard = (it.item.hashCode % shards + shards) % shards
-        (winStart, shard)
+    EventTimeState.tumbling(items)(_.ts,
+        it => (it.item.hashCode % shards + shards) % shards,
+        windowSeconds, watermarkDelay) { (prev: Option[MGState], batch) =>
+      val counters = scala.collection.mutable.Map.empty[String, Long]
+      var total = 0L
+      prev.foreach { s => counters ++= s.counts; total = s.total }
+      batch.foreach { e =>
+        total += 1L
+        if (counters.contains(e.item)) counters(e.item) += 1L
+        else if (counters.size < k) counters(e.item) = 1L
+        else counters.keys.toArray.foreach { key =>
+          if (counters(key) == 1L) counters.remove(key)
+          else counters(key) -= 1L
+        }
       }
-      .flatMapGroupsWithState[MGState, FrequentItem](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, shard), batch, state: GroupState[MGState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            val slack = s.total / (k + 1)
-            s.counts.iterator.map { case (item, c) =>
-              FrequentItem(new Timestamp(winStart),
-                new Timestamp(winStart + winMs), shard, item,
-                c, c + slack, s.total)
-            }
-          } else {
-            val counters = scala.collection.mutable.Map.empty[String, Long]
-            var total = 0L
-            state.getOption.foreach { s =>
-              counters ++= s.counts; total = s.total
-            }
-            batch.foreach { e =>
-              total += 1L
-              if (counters.contains(e.item)) counters(e.item) += 1L
-              else if (counters.size < k) counters(e.item) = 1L
-              else counters.keys.toArray.foreach { key =>
-                if (counters(key) == 1L) counters.remove(key)
-                else counters(key) -= 1L
-              }
-            }
-            state.update(MGState(counters.toMap, total))
-            // fire once the watermark passes the window end
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+      MGState(counters.toMap, total)
+    } { (start, end, shard, s) =>
+      val slack = s.total / (k + 1)
+      s.counts.iterator.map { case (item, c) =>
+        FrequentItem(start, end, shard, item, c, c + slack, s.total)
       }
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming HDR quantile-sketch buckets per tumbling window — the
   * quantile member of the bit-identical sketch-twin family
@@ -17,7 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per (window, key) is the bucket-count map, bounded by the
   * sketch's STRUCTURAL cap ((64−b)·2^b + 2^(b+1) entries, ~2k at
-  * b=5) regardless of row volume — never the value multiset.
+  * b=5) regardless of row volume — never the value multiset
+  * ([[EventTimeState.tumbling]]).
   *
   * The JVM bucket twin is exact: floorLog2 via
   * 63 − numberOfLeadingZeros (0 for v = 0) equals the Column path's
@@ -46,32 +46,20 @@ object StreamHdr {
       implicit spark: SparkSession): Dataset[BucketRow] = {
     import spark.implicits._
     require(windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.key))
-      .flatMapGroupsWithState[HdrState, BucketRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, key), batch, state: GroupState[HdrState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            s.counts.toSeq.sortBy(_._1).iterator.map { case (i, c) =>
-              BucketRow(new Timestamp(winStart),
-                new Timestamp(winStart + winMs), key, i, c)
-            }
-          } else {
-            // count addition: associative and commutative, so replays
-            // and reorderings cannot change the closed-window sketch
-            var counts = state.getOption.map(_.counts).getOrElse(Map.empty[Long, Long])
-            batch.foreach { r =>
-              val b = bucketOf(r.v, bits)
-              counts = counts.updated(b, counts.getOrElse(b, 0L) + 1L)
-            }
-            state.update(HdrState(counts))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+    EventTimeState.tumbling(items)(_.ts, _.key, windowSeconds,
+        watermarkDelay) { (prev: Option[HdrState], batch) =>
+      // count addition: associative and commutative, so replays
+      // and reorderings cannot change the closed-window sketch
+      var counts = prev.map(_.counts).getOrElse(Map.empty[Long, Long])
+      batch.foreach { r =>
+        val b = bucketOf(r.v, bits)
+        counts = counts.updated(b, counts.getOrElse(b, 0L) + 1L)
       }
+      HdrState(counts)
+    } { (start, end, key, s) =>
+      s.counts.toSeq.sortBy(_._1).iterator.map { case (i, c) =>
+        BucketRow(start, end, key, i, c)
+      }
+    }
   }
 }

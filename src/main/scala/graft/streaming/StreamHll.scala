@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming HyperLogLog registers per tumbling window — the register
   * twin of [[StreamKmv]] (order statistics) in the bit-identical
@@ -17,8 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per (window, key) is AT MOST 256 bytes-worth of (bucket,
   * rho) pairs — never the distinct set: each micro-batch folds its
-  * hashes into the running register maxima. EventTimeTimeout emits
-  * the registers when the watermark closes the window.
+  * hashes into the running register maxima
+  * ([[EventTimeState.tumbling]]).
   *
   * The JVM rho twin is exact: java.lang.Long.numberOfTrailingZeros
   * (64 on zero) + 1, capped at 31 — the same value as the SQL/Column
@@ -48,32 +47,20 @@ object StreamHll {
       implicit spark: SparkSession): Dataset[RegRow] = {
     import spark.implicits._
     require(windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.key))
-      .flatMapGroupsWithState[HllState, RegRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, key), batch, state: GroupState[HllState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            s.regs.toSeq.sortBy(_._1).iterator.map { case (b, r) =>
-              RegRow(new Timestamp(winStart),
-                new Timestamp(winStart + winMs), key, b.toLong, r)
-            }
-          } else {
-            // max-merge: associative and commutative, so replays and
-            // reorderings cannot change the closed-window registers
-            var regs = state.getOption.map(_.regs).getOrElse(Map.empty)
-            batch.foreach { r =>
-              val b = bucketOf(r.h); val rho = rhoOf(r.h)
-              if (rho > regs.getOrElse(b, 0)) regs = regs.updated(b, rho)
-            }
-            state.update(HllState(regs))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+    EventTimeState.tumbling(items)(_.ts, _.key, windowSeconds,
+        watermarkDelay) { (prev: Option[HllState], batch) =>
+      // max-merge: associative and commutative, so replays and
+      // reorderings cannot change the closed-window registers
+      var regs = prev.map(_.regs).getOrElse(Map.empty)
+      batch.foreach { r =>
+        val b = bucketOf(r.h); val rho = rhoOf(r.h)
+        if (rho > regs.getOrElse(b, 0)) regs = regs.updated(b, rho)
       }
+      HllState(regs)
+    } { (start, end, key, s) =>
+      s.regs.toSeq.sortBy(_._1).iterator.map { case (b, r) =>
+        RegRow(start, end, key, b.toLong, r)
+      }
+    }
   }
 }

@@ -3,16 +3,16 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
 
 /** Streaming IMAGE near-duplicate detection — the final member of the
   * dedup matrix (exact/near × batch/stream × text/IMAGE): surfaces
   * media payloads whose perceptual hash is within `maxHamming` bits
-  * of an EARLIER in-horizon image, using the same 16-bit band keys as
-  * the batch path ([[graft.operators.Dedup.imageNearDupPairs]]), so a
-  * stored batch index and this stream agree on candidates.
+  * of an EARLIER in-horizon image, using the batch path's band keys
+  * ([[graft.operators.Dedup.fpBandKeys]], as
+  * [[graft.operators.Dedup.imageNearDupPairs]]), so a stored batch
+  * index and this stream agree on candidates.
   *
   * Dataflow mirrors [[StreamNearDup]] (one stateful operator):
   *
@@ -22,13 +22,11 @@ import graft.operators.Multimodal
   *     Undecodable payloads drop here.
   *  2. explode to (band_idx, band_val) rows — `64/bandBits` bands of
   *     the fingerprint.
-  *  3. flatMapGroupsWithState keyed on the bucket: state holds the
-  *     bucket's (id, event time, phash) triples within the horizon —
-  *     24 bytes per image, no pixels — and each arrival verifies
-  *     hamming against them. Entries evict once the watermark passes
-  *     their time + delay; the bucket itself dies via
-  *     EventTimeTimeout. `maxBucket` caps adversarial buckets (a
-  *     capped bucket stops accumulating but still verifies).
+  *  3. [[EventTimeState.horizon]] keyed on the bucket: state holds
+  *     the bucket's (id, event time, phash) triples within the
+  *     horizon — 24 bytes per image, no pixels — and each arrival
+  *     verifies hamming against them. `maxBucket` is the horizon cap
+  *     on adversarial buckets.
   *
   * A pair sharing several bands emits one Match per shared band
   * (distinct-consumer contract, as StreamNearDup). Cross-horizon
@@ -42,9 +40,6 @@ object StreamImageNearDup {
   final case class BandRow(band_idx: Int, band_val: Long,
       media_id: Long, ts: Timestamp, phash: Long)
 
-  private final case class Entry(id: Long, tsMillis: Long, phash: Long)
-  final case class BucketState(docs: List[(Long, Long, Long)])
-
   private val hashedSchema = StructType(Seq(
     StructField("media_id", LongType),
     StructField("ts", TimestampType),
@@ -53,13 +48,9 @@ object StreamImageNearDup {
   def matches(media: DataFrame, idCol: String, tsCol: String,
       contentCol: String, maxHamming: Int, delaySeconds: Long,
       maxBucket: Int = 10000, bandBits: Int = 16): Dataset[Match] = {
-    require(bandBits > 0 && 64 % bandBits == 0, "bandBits must divide 64")
-    val nBands = 64 / bandBits
-    require(maxHamming <= nBands - 1,
-      s"$nBands bands are lossless only for hamming <= ${nBands - 1}")
+    val bandKeys = Dedup.fpBandKeys(col("phash"), bandBits, maxHamming)
     val spark = media.sparkSession
     import spark.implicits._
-    val delayMs = delaySeconds * 1000L
 
     val hashed = media.select(col(idCol), col(tsCol), col(contentCol))
       .mapPartitions { rows =>
@@ -73,47 +64,19 @@ object StreamImageNearDup {
         }
       }(Encoders.row(hashedSchema))
 
-    val mask = if (bandBits == 64) lit(-1L) else lit((1L << bandBits) - 1L)
-    val bandCols = (0 until nBands).map(b =>
-      struct(lit(b).as("band_idx"),
-        shiftrightunsigned(col("phash"), bandBits * b).bitwiseAND(mask)
-          .as("band_val")))
     val bandRows = hashed
       .select(col("media_id"), col("ts"), col("phash"),
-        explode(array(bandCols: _*)).as("band"))
+        explode(bandKeys).as("band"))
       .select(col("band.band_idx").as("band_idx"),
         col("band.band_val").as("band_val"),
         col("media_id"), col("ts"), col("phash"))
-      .withWatermark("ts", s"$delaySeconds seconds")
       .as[BandRow]
 
-    bandRows
-      .groupByKey(r => (r.band_idx, r.band_val))
-      .flatMapGroupsWithState[BucketState, Match](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((bandIdx, _), rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val wm = state.getCurrentWatermarkMs()
-            var kept = state.getOption.map(_.docs).getOrElse(Nil)
-              .filter(_._2 + delayMs > wm)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-            for (r <- rows.toSeq.sortBy(x => (x.ts.getTime, x.media_id))) {
-              for ((id, _, h) <- kept if id != r.media_id) {
-                val d = java.lang.Long.bitCount(h ^ r.phash)
-                if (d <= maxHamming)
-                  out += Match(r.media_id, r.ts, id, d, bandIdx)
-              }
-              if (kept.size < maxBucket && !kept.exists(_._1 == r.media_id))
-                kept = kept :+ ((r.media_id, r.ts.getTime, r.phash))
-            }
-            if (kept.isEmpty) state.remove()
-            else {
-              state.update(BucketState(kept))
-              state.setTimeoutTimestamp(kept.map(_._2).max + delayMs)
-            }
-            out.iterator
-          }
-      }
+    EventTimeState.horizon(bandRows)(r => (r.band_idx, r.band_val),
+        _.media_id, _.ts, _.phash, delaySeconds, maxBucket) { (r, id, h) =>
+      val d = java.lang.Long.bitCount(h ^ r.phash)
+      if (d <= maxHamming) Some(Match(r.media_id, r.ts, id, d, r.band_idx))
+      else None
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming KMV (bottom-k) sketches per tumbling window — the
   * streaming twin of `operators.Kmv.sketches`, in the
@@ -19,9 +18,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State per (window, key) is AT MOST k sorted longs — never the
   * distinct set, never buffered events: each micro-batch merges its
   * hashes into the running bottom-k and re-truncates, so a key with a
-  * billion distinct hashes still carries k longs of state.
-  * EventTimeTimeout emits the sketch when the watermark closes the
-  * window and removes the state.
+  * billion distinct hashes still carries k longs of state
+  * ([[EventTimeState.tumbling]]).
   */
 object StreamKmv {
 
@@ -38,28 +36,15 @@ object StreamKmv {
       implicit spark: SparkSession): Dataset[SketchRow] = {
     import spark.implicits._
     require(k >= 1 && windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.key))
-      .flatMapGroupsWithState[KmvState, SketchRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, key), batch, state: GroupState[KmvState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            s.hashes.iterator.map(h => SketchRow(new Timestamp(winStart),
-              new Timestamp(winStart + winMs), key, h))
-          } else {
-            // min-k of (running min-k ∪ batch hashes): distinct, sort,
-            // truncate — associative and commutative, so replays and
-            // reorderings cannot change the closed-window contents
-            val merged = (state.getOption.map(_.hashes).getOrElse(Nil) ++
-              batch.map(_.h)).distinct.sorted.take(k)
-            state.update(KmvState(merged))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
-      }
+    EventTimeState.tumbling(items)(_.ts, _.key, windowSeconds,
+        watermarkDelay) { (prev: Option[KmvState], batch) =>
+      // min-k of (running min-k ∪ batch hashes): distinct, sort,
+      // truncate — associative and commutative, so replays and
+      // reorderings cannot change the closed-window contents
+      KmvState((prev.map(_.hashes).getOrElse(Nil) ++ batch.map(_.h))
+        .distinct.sorted.take(k))
+    } { (start, end, key, s) =>
+      s.hashes.iterator.map(h => SketchRow(start, end, key, h))
+    }
   }
 }

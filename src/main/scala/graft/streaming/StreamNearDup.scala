@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import graft.functions.TextFns
 import graft.functions.TextFns.P
 import graft.operators.Dedup
@@ -31,23 +30,19 @@ import graft.operators.Dedup.MinHashParams
   *  2. explode to (band_idx, band_hash) rows — same bucket keys as
   *     the batch index, so a stored q112 index and this stream agree
   *     on candidates.
-  *  3. flatMapGroupsWithState keyed on the BUCKET: state is the
+  *  3. [[EventTimeState.horizon]] keyed on the BUCKET: state is the
   *     bucket's docs within the horizon (id, event time, shingle
   *     set). Each arriving doc exact-Jaccard-verifies against the
   *     bucket's state and emits a [[StreamNearDup.Match]] per
-  *     above-threshold earlier doc; state entries evict once the
-  *     watermark passes their event time + delay (and the whole
-  *     bucket dies via EventTimeTimeout — state is horizon-bounded,
-  *     never corpus-bounded).
+  *     above-threshold earlier doc.
   *
   * A pair sharing several bands emits one Match PER shared band
   * (buckets are independent keys and share no state); consumers take
   * the distinct (doc_id, dup_of) — the foreachBatch suppression
   * pattern in StreamNearDupSpec collapses them for free. `maxBucket`
-  * is [[Dedup.capBuckets]]'s hot-bucket guard carried over: a bucket
-  * at capacity stops ACCUMULATING state (new docs still verify
-  * against the capped list), so one boilerplate bucket can never make
-  * a task quadratic.
+  * is [[Dedup.capBuckets]]'s hot-bucket guard carried over as the
+  * horizon cap, so one boilerplate bucket can never make a task
+  * quadratic.
   *
   * Duplicates farther apart than the horizon are batch dedup's job
   * (the stored-index [[Dedup.crossNearDupsFromIndex]] path) — same
@@ -60,10 +55,6 @@ object StreamNearDup {
 
   final case class BandRow(band_idx: Int, band_hash: Long,
       doc_id: Long, ts: Timestamp, shingles: Array[Long])
-
-  final case class BucketDoc(docId: Long, tsMillis: Long,
-      shingles: Array[Long])
-  final case class BucketState(docs: List[BucketDoc])
 
   /** |a ∩ b| / |a ∪ b| over distinct-hash arrays — the same value as
     * the batch verify's size(array_intersect)/(n1+n2-common).
@@ -85,7 +76,6 @@ object StreamNearDup {
       delaySeconds: Long, maxBucket: Int = 10000): Dataset[Match] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val delayMs = delaySeconds * 1000L
     // row-local minhash: m_j = min over shingles of (a_j·s + b_j) % P
     val sigCols = (0 until p.k).map { j =>
       val a = (j + 1) * p.aGen % P
@@ -107,37 +97,12 @@ object StreamNearDup {
         col("band.band_hash").as("band_hash"),
         col(idCol).as("doc_id"), col(tsCol).as("ts"),
         col("__sh").as("shingles"))
-      .withWatermark("ts", s"$delaySeconds seconds")
       .as[BandRow]
 
-    bandRows
-      .groupByKey(r => (r.band_idx, r.band_hash))
-      .flatMapGroupsWithState[BucketState, Match](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((bandIdx, _), rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val wm = state.getCurrentWatermarkMs()
-            // evict entries whose horizon has passed
-            var kept = state.getOption.map(_.docs).getOrElse(Nil)
-              .filter(_.tsMillis + delayMs > wm)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-            // deterministic within-batch order: event time, then id
-            for (r <- rows.toSeq.sortBy(x => (x.ts.getTime, x.doc_id))) {
-              for (d <- kept if d.docId != r.doc_id) {
-                val j = jaccard(d.shingles, r.shingles)
-                if (j >= tau) out += Match(r.doc_id, r.ts, d.docId, j, bandIdx)
-              }
-              if (kept.size < maxBucket && !kept.exists(_.docId == r.doc_id))
-                kept = kept :+ BucketDoc(r.doc_id, r.ts.getTime, r.shingles)
-            }
-            if (kept.isEmpty) state.remove()
-            else {
-              state.update(BucketState(kept))
-              state.setTimeoutTimestamp(kept.map(_.tsMillis).max + delayMs)
-            }
-            out.iterator
-          }
-      }
+    EventTimeState.horizon(bandRows)(r => (r.band_idx, r.band_hash),
+        _.doc_id, _.ts, _.shingles, delaySeconds, maxBucket) { (r, id, sh) =>
+      val j = jaccard(sh, r.shingles)
+      if (j >= tau) Some(Match(r.doc_id, r.ts, id, j, r.band_idx)) else None
+    }
   }
 }

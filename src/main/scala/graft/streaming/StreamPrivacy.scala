@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming k-anonymity monitor — the per-window twin of
   * [[graft.operators.Privacy.classProfile]], in the StreamCountMin
@@ -17,10 +16,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * emitted rows say exactly which QI classes are below k.
   *
   * State per (window, QI class) is ONE counter plus the distinct
-  * sensitive-value set — bounded by the sensitive attribute's domain
-  * (an enum in every release-gate schema; a high-cardinality
-  * "sensitive" column is a modeling error upstream, and the cap makes
-  * it loud rather than unbounded).
+  * sensitive-value set, kept by [[EventTimeState.tumbling]] and
+  * bounded by the sensitive attribute's domain (an enum in every
+  * release-gate schema; a high-cardinality "sensitive" column is a
+  * modeling error upstream, and the cap makes it loud rather than
+  * unbounded).
   */
 object StreamPrivacy {
 
@@ -42,32 +42,20 @@ object StreamPrivacy {
       implicit spark: SparkSession): Dataset[ClassRow] = {
     import spark.implicits._
     require(windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    records
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.qi))
-      .flatMapGroupsWithState[ClassState, ClassRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, qi), batch, state: GroupState[ClassState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(ClassRow(new Timestamp(winStart),
-              new Timestamp(winStart + winMs), qi, s.n, s.sens.size.toLong))
-          } else {
-            var n = state.getOption.map(_.n).getOrElse(0L)
-            var sens = state.getOption.map(_.sens).getOrElse(Set.empty[String])
-            batch.foreach { r =>
-              n += 1
-              sens += r.sensitive
-              require(sens.size <= MAX_SENSITIVE_DOMAIN,
-                s"sensitive domain for class '$qi' exceeded " +
-                  s"$MAX_SENSITIVE_DOMAIN distinct values — not an enum")
-            }
-            state.update(ClassState(n, sens))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+    EventTimeState.tumbling(records)(_.ts, _.qi, windowSeconds,
+        watermarkDelay) { (prev: Option[ClassState], batch) =>
+      var n = prev.map(_.n).getOrElse(0L)
+      var sens = prev.map(_.sens).getOrElse(Set.empty[String])
+      batch.foreach { r =>
+        n += 1
+        sens += r.sensitive
+        require(sens.size <= MAX_SENSITIVE_DOMAIN,
+          s"sensitive domain for class '${r.qi}' exceeded " +
+            s"$MAX_SENSITIVE_DOMAIN distinct values — not an enum")
       }
+      ClassState(n, sens)
+    } { (start, end, qi, s) =>
+      Iterator.single(ClassRow(start, end, qi, s.n, s.sens.size.toLong))
+    }
   }
 }

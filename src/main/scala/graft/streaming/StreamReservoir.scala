@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Efraimidis–Spirakis weighted reservoir per tumbling
   * window — the streaming twin of
@@ -24,11 +23,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per (window, stratum) is AT MOST k (double, long) pairs —
   * never the window's rows: each micro-batch merges into the running
-  * bottom-k and re-truncates. Ties on es_key break by key ascending,
-  * the batch operator's orderBy. Contract: keys are unique per
-  * (window, stratum) — the sample frame is a keyed entity table, and
-  * the distinct-merge that makes replays idempotent would collapse
-  * genuine duplicate keys.
+  * bottom-k and re-truncates ([[EventTimeState.tumbling]]). Ties on
+  * es_key break by key ascending, the batch operator's orderBy.
+  * Contract: keys are unique per (window, stratum) — the sample frame
+  * is a keyed entity table, and the distinct-merge that makes replays
+  * idempotent would collapse genuine duplicate keys.
   */
 object StreamReservoir {
 
@@ -46,31 +45,18 @@ object StreamReservoir {
       implicit spark: SparkSession): Dataset[PickRow] = {
     import spark.implicits._
     require(k >= 1 && windowSeconds > 0)
-    val winMs = windowSeconds * 1000L
-    items
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(r => (Math.floorDiv(r.ts.getTime, winMs) * winMs, r.stratum))
-      .flatMapGroupsWithState[ResState, PickRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((winStart, stratum), batch, state: GroupState[ResState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            s.picks.iterator.map { case (ek, key) =>
-              PickRow(new Timestamp(winStart),
-                new Timestamp(winStart + winMs), stratum, key, ek)
-            }
-          } else {
-            // bottom-k of (running bottom-k ∪ batch rows): distinct,
-            // sort by (es_key, key), truncate — associative and
-            // commutative, so replays and reorderings cannot change
-            // the closed-window sample
-            val merged = (state.getOption.map(_.picks).getOrElse(Nil) ++
-              batch.map(r => (r.esKey, r.key))).distinct.sorted.take(k)
-            state.update(ResState(merged))
-            state.setTimeoutTimestamp(winStart + winMs)
-            Iterator.empty
-          }
+    EventTimeState.tumbling(items)(_.ts, _.stratum, windowSeconds,
+        watermarkDelay) { (prev: Option[ResState], batch) =>
+      // bottom-k of (running bottom-k ∪ batch rows): distinct,
+      // sort by (es_key, key), truncate — associative and
+      // commutative, so replays and reorderings cannot change
+      // the closed-window sample
+      ResState((prev.map(_.picks).getOrElse(Nil) ++
+        batch.map(r => (r.esKey, r.key))).distinct.sorted.take(k))
+    } { (start, end, stratum, s) =>
+      s.picks.iterator.map { case (ek, key) =>
+        PickRow(start, end, stratum, key, ek)
       }
+    }
   }
 }

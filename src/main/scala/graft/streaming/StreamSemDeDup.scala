@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.operators.KMeans
 
@@ -24,21 +23,16 @@ import graft.operators.KMeans
   *     broadcast centroid literal — the SAME rule as batch training,
   *     a pure narrow map (no fanOut here: streaming sources set their
   *     own parallelism).
-  *  2. flatMapGroupsWithState keyed on the CELL id: state holds the
-  *     cell's in-horizon (id, event time, vector) entries — each
+  *  2. [[EventTimeState.horizon]] keyed on the CELL id: state holds
+  *     the cell's in-horizon (id, event time, vector) entries — each
   *     arrival verifies cosine against them, then joins the state.
-  *     Entries evict once the watermark passes their time + delay;
-  *     the cell dies via EventTimeTimeout. `maxCell` caps adversarial
-  *     cells. Capped-cell SEMANTICS (recall, not correctness): a
-  *     capped cell stops storing new arrivals but still verifies them
-  *     against the stored entries — so a post-cap arrival IS flagged
-  *     when it duplicates a stored vector, but two post-cap arrivals
-  *     that duplicate only EACH OTHER produce no match (their pair is
-  *     lost until the batch path sweeps the horizon). The dropped
-  *     mass is surfaced through the `droppedAcc` accumulator (one
-  *     count per arrival verified-but-not-stored), the hotBuckets-
-  *     style visibility knob: a nonzero count tells the operator to
-  *     raise `maxCell` or retrain with larger k.
+  *     `maxCell` is the horizon cap on adversarial cells; a pair
+  *     lost to it (recall, not correctness) waits for the batch path
+  *     to sweep the horizon. The dropped mass is surfaced through the
+  *     `droppedAcc` accumulator (one count per arrival
+  *     verified-but-not-stored), the hotBuckets-style visibility
+  *     knob: a nonzero count tells the operator to raise `maxCell` or
+  *     retrain with larger k.
   *
   * State size: d floats per entry (the raw vector — cosine
   * verification needs it). At 100 TB horizons, swap the stored vector
@@ -55,8 +49,6 @@ object StreamSemDeDup {
   final case class AssignedRow(cluster: Int, vec_id: Long, ts: Timestamp,
       vec: Seq[Double])
 
-  final case class CellState(vecs: List[(Long, Long, Seq[Double])])
-
   def matches(vecs: DataFrame, idCol: String, tsCol: String,
       vecCol: String, cents: Array[Array[Double]], tau: Double,
       delaySeconds: Long, maxCell: Int = 10000,
@@ -64,7 +56,6 @@ object StreamSemDeDup {
       : Dataset[Match] = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val delayMs = delaySeconds * 1000L
 
     val assigned = vecs
       .filter(col(vecCol).isNotNull)
@@ -76,7 +67,6 @@ object StreamSemDeDup {
         (array_position(col("__d"), array_min(col("__d"))) - lit(1L))
           .cast("int").as("cluster"),
         col("vec_id"), col("ts"), col("vec"))
-      .withWatermark("ts", s"$delaySeconds seconds")
       .as[AssignedRow]
 
     def cosine(a: Seq[Double], b: Seq[Double]): Double = {
@@ -89,39 +79,10 @@ object StreamSemDeDup {
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
 
-    assigned
-      .groupByKey(_.cluster)
-      .flatMapGroupsWithState[CellState, Match](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (cluster, rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val wm = state.getCurrentWatermarkMs()
-            var kept = state.getOption.map(_.vecs).getOrElse(Nil)
-              .filter(_._2 + delayMs > wm)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-            for (r <- rows.toSeq.sortBy(x => (x.ts.getTime, x.vec_id))) {
-              for ((id, _, v) <- kept if id != r.vec_id) {
-                val c = cosine(v, r.vec)
-                if (c >= tau)
-                  out += Match(r.vec_id, r.ts, id, c, cluster)
-              }
-              if (!kept.exists(_._1 == r.vec_id)) {
-                if (kept.size < maxCell)
-                  kept = kept :+ ((r.vec_id, r.ts.getTime, r.vec))
-                else
-                  // verified but NOT stored: count the dropped mass so
-                  // capped-cell pair loss is observable (scaladoc)
-                  droppedAcc.foreach(_.add(1L))
-              }
-            }
-            if (kept.isEmpty) state.remove()
-            else {
-              state.update(CellState(kept))
-              state.setTimeoutTimestamp(kept.map(_._2).max + delayMs)
-            }
-            out.iterator
-          }
-      }
+    EventTimeState.horizon(assigned)(_.cluster, _.vec_id, _.ts, _.vec,
+        delaySeconds, maxCell, droppedAcc) { (r, id, v) =>
+      val c = cosine(v, r.vec)
+      if (c >= tau) Some(Match(r.vec_id, r.ts, id, c, r.cluster)) else None
+    }
   }
 }

@@ -106,4 +106,32 @@ class StreamSemDeDupSpec extends SparkSpec {
       assert(batch.nonEmpty)
     } finally q.stop()
   }
+
+  test("a full cell verifies arrivals without storing them and counts each drop") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // one frozen cell; vecs 2 and 3 each sit ~0.995 from vec 1 and
+    // ~0.980 from each other, so with tau 0.99 only (2,1) and (3,1)
+    // match, whichever of 2 and 3 the cell stores
+    val cents = Array(Array(1.0, 0.0, 0.0, 0.0))
+    val dropped = spark.sparkContext.longAccumulator("ssd_dropped")
+    val input = MemoryStream[Vec]
+    val q = StreamSemDeDup.matches(input.toDF(), "vec_id", "ts",
+        "embedding", cents, tau = 0.99, delaySeconds = 3600, maxCell = 1,
+        droppedAcc = Some(dropped))
+      .writeStream.format("memory").queryName("ssd_cap")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(
+        Vec(1L, ts("2025-01-01 10:00:00"), Seq(1.0f, 0.0f, 0.0f, 0.0f)),
+        Vec(2L, ts("2025-01-01 10:00:01"), Seq(1.0f, 0.1f, 0.0f, 0.0f)),
+        Vec(3L, ts("2025-01-01 10:00:02"), Seq(1.0f, -0.1f, 0.0f, 0.0f)))
+      q.processAllAvailable()
+      val pairs = spark.table("ssd_cap")
+        .select("vec_id", "dup_of").distinct().collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs === Set((2L, 1L), (3L, 1L)), s"unexpected pair set: $pairs")
+      assert(dropped.value === 2L, "vecs 2 and 3 are verified but not stored")
+    } finally q.stop()
+  }
 }
