@@ -294,9 +294,14 @@ object Bench {
     // Self-label vs the committed idle-box lineage: three of four
     // driver captures in r5-r8 were uniformly contention-inflated with
     // every in-JVM self-trust flag green. Comparing this run's total
-    // against the newest committed bench/bench_sf0.1_r*.json (same
-    // code, measured idle) makes the recorded JSON say so itself
-    // instead of every judge re-deriving it.
+    // against the newest committed bench/bench_sf0.1_r*.json (measured
+    // idle) makes the recorded JSON say so itself instead of every
+    // judge re-deriving it. Only a capture of the same shape is a
+    // reference: its `cores` and `nq` must both equal this run's, so a
+    // 4-core run is never judged against a 32-core one, nor a query
+    // subset against the full registry (captures older than the
+    // `cores` field never qualify).
+    val cores = Runtime.getRuntime.availableProcessors
     val committedRef: Option[(String, Double)] =
       if (!sfDir.contains("sf0.1")) None
       else try {
@@ -306,12 +311,16 @@ object Bench {
           import scala.jdk.CollectionConverters._
           java.nio.file.Files.list(dir).iterator().asScala
             .filter(_.getFileName.toString.matches("bench_sf0\\.1_r\\d+[a-z]?\\.json"))
-            .toSeq.sortBy(_.getFileName.toString).lastOption
+            .toSeq.sortBy(_.getFileName.toString)
             .flatMap { f =>
-              """"value":([0-9.]+)""".r
-                .findFirstMatchIn(java.nio.file.Files.readString(f))
-                .map(m => f.getFileName.toString -> m.group(1).toDouble)
-            }
+              val capture = java.nio.file.Files.readString(f)
+              def field(k: String) = ("\"" + k + "\"\\s*:\\s*([0-9.]+)").r
+                .findFirstMatchIn(capture).map(_.group(1))
+              if (field("cores").contains(cores.toString) &&
+                  field("nq").contains(results.size.toString))
+                field("value").map(v => f.getFileName.toString -> v.toDouble)
+              else None
+            }.lastOption
         }
       } catch { case _: Exception => None }
     val committedMeta = committedRef.map { case (f, v) =>
@@ -323,7 +332,7 @@ object Bench {
       s""","committed_ref":"$f","committed_total_sec":${r3(v)},"vs_committed":${r3(ratio)}"""
     }.getOrElse("")
     val (cal1t, cal32t) = calibrate()
-    val meta = s""""cpu_sec":${r3(totalCpu)},"task_total_sec":${r3(totalTask)},"contended":$contJson,"failed":$failJson,"passes":$passes,"pass_drift":${r3(passDrift)},"ext_cpu":${r3(extCpu)},"cal_1t_sec":${r3(cal1t)},"cal_32t_sec":${r3(cal32t)},"untrusted":$untrusted$committedMeta,"sf":"$sfDir""""
+    val meta = s""""cpu_sec":${r3(totalCpu)},"task_total_sec":${r3(totalTask)},"contended":$contJson,"failed":$failJson,"passes":$passes,"pass_drift":${r3(passDrift)},"ext_cpu":${r3(extCpu)},"cal_1t_sec":${r3(cal1t)},"cal_32t_sec":${r3(cal32t)},"cores":$cores,"untrusted":$untrusted$committedMeta,"sf":"$sfDir","nq":${results.size}"""
     val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"task_sec":$ts,$meta}"""
     // Persist the full line (all query names, wall + task maps) to a
     // file for the round artifacts...
@@ -350,7 +359,7 @@ object Bench {
     val top20 = results.filter(_._2.wall >= 0).sortBy(-_._2.wall).take(20)
       .map { case (k, t) => "\"" + k.takeWhile(_ != '_') + "\":" + r3(t.wall) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",$shortMeta,"nq":${results.size},"queries":$top20,"queries_full":"target/bench_self.json"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",$shortMeta,"queries":$top20,"queries_full":"target/bench_self.json"}""")
     spark.stop()
   }
 }

@@ -47,6 +47,18 @@ object Similarity {
       .filter(col("cosine") >= tau)
   }
 
+  /** The per-query top-k cut every ranked operator ends in: number each
+    * query_id's rows by `order` (callers end it with a unique id, so
+    * ranks are deterministic) as column `rank`, and keep ranks 1..k.
+    * The filter on row_number plans as a WindowGroupLimit, so each
+    * partition ships at most k rows per query into the window's
+    * shuffle.
+    */
+  def rankCut(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
   /** Deterministic pseudo-random hyperplane component for (plane j,
     * dim i): integer-hash → [−0.5, 0.5). Portable to SQL.
     */
@@ -88,10 +100,7 @@ object Similarity {
       .select(col("query_id"), col("qbucket").as("bucket"), col("corpus_id"),
         (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
           .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("cosine").desc, col("corpus_id").asc)
   }
 
   /** All nBits hyperplane projections of a vector, as an array —
@@ -172,11 +181,8 @@ object Similarity {
   def mpLshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, nBits: Int, nProbe: Int, k: Int): DataFrame = {
     require(k >= 1)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    mpLshScored(corpus, queries, idCol, vecCol, nBits, nProbe)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(mpLshScored(corpus, queries, idCol, vecCol, nBits, nProbe), k,
+      col("cosine").desc, col("corpus_id").asc)
   }
 
   /** seedMod yielding nlist ≈ √n for a corpus of n vectors — the
@@ -235,6 +241,37 @@ object Similarity {
         any_value(col("vnorm")).as("vnorm"),
         max_by(col("cell"), struct(col("cell_cos"), -col("cell"))).as("cell"))
 
+  /** The IVF probe: score each query against the centroid table by
+    * cosine and keep its top-`nprobe` cells, ranked cosine desc, then
+    * cell asc — ivfAssign's max_by(struct(cos, -cell)) tie-break, so
+    * cell_rank 1 IS the vector's ivfAssign cell. Output: (query_id,
+    * qvec, qnorm, cell, cvec, cell_rank) plus the `keep` columns,
+    * nprobe rows per query; callers select what they need.
+    *
+    * Scale shape: the centroid table (nlist ≈ √n) broadcasts into the
+    * query scan, and the filter on row_number plans as a
+    * WindowGroupLimit, so each partition ships nprobe rows per query
+    * into the rank window's shuffle, not nlist.
+    */
+  def ivfProbe(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, nprobe: Int, keep: Seq[String] = Nil)
+      : DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cell_cos").desc, col("cell").asc)
+    val carried = Seq(col("query_id"), col("qvec"), col("qnorm")) ++
+      keep.map(col)
+    queries
+      .select(Seq(col(idCol).as("query_id"), col(vecCol).as("qvec"),
+        sqrt(norm2(col(vecCol))).as("qnorm")) ++ keep.map(col): _*)
+      .crossJoin(broadcast(centroids))
+      .select(carried ++ Seq(col("cell"), col("cvec"),
+        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
+          .as("cell_cos")): _*)
+      .withColumn("cell_rank", row_number().over(w))
+      .filter(col("cell_rank") <= nprobe)
+      .select(carried ++ Seq(col("cell"), col("cvec"), col("cell_rank")): _*)
+  }
+
   /** Lloyd refinement of IVF centroids: assign, then recompute each
     * cell's centroid as the element-wise mean of its members. Means
     * accumulate as exact decimals so the refined index is independent
@@ -280,27 +317,14 @@ object Similarity {
     val assigned = ivfAssign(corpus, idCol, vecCol, seeds)
       .select(col(idCol).as("corpus_id"), col(vecCol).as("cvec2"),
         col("vnorm"), col("cell"))
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        sqrt(norm2(col(vecCol))).as("qnorm"))
-      .crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("qvec"), col("qnorm"), col("cell"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val probes = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
+    val probes = ivfProbe(queries, idCol, vecCol, seeds, nprobe)
       .select(col("query_id"), col("qvec"), col("qnorm"), col("cell"))
     val scored = assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"), col("cell"),
         (dot(col("qvec"), col("cvec2")) / (col("qnorm") * col("vnorm")))
           .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("cosine").desc, col("corpus_id").asc)
   }
 
   /** Semantic dedup (the SemDeDup recipe, Abbas et al. 2023, applied
@@ -321,9 +345,8 @@ object Similarity {
     *
     * `nprobe` is the recall knob for exactly those boundary pairs: for
     * nprobe > 1 the PAIR-GENERATION side assigns each vector to its
-    * top-nprobe cells (same probe shape as [[ivfTopK]]: row_number
-    * window pruned map-side by WindowGroupLimit, so the shuffle carries
-    * nprobe rows per vector instead of one), and a pair is compared if
+    * top-nprobe cells ([[ivfProbe]], so the shuffle carries nprobe
+    * rows per vector instead of one), and a pair is compared if
     * the two vectors share ANY probed cell. Survivors still carry their
     * single top-1 cell id (the output contract is unchanged), and
     * nprobe=1 reduces to the exact original dataflow. Measured recall
@@ -350,22 +373,13 @@ object Similarity {
         val a = ivfAssign(vecs, idCol, vecCol, seeds).localCheckpoint(true)
         (a, a)
       } else {
-        val scored = vecs
-          .select(col(idCol), col(vecCol), sqrt(norm2(col(vecCol))).as("vnorm"))
-          .crossJoin(broadcast(seeds))
-          .select(col(idCol), col(vecCol), col("vnorm"), col("cell"),
-            (dot(col(vecCol), col("cvec")) / (col("vnorm") * col("cnorm")))
-              .as("cell_cos"))
-        // same tie-break as ivfAssign's max_by(struct(cos, -cell)):
-        // highest cosine, lowest cell — rank 1 IS the assignment
-        val w = Window.partitionBy(col(idCol))
-          .orderBy(col("cell_cos").desc, col("cell").asc)
-        val ranked = scored.withColumn("__cr", row_number().over(w))
-          .filter(col("__cr") <= nprobe)
-          .select(col(idCol), col(vecCol), col("vnorm"), col("cell"),
-            col("__cr"))
+        // every vector probes its own top-nprobe cells; rank 1 IS the
+        // ivfAssign cell
+        val ranked = ivfProbe(vecs, idCol, vecCol, seeds, nprobe)
+          .select(col("query_id").as(idCol), col("qvec").as(vecCol),
+            col("qnorm").as("vnorm"), col("cell"), col("cell_rank"))
           .localCheckpoint(true)
-        (ranked.filter(col("__cr") === 1)
+        (ranked.filter(col("cell_rank") === 1)
           .select(col(idCol), col(vecCol), col("vnorm"), col("cell")),
           ranked.select(col(idCol), col(vecCol), col("vnorm"), col("cell")))
       }
@@ -393,9 +407,9 @@ object Similarity {
     * randomness): vector v links to its `degree` nearest SMALLER-id
     * members of its cell (the NSW insert rule replayed in fixed id
     * order), edges kept undirected. Search: route each query to its
-    * `nprobe` nearest cells ([[ivfTopK]]'s probe shape); per probed
-    * cell start from the cell's lowest-id member and run `hops`
-    * synchronous beam rounds — each round scores all neighbors of the
+    * `nprobe` nearest cells ([[ivfProbe]]); per probed cell start from
+    * the cell's lowest-id member and run `hops` synchronous beam
+    * rounds — each round scores all neighbors of the
     * current beam and keeps the `beam` best (cosine desc, id asc) per
     * (query, cell); the answer is the top-k over every node SCORED
     * during the walk (beam-evicted nodes stay eligible — standard
@@ -417,12 +431,8 @@ object Similarity {
       vecCol: String, seedMod: Int, nprobe: Int, degree: Int, beam: Int,
       hops: Int, k: Int): DataFrame = {
     require(k >= 1)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    nswScored(corpus, queries, idCol, vecCol, seedMod, nprobe, degree,
-        beam, hops)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(nswScored(corpus, queries, idCol, vecCol, seedMod, nprobe,
+        degree, beam, hops), k, col("cosine").desc, col("corpus_id").asc)
   }
 
   /** Every node the NSW walk SCORES, deduped, self-matches excluded —
@@ -460,17 +470,7 @@ object Similarity {
       .select(col(idCol).as("corpus_id"), col(vecCol).as("nvec"),
         col("vnorm"), col("cell"))
       .localCheckpoint(true)
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        sqrt(norm2(col(vecCol))).as("qnorm"))
-      .crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("qvec"), col("qnorm"), col("cell"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val probes = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
+    val probes = ivfProbe(queries, idCol, vecCol, seeds, nprobe)
       .select(col("query_id"), col("qvec"), col("qnorm"), col("cell"))
     WalkScaffold(assigned, probes)
   }
@@ -684,12 +684,9 @@ object Similarity {
       vecCol: String, seedMod: Int, nprobe: Int, degree: Int, beam: Int,
       hops: Int, upperHops: Int, k: Int, levels: Int = 1): DataFrame = {
     require(k >= 1)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    hnswScored(corpus, queries, idCol, vecCol, seedMod, nprobe, degree,
-        beam, hops, upperHops, levels)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(hnswScored(corpus, queries, idCol, vecCol, seedMod, nprobe,
+        degree, beam, hops, upperHops, levels), k,
+      col("cosine").desc, col("corpus_id").asc)
   }
 
   /** Brute-force top-k nearest (cosine) corpus rows per query row.
@@ -706,10 +703,7 @@ object Similarity {
       .select(col("query_id"), col("corpus_id"),
         (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
           .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("cosine").desc, col("corpus_id").asc)
   }
 
   /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein 1998)
@@ -817,10 +811,7 @@ object Similarity {
       .select(col("query_id"), col("corpus_id"),
         (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
           .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("cosine").desc, col("corpus_id").asc)
   }
 
   // ------------------------------------------------------------------
@@ -882,10 +873,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
         idot(col("cq"), col("qq")).as("iscore"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("iscore").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("iscore").desc, col("corpus_id").asc)
   }
 
   /** Native integer dot (expressions.IntDotProduct): exact semantics
@@ -939,18 +927,15 @@ object Similarity {
     }.reduce(_ + _)
     val scored = c.join(broadcast(q), col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"), ham.as("hamming"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("hamming").asc, col("corpus_id").asc)
   }
 
   /** IVF-SQ8: cell-pruned int8 search — the FAISS `IVF…,SQ8` shape,
     * completing the {brute, IVF} × {float32, SQ8, PQ} matrix ([[topK]]
     * / [[ivfTopK]] / [[sqTopK]] / here / [[pqAdcTopK]] /
     * [[ivfPqTopK]]). Cell ranking reuses the pinned seed centroids and
-    * float probe of [[ivfTopK]]; candidate scoring is [[sqTopK]]'s
-    * exact integer dot over the cell's inverted list only.
+    * float probe ([[ivfProbe]]) of [[ivfTopK]]; candidate scoring is
+    * [[sqTopK]]'s exact integer dot over the cell's inverted list only.
     *
     * Scale shape = [[ivfPqTopK]]'s: centroids and the 1-row scale
     * table broadcast, the corpus is encoded in place (narrow), and the
@@ -968,16 +953,8 @@ object Similarity {
     val cCodes = sqEncode(assigned, idCol, vecCol, scales, Seq("cell"))
       .select(col(idCol).as("corpus_id"), col("cell"),
         col("sq_code").as("cq"))
-    val qn = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qvec"), sqrt(norm2(col(vecCol))).as("qnorm"))
-    val qScored = qn.crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("cell"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val qCells = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
+    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
+    val qCells = ivfProbe(queries, idCol, vecCol, seeds, nprobe)
       .select(col("query_id"), col("cell"))
     val qCodes = sqEncode(qn, "query_id", "qvec", scales)
       .select(col("query_id"), col("sq_code").as("qq"))
@@ -986,19 +963,16 @@ object Similarity {
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("cell"), col("corpus_id"),
         idot(col("cq"), col("qq")).as("iscore"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("iscore").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("iscore").desc, col("corpus_id").asc)
   }
 
   /** IVF-BIN: cell-pruned binary search — the last cell of the
     * {brute, IVF} × {float32, SQ8, PQ, binary} matrix ([[topK]] /
     * [[ivfTopK]] / [[sqTopK]] / [[ivfSqTopK]] / [[pqAdcTopK]] /
     * [[ivfPqTopK]] / [[binTopK]] / here). Cell ranking reuses the
-    * pinned seed centroids and float probe of [[ivfTopK]]; candidate
-    * scoring is [[binTopK]]'s packed hamming over the probed cells'
-    * inverted lists only.
+    * pinned seed centroids and float probe ([[ivfProbe]]) of
+    * [[ivfTopK]]; candidate scoring is [[binTopK]]'s packed hamming over
+    * the probed cells' inverted lists only.
     *
     * Scale shape = [[ivfSqTopK]]'s — centroids broadcast, corpus
     * encoded in place (narrow), scoring via broadcast HASH join on
@@ -1016,16 +990,8 @@ object Similarity {
     val cCodes = binEncode(assigned, idCol, vecCol, dims, Seq("cell"))
       .select(col(idCol).as("corpus_id"), col("cell"),
         col("bin_code").as("cb"))
-    val qn = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qvec"), sqrt(norm2(col(vecCol))).as("qnorm"))
-    val qScored = qn.crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("cell"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val qCells = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
+    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
+    val qCells = ivfProbe(queries, idCol, vecCol, seeds, nprobe)
       .select(col("query_id"), col("cell"))
     val qCodes = binEncode(qn, "query_id", "qvec", dims)
       .select(col("query_id"), col("bin_code").as("qb"))
@@ -1038,10 +1004,7 @@ object Similarity {
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("cell"), col("corpus_id"),
         ham.as("hamming"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("hamming").asc, col("corpus_id").asc)
   }
 
   // ------------------------------------------------------------------
@@ -1190,10 +1153,7 @@ object Similarity {
     // NULL adist; Spark's default asc puts NULLS FIRST, which would let
     // malformed/partial code rows claim ranks 1..k. Last keeps them out
     // of any top-k smaller than the corpus.
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc_nulls_last, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("adist").asc_nulls_last, col("corpus_id").asc)
       .select(col("query_id"), col("rank"), col("corpus_id"), col("adist"))
   }
 
@@ -1299,20 +1259,7 @@ object Similarity {
       k: Int): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     val (cbIdx, ncw) = denseCodebook(codebooks, m)
-    // Per-query probe set: rank the (broadcast) centroid table by
-    // cosine, keep the top-nprobe cells — identical probe shape (and
-    // tie-break) to ivfTopK, pruned map-side by WindowGroupLimit.
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        sqrt(norm2(col(vecCol))).as("qnorm"))
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("qvec"), col("qnorm"), col("cell"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val probes = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
+    val probes = ivfProbe(queries, idCol, vecCol, centroids, nprobe)
       .select(col("query_id"), col("cell"))
     // Fuse each query's flattened LUT onto its nprobe probe rows —
     // (nq·nprobe) rows of m·ncw doubles, still broadcast-sized (the
@@ -1331,10 +1278,7 @@ object Similarity {
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("cell"), col("corpus_id"),
         adcDistExpr(m, ncw).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc_nulls_last, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("adist").asc_nulls_last, col("corpus_id").asc)
       .select(col("query_id"), col("cell"), col("rank"), col("corpus_id"),
         col("adist"))
   }
@@ -1356,18 +1300,9 @@ object Similarity {
       nprobe: Int, k: Int): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     val (cbIdx, ncw) = denseCodebook(codebooks, m)
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(filterCol).as("__f"),
-        col(vecCol).as("qvec"), sqrt(norm2(col(vecCol))).as("qnorm"))
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("__f"), col("cell"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val probes = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
-      .select(col("query_id"), col("__f"), col("cell"))
+    val probes = ivfProbe(queries, idCol, vecCol, centroids, nprobe,
+        keep = Seq(filterCol))
+      .select(col("query_id"), col(filterCol).as("__f"), col("cell"))
     val probeLuts = probes.join(
       adcLuts(queries, idCol, vecCol, m, cbIdx, ncw), Seq("query_id"))
     val pivoted = pivotCodes(codes, idCol, m, cbIdx)
@@ -1377,10 +1312,7 @@ object Similarity {
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("cell"), col("corpus_id"),
         adcDistExpr(m, ncw).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc_nulls_last, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("adist").asc_nulls_last, col("corpus_id").asc)
       .select(col("query_id"), col("cell"), col("rank"), col("corpus_id"),
         col("adist"))
   }
@@ -1423,18 +1355,8 @@ object Similarity {
       k: Int): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     val (cbIdx, ncw) = denseCodebook(codebooks, m)
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        sqrt(norm2(col(vecCol))).as("qnorm"))
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("qvec"), col("cell"), col("cvec"),
-        (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-          .as("cell_cos"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
     // per probed cell, the query RESIDUAL against that cell's centroid
-    val probes = qScored.withColumn("cell_rank", row_number().over(wq))
-      .filter(col("cell_rank") <= nprobe)
+    val probes = ivfProbe(queries, idCol, vecCol, centroids, nprobe)
       .select(col("query_id"), col("cell"),
         zip_with(col("qvec"), col("cvec"),
           (a, b) => a.cast("double") - b.cast("double")).as("qrvec"))
@@ -1460,10 +1382,7 @@ object Similarity {
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("cell"), col("corpus_id"),
         adcDistExpr(m, ncw).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc_nulls_last, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("adist").asc_nulls_last, col("corpus_id").asc)
       .select(col("query_id"), col("cell"), col("rank"), col("corpus_id"),
         col("adist"))
   }
@@ -1490,10 +1409,7 @@ object Similarity {
       .select(col("query_id"), col("corpus_id"), col("neg_label"),
         (dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
           .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankCut(scored, k, col("cosine").desc, col("corpus_id").asc)
   }
 
   /** Scala twin of [[planeComponent]] — identical integer arithmetic

@@ -53,12 +53,9 @@ object SimilarityQueries {
   /** Per query, the top-`k` (query_id, corpus_id) of a scored frame by
     * cosine desc, corpus_id asc.
     */
-  private def cosineTopK(scored: DataFrame, k: Int): DataFrame = {
-    val byCosine = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rk", row_number().over(byCosine))
-      .filter(col("rk") <= k).select(col("query_id"), col("corpus_id"))
-  }
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    Similarity.rankCut(scored, k, col("cosine").desc, col("corpus_id").asc)
+      .select(col("query_id"), col("corpus_id"))
 
   /** How many of `top`'s pairs the exact baseline holds (one action). */
   private def hitCount(top: DataFrame, exact: DataFrame): Long =
@@ -306,6 +303,51 @@ object SimilarityQueries {
   //    ANN path next to LSH: candidates/query = |corpus|·nprobe/nlist.
   private val SEEDMOD = 25
   private val NPROBE = 2
+
+  /** Oracle order of the seeds `s` for a vector of the norm CTE `v`:
+    * cosine desc, cell asc (ivfAssign's tie-break).
+    */
+  private def cellOrderSql(v: String) =
+    s"${dotSql(s"$v.embedding", "s.svec")} / ($v.nrm * s.snrm) DESC, s.cell ASC"
+
+  /** Oracle twin of seedCentroids + ivfAssign over the norm CTE
+    * `v$sfx`: `seeds$sfx` (cell = vec_id for vec_id % SEEDMOD = 0) and
+    * `assign$sfx` (vec_id, cell), each vector's rank-1 cell.
+    */
+  private def ivfAssignCtes(sfx: String = "", materialized: Boolean = false) = {
+    val v = s"v$sfx"
+    s"""seeds$sfx AS (
+        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
+        FROM $v WHERE vec_id % $SEEDMOD = 0),
+      assign$sfx AS ${if (materialized) "MATERIALIZED " else ""}(
+        SELECT vec_id, cell FROM (
+          SELECT $v.vec_id, s.cell,
+            row_number() OVER (PARTITION BY $v.vec_id
+              ORDER BY ${cellOrderSql(v)}) AS rn
+          FROM $v CROSS JOIN seeds$sfx s) WHERE rn = 1)"""
+  }
+
+  /** Oracle twin of [[Similarity.ivfProbe]] over [[ivfAssignCtes]]'
+    * CTEs: `name`(query_id, the `carry` aliases, cell, and rn if
+    * `keepRn`), the top-`nprobe` cells of each query vec_id % `qmod`
+    * = 0. `carry` pairs an alias with its expression over `v$sfx`.
+    */
+  private def ivfProbeCte(qmod: Int, nprobe: Int, sfx: String = "",
+      name: String = "probe", carry: Seq[(String, String)] = Nil,
+      keepRn: Boolean = false) = {
+    val v = s"v$sfx"
+    val cols = (("query_id" +: carry.map(_._1)) :+ "cell") ++
+      (if (keepRn) Seq("rn") else Nil)
+    val carried = carry.map { case (a, e) => s"$e AS $a, " }.mkString
+    s"""$name AS (
+        SELECT ${cols.mkString(", ")} FROM (
+          SELECT $v.vec_id AS query_id, ${carried}s.cell,
+            row_number() OVER (PARTITION BY $v.vec_id
+              ORDER BY ${cellOrderSql(v)}) AS rn
+          FROM $v CROSS JOIN seeds$sfx s WHERE $v.vec_id % $qmod = 0)
+        WHERE rn <= $nprobe)"""
+  }
+
   private val q53 = Q(
     "q53_ann_ivf_topk",
     (s, dir) => {
@@ -318,24 +360,8 @@ object SimilarityQueries {
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""WITH ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probe AS (
-        SELECT query_id, cell FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfAssignCtes()},
+      ${ivfProbeCte(QMOD, NPROBE)},
       scored AS (
         SELECT p.query_id, p.cell, a.vec_id AS corpus_id,
           ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
@@ -364,16 +390,7 @@ object SimilarityQueries {
         .orderBy(col("vec_id"))
     },
     Some(s"""WITH ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
+      ${ivfAssignCtes()},
       m AS (
         SELECT a.vec_id, a.cell, v.embedding, v.nrm
         FROM assign a JOIN v USING (vec_id)),
@@ -853,16 +870,7 @@ object SimilarityQueries {
       val visUnion = (1 to NSW_HOPS).map(h => s"SELECT * FROM x$h")
         .mkString("SELECT * FROM f0 UNION ALL ", " UNION ALL ", "")
       s"""${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
+      ${ivfAssignCtes()},
       m AS (
         SELECT a.vec_id, a.cell, v.embedding, v.nrm
         FROM assign a JOIN v USING (vec_id)),
@@ -878,14 +886,7 @@ object SimilarityQueries {
       edges AS (
         SELECT cell, src, dst FROM edir
         UNION ALL SELECT cell, dst AS src, src AS dst FROM edir),
-      probe AS (
-        SELECT query_id, cell FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfProbeCte(QMOD, NPROBE)},
       entry AS (SELECT cell, min(vec_id) AS node FROM m GROUP BY cell),
       f0 AS (
         SELECT p.query_id, p.cell, e.node AS corpus_id,
@@ -1837,24 +1838,8 @@ object SimilarityQueries {
     },
     Some(s"""WITH ${pqBaseSql},
       ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probe AS (
-        SELECT query_id, cell FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $PQ_QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfAssignCtes()},
+      ${ivfProbeCte(PQ_QMOD, NPROBE)},
       adc AS (
         SELECT s.vec_id AS query_id, s.sub, c.cw,
           ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
@@ -2002,24 +1987,8 @@ object SimilarityQueries {
       v AS (
         SELECT vec_id, label, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
         FROM embeddings),
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probe AS (
-        SELECT query_id, qlab, cell FROM (
-          SELECT v.vec_id AS query_id, v.label AS qlab, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $PQ_QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfAssignCtes()},
+      ${ivfProbeCte(PQ_QMOD, NPROBE, carry = Seq("qlab" -> "v.label"))},
       adc AS (
         SELECT s.vec_id AS query_id, s.sub, c.cw,
           ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
@@ -2105,24 +2074,8 @@ object SimilarityQueries {
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""WITH ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probe AS (
-        SELECT query_id, cell FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfAssignCtes()},
+      ${ivfProbeCte(QMOD, NPROBE)},
       dims AS (SELECT unnest(generate_series(1, $SQ_DIMS)) AS pos),
       scales AS (
         SELECT pos, max(abs(CAST(embedding[pos] AS DOUBLE))) AS s
@@ -2180,16 +2133,7 @@ object SimilarityQueries {
         .orderBy(col("cell"), col("sel_rank"))
     },
     Some(s"""WITH ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
+      ${ivfAssignCtes()},
       sel AS (
         SELECT a.cell, d.doc_id AS vec_id, d.n_chars,
           row_number() OVER (PARTITION BY a.cell
@@ -2204,16 +2148,7 @@ object SimilarityQueries {
   // doubles, codebook/encode over the residuals (same √n donor rule).
   private def residualPqSql = s"""
       ${normCte("v2")},
-      seeds2 AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v2 WHERE vec_id % $SEEDMOD = 0),
-      assign2 AS (
-        SELECT vec_id, cell FROM (
-          SELECT v2.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v2.vec_id
-              ORDER BY ${dotSql("v2.embedding", "s.svec")} / (v2.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v2 CROSS JOIN seeds2 s) WHERE rn = 1),
+      ${ivfAssignCtes("2")},
       resid AS (
         SELECT a.vec_id, a.cell,
           list_transform(list_zip(v2.embedding, s.svec),
@@ -2247,14 +2182,7 @@ object SimilarityQueries {
   // Per-(query, probed cell) residual ADC: the LUT uses q − c_cell of
   // the PROBED cell, so candidates meet exactly their own cell's LUT.
   private def residualProbeSql(qmod: Int, nprobe: Int) = s"""
-      probe2 AS (
-        SELECT query_id, cell FROM (
-          SELECT v2.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v2.vec_id
-              ORDER BY ${dotSql("v2.embedding", "s.svec")} / (v2.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v2 CROSS JOIN seeds2 s WHERE v2.vec_id % $qmod = 0)
-        WHERE rn <= $nprobe),
+      ${ivfProbeCte(qmod, nprobe, "2", "probe2")},
       qres AS (
         SELECT p.query_id, p.cell,
           list_transform(list_zip(v2.embedding, s.svec),
@@ -2395,6 +2323,112 @@ object SimilarityQueries {
       FROM errs e JOIN mags m ON e.label = m.label
       ORDER BY e.label"""))
 
+  // -- Oracle replay of k-means PQ (Similarity.pqCodebooksKMeans →
+  //    pqEncode → pqAdcTopK), shared by q159's two rungs and q231's
+  //    two arms. CTE names carry an arm prefix `p`.
+
+  /** `kseed`(vec_id, cluster): KMeans' hash-seeded initial order. */
+  private val pqKSeedCte = s"""kseed AS (
+        SELECT vec_id, row_number() OVER (
+            ORDER BY ((vec_id % 1000000007) * 2654435761) % 1000000007,
+              vec_id) - 1 AS cluster
+        FROM embeddings)"""
+
+  /** `${p}subs`(vec_id, sub, svec): the PQ_M subspace slices of `src`. */
+  private def pqSubsCte(p: String, src: String) = {
+    val sl = SQ_DIMS / PQ_M
+    s"""${p}subs AS (
+          SELECT vec_id, sub,
+            embedding[(sub * $sl + 1):(sub * $sl + $sl)] AS svec
+          FROM (SELECT vec_id, embedding,
+                  unnest(generate_series(0, ${PQ_M - 1})) AS sub
+                FROM $src))"""
+  }
+
+  /** `${p}kcent0` .. `${p}kcent$PQKM_ITERS`(sub, cluster, cvec): the
+    * first PQKM_K seeds of `${p}subs`, then PQKM_ITERS unrolled Lloyd
+    * rounds over (sub, cluster) — exact-decimal distances,
+    * lowest-cluster tie-break, 6-decimal rounded means, empty clusters
+    * carrying the previous centroid forward.
+    */
+  private def pqKMeansCtes(p: String) = {
+    val sl = SQ_DIMS / PQ_M
+    val init = s"""${p}kcent0 AS (
+          SELECT s.sub, sd.cluster,
+            list_transform(s.svec, x -> CAST(x AS DOUBLE)) AS cvec
+          FROM kseed sd JOIN ${p}subs s USING (vec_id)
+          WHERE sd.cluster < $PQKM_K)"""
+    val iters = (1 to PQKM_ITERS).map { i =>
+      s"""${p}kdist$i AS (
+            SELECT s.vec_id, s.sub, c.cluster,
+              list_reduce(list_prepend(CAST(0 AS DECIMAL(38,8)),
+                list_transform(list_zip(s.svec, c.cvec), pr ->
+                  CAST((CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
+                     * (CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
+                    AS DECIMAL(28,8)))),
+                (a, b) -> CAST(a + b AS DECIMAL(38,8))) AS d2
+            FROM ${p}subs s JOIN ${p}kcent${i - 1} c USING (sub)),
+          ${p}kasg$i AS (
+            SELECT vec_id, sub, cluster FROM (
+              SELECT vec_id, sub, cluster,
+                row_number() OVER (PARTITION BY vec_id, sub
+                  ORDER BY d2, cluster) AS rk
+              FROM ${p}kdist$i) WHERE rk = 1),
+          ${p}kmean$i AS (
+            SELECT a.sub, a.cluster, t.p AS pos,
+              ${proundSql(
+                "CAST(sum(CAST(CAST(s.svec[t.p] AS DOUBLE) AS DECIMAL(28,8)))" +
+                  " AS DOUBLE) / count(*)", 6)} AS mean_v
+            FROM ${p}kasg$i a
+            JOIN ${p}subs s ON s.vec_id = a.vec_id AND s.sub = a.sub
+            CROSS JOIN (SELECT unnest(generate_series(1, $sl)) AS p) t
+            GROUP BY a.sub, a.cluster, t.p),
+          ${p}kcent$i AS (
+            SELECT sub, cluster, list(mean_v ORDER BY pos) AS cvec
+            FROM ${p}kmean$i GROUP BY sub, cluster
+            UNION ALL
+            SELECT pv.sub, pv.cluster, pv.cvec FROM ${p}kcent${i - 1} pv
+            WHERE NOT EXISTS (SELECT 1 FROM ${p}kmean$i m
+              WHERE m.sub = pv.sub AND m.cluster = pv.cluster))"""
+    }.mkString(",\n        ")
+    s"$init,\n        $iters"
+  }
+
+  /** One PQ arm over the centroid CTE `cent` and the slices `subs`:
+    * `${p}cw` codebook, `${p}enc`(vec_id, sub, cw, sdist) encode,
+    * `${p}adc` query LUT rows, `${p}top`(query_id, corpus_id) full-ADC
+    * top-SQ_K of the pinned queries.
+    */
+  private def pqArmCtes(p: String, subs: String, cent: String) =
+    s"""${p}cw AS (
+          SELECT sub, cluster AS cw, cvec, ${norm2Sql("cvec")} AS cc
+          FROM $cent),
+        ${p}enc AS (
+          SELECT vec_id, sub, cw, sdist FROM (
+            SELECT vec_id, sub, cw, sdist, row_number() OVER (
+                PARTITION BY vec_id, sub ORDER BY sdist ASC, cw ASC) AS rn
+            FROM (
+              SELECT s.vec_id, s.sub, c.cw,
+                ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")}
+                  + c.cc AS sdist
+              FROM $subs s JOIN ${p}cw c USING (sub)))
+          WHERE rn = 1),
+        ${p}adc AS (
+          SELECT s.vec_id AS query_id, s.sub, c.cw,
+            ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
+              AS qd
+          FROM $subs s JOIN ${p}cw c USING (sub)
+          WHERE s.vec_id % $QMOD = 0),
+        ${p}top AS (
+          ${rankCutSql("query_id, corpus_id", s"""(
+            SELECT a.query_id, e.vec_id AS corpus_id,
+              list_reduce(list_prepend(CAST(0 AS DOUBLE),
+                list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
+            FROM ${p}enc e
+            JOIN ${p}adc a ON a.sub = e.sub AND a.cw = e.cw
+            WHERE a.query_id != e.vec_id
+            GROUP BY a.query_id, e.vec_id)""", "adist ASC", SQ_K)})"""
+
   // -- V24: k-means-TRAINED PQ codebooks vs untrained seeds — the
   //    FAISS training step, measured: both rungs share the SAME 32
   //    hash-seeded initial codewords per subspace; one encodes with
@@ -2409,6 +2443,7 @@ object SimilarityQueries {
   //    the √n donor codebook of q149's 'pq' rung sits at 0.24).
   private val PQKM_K = 32
   private val PQKM_ITERS = 2
+
   private val q159 = Q(
     "q159_pq_kmeans_ladder",
     (s, dir) => {
@@ -2434,102 +2469,16 @@ object SimilarityQueries {
       rung("pq_kmeans", cbK).unionByName(rung("pq_seed", cbS))
         .orderBy(col("method"))
     },
-    Some {
-      val sl = SQ_DIMS / PQ_M
-      // one Lloyd round over (sub, cluster): exact-decimal distances,
-      // lowest-cluster tie-break, 6-decimal rounded means, empty
-      // clusters carrying the previous centroid forward
-      val iterCtes = (1 to PQKM_ITERS).map { i =>
-        s"""kdist$i AS (
-          SELECT s.vec_id, s.sub, c.cluster,
-            list_reduce(list_prepend(CAST(0 AS DECIMAL(38,8)),
-              list_transform(list_zip(s.svec, c.cvec), pr ->
-                CAST((CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
-                   * (CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
-                  AS DECIMAL(28,8)))),
-              (a, b) -> CAST(a + b AS DECIMAL(38,8))) AS d2
-          FROM subs2 s JOIN kcent${i - 1} c USING (sub)),
-        kasg$i AS (
-          SELECT vec_id, sub, cluster FROM (
-            SELECT vec_id, sub, cluster,
-              row_number() OVER (PARTITION BY vec_id, sub
-                ORDER BY d2, cluster) AS rk
-            FROM kdist$i) WHERE rk = 1),
-        kmean$i AS (
-          SELECT a.sub, a.cluster, t.p AS pos,
-            ${proundSql(
-              "CAST(sum(CAST(CAST(s.svec[t.p] AS DOUBLE) AS DECIMAL(28,8)))" +
-                " AS DOUBLE) / count(*)", 6)} AS mean_v
-          FROM kasg$i a
-          JOIN subs2 s ON s.vec_id = a.vec_id AND s.sub = a.sub
-          CROSS JOIN (SELECT unnest(generate_series(1, $sl)) AS p) t
-          GROUP BY a.sub, a.cluster, t.p),
-        kcent$i AS (
-          SELECT sub, cluster, list(mean_v ORDER BY pos) AS cvec
-          FROM kmean$i GROUP BY sub, cluster
-          UNION ALL
-          SELECT p.sub, p.cluster, p.cvec FROM kcent${i - 1} p
-          WHERE NOT EXISTS (SELECT 1 FROM kmean$i m
-            WHERE m.sub = p.sub AND m.cluster = p.cluster))"""
-      }.mkString(",\n      ")
-      // shared: encode + full ADC + top-K + hit count for a centroid CTE
-      def rungSql(name: String, cent: String) =
-        s"""${name}cw AS (
-          SELECT sub, cluster AS cw, cvec, ${norm2Sql("cvec")} AS cc
-          FROM $cent),
-        ${name}enc AS (
-          SELECT vec_id, sub, cw FROM (
-            SELECT s.vec_id, s.sub, c.cw,
-              row_number() OVER (PARTITION BY s.vec_id, s.sub
-                ORDER BY ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")}
-                  + c.cc ASC, c.cw ASC) AS rn
-            FROM subs2 s JOIN ${name}cw c USING (sub))
-          WHERE rn = 1),
-        ${name}adc AS (
-          SELECT s.vec_id AS query_id, s.sub, c.cw,
-            ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
-              AS qd
-          FROM subs2 s JOIN ${name}cw c USING (sub)
-          WHERE s.vec_id % $QMOD = 0),
-        ${name}top AS (
-          SELECT query_id, corpus_id FROM (
-            SELECT query_id, corpus_id, row_number() OVER (
-                PARTITION BY query_id ORDER BY adist ASC, corpus_id ASC)
-              AS rank
-            FROM (
-              SELECT a.query_id, e.vec_id AS corpus_id,
-                list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                  list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
-              FROM ${name}enc e
-              JOIN ${name}adc a ON a.sub = e.sub AND a.cw = e.cw
-              WHERE a.query_id != e.vec_id
-              GROUP BY a.query_id, e.vec_id))
-          WHERE rank <= $SQ_K)"""
-      s"""WITH subs2 AS (
-        SELECT vec_id, sub,
-          embedding[(sub * $sl + 1):(sub * $sl + $sl)] AS svec
-        FROM (SELECT vec_id, embedding,
-                unnest(generate_series(0, ${PQ_M - 1})) AS sub
-              FROM embeddings)),
-      kseed AS (
-        SELECT vec_id, row_number() OVER (
-            ORDER BY ((vec_id % 1000000007) * 2654435761) % 1000000007,
-              vec_id) - 1 AS cluster
-        FROM embeddings),
-      kcent0 AS (
-        SELECT s.sub, sd.cluster,
-          list_transform(s.svec, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM kseed sd JOIN subs2 s USING (vec_id)
-        WHERE sd.cluster < $PQKM_K),
-      $iterCtes,
-      ${rungSql("ks", "kcent0")},
-      ${rungSql("km", s"kcent$PQKM_ITERS")},
+    Some(s"""WITH ${pqSubsCte("", "embeddings")},
+      $pqKSeedCte,
+      ${pqKMeansCtes("")},
+      ${pqArmCtes("ks", "subs", "kcent0")},
+      ${pqArmCtes("km", "subs", s"kcent$PQKM_ITERS")},
       ${normCte("v3")},
       ${cosineExactCtes("v3", "scoredx3", "exact3", SQ_K)},
       tot3 AS (SELECT count(*) AS n_total FROM exact3)
       ${recallSql("method", Seq("'pq_kmeans'" -> "kmtop",
-        "'pq_seed'" -> "kstop"), "exact3", "tot3")}"""
-    })
+        "'pq_seed'" -> "kstop"), "exact3", "tot3")}"""))
 
   // -- V22b: OPQ rung — parametric optimized product quantization by
   //    argmin-quantization-error selection over the orthogonal-
@@ -2648,96 +2597,11 @@ object SimilarityQueries {
         .orderBy(col("method"))
     },
     Some {
-      val sl = SQ_DIMS / PQ_M
-      // per-arm PQ replay: subspace slices → seeded kcent0 → unrolled
-      // Lloyd rounds → encode (carrying the winning sdist) → MSE +
-      // full-ADC top-K (q159's machinery, parameterized by arm prefix
-      // and source vector CTE)
-      def subsSql(p: String, src: String) =
-        s"""${p}subs AS (
-          SELECT vec_id, sub,
-            embedding[(sub * $sl + 1):(sub * $sl + $sl)] AS svec
-          FROM (SELECT vec_id, embedding,
-                  unnest(generate_series(0, ${PQ_M - 1})) AS sub
-                FROM $src))"""
-      def kmeansSql(p: String) = {
-        val init = s"""${p}kcent0 AS (
-          SELECT s.sub, sd.cluster,
-            list_transform(s.svec, x -> CAST(x AS DOUBLE)) AS cvec
-          FROM kseed sd JOIN ${p}subs s USING (vec_id)
-          WHERE sd.cluster < $PQKM_K)"""
-        val iters = (1 to PQKM_ITERS).map { i =>
-          s"""${p}kdist$i AS (
-            SELECT s.vec_id, s.sub, c.cluster,
-              list_reduce(list_prepend(CAST(0 AS DECIMAL(38,8)),
-                list_transform(list_zip(s.svec, c.cvec), pr ->
-                  CAST((CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
-                     * (CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE))
-                    AS DECIMAL(28,8)))),
-                (a, b) -> CAST(a + b AS DECIMAL(38,8))) AS d2
-            FROM ${p}subs s JOIN ${p}kcent${i - 1} c USING (sub)),
-          ${p}kasg$i AS (
-            SELECT vec_id, sub, cluster FROM (
-              SELECT vec_id, sub, cluster,
-                row_number() OVER (PARTITION BY vec_id, sub
-                  ORDER BY d2, cluster) AS rk
-              FROM ${p}kdist$i) WHERE rk = 1),
-          ${p}kmean$i AS (
-            SELECT a.sub, a.cluster, t.p AS pos,
-              ${proundSql(
-                "CAST(sum(CAST(CAST(s.svec[t.p] AS DOUBLE) AS DECIMAL(28,8)))" +
-                  " AS DOUBLE) / count(*)", 6)} AS mean_v
-            FROM ${p}kasg$i a
-            JOIN ${p}subs s ON s.vec_id = a.vec_id AND s.sub = a.sub
-            CROSS JOIN (SELECT unnest(generate_series(1, $sl)) AS p) t
-            GROUP BY a.sub, a.cluster, t.p),
-          ${p}kcent$i AS (
-            SELECT sub, cluster, list(mean_v ORDER BY pos) AS cvec
-            FROM ${p}kmean$i GROUP BY sub, cluster
-            UNION ALL
-            SELECT pv.sub, pv.cluster, pv.cvec FROM ${p}kcent${i - 1} pv
-            WHERE NOT EXISTS (SELECT 1 FROM ${p}kmean$i m
-              WHERE m.sub = pv.sub AND m.cluster = pv.cluster))"""
-        }.mkString(",\n        ")
-        s"$init,\n        $iters"
-      }
       def armSql(p: String, method: String) =
-        s"""${p}cw AS (
-          SELECT sub, cluster AS cw, cvec, ${norm2Sql("cvec")} AS cc
-          FROM ${p}kcent$PQKM_ITERS),
-        ${p}enc AS (
-          SELECT vec_id, sub, cw, sdist FROM (
-            SELECT vec_id, sub, cw, sdist, row_number() OVER (
-                PARTITION BY vec_id, sub ORDER BY sdist ASC, cw ASC) AS rn
-            FROM (
-              SELECT s.vec_id, s.sub, c.cw,
-                ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")}
-                  + c.cc AS sdist
-              FROM ${p}subs s JOIN ${p}cw c USING (sub)))
-          WHERE rn = 1),
+        s"""${pqArmCtes(p, s"${p}subs", s"${p}kcent$PQKM_ITERS")},
         ${p}mse AS (
           SELECT sum(CAST(sdist AS DECIMAL(28,8))) AS mse_sum
           FROM ${p}enc),
-        ${p}adc AS (
-          SELECT s.vec_id AS query_id, s.sub, c.cw,
-            ${norm2Sql("s.svec")} - 2 * ${dotSql("s.svec", "c.cvec")} + c.cc
-              AS qd
-          FROM ${p}subs s JOIN ${p}cw c USING (sub)
-          WHERE s.vec_id % $QMOD = 0),
-        ${p}top AS (
-          SELECT query_id, corpus_id FROM (
-            SELECT query_id, corpus_id, row_number() OVER (
-                PARTITION BY query_id ORDER BY adist ASC, corpus_id ASC)
-              AS rank
-            FROM (
-              SELECT a.query_id, e.vec_id AS corpus_id,
-                list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                  list(a.qd ORDER BY a.sub)), (x, y) -> x + y) AS adist
-              FROM ${p}enc e
-              JOIN ${p}adc a ON a.sub = e.sub AND a.cw = e.cw
-              WHERE a.query_id != e.vec_id
-              GROUP BY a.query_id, e.vec_id))
-          WHERE rank <= $SQ_K),
         ${p}row AS (
           SELECT '$method' AS method,
             ${hitsSql("exactq", s"${p}top")}
@@ -2763,15 +2627,11 @@ object SimilarityQueries {
           AS embedding
         FROM embeddings e CROSS JOIN permt p
         GROUP BY e.vec_id),
-      kseed AS (
-        SELECT vec_id, row_number() OVER (
-            ORDER BY ((vec_id % 1000000007) * 2654435761) % 1000000007,
-              vec_id) - 1 AS cluster
-        FROM embeddings),
-      ${subsSql("id", "embeddings")},
-      ${subsSql("op", "rotv")},
-      ${kmeansSql("id")},
-      ${kmeansSql("op")},
+      $pqKSeedCte,
+      ${pqSubsCte("id", "embeddings")},
+      ${pqSubsCte("op", "rotv")},
+      ${pqKMeansCtes("id")},
+      ${pqKMeansCtes("op")},
       ${normCte("vq")},
       ${cosineExactCtes("vq", "scoredq", "exactq", SQ_K,
         materialized = true)},
@@ -3114,24 +2974,8 @@ object SimilarityQueries {
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""WITH ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probe AS (
-        SELECT query_id, cell FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfAssignCtes()},
+      ${ivfProbeCte(QMOD, NPROBE)},
       enc AS (
         SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
           i -> CASE WHEN embedding[i] > 0 THEN 1 ELSE 0 END) AS b
@@ -3265,24 +3109,9 @@ object SimilarityQueries {
         JOIN v q ON q.vec_id = p.query_id
         JOIN v c ON c.vec_id = a.vec_id)"""
       s"""WITH ${normCte("v")},
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec, nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probeall AS (
-        SELECT query_id, cell, rn FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")} / (v.nrm * s.snrm) DESC,
-                s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
-        WHERE rn <= ${NPROBE_CURVE.max}),
+      ${ivfAssignCtes()},
+      ${ivfProbeCte(QMOD, NPROBE_CURVE.max, name = "probeall",
+        keepRn = true)},
       ${cosineExactCtes("v", "exscored", "exact", SQ_K)},
       ${NPROBE_CURVE.map(scoredCte).mkString(",")},
       tot AS (SELECT count(*) AS n_total FROM exact)
@@ -3566,17 +3395,14 @@ object SimilarityQueries {
       val scales = Similarity.sqScales(emb, "embedding")
       val codes = Similarity.sqEncode(emb, "vec_id", "embedding", scales)
         .localCheckpoint(true)
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("iscore").desc, col("corpus_id").asc)
-      val s2 = s1
-        .join(codes.select(col("vec_id").as("query_id"),
-          col("sq_code").as("qq")), Seq("query_id"))
-        .join(codes.select(col("vec_id").as("corpus_id"),
-          col("sq_code").as("cq")), Seq("corpus_id"))
-        .select(col("query_id"), col("corpus_id"),
-          Similarity.idot(col("cq"), col("qq")).as("iscore"))
-        .withColumn("r2", row_number().over(w2))
-        .filter(col("r2") <= CAS_C2)
+      val s2 = Similarity.rankCut(s1
+          .join(codes.select(col("vec_id").as("query_id"),
+            col("sq_code").as("qq")), Seq("query_id"))
+          .join(codes.select(col("vec_id").as("corpus_id"),
+            col("sq_code").as("cq")), Seq("corpus_id"))
+          .select(col("query_id"), col("corpus_id"),
+            Similarity.idot(col("cq"), col("qq")).as("iscore")),
+          CAS_C2, col("iscore").desc, col("corpus_id").asc)
         .localCheckpoint(true)
       val vn = emb.select(col("vec_id"), col("embedding"),
         sqrt(Similarity.norm2(col("embedding"))).as("nrm"))
@@ -3597,7 +3423,7 @@ object SimilarityQueries {
           s1.filter(col("rank") <= SQ_K)
             .select(col("query_id"), col("corpus_id")), s1)
         .unionByName(stageRow("s2_sq8",
-          s2.filter(col("r2") <= SQ_K)
+          s2.filter(col("rank") <= SQ_K)
             .select(col("query_id"), col("corpus_id")), s2))
         .unionByName(stageRow("s3_exact", s3, s3))
         .orderBy(col("stage"))
@@ -3605,25 +3431,8 @@ object SimilarityQueries {
     Some(s"""WITH v AS MATERIALIZED (
         SELECT vec_id, embedding, sqrt(${norm2Sql("embedding")}) AS nrm
         FROM embeddings),
-      seeds AS (
-        SELECT CAST(vec_id AS BIGINT) AS cell, embedding AS svec,
-          nrm AS snrm
-        FROM v WHERE vec_id % $SEEDMOD = 0),
-      assign AS MATERIALIZED (
-        SELECT vec_id, cell FROM (
-          SELECT v.vec_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")}
-                / (v.nrm * s.snrm) DESC, s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s) WHERE rn = 1),
-      probe AS (
-        SELECT query_id, cell FROM (
-          SELECT v.vec_id AS query_id, s.cell,
-            row_number() OVER (PARTITION BY v.vec_id
-              ORDER BY ${dotSql("v.embedding", "s.svec")}
-                / (v.nrm * s.snrm) DESC, s.cell ASC) AS rn
-          FROM v CROSS JOIN seeds s WHERE v.vec_id % $QMOD = 0)
-        WHERE rn <= $NPROBE),
+      ${ivfAssignCtes(materialized = true)},
+      ${ivfProbeCte(QMOD, NPROBE)},
       benc AS MATERIALIZED (
         SELECT vec_id, list_transform(generate_series(1, $SQ_DIMS),
           i -> CASE WHEN embedding[i] > 0 THEN 1 ELSE 0 END) AS b

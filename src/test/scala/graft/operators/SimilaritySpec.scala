@@ -48,6 +48,22 @@ class SimilaritySpec extends SparkSpec {
     assert(assigned.size === vecs.count())
   }
 
+  test("ivfProbe ranks cells with ivfAssign's tie-break") {
+    val seeds = Similarity.seedCentroids(vecs, "vec_id", "embedding", 1)
+      .filter(col("cell").isin(1L, 3L))
+    val assigned = Similarity.ivfAssign(vecs, "vec_id", "embedding", seeds)
+      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
+    def probe(nprobe: Int) =
+      Similarity.ivfProbe(vecs, "vec_id", "embedding", seeds, nprobe)
+        .collect().map(r => (r.getAs[Long]("query_id"),
+          r.getAs[Int]("cell_rank"), r.getAs[Long]("cell")))
+    val top1 = probe(1)
+    assert(top1.map(_._2).toSet === Set(1))
+    assert(top1.map(r => r._1 -> r._3).toMap === assigned) // vector 4 too
+    val top2 = probe(2).filter(_._1 == 4L).sortBy(_._2)
+    assert(top2.toSeq === Seq((4L, 1, 1L), (4L, 2, 3L))) // tie: lower cell first
+  }
+
   test("refineCentroids converges to member means") {
     val seeds = Similarity.seedCentroids(vecs, "vec_id", "embedding", 1)
       .filter(col("cell").isin(1L, 3L))

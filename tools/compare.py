@@ -7,6 +7,7 @@ over the same sf parquet tables, sort columns by name + rows by value,
 and diff. Usage: tools/compare.py <sfDir> <verifyOutDir>
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -32,9 +33,22 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 STRICT = False
 
 
+def host_mem_bytes() -> int:
+    """Physical memory of the host (MemTotal on Linux)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
-    import os
+    # Cap DuckDB at half the host's memory and let it spill, at most the
+    # host's memory size, into a directory next to the dump: a heavy
+    # oracle then spills or fails alone instead of starving the rest of
+    # the machine (DuckDB's defaults are 80% of memory and 90% of the
+    # free disk).
+    mem_mb = host_mem_bytes() // 2**20
+    con.execute(f"SET memory_limit = '{mem_mb // 2}MB'")
+    con.execute(f"SET temp_directory = '{out_dir}/duckdb_tmp'")
+    con.execute(f"SET max_temp_directory_size = '{mem_mb}MB'")
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         # spark writes directory-shaped parquet (e.g. the scaled sets);
