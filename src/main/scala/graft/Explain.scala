@@ -2,7 +2,8 @@ package graft
 
 /** Dev tool: print formatted physical plans for selected queries (all
   * with no args) and a one-line summary of scan pushdown / join
-  * strategy / codegen coverage per query.
+  * strategy / codegen coverage per query, ending in a stable plan
+  * fingerprint (`plan=`, see [[planHash]]).
   *
   *   sbt "runMain graft.Explain q01_pricing_summary q04_star_broadcast"
   */
@@ -29,12 +30,36 @@ object Explain {
         .map(_.group(1)).toSet.size
       val exch = "Exchange".r.findAllIn(plan).size
       println(s"== $name: pushedFilters=$pushed broadcastHash=$bhj " +
-        s"broadcastNL=$bnl sortMerge=$smj codegenSpans=$wsc exchanges=$exch")
+        s"broadcastNL=$bnl sortMerge=$smj codegenSpans=$wsc exchanges=$exch " +
+        s"plan=${planHash(df, sfDir)}")
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN_FULL")) {
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       }
     }
     spark.stop()
+  }
+
+  /** Fingerprint of `df`'s static plans: the optimized logical plan and
+    * the physical plan before adaptive execution, with expression and
+    * plan ids, object identities, the data, checkout and temp directories
+    * and the random suffix of temp names normalized, hashed to 16 hex
+    * digits. The counters above read the final AQE plan, whose join
+    * build sides depend on which stage finished first; this hash is
+    * equal across runs and checkouts when the plan is.
+    */
+  def planHash(df: org.apache.spark.sql.DataFrame, sfDir: String): String = {
+    val qe = df.queryExecution
+    val dirs = Seq(new java.io.File(sfDir).getAbsolutePath -> "<data>",
+      sys.props("user.dir") -> "<checkout>",
+      sys.props("java.io.tmpdir") -> "<tmp>")
+    val text = dirs.foldLeft(s"${qe.optimizedPlan}\n${qe.sparkPlan}") {
+      case (t, (dir, tag)) => t.replace(dir, tag)
+    }.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("\\$\\$Lambda\\$[^ ,)\\]]*", "\\$\\$Lambda")
+      .replaceAll("@[0-9a-f]{4,8}\\b", "@")
+      .replaceAll("(<tmp>/[A-Za-z_]*)-?\\d{6,}", "$1")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.queries.Portable.{dsum8, dsum8Sql, sigmoid, sigmoidSqlCtes}
 
 /** Full-batch logistic regression — the CALIBRATED member of the
   * linear-gate family next to [[Perceptron]] (which separates but
@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.DecimalType
   *  - gradient components Σ (σ(z)−y)·x_j accumulate with the
   *    pround8 → DECIMAL(28,8) order-free exact sum;
   *  - the weight update w_j − lr·(g_j/n) is one pinned op sequence on
-  *    the driver, mirrored verbatim by the oracle's CTE chain.
+  *    the driver, mirrored verbatim by [[fitBatchSqlCtes]].
   *
   * Shape at scale: iterations × ONE map-side-combined aggregation over
   * a cached/checkpointed feature frame; driver state is d+1 doubles
@@ -52,15 +52,11 @@ object Logistic {
       val z: Column = xCols.zip(w)
         .map { case (c, wj) => col(c) * lit(wj) }
         .reduce(_ + _)
-      val zc = when(z > 30.0, 30.0).when(z < -30.0, -30.0).otherwise(z)
-      val s = lit(1.0) / (lit(1.0) + call_function("graft_expdet", -zc))
+      val s = sigmoid(z)
       val correct = ((z >= 0.0) === (col(yCol) === 1.0)).cast("long")
-      val p8 = (c: Column) =>
-        (floor(c * lit(1e8) + lit(0.5)).cast("double") / lit(1e8))
-          .cast(DecimalType(28, 8))
       val aggs = Seq(count(lit(1)).as("n"), sum(correct).as("n_correct")) ++
         xCols.zipWithIndex.map { case (c, j) =>
-          sum(p8((s - col(yCol)) * col(c))).cast("double").as(s"g$j")
+          dsum8((s - col(yCol)) * col(c)).as(s"g$j")
         }
       val row = features.agg(aggs.head, aggs.tail: _*).head()
       val n = row.getAs[Long]("n")
@@ -73,6 +69,41 @@ object Logistic {
       }
     }
     out.result()
+  }
+
+  /** Oracle replay of [[fitBatch]]: CTE text over the feature CTE
+    * `feats` (columns `xCols` and `yCol`, none named `z`, `s` or
+    * `w<j>`). `${pfx}w0` holds the zero weights; for every pass
+    * t = 0..iters, `${pfx}g$t` aggregates `n`, `n_correct` (z ≥ 0 ⇔
+    * y = 1) and the gradients `g<j>` under `${pfx}w$t`, and for t < iters
+    * `${pfx}w${t + 1}` holds `w<j> − lr·(g<j>/n)`. Every op is the one
+    * fitBatch runs: z = Σ x_j·w_j left-associated in xCols order,
+    * [[graft.queries.Portable.sigmoidSqlCtes]], each gradient term
+    * summed by `dsum8Sql`, and the weight update in the driver's order.
+    */
+  def fitBatchSqlCtes(pfx: String, feats: String, xCols: Seq[String],
+      yCol: String, lr: Double, iters: Int): String = {
+    val js = xCols.indices
+    val carry = (yCol +: xCols :+ "z").mkString(", ")
+    val z = js.map(j => s"${xCols(j)} * w$j").reduce((a, b) => s"($a) + $b")
+    val w0 = js.map(j => s"CAST(0 AS DOUBLE) AS w$j").mkString(", ")
+    val passes = (0 to iters).map { t =>
+      val grads = js.map(j =>
+        s"${dsum8Sql(s"(s - $yCol) * ${xCols(j)}")} AS g$j")
+      val update = if (t < iters) s""",
+      ${pfx}w${t + 1} AS MATERIALIZED (
+        SELECT ${js.map(j => s"w$j - $lr * (g$j / n) AS w$j").mkString(", ")}
+        FROM ${pfx}w$t CROSS JOIN ${pfx}g$t)""" else ""
+      s"""${sigmoidSqlCtes(s"${pfx}s$t", s"$feats CROSS JOIN ${pfx}w$t",
+        carry, z)},
+      ${pfx}g$t AS MATERIALIZED (
+        SELECT CAST(count(*) AS BIGINT) AS n,
+          CAST(sum(CASE WHEN (z >= 0) = ($yCol = 1.0) THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_correct,
+          ${grads.mkString(",\n          ")}
+        FROM ${pfx}s${t}sig)$update"""
+    }
+    (s"${pfx}w0 AS (SELECT $w0)" +: passes).mkString(",\n      ")
   }
 
   /** [[fitBatch]] for feature frames whose (xCols, y) tuple lives on a
@@ -136,8 +167,7 @@ object Logistic {
         var z = xs(0) * wArr(0)
         var j = 1
         while (j < xs.length) { z = z + xs(j) * wArr(j); j += 1 }
-        val zc = if (z > 30.0) 30.0 else if (z < -30.0) -30.0 else z
-        val sV = 1.0 / (1.0 + graft.expressions.ExpDet.compute(-zc))
+        val sV = graft.expressions.ExpDet.sigmoid(z)
         if ((z >= 0.0) == (y == 1.0)) nCorrect += cnt
         j = 0
         while (j < xs.length) {

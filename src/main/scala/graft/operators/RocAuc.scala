@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.queries.Portable.dsum8
 
 /** Exact ROC-AUC — the discrimination metric every quality-classifier
   * gate reports before its threshold is trusted.
@@ -81,7 +82,6 @@ object RocAuc {
     */
   def averagePrecision(scored: DataFrame, groupCol: String,
       scoreCol: String, posCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val vals = scored
       .groupBy(col(groupCol), col(scoreCol).as("sv"))
       .agg(count(lit(1)).as("c"),
@@ -93,17 +93,13 @@ object RocAuc {
       sum(col("c_pos")).over(w).as("tp"))
       .withColumn("npos_all",
         sum(col("c_pos")).over(Window.partitionBy(col(groupCol))))
-    val p8d = (c: org.apache.spark.sql.Column) =>
-      (floor(c * lit(1e8) + lit(0.5)).cast("double") / lit(1e8))
-        .cast(DecimalType(28, 8))
     cum.groupBy(col(groupCol))
       .agg(
         sum(col("c_pos")).as("n_pos"),
         sum(col("c") - col("c_pos")).as("n_neg"),
         count(lit(1)).as("n_thresholds"),
-        sum(p8d((col("c_pos") * col("tp")).cast("double")
-          / (col("npos_all") * col("cn")).cast("double")))
-          .cast("double").as("ap_raw"))
+        dsum8((col("c_pos") * col("tp")).cast("double")
+          / (col("npos_all") * col("cn")).cast("double")).as("ap_raw"))
       .select(col(groupCol), col("n_pos"), col("n_neg"),
         col("n_thresholds"),
         (col("n_pos").cast("double")

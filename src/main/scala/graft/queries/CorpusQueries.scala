@@ -844,9 +844,8 @@ object CorpusQueries {
       ${lnDetSqlCtes("kn", "inst", "doc_id, source", "invp")},
       ce AS (
         SELECT doc_id, source, CAST(count(*) AS BIGINT) AS n_trigrams,
-          ${proundSql(
-            s"""CAST(sum(CAST(${proundSql("lnp", 8)} AS DECIMAL(28,8)))
-              AS DOUBLE) / count(*)""", 4)} AS cross_entropy
+          ${proundSql(s"${dsum8Sql("lnp")} / count(*)", 4)}
+            AS cross_entropy
         FROM knlnv GROUP BY doc_id, source)
       SELECT doc_id, source, n_trigrams, cross_entropy,
         CASE tc WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END
@@ -961,8 +960,6 @@ object CorpusQueries {
         .orderBy(col("source"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val cov = "(n * sxy - sx * sy)"
       val vx = "(n * sxx - sx * sx)"
       val vy = "(n * syy - sy * sy)"
@@ -983,9 +980,9 @@ object CorpusQueries {
       pts AS (SELECT source, x, lnp AS y FROM zflnv),
       sums AS (
         SELECT source, CAST(count(*) AS DOUBLE) AS n,
-          ${ds8("x")} AS sx, ${ds8("y")} AS sy,
-          ${ds8("x * x")} AS sxx, ${ds8("x * y")} AS sxy,
-          ${ds8("y * y")} AS syy
+          ${dsum8Sql("x")} AS sx, ${dsum8Sql("y")} AS sy,
+          ${dsum8Sql("x * x")} AS sxx, ${dsum8Sql("x * y")} AS sxy,
+          ${dsum8Sql("y * y")} AS syy
         FROM pts GROUP BY source)
       SELECT source, CAST(n AS BIGINT) AS n_points,
         ${proundSql(s"$cov / $vx", 6)} AS slope,
@@ -2295,8 +2292,6 @@ object CorpusQueries {
       val na = cells.groupBy(col("lang"), col("a")).agg(sum(col("c")).as("ca"))
       val nb = cells.groupBy(col("lang"), col("b")).agg(sum(col("c")).as("cb"))
       val nn = cells.groupBy(col("lang")).agg(sum(col("c")).as("n"))
-      def ds8(c: org.apache.spark.sql.Column) =
-        sum(pround(c, 8).cast(DecimalType(28, 8))).cast("double")
       val ln = (x: org.apache.spark.sql.Column) =>
         call_function("graft_lndet", x)
       val mi = cells.join(na, Seq("lang", "a")).join(nb, Seq("lang", "b"))
@@ -2308,14 +2303,14 @@ object CorpusQueries {
             * when(col("num") >= col("den"), 1.0).otherwise(-1.0)
             * ln(greatest(col("num"), col("den")).cast("double")
               / least(col("num"), col("den")).cast("double"))).as("term"))
-        .groupBy(col("lang")).agg(ds8(col("term")).as("mi"))
+        .groupBy(col("lang")).agg(dsum8(col("term")).as("mi"))
       def hOf(marg: org.apache.spark.sql.DataFrame, cnt: String, as: String) =
         marg.join(nn, Seq("lang"))
           .select(col("lang"),
             (col(cnt).cast("double") / col("n").cast("double")
               * ln(col("n").cast("double") / col(cnt).cast("double")))
               .as("term"))
-          .groupBy(col("lang")).agg(ds8(col("term")).as(as))
+          .groupBy(col("lang")).agg(dsum8(col("term")).as(as))
       mi.join(hOf(na, "ca", "h_a"), Seq("lang"))
         .join(hOf(nb, "cb", "h_b"), Seq("lang"))
         .join(nn, Seq("lang"))
@@ -2328,8 +2323,6 @@ object CorpusQueries {
         .orderBy(col("lang"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val toksSql = TextFns.tokensSql("text")
       val stopSql = TextFns.markerCountSql(toksSql, TextAnalysis.stopwords)
       s"""WITH binned AS MATERIALIZED (
@@ -2356,7 +2349,7 @@ object CorpusQueries {
           JOIN nn USING (lang)),
       ${lnDetSqlCtes("mi", "j", "lang, c, n, sgn", "xr")},
       misum AS (
-        SELECT lang, ${ds8(
+        SELECT lang, ${dsum8Sql(
           "CAST(c AS DOUBLE) / CAST(n AS DOUBLE) * sgn * lnp")} AS mi
         FROM milnv GROUP BY lang),
       ja AS (
@@ -2365,7 +2358,7 @@ object CorpusQueries {
         FROM na JOIN nn USING (lang)),
       ${lnDetSqlCtes("ha", "ja", "lang, cm, n", "xr")},
       hasum AS (
-        SELECT lang, ${ds8(
+        SELECT lang, ${dsum8Sql(
           "CAST(cm AS DOUBLE) / CAST(n AS DOUBLE) * lnp")} AS h_a
         FROM halnv GROUP BY lang),
       jb AS (
@@ -2374,7 +2367,7 @@ object CorpusQueries {
         FROM nb JOIN nn USING (lang)),
       ${lnDetSqlCtes("hb", "jb", "lang, cm, n", "xr")},
       hbsum AS (
-        SELECT lang, ${ds8(
+        SELECT lang, ${dsum8Sql(
           "CAST(cm AS DOUBLE) / CAST(n AS DOUBLE) * lnp")} AS h_b
         FROM hblnv GROUP BY lang)
       SELECT lang, n AS n_docs,

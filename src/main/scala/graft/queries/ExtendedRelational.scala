@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables.Tpch
@@ -595,6 +596,42 @@ object ExtendedRelational {
       ORDER BY source"""
     })
 
+  // -- The events user–item graph, shared by the graph queries -------
+  /** An events row's item id: the first digit run of `props`, as a
+    * long. [[itemIdSql]] is the oracle's spelling.
+    */
+  private def itemId: Column =
+    regexp_extract(col("props"), "[0-9]+", 0).cast("long")
+  private val itemIdSql = "CAST(regexp_extract(props, '[0-9]+') AS BIGINT)"
+
+  /** The distinct (user_id, item) pairs of events. [[userItemsSql]] is
+    * the oracle's `ui` CTE (materialized: every caller joins it more
+    * than once).
+    */
+  private def userItems(t: Tpch): DataFrame =
+    t.events.select(col("user_id"), itemId.as("item")).distinct()
+  private val userItemsSql =
+    s"""ui AS MATERIALIZED (
+        SELECT DISTINCT user_id, $itemIdSql AS item FROM events)"""
+
+  /** Item co-occurrence edges (i1, i2), i1 < i2: the item pairs that
+    * at least `minCo` users of `ui` share, from one user-keyed self
+    * join. [[coEdgesSql]] is the oracle's SELECT over the `ui` CTE.
+    */
+  private def coEdges(ui: DataFrame, minCo: Int): DataFrame =
+    ui.as("a").join(ui.as("b"),
+        col("a.user_id") === col("b.user_id") &&
+        col("a.item") < col("b.item"))
+      .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
+      .agg(count(lit(1)).as("c"))
+      .filter(col("c") >= minCo)
+      .select(col("i1"), col("i2"))
+  private def coEdgesSql(minCo: Int): String =
+    s"""SELECT a.item AS i1, b.item AS i2
+        FROM ui a JOIN ui b
+          ON a.user_id = b.user_id AND a.item < b.item
+        GROUP BY 1, 2 HAVING count(*) >= $minCo"""
+
   // -- E15: PageRank (operators.PageRank) — crawl-graph centrality
   //    over the events-derived link graph (user_id → props.k). Scaled-
   //    integer arithmetic (millionths, 85/100 damping, dropped
@@ -606,7 +643,7 @@ object ExtendedRelational {
     (s, dir) => {
       val t = Tpch(s, dir)
       val edges = t.events.select(col("user_id").as("src"),
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("dst"))
+        itemId.as("dst"))
       graft.operators.PageRank.run(edges, "src", "dst", PR_ITERS)
         .orderBy(col("node"))
     },
@@ -625,9 +662,7 @@ object ExtendedRelational {
         .map(i => iterSql(if (i == 1) "r0" else s"it${i - 1}", s"it$i"))
         .mkString(",\n      ")
       s"""WITH e AS (
-        SELECT DISTINCT user_id AS src,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS dst
-        FROM events),
+        SELECT DISTINCT user_id AS src, $itemIdSql AS dst FROM events),
       nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
       eo AS (
         SELECT e.src, e.dst, od.outdeg
@@ -763,17 +798,7 @@ object ExtendedRelational {
     "q145_triangle_count",
     (s, dir) => {
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
-      val e = ui.as("a").join(ui.as("b"),
-          col("a.user_id") === col("b.user_id") &&
-          col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
-        .agg(count(lit(1)).as("c"))
-        .filter(col("c") >= TC_T)
-        .select(col("i1"), col("i2"))
-        .localCheckpoint(true)
+      val e = coEdges(userItems(t), TC_T).localCheckpoint(true)
       val deg = e.select(col("i1").as("node"))
         .union(e.select(col("i2").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -792,15 +817,8 @@ object ExtendedRelational {
           pround(lit(3.0) * col("n_triangles") / col("n_wedges"), 6)
             .as("clustering_coeff"))
     },
-    Some(s"""WITH ui AS (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item
-        FROM events),
-      e AS (
-        SELECT a.item AS i1, b.item AS i2
-        FROM ui a JOIN ui b
-          ON a.user_id = b.user_id AND a.item < b.item
-        GROUP BY 1, 2 HAVING count(*) >= $TC_T),
+    Some(s"""WITH $userItemsSql,
+      e AS (${coEdgesSql(TC_T)}),
       deg AS (
         SELECT node, count(*) AS d FROM (
           SELECT i1 AS node FROM e UNION ALL SELECT i2 FROM e)
@@ -835,9 +853,7 @@ object ExtendedRelational {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
+      val ui = userItems(t)
       val pop = ui.groupBy(col("item")).agg(count(lit(1)).as("n_users"))
       val co = ui.as("a").join(ui.as("b"),
           col("a.user_id") === col("b.user_id") &&
@@ -866,10 +882,7 @@ object ExtendedRelational {
           pround(col("lift"), 6).as("lift"))
         .orderBy(col("item"), col("rank"))
     },
-    Some(s"""WITH ui AS (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item
-        FROM events),
+    Some(s"""WITH $userItemsSql,
       pop AS (SELECT item, count(*) AS n_users FROM ui GROUP BY item),
       co AS (
         SELECT a.item AS i1, b.item AS i2, count(*) AS n_co
@@ -914,16 +927,7 @@ object ExtendedRelational {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
-      val e = ui.as("a").join(ui.as("b"),
-          col("a.user_id") === col("b.user_id") &&
-          col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
-        .agg(count(lit(1)).as("c"))
-        .filter(col("c") >= LPA_T)
-        .select(col("i1"), col("i2"))
+      val e = coEdges(userItems(t), LPA_T)
       graft.operators.PageRank.labelPropagation(e, "i1", "i2", LPA_R)
         .select(col("node").as("item"), col("label").as("community"),
           count(lit(1)).over(Window.partitionBy(col("label")))
@@ -944,15 +948,8 @@ object ExtendedRelational {
       val roundsSql = (1 to LPA_R)
         .map(i => roundSql(if (i == 1) "l0" else s"l${i - 1}", s"l$i", i))
         .mkString(",\n      ")
-      s"""WITH ui AS (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item
-        FROM events),
-      e AS (
-        SELECT a.item AS i1, b.item AS i2
-        FROM ui a JOIN ui b
-          ON a.user_id = b.user_id AND a.item < b.item
-        GROUP BY 1, 2 HAVING count(*) >= $LPA_T),
+      s"""WITH $userItemsSql,
+      e AS (${coEdgesSql(LPA_T)}),
       eb AS (SELECT i1 AS s, i2 AS d FROM e
              UNION ALL SELECT i2, i1 FROM e),
       l0 AS (SELECT DISTINCT s AS node, s AS label FROM eb),
@@ -980,9 +977,8 @@ object ExtendedRelational {
       import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val decays = (0 to DECAY_MAXK).map(k => lit(math.pow(0.5, k)))
-      val ev = t.eventsUs.select(
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"),
-        col("value"), col("ts_us"))
+      val ev = t.eventsUs.select(itemId.as("item"), col("value"),
+        col("ts_us"))
       val mx = ev.agg(max(col("ts_us")).as("mx_us"))
       val k = least(
         expr(s"(mx_us - ts_us) div $WEEK_US"), lit(DECAY_MAXK.toLong))
@@ -1007,8 +1003,7 @@ object ExtendedRelational {
         .mkString("[", ", ", "]")
       s"""WITH mx AS (SELECT max(epoch_us(ts)) AS mx_us FROM events),
       ev AS (
-        SELECT CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item,
-          value,
+        SELECT $itemIdSql AS item, value,
           value * ($dList)[CAST(least(
             (mx.mx_us - epoch_us(ts)) // $WEEK_US, $DECAY_MAXK)
             AS INT) + 1] AS decayed
@@ -1045,16 +1040,7 @@ object ExtendedRelational {
     "q186_kcore",
     (s, dir) => {
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
-      val e = ui.as("a").join(ui.as("b"),
-          col("a.user_id") === col("b.user_id") &&
-          col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
-        .agg(count(lit(1)).as("c"))
-        .filter(col("c") >= LPA_T)
-        .select(col("i1"), col("i2"))
+      val e = coEdges(userItems(t), LPA_T)
       graft.operators.PageRank.kCore(e, "i1", "i2", KC_K, KC_R)
         .select(col("n").as("item"), col("deg"))
         .orderBy(col("item"))
@@ -1072,15 +1058,9 @@ object ExtendedRelational {
         JOIN k$r a ON p.s = a.n
         JOIN k$r b ON p.d = b.n)"""
       val roundsSql = (1 to KC_R).map(roundSql).mkString(",\n      ")
-      s"""WITH ui AS (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item
-        FROM events),
+      s"""WITH $userItemsSql,
       e0 AS MATERIALIZED (
-        SELECT a.item AS s, b.item AS d
-        FROM ui a JOIN ui b
-          ON a.user_id = b.user_id AND a.item < b.item
-        GROUP BY 1, 2 HAVING count(*) >= $LPA_T),
+        SELECT i1 AS s, i2 AS d FROM (${coEdgesSql(LPA_T)})),
       $roundsSql
       SELECT n AS item, count(*) AS deg FROM (
         SELECT s AS n FROM e$KC_R UNION ALL SELECT d FROM e$KC_R)
@@ -1211,9 +1191,7 @@ object ExtendedRelational {
     "q196_wilson_ranking",
     (s, dir) => {
       val t = Tpch(s, dir)
-      val ev = t.events.select(
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"),
-        col("event_type"))
+      val ev = t.events.select(itemId.as("item"), col("event_type"))
         .filter(col("event_type").isin("view", "click"))
       val counts = ev.groupBy(col("item"))
         .agg(count(lit(1)).as("n"),
@@ -1240,8 +1218,7 @@ object ExtendedRelational {
         .orderBy(col("rank_wilson"))
     },
     Some(s"""WITH ev AS (
-        SELECT CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item,
-          event_type
+        SELECT $itemIdSql AS item, event_type
         FROM events WHERE event_type IN ('view', 'click')),
       counts AS (
         SELECT item, count(*) AS n,
@@ -1761,9 +1738,7 @@ object ExtendedRelational {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-          regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
+      val ui = userItems(t)
       val deg = ui.groupBy(col("user_id")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= 2)
       val uiw = ui.join(deg, Seq("user_id"))
@@ -1774,8 +1749,7 @@ object ExtendedRelational {
             && col("a.item") < col("b.item"))
         .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
         .agg(count(lit(1)).as("n_common"),
-          sum(pround(col("a.w"), 8).cast(DecimalType(28, 8)))
-            .cast("double").as("aa"))
+          dsum8(col("a.w")).as("aa"))
       val sym = pairs.unionByName(pairs.select(col("i2").as("i1"),
         col("i1").as("i2"), col("n_common"), col("aa")))
       val w = Window.partitionBy(col("i1"))
@@ -1787,10 +1761,7 @@ object ExtendedRelational {
           pround(col("aa"), 6).as("aa"))
         .orderBy(col("item"), col("rank"))
     },
-    Some(s"""WITH ui AS MATERIALIZED (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item
-        FROM events),
+    Some(s"""WITH $userItemsSql,
       deg AS (
         SELECT user_id, CAST(count(*) AS BIGINT) AS d
         FROM ui GROUP BY 1 HAVING count(*) >= 2),
@@ -1800,8 +1771,7 @@ object ExtendedRelational {
       pairs AS MATERIALIZED (
         SELECT a.item AS i1, b.item AS i2,
           CAST(count(*) AS BIGINT) AS n_common,
-          CAST(sum(CAST(${proundSql("u.w", 8)} AS DECIMAL(28,8)))
-            AS DOUBLE) AS aa
+          ${dsum8Sql("u.w")} AS aa
         FROM ui a
         JOIN ui b ON a.user_id = b.user_id AND a.item < b.item
         JOIN uw u ON u.user_id = a.user_id
@@ -1832,13 +1802,11 @@ object ExtendedRelational {
     (s, dir) => {
       val t = Tpch(s, dir)
       val ui = t.events.select(col("user_id").as("u"),
-        (regexp_extract(col("props"), "[0-9]+", 0).cast("long")
-          + 1000000000L).as("i"))
+        (itemId + 1000000000L).as("i"))
       val edges = ui.select(col("u").as("src"), col("i").as("dst"))
         .unionByName(ui.select(col("i").as("src"), col("u").as("dst")))
       val seeds = t.events.filter(col("event_type") === "purchase")
-        .select((regexp_extract(col("props"), "[0-9]+", 0).cast("long")
-          + 1000000000L).as("seed"))
+        .select((itemId + 1000000000L).as("seed"))
         .distinct()
       graft.operators.PageRank.personalized(edges, "src", "dst", seeds,
           PR_ITERS)
@@ -1861,14 +1829,11 @@ object ExtendedRelational {
         .map(i => iterSql(if (i == 1) "r0" else s"it${i - 1}", s"it$i"))
         .mkString(",\n      ")
       s"""WITH ui AS (
-        SELECT DISTINCT user_id AS u,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) + 1000000000
-            AS i
+        SELECT DISTINCT user_id AS u, $itemIdSql + 1000000000 AS i
         FROM events),
       e AS (SELECT u AS src, i AS dst FROM ui UNION SELECT i, u FROM ui),
       seeds AS (
-        SELECT DISTINCT CAST(regexp_extract(props, '[0-9]+') AS BIGINT)
-          + 1000000000 AS seed
+        SELECT DISTINCT $itemIdSql + 1000000000 AS seed
         FROM events WHERE event_type = 'purchase'),
       nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
       ns AS (
@@ -1904,10 +1869,7 @@ object ExtendedRelational {
     "q259_apriori_funnel",
     (s, dir) => {
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-          regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
-        .localCheckpoint(true)
+      val ui = userItems(t).localCheckpoint(true)
       val msDf = ui.agg(countDistinct(col("user_id")).as("nu"))
         .select(expr(s"($AP_PCT * nu) div 100").as("ms"))
         .localCheckpoint(true)
@@ -1956,10 +1918,7 @@ object ExtendedRelational {
         .unionByName(lvlRow(3, l3all))
         .orderBy(col("lvl"))
     },
-    Some(s"""WITH ui AS MATERIALIZED (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS item
-        FROM events),
+    Some(s"""WITH $userItemsSql,
       ms AS (SELECT ($AP_PCT * count(DISTINCT user_id)) // 100 AS ms
         FROM ui),
       l1all AS MATERIALIZED (
@@ -2125,46 +2084,8 @@ object ExtendedRelational {
         .orderBy(col("iter"))
     },
     Some {
-      val iterCtes = (0 to LOGIT_T).map { i =>
-        val gradCte =
-          s"""g$i AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(CASE WHEN (z >= 0) = (y = 1.0) THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_correct,
-          CAST(sum(CAST(${proundSql("(s - y) * x0", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g0,
-          CAST(sum(CAST(${proundSql("(s - y) * x1", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g1,
-          CAST(sum(CAST(${proundSql("(s - y) * x2", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g2
-        FROM sg$i)"""
-        val updCte = if (i < LOGIT_T)
-          s""",
-      w${i + 1} AS MATERIALIZED (
-        SELECT w0 - $LOGIT_LR * (g0 / n) AS w0,
-          w1 - $LOGIT_LR * (g1 / n) AS w1,
-          w2 - $LOGIT_LR * (g2 / n) AS w2
-        FROM w$i CROSS JOIN g$i)"""
-        else ""
-        s"""z$i AS (
-        SELECT y, x0, x1, x2, (x0 * w0 + x1 * w1) + x2 * w2 AS z
-        FROM feats CROSS JOIN w$i),
-      zc$i AS (
-        SELECT y, x0, x1, x2, z,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM z$i),
-      ${expDetSqlCtes(s"e$i", s"zc$i", "y, x0, x1, x2, z", "-zc")},
-      sg$i AS (
-        SELECT y, x0, x1, x2, z,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS s
-        FROM e${i}expv),
-      $gradCte,
-      r$i AS (
-        SELECT $i AS iter, n, n_correct, w0, w1, w2
-        FROM g$i CROSS JOIN w$i)$updCte"""
-      }.mkString(",\n      ")
-      val unionRows = (0 to LOGIT_T).map(i => s"SELECT * FROM r$i")
-        .mkString("\n        UNION ALL ")
+      val audit = (0 to LOGIT_T).map(i =>
+        s"SELECT $i AS iter, n, n_correct, w0, w1, w2 FROM g$i CROSS JOIN w$i")
       s"""WITH feats AS MATERIALIZED (
         SELECT CASE WHEN l_quantity * l_extendedprice > 1000000
             THEN 1.0 ELSE 0.0 END AS y,
@@ -2172,10 +2093,9 @@ object ExtendedRelational {
           CAST(l_quantity AS DOUBLE) / 50 AS x1,
           CAST(l_extendedprice AS DOUBLE) / 100000 AS x2
         FROM lineitem),
-      w0 AS (SELECT CAST(0 AS DOUBLE) AS w0, CAST(0 AS DOUBLE) AS w1,
-        CAST(0 AS DOUBLE) AS w2),
-      $iterCtes,
-      rows_all AS ($unionRows)
+      ${graft.operators.Logistic.fitBatchSqlCtes("", "feats",
+        Seq("x0", "x1", "x2"), "y", LOGIT_LR, LOGIT_T)},
+      rows_all AS (${audit.mkString("\n        UNION ALL ")})
       SELECT iter, n, n_correct,
         ${proundSql("CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE)", 6)}
           AS acc,
@@ -2201,7 +2121,7 @@ object ExtendedRelational {
     (s, dir) => {
       val t = Tpch(s, dir)
       val edges = t.events.select(col("user_id").as("src"),
-        regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("dst"))
+        itemId.as("dst"))
       graft.operators.PageRank.hits(edges, "src", "dst", HITS_ITERS)
         .orderBy(col("node"))
     },
@@ -2223,9 +2143,7 @@ object ExtendedRelational {
           ",\n      " + halfSql(s"a$i", "dst", "src", s"h$i")
       }.mkString(",\n      ")
       s"""WITH e AS (
-        SELECT DISTINCT user_id AS src,
-          CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS dst
-        FROM events),
+        SELECT DISTINCT user_id AS src, $itemIdSql AS dst FROM events),
       nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
       h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
       $iters
@@ -2391,14 +2309,12 @@ object ExtendedRelational {
         .orderBy(col("l_returnflag"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val iters = (1 to QR_T).map { i =>
         s"""g$i AS MATERIALIZED (
         SELECT f.flag, CAST(count(*) AS BIGINT) AS n,
-          ${ds8("""(CASE WHEN (x0 * w0 + x1 * w1) >= y
+          ${dsum8Sql("""(CASE WHEN (x0 * w0 + x1 * w1) >= y
             THEN 1.0 ELSE 0.0 END - 0.75) * x0""")} AS g0,
-          ${ds8("""(CASE WHEN (x0 * w0 + x1 * w1) >= y
+          ${dsum8Sql("""(CASE WHEN (x0 * w0 + x1 * w1) >= y
             THEN 1.0 ELSE 0.0 END - 0.75) * x1""")} AS g1
         FROM feats f JOIN w${i - 1} USING (flag)
         GROUP BY f.flag),
@@ -2566,44 +2482,66 @@ object ExtendedRelational {
   //    the IPW ratios are pinned divisions.
   private val IPW_LR = 8.0
   private val IPW_T = 16
+
+  /** q285/q299's confounded scenario over lineitem: treatment `t`
+    * depends on quantity plus hash noise, outcome `y` on quantity plus
+    * the planted 0.3 effect. Returns the checkpointed (t, x0, x1,
+    * y_base, y) frame, the fitted propensity e(x) as a column over it,
+    * and the fitted weights.
+    */
+  private def ipwScenario(t: Tpch): (DataFrame, Column, Seq[Double]) = {
+    val u = pmod(graft.operators.Sampling.slotWide(
+      col("l_orderkey") * lit(8L) + col("l_linenumber")), lit(500L))
+    val feats = graft.core.Scan.fanOut(t.lineitem).select(
+        when(lit(5.0) * col("l_quantity") + u.cast("double") > 300.0,
+          1.0).otherwise(0.0).as("t"),
+        lit(1.0).as("x0"),
+        (col("l_quantity").cast("double") / lit(50)).as("x1"),
+        ((col("l_extendedprice").cast("double") / lit(100000))
+          + lit(0.01) * col("l_quantity").cast("double")).as("y_base"))
+      .withColumn("y", col("y_base") + lit(0.3) * col("t"))
+      .localCheckpoint(true)
+    // (x0, x1, t) lives on a 100-cell grid: the grouped fitter
+    // folds the 16 GD passes into ONE cell job (bit-identical —
+    // LogisticSpec pins fitBatchGrouped ≡ fitBatch)
+    val w = graft.operators.Logistic.fitBatchGrouped(
+      feats, Seq("x0", "x1"), "t", IPW_LR, IPW_T).last.w
+    (feats, sigmoid(col("x0") * lit(w(0)) + col("x1") * lit(w(1))), w)
+  }
+
+  /** Oracle twin of [[ipwScenario]]: the `feats` CTE (t, x0, x1, y),
+    * the GD CTEs `iw0`..`iw$IPW_T`, and `esig` carrying (t, y) plus
+    * `s` = the fitted propensity.
+    */
+  private val ipwSql = s"""feats AS MATERIALIZED (
+        SELECT t, x0, x1, y_base + 0.3 * t AS y FROM (
+          SELECT CASE WHEN 5.0 * l_quantity
+              + CAST((${graft.operators.Sampling.slotWideSql(
+                "l_orderkey * 8 + l_linenumber")}) % 500 AS DOUBLE) > 300.0
+              THEN 1.0 ELSE 0.0 END AS t,
+            CAST(1 AS DOUBLE) AS x0,
+            CAST(l_quantity AS DOUBLE) / 50 AS x1,
+            (CAST(l_extendedprice AS DOUBLE) / 100000
+              + 0.01 * CAST(l_quantity AS DOUBLE)) AS y_base
+          FROM lineitem)),
+      ${graft.operators.Logistic.fitBatchSqlCtes("i", "feats",
+        Seq("x0", "x1"), "t", IPW_LR, IPW_T)},
+      ${sigmoidSqlCtes("e", s"feats CROSS JOIN iw$IPW_T", "t, y",
+        "x0 * w0 + x1 * w1")}"""
   private val q285 = Q(
     "q285_ipw_ate",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      val t = Tpch(s, dir)
-      val u = pmod(graft.operators.Sampling.slotWide(
-        col("l_orderkey") * lit(8L) + col("l_linenumber")), lit(500L))
-      val feats = graft.core.Scan.fanOut(t.lineitem).select(
-          when(lit(5.0) * col("l_quantity") + u.cast("double") > 300.0,
-            1.0).otherwise(0.0).as("t"),
-          lit(1.0).as("x0"),
-          (col("l_quantity").cast("double") / lit(50)).as("x1"),
-          ((col("l_extendedprice").cast("double") / lit(100000))
-            + lit(0.01) * col("l_quantity").cast("double")).as("y_base"))
-        .withColumn("y", col("y_base") + lit(0.3) * col("t"))
-        .localCheckpoint(true)
-      // (x0, x1, t) lives on a 100-cell grid: the grouped fitter
-      // folds the 16 GD passes into ONE cell job (bit-identical —
-      // LogisticSpec pins fitBatchGrouped ≡ fitBatch)
-      val hist = graft.operators.Logistic.fitBatchGrouped(
-        feats, Seq("x0", "x1"), "t", IPW_LR, IPW_T)
-      val Seq(w0, w1) = hist.last.w
-      val z = col("x0") * lit(w0) + col("x1") * lit(w1)
-      val zc = when(z > 30.0, 30.0).when(z < -30.0, -30.0).otherwise(z)
-      val e = lit(1.0) / (lit(1.0) + call_function("graft_expdet", -zc))
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
-      val d8 = (c: org.apache.spark.sql.Column) =>
-        sum(p8d(c)).cast("double")
+      val (feats, e, Seq(w0, w1)) = ipwScenario(Tpch(s, dir))
       feats
         .agg(count(lit(1)).as("n"),
           sum(col("t").cast("long")).as("n_treated"),
-          d8(col("t") * col("y")).as("sy1"),
-          d8((lit(1.0) - col("t")) * col("y")).as("sy0"),
-          d8(col("t") * col("y") / e).as("s1n"),
-          d8(col("t") / e).as("s1d"),
-          d8((lit(1.0) - col("t")) * col("y") / (lit(1.0) - e)).as("s0n"),
-          d8((lit(1.0) - col("t")) / (lit(1.0) - e)).as("s0d"))
+          dsum8(col("t") * col("y")).as("sy1"),
+          dsum8((lit(1.0) - col("t")) * col("y")).as("sy0"),
+          dsum8(col("t") * col("y") / e).as("s1n"),
+          dsum8(col("t") / e).as("s1d"),
+          dsum8((lit(1.0) - col("t")) * col("y") / (lit(1.0) - e))
+            .as("s0n"),
+          dsum8((lit(1.0) - col("t")) / (lit(1.0) - e)).as("s0d"))
         .select(col("n"), col("n_treated"),
           pround(lit(w0), 6).as("w0"), pround(lit(w1), 6).as("w1"),
           pround(col("sy1") / col("n_treated").cast("double")
@@ -2613,70 +2551,17 @@ object ExtendedRelational {
             .as("ipw_ate"),
           lit(0.3).as("true_effect"))
     },
-    Some {
-      val gdIters = (0 until IPW_T).map { i =>
-        s"""z$i AS (
-        SELECT t, x0, x1, y, (x0 * w0 + x1 * w1) AS z
-        FROM feats CROSS JOIN iw$i),
-      zc$i AS (
-        SELECT t, x0, x1, y,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM z$i),
-      ${expDetSqlCtes(s"ie$i", s"zc$i", "t, x0, x1, y", "-zc")},
-      sg$i AS (
-        SELECT t, x0, x1, y,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS s
-        FROM ie${i}expv),
-      ig$i AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(CAST(${proundSql("(s - t) * x0", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g0,
-          CAST(sum(CAST(${proundSql("(s - t) * x1", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g1
-        FROM sg$i),
-      iw${i + 1} AS MATERIALIZED (
-        SELECT w0 - $IPW_LR * (g0 / n) AS w0,
-          w1 - $IPW_LR * (g1 / n) AS w1
-        FROM iw$i CROSS JOIN ig$i)"""
-      }.mkString(",\n      ")
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
-      s"""WITH feats AS MATERIALIZED (
-        SELECT CASE WHEN 5.0 * l_quantity
-            + CAST((${graft.operators.Sampling.slotWideSql(
-              "l_orderkey * 8 + l_linenumber")}) % 500 AS DOUBLE) > 300.0
-            THEN 1.0 ELSE 0.0 END AS t,
-          CAST(1 AS DOUBLE) AS x0,
-          CAST(l_quantity AS DOUBLE) / 50 AS x1,
-          (CAST(l_extendedprice AS DOUBLE) / 100000
-            + 0.01 * CAST(l_quantity AS DOUBLE)) AS y_base
-        FROM lineitem),
-      featsy AS MATERIALIZED (
-        SELECT t, x0, x1, y_base + 0.3 * t AS y FROM feats),
-      iw0 AS (SELECT CAST(0 AS DOUBLE) AS w0, CAST(0 AS DOUBLE) AS w1),
-      ${gdIters.replace("FROM feats CROSS JOIN", "FROM featsy CROSS JOIN")},
-      fz AS (
-        SELECT t, y, (x0 * w0 + x1 * w1) AS z
-        FROM featsy CROSS JOIN iw$IPW_T),
-      fzc AS (
-        SELECT t, y,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM fz),
-      ${expDetSqlCtes("fe", "fzc", "t, y", "-zc")},
-      fse AS (
-        SELECT t, y,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS e
-        FROM feexpv),
+    Some(s"""WITH $ipwSql,
       agg AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
           CAST(sum(CAST(t AS BIGINT)) AS BIGINT) AS n_treated,
-          ${ds8("t * y")} AS sy1,
-          ${ds8("(1.0 - t) * y")} AS sy0,
-          ${ds8("t * y / e")} AS s1n,
-          ${ds8("t / e")} AS s1d,
-          ${ds8("(1.0 - t) * y / (1.0 - e)")} AS s0n,
-          ${ds8("(1.0 - t) / (1.0 - e)")} AS s0d
-        FROM fse)
+          ${dsum8Sql("t * y")} AS sy1,
+          ${dsum8Sql("(1.0 - t) * y")} AS sy0,
+          ${dsum8Sql("t * y / s")} AS s1n,
+          ${dsum8Sql("t / s")} AS s1d,
+          ${dsum8Sql("(1.0 - t) * y / (1.0 - s)")} AS s0n,
+          ${dsum8Sql("(1.0 - t) / (1.0 - s)")} AS s0d
+        FROM esig)
       SELECT n, n_treated,
         (SELECT ${proundSql("w0", 6)} FROM iw$IPW_T) AS w0,
         (SELECT ${proundSql("w1", 6)} FROM iw$IPW_T) AS w1,
@@ -2685,8 +2570,7 @@ object ExtendedRelational {
              - sy0 / CAST(n - n_treated AS DOUBLE)""", 6)} AS naive_diff,
         ${proundSql("s1n / s1d - s0n / s0d", 6)} AS ipw_ate,
         0.3 AS true_effect
-      FROM agg"""
-    })
+      FROM agg"""))
 
   // -- X43: regression discontinuity (sharp RD) — the cutoff-rule
   //    rung of the causal family: treatment switches deterministically
@@ -2703,7 +2587,6 @@ object ExtendedRelational {
   private val q286 = Q(
     "q286_regression_discontinuity",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val feats = t.lineitem.select(
           col("l_quantity").cast("double").as("q"),
@@ -2715,13 +2598,9 @@ object ExtendedRelational {
             + lit(0.3) * when(col("l_quantity") >= RD_CUT, 1.0)
               .otherwise(0.0)).as("y"))
         .localCheckpoint(true)
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
-      val d8 = (c: org.apache.spark.sql.Column) =>
-        sum(p8d(c)).cast("double")
       def sideFit(df: org.apache.spark.sql.DataFrame, name: String) =
         df.agg(count(lit(1)).as("n"), sum(col("qi")).as("sqi"),
-            d8(col("y")).as("sy"), d8(col("qc") * col("y")).as("sxy"),
+            dsum8(col("y")).as("sy"), dsum8(col("qc") * col("y")).as("sxy"),
             sum(col("qi") * col("qi")).as("sqq"))
           .select(lit(name).as("side"), col("n"),
             // centered integer sums: Σqc = Σqi − 25n (exact), and
@@ -2746,10 +2625,10 @@ object ExtendedRelational {
       val hi = sideFit(feats.filter(col("q") >= RD_CUT
         && col("q") < RD_CUT + RD_H), "hi")
       val naive = feats.agg(
-        (d8(when(col("q") >= RD_CUT, col("y")))
+        (dsum8(when(col("q") >= RD_CUT, col("y")))
           / sum(when(col("q") >= RD_CUT, 1L).otherwise(0L))
             .cast("double")
-          - d8(when(col("q") < RD_CUT, col("y")))
+          - dsum8(when(col("q") < RD_CUT, col("y")))
           / sum(when(col("q") < RD_CUT, 1L).otherwise(0L))
             .cast("double")).as("naive_diff"))
       lo.select(col("n").as("n_lo"), col("a").as("a_lo"),
@@ -2765,16 +2644,14 @@ object ExtendedRelational {
           lit(0.3).as("true_effect"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       def sideSql(name: String, cond: String) =
         s"""$name AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
           CAST(sum(qi) - 25 * count(*) AS BIGINT) AS sx,
           CAST(sum(qi * qi) - 50 * sum(qi) + 625 * count(*) AS BIGINT)
             AS sxx,
-          ${ds8("y")} AS sy,
-          ${ds8("qc * y")} AS sxy
+          ${dsum8Sql("y")} AS sy,
+          ${dsum8Sql("qc * y")} AS sxy
         FROM feats WHERE $cond),
       ${name}f AS (
         SELECT n, b, (sy - b * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)
@@ -2796,10 +2673,10 @@ object ExtendedRelational {
       ${sideSql("lo", s"q >= ${RD_CUT - RD_H} AND q < $RD_CUT")},
       ${sideSql("hi", s"q >= $RD_CUT AND q < ${RD_CUT + RD_H}")},
       naive AS (
-        SELECT ${ds8(s"CASE WHEN q >= $RD_CUT THEN y END")}
+        SELECT ${dsum8Sql(s"CASE WHEN q >= $RD_CUT THEN y END")}
             / CAST(sum(CASE WHEN q >= $RD_CUT THEN 1 ELSE 0 END)
               AS DOUBLE)
-          - ${ds8(s"CASE WHEN q < $RD_CUT THEN y END")}
+          - ${dsum8Sql(s"CASE WHEN q < $RD_CUT THEN y END")}
             / CAST(sum(CASE WHEN q < $RD_CUT THEN 1 ELSE 0 END)
               AS DOUBLE) AS naive_diff
         FROM feats)
@@ -2825,7 +2702,6 @@ object ExtendedRelational {
   private val q287 = Q(
     "q287_diff_in_diff",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val ev = t.eventsUs
         .select(col("user_id"), expr("ts_us div 86400000000").as("day"),
@@ -2843,10 +2719,8 @@ object ExtendedRelational {
           + lit(0.1) * col("g").cast("double")
           + lit(0.05) * col("p").cast("double")
           + lit(0.2) * (col("g") * col("p")).cast("double"))
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
       val m = cells.groupBy(col("g"), col("p"))
-        .agg((sum(p8d(col("y"))).cast("double")
+        .agg((dsum8(col("y"))
           / count(lit(1)).cast("double")).as("m"),
           count(lit(1)).as("n"))
         .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -2865,8 +2739,6 @@ object ExtendedRelational {
           "did", "true_effect")
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       s"""WITH ev AS MATERIALIZED (
         SELECT user_id, epoch_us(ts) // 86400000000 AS day,
           CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS purch
@@ -2890,7 +2762,7 @@ object ExtendedRelational {
               "user_id")}) % 2) * p AS DOUBLE) AS y
         FROM up),
       cm AS (
-        SELECT g, p, ${ds8("y")} / CAST(count(*) AS DOUBLE) AS m,
+        SELECT g, p, ${dsum8Sql("y")} / CAST(count(*) AS DOUBLE) AS m,
           CAST(count(*) AS BIGINT) AS n
         FROM cells GROUP BY g, p),
       wide AS (
@@ -2929,7 +2801,6 @@ object ExtendedRelational {
     "q288_logrank",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val ud = t.eventsUs
         .select(col("user_id"), expr("ts_us div 86400000000").as("day"))
@@ -2965,12 +2836,10 @@ object ExtendedRelational {
         col("dt").cast("double") * frac * (lit(1.0) - frac)
           * (col("nt") - col("dt")).cast("double")
           / (col("nt") - 1).cast("double")).otherwise(0.0)
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
       byTime.agg(
           sum(col("d1")).as("o1"),
-          sum(p8d(eterm)).cast("double").as("e1"),
-          sum(p8d(vterm)).cast("double").as("v"))
+          dsum8(eterm).as("e1"),
+          dsum8(vterm).as("v"))
         .crossJoin(broadcast(durs.groupBy(col("g"))
           .agg(count(lit(1)).as("cnt"))
           .agg(sum(when(col("g") === 0, col("cnt"))).as("n_ctrl"),
@@ -2986,8 +2855,6 @@ object ExtendedRelational {
             > 3.841459).cast("int").as("reject_95"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       s"""WITH ud AS (
         SELECT user_id, min(day) AS fd, max(day) AS ld
         FROM (SELECT user_id, epoch_us(ts) // 86400000000 AS day
@@ -3031,7 +2898,7 @@ object ExtendedRelational {
         FROM bytime WHERE dt >= 1),
       agg AS (
         SELECT CAST(sum(d1) AS BIGINT) AS o1,
-          ${ds8("eterm")} AS e1, ${ds8("vterm")} AS v
+          ${dsum8Sql("eterm")} AS e1, ${dsum8Sql("vterm")} AS v
         FROM terms),
       sizes AS (
         SELECT CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -3131,9 +2998,7 @@ object ExtendedRelational {
       for (_ <- 1 to BTL_T) {
         val gs = Array.fill(BTL_K)(java.math.BigDecimal.ZERO)
         cells.foreach { case (a, b, win, cnt) =>
-          val z = st(a) - st(b)
-          val zc = if (z > 30.0) 30.0 else if (z < -30.0) -30.0 else z
-          val p = 1.0 / (1.0 + graft.expressions.ExpDet.compute(-zc))
+          val p = graft.expressions.ExpDet.sigmoid(st(a) - st(b))
           val cntD = java.math.BigDecimal.valueOf(cnt)
           gs(a) = gs(a).add(
             dec8(round8((p - win) * 1.0)).multiply(cntD))
@@ -3158,36 +3023,23 @@ object ExtendedRelational {
         .orderBy(col("item"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val thrSql = "[" + BTL_THR.map(row =>
         "[" + row.mkString(", ") + "]").mkString(", ") + "]"
       def sOfSql(c: String) = "CASE " + (0 until BTL_K)
         .map(i => s"WHEN $c = $i THEN s$i").mkString(" ") + " ELSE 0.0 END"
       val iters = (1 to BTL_T).map { t0 =>
         val gcols = (0 until BTL_K).map { i =>
-          ds8(s"""(p - win) * (CASE WHEN a = $i THEN 1.0
+          dsum8Sql(s"""(s - win) * (CASE WHEN a = $i THEN 1.0
             WHEN b = $i THEN -1.0 ELSE 0.0 END)""") + s" AS g$i"
         }.mkString(",\n          ")
         val supd = (0 until BTL_K).map(i =>
           s"s$i - $BTL_LR * (g$i / n) AS s$i").mkString(", ")
-        s"""z$t0 AS (
-        SELECT a, b, win,
-          (${sOfSql("a")}) - (${sOfSql("b")}) AS z
-        FROM battles CROSS JOIN bs${t0 - 1}),
-      zc$t0 AS (
-        SELECT a, b, win,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM z$t0),
-      ${expDetSqlCtes(s"be$t0", s"zc$t0", "a, b, win", "-zc")},
-      sp$t0 AS (
-        SELECT a, b, win,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS p
-        FROM be${t0}expv),
+        s"""${sigmoidSqlCtes(s"bp$t0", s"battles CROSS JOIN bs${t0 - 1}",
+          "a, b, win", s"(${sOfSql("a")}) - (${sOfSql("b")})")},
       bg$t0 AS MATERIALIZED (
         SELECT CAST(count(*) AS BIGINT) AS n,
           $gcols
-        FROM sp$t0),
+        FROM bp${t0}sig),
       bs$t0 AS MATERIALIZED (
         SELECT $supd FROM bs${t0 - 1} CROSS JOIN bg$t0)"""
       }.mkString(",\n      ")
@@ -3241,10 +3093,7 @@ object ExtendedRelational {
     "q305_degree_assortativity",
     (s, dir) => {
       val t = Tpch(s, dir)
-      val ui = t.events.select(col("user_id"),
-          regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("item"))
-        .distinct()
-        .localCheckpoint(true)
+      val ui = userItems(t).localCheckpoint(true)
       val du = ui.groupBy(col("user_id")).agg(count(lit(1)).as("du"))
       val di = ui.groupBy(col("item")).agg(count(lit(1)).as("di"))
       val edges = ui.join(du, Seq("user_id")).join(di, Seq("item"))
@@ -3272,10 +3121,7 @@ object ExtendedRelational {
         - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"""
       val deny = """(CAST(m AS DOUBLE) * CAST(syy AS DOUBLE)
         - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))"""
-      s"""WITH ui AS MATERIALIZED (
-        SELECT DISTINCT user_id,
-          CAST(regexp_extract(props, '[0-9]+', 0) AS BIGINT) AS item
-        FROM events),
+      s"""WITH $userItemsSql,
       du AS (SELECT user_id, CAST(count(*) AS BIGINT) AS du FROM ui
         GROUP BY user_id),
       di AS (SELECT item, CAST(count(*) AS BIGINT) AS di FROM ui
@@ -3315,40 +3161,15 @@ object ExtendedRelational {
   private val q299 = Q(
     "q299_propensity_blocks",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      val t = Tpch(s, dir)
-      val u = pmod(graft.operators.Sampling.slotWide(
-        col("l_orderkey") * lit(8L) + col("l_linenumber")), lit(500L))
-      val feats = graft.core.Scan.fanOut(t.lineitem).select(
-          when(lit(5.0) * col("l_quantity") + u.cast("double") > 300.0,
-            1.0).otherwise(0.0).as("t"),
-          lit(1.0).as("x0"),
-          (col("l_quantity").cast("double") / lit(50)).as("x1"),
-          ((col("l_extendedprice").cast("double") / lit(100000))
-            + lit(0.01) * col("l_quantity").cast("double")).as("y_base"))
-        .withColumn("y", col("y_base") + lit(0.3) * col("t"))
-        .localCheckpoint(true)
-      // (x0, x1, t) lives on a 100-cell grid: the grouped fitter
-      // folds the 16 GD passes into ONE cell job (bit-identical —
-      // LogisticSpec pins fitBatchGrouped ≡ fitBatch)
-      val hist = graft.operators.Logistic.fitBatchGrouped(
-        feats, Seq("x0", "x1"), "t", IPW_LR, IPW_T)
-      val Seq(w0, w1) = hist.last.w
-      val z = col("x0") * lit(w0) + col("x1") * lit(w1)
-      val zc = when(z > 30.0, 30.0).when(z < -30.0, -30.0).otherwise(z)
-      val e = lit(1.0) / (lit(1.0) + call_function("graft_expdet", -zc))
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
-      val d8 = (c: org.apache.spark.sql.Column) =>
-        sum(p8d(c)).cast("double")
+      val (feats, e, _) = ipwScenario(Tpch(s, dir))
       val cells = feats
         .withColumn("ebin", least(floor(e * lit(5.0)), lit(4.0))
           .cast("long"))
         .groupBy(col("ebin"))
         .agg(count(lit(1)).as("n"),
           sum(col("t").cast("long")).as("nt"),
-          d8(col("t") * col("y")).as("sy1"),
-          d8((lit(1.0) - col("t")) * col("y")).as("sy0"))
+          dsum8(col("t") * col("y")).as("sy1"),
+          dsum8((lit(1.0) - col("t")) * col("y")).as("sy0"))
         .localCheckpoint(true)
       def d(c: org.apache.spark.sql.Column) = c.cast("double")
       val ybar1 = col("sy1") / d(col("nt"))
@@ -3364,7 +3185,7 @@ object ExtendedRelational {
       val summary = used
         .select(col("n"), col("nt"), (d(col("n")) * bate).as("term"))
         .agg(sum(col("n")).as("nu"), sum(col("nt")).as("ntu"),
-          d8(col("term")).as("sterm"))
+          dsum8(col("term")).as("sterm"))
         .select(lit(-1).as("ebin"), col("nu").as("n"),
           col("ntu").as("n_treated"),
           lit(null).cast("double").as("ybar_t"),
@@ -3372,69 +3193,14 @@ object ExtendedRelational {
           pround(col("sterm") / d(col("nu")), 6).as("block_ate"))
       per.unionByName(summary).orderBy(col("ebin"))
     },
-    Some {
-      val gdIters = (0 until IPW_T).map { i =>
-        s"""z$i AS (
-        SELECT t, x0, x1, y, (x0 * w0 + x1 * w1) AS z
-        FROM feats CROSS JOIN iw$i),
-      zc$i AS (
-        SELECT t, x0, x1, y,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM z$i),
-      ${expDetSqlCtes(s"ie$i", s"zc$i", "t, x0, x1, y", "-zc")},
-      sg$i AS (
-        SELECT t, x0, x1, y,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS s
-        FROM ie${i}expv),
-      ig$i AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(CAST(${proundSql("(s - t) * x0", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g0,
-          CAST(sum(CAST(${proundSql("(s - t) * x1", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g1
-        FROM sg$i),
-      iw${i + 1} AS MATERIALIZED (
-        SELECT w0 - $IPW_LR * (g0 / n) AS w0,
-          w1 - $IPW_LR * (g1 / n) AS w1
-        FROM iw$i CROSS JOIN ig$i)"""
-      }.mkString(",\n      ")
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
-      s"""WITH feats AS MATERIALIZED (
-        SELECT CASE WHEN 5.0 * l_quantity
-            + CAST((${graft.operators.Sampling.slotWideSql(
-              "l_orderkey * 8 + l_linenumber")}) % 500 AS DOUBLE) > 300.0
-          THEN 1.0 ELSE 0.0 END AS t,
-          CAST(1 AS DOUBLE) AS x0,
-          CAST(l_quantity AS DOUBLE) / 50 AS x1,
-          (CAST(l_extendedprice AS DOUBLE) / 100000
-            + 0.01 * CAST(l_quantity AS DOUBLE))
-            + 0.3 * CASE WHEN 5.0 * l_quantity
-              + CAST((${graft.operators.Sampling.slotWideSql(
-                "l_orderkey * 8 + l_linenumber")}) % 500 AS DOUBLE)
-              > 300.0 THEN 1.0 ELSE 0.0 END AS y
-        FROM lineitem),
-      iw0 AS (SELECT CAST(0 AS DOUBLE) AS w0, CAST(0 AS DOUBLE) AS w1),
-      $gdIters,
-      ze AS (
-        SELECT t, y, (x0 * w0 + x1 * w1) AS z
-        FROM feats CROSS JOIN iw$IPW_T),
-      zce AS (
-        SELECT t, y,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM ze),
-      ${expDetSqlCtes("fe", "zce", "t, y", "-zc")},
-      scoredp AS (
-        SELECT t, y,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS e
-        FROM feexpv),
+    Some(s"""WITH $ipwSql,
       cells AS MATERIALIZED (
-        SELECT CAST(least(floor(e * 5.0), 4.0) AS BIGINT) AS ebin,
+        SELECT CAST(least(floor(s * 5.0), 4.0) AS BIGINT) AS ebin,
           CAST(count(*) AS BIGINT) AS n,
           CAST(sum(CAST(t AS BIGINT)) AS BIGINT) AS nt,
-          ${ds8("t * y")} AS sy1,
-          ${ds8("(1.0 - t) * y")} AS sy0
-        FROM scoredp GROUP BY 1),
+          ${dsum8Sql("t * y")} AS sy1,
+          ${dsum8Sql("(1.0 - t) * y")} AS sy0
+        FROM esig GROUP BY 1),
       per AS (
         SELECT CAST(ebin AS INT) AS ebin, n, nt AS n_treated,
           CASE WHEN nt > 0 THEN ${proundSql(
@@ -3451,14 +3217,13 @@ object ExtendedRelational {
           CAST(NULL AS DOUBLE) AS ybar_t,
           CAST(NULL AS DOUBLE) AS ybar_c,
           ${proundSql(
-            ds8("""CAST(n AS DOUBLE) * (sy1 / CAST(nt AS DOUBLE)
+            dsum8Sql("""CAST(n AS DOUBLE) * (sy1 / CAST(nt AS DOUBLE)
               - sy0 / CAST(n - nt AS DOUBLE))""") +
               " / CAST(sum(n) AS DOUBLE)", 6)} AS block_ate
         FROM cells WHERE nt > 0 AND nt < n)
       SELECT * FROM per
       UNION ALL SELECT * FROM summ
-      ORDER BY ebin"""
-    })
+      ORDER BY ebin"""))
 
   // -- X47: GINI DECISION STUMP — the simplest trainable split rule,
   //    fitted exactly: four bounded-grid features of lineitem
@@ -3688,12 +3453,9 @@ object ExtendedRelational {
   //    runtime randomness), the rest true nulls; BH step-up at
   //    q = 0.05 orders the p-values and rejects the largest prefix
   //    with p_(i) ≤ q·i/K — FDR control where Bonferroni would burn
-  //    power. p-values come from a DETERMINISTIC normal tail:
-  //    2(1−Φ(z)) = erfc(|z|/√2) via Abramowitz-Stegun 7.1.26
-  //    (|err| < 1.5e-7 — far below any BH decision margin here), its
-  //    exp through graft_expdet with the x² argument clamped at 43
-  //    (saturated tail ⇒ p ≈ 0 exactly when it matters least) — every
-  //    op an IEEE two-operand op the oracle replays.
+  //    power. p-values come from Portable.pTwoSided, the deterministic
+  //    normal tail (|err| < 1.5e-7 — far below any BH decision margin
+  //    here).
   private val BH_K = 25
   private val BH_RATE: IndexedSeq[IndexedSeq[Long]] =
     (0 until BH_K).map { m =>
@@ -3733,16 +3495,9 @@ object ExtendedRelational {
       val pp = d(col("x0") + col("x1")) / d(col("n0") + col("n1"))
       val z = (p1 - p0) / sqrt(pp * (lit(1.0) - pp)
         * (lit(1.0) / d(col("n0")) + lit(1.0) / d(col("n1"))))
-      val x = abs(z) * lit(0.7071067811865476)
-      val x2c = least(x * x, lit(43.0))
-      val tt = lit(1.0) / (lit(1.0) + lit(0.3275911) * x)
-      val poly = tt * (lit(0.254829592) + tt * (lit(-0.284496736)
-        + tt * (lit(1.421413741) + tt * (lit(-1.453152027)
-          + tt * lit(1.061405429)))))
-      val pval = poly * call_function("graft_expdet", -x2c)
       val scoredM = counts.select(col("metric"), col("n0"), col("x0"),
         col("n1"), col("x1"),
-        pround(z, 6).as("z"), pround(pval, 8).as("pval"))
+        pround(z, 6).as("z"), pround(pTwoSided(z), 8).as("pval"))
       // 25 bounded rows: BH rank + step-up cutoff
       val wr = Window.orderBy(col("pval").asc, col("metric").asc)
       val ranked = scoredM.withColumn("rk", row_number().over(wr))
@@ -3787,23 +3542,12 @@ object ExtendedRelational {
           CAST(sum(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT)
             AS x1
         FROM conv GROUP BY metric),
-      zc AS (
-        SELECT metric, n0, x0, n1, x1, $zS AS z,
-          abs($zS) * 0.7071067811865476 AS xv
-        FROM counts),
-      tc AS (
-        SELECT *, least(xv * xv, 43.0) AS x2c,
-          1.0 / (1.0 + 0.3275911 * xv) AS tt
-        FROM zc),
-      ${graft.queries.Portable.expDetSqlCtes("er", "tc",
-        "metric, n0, x0, n1, x1, z, tt", "-x2c")},
+      zc AS (SELECT metric, n0, x0, n1, x1, $zS AS z FROM counts),
+      ${pTwoSidedSqlCtes("b", "zc", "metric, n0, x0, n1, x1, z", "z")},
       pv AS MATERIALIZED (
         SELECT metric, n0, x0, n1, x1, ${proundSql("z", 6)} AS z,
-          ${proundSql(
-            """tt * (0.254829592 + tt * (-0.284496736
-               + tt * (1.421413741 + tt * (-1.453152027
-                 + tt * 1.061405429)))) * expv""", 8)} AS pval
-        FROM erexpv),
+          ${proundSql("bp", 8)} AS pval
+        FROM bpv),
       ranked AS MATERIALIZED (
         SELECT *, row_number() OVER (ORDER BY pval ASC, metric ASC)
           AS rk

@@ -21,6 +21,17 @@ object Portable {
   def dsumSql(x: String): String =
     s"CAST(sum(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
 
+  /** Exact, order-independent sum of arbitrary doubles, as double: each
+    * term is pinned to 8 decimals by [[pround]] and enters a
+    * DECIMAL(28,8) sum, so the result is the same at any partitioning
+    * and in both engines (the gradient, moment and score sums of the
+    * fitted-model queries).
+    */
+  def dsum8(c: Column): Column =
+    sum(pround(c, 8).cast(DecimalType(28, 8))).cast("double")
+  def dsum8Sql(x: String): String =
+    s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
+
   /** Exact money sum rounded in decimal domain (HALF_UP both engines). */
   def moneySum(c: Column, d: Int = 2): Column =
     round(sum(c.cast(DecimalType(18, 4))), d).cast("double")
@@ -156,5 +167,33 @@ object Portable {
           ${pfx}tt * (0.254829592 + ${pfx}tt * (-0.284496736
             + ${pfx}tt * (1.421413741 + ${pfx}tt * (-1.453152027
               + ${pfx}tt * 1.061405429)))) * expv AS ${pfx}p
+        FROM ${pfx}eexpv)"""
+
+  /** Deterministic logistic sigmoid σ(z) = 1/(1+expDet(−clamp(z, ±30))):
+    * the clamp keeps the exp inside graft_expdet's domain and saturates
+    * the far tails identically in both engines; the driver-side twin is
+    * [[graft.expressions.ExpDet.sigmoid]].
+    */
+  def sigmoid(z: Column): Column = {
+    val zc = when(z > 30.0, 30.0).when(z < -30.0, -30.0).otherwise(z)
+    lit(1.0) / (lit(1.0) + call_function("graft_expdet", -zc))
+  }
+
+  /** Oracle replay of [[sigmoid]]: CTE text whose final CTE `${pfx}sig`
+    * carries `$carry` plus `s` = sigmoid($zExpr). `$zExpr` is bound as
+    * column `z` over every column of `src` (a table expression, e.g.
+    * `feats CROSS JOIN w3`), so `$carry` may name `z` but `src` must not
+    * have a column of that name.
+    */
+  def sigmoidSqlCtes(pfx: String, src: String, carry: String,
+      zExpr: String): String =
+    s"""${pfx}zc AS (
+        SELECT $carry,
+          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
+        FROM (SELECT *, $zExpr AS z FROM $src)),
+      ${expDetSqlCtes(s"${pfx}e", s"${pfx}zc", carry, "-zc")},
+      ${pfx}sig AS (
+        SELECT $carry,
+          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS s
         FROM ${pfx}eexpv)"""
 }

@@ -1179,10 +1179,8 @@ object ProfilingQueries {
           CAST(sum(c_pos) AS BIGINT) AS n_pos,
           CAST(sum(c - c_pos) AS BIGINT) AS n_neg,
           CAST(count(*) AS BIGINT) AS n_thresholds,
-          CAST(sum(CAST(${proundSql(
-            """CAST(c_pos * tp AS DOUBLE)
-               / CAST(npos_all * cn AS DOUBLE)""", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS ap_raw
+          ${dsum8Sql("""CAST(c_pos * tp AS DOUBLE)
+               / CAST(npos_all * cn AS DOUBLE)""")} AS ap_raw
         FROM cum GROUP BY scorer)
       SELECT scorer, n_pos, n_neg, n_thresholds,
         ${proundSql(

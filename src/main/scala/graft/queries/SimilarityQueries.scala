@@ -851,7 +851,7 @@ object SimilarityQueries {
     */
   private lazy val nswCtes: String = {
       val hopCtes = (1 to NSW_HOPS).map { h =>
-        s"""x$h AS (
+        s"""x$h AS MATERIALIZED (
           SELECT f.query_id, f.cell, ed.dst AS corpus_id,
             ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
               AS cosine
@@ -859,7 +859,7 @@ object SimilarityQueries {
           JOIN edges ed ON ed.cell = f.cell AND ed.src = f.corpus_id
           JOIN v q ON q.vec_id = f.query_id
           JOIN v c ON c.vec_id = ed.dst),
-        f$h AS (
+        f$h AS MATERIALIZED (
           SELECT query_id, cell, corpus_id, cosine FROM (
             SELECT u.*, row_number() OVER (PARTITION BY query_id, cell
                 ORDER BY cosine DESC, corpus_id ASC) AS rn
@@ -871,10 +871,10 @@ object SimilarityQueries {
         .mkString("SELECT * FROM f0 UNION ALL ", " UNION ALL ", "")
       s"""${normCte("v")},
       ${ivfAssignCtes()},
-      m AS (
+      m AS MATERIALIZED (
         SELECT a.vec_id, a.cell, v.embedding, v.nrm
         FROM assign a JOIN v USING (vec_id)),
-      edir AS (
+      edir AS MATERIALIZED (
         SELECT cell, src, dst FROM (
           SELECT a.cell, a.vec_id AS src, b.vec_id AS dst,
             row_number() OVER (PARTITION BY a.vec_id
@@ -883,12 +883,13 @@ object SimilarityQueries {
                 b.vec_id ASC) AS rn
           FROM m a JOIN m b ON a.cell = b.cell AND b.vec_id < a.vec_id)
         WHERE rn <= $NSW_DEG),
-      edges AS (
+      edges AS MATERIALIZED (
         SELECT cell, src, dst FROM edir
         UNION ALL SELECT cell, dst AS src, src AS dst FROM edir),
       ${ivfProbeCte(QMOD, NPROBE)},
-      entry AS (SELECT cell, min(vec_id) AS node FROM m GROUP BY cell),
-      f0 AS (
+      entry AS MATERIALIZED (
+        SELECT cell, min(vec_id) AS node FROM m GROUP BY cell),
+      f0 AS MATERIALIZED (
         SELECT p.query_id, p.cell, e.node AS corpus_id,
           ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
             AS cosine
@@ -896,7 +897,8 @@ object SimilarityQueries {
         JOIN v q ON q.vec_id = p.query_id
         JOIN v c ON c.vec_id = e.node),
       $hopCtes,
-      vis AS (SELECT DISTINCT query_id, cell, corpus_id, cosine
+      vis AS MATERIALIZED (
+        SELECT DISTINCT query_id, cell, corpus_id, cosine
         FROM ($visUnion))"""
   }
 
@@ -997,7 +999,7 @@ object SimilarityQueries {
     def walkCtes(base: String, f0Name: String, edges: String, hops: Int,
         width: Int): String = (1 to hops).map { h =>
       val prev = if (h == 1) f0Name else s"${base}f${h - 1}"
-      s"""${base}x$h AS (
+      s"""${base}x$h AS MATERIALIZED (
         SELECT f.query_id, f.cell, ed.dst AS corpus_id,
           ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
             AS cosine
@@ -1005,7 +1007,7 @@ object SimilarityQueries {
         JOIN $edges ed ON ed.cell = f.cell AND ed.src = f.corpus_id
         JOIN v q ON q.vec_id = f.query_id
         JOIN v c ON c.vec_id = ed.dst),
-      ${base}f$h AS (
+      ${base}f$h AS MATERIALIZED (
         SELECT query_id, cell, corpus_id, cosine FROM (
           SELECT w.*, row_number() OVER (PARTITION BY query_id, cell
               ORDER BY cosine DESC, corpus_id ASC) AS rn
@@ -1022,8 +1024,9 @@ object SimilarityQueries {
     val layerCtes = (levels to 1 by -1).map { l =>
       val lp = s"${pfx}l$l"
       val promoted =
-        s"""${lp}p AS (SELECT * FROM m WHERE vec_id % ${1L << l} = 0),
-        ${lp}edir AS (
+        s"""${lp}p AS MATERIALIZED (
+          SELECT * FROM m WHERE vec_id % ${1L << l} = 0),
+        ${lp}edir AS MATERIALIZED (
           SELECT cell, src, dst FROM (
             SELECT a.cell, a.vec_id AS src, b.vec_id AS dst,
               row_number() OVER (PARTITION BY a.vec_id
@@ -1033,12 +1036,12 @@ object SimilarityQueries {
             FROM ${lp}p a
             JOIN ${lp}p b ON a.cell = b.cell AND b.vec_id < a.vec_id)
           WHERE rn <= $NSW_DEG),
-        ${lp}e AS (
+        ${lp}e AS MATERIALIZED (
           SELECT cell, src, dst FROM ${lp}edir
           UNION ALL SELECT cell, dst AS src, src AS dst FROM ${lp}edir),
-        ${lp}ent AS (SELECT cell, min(vec_id) AS node FROM ${lp}p
-          GROUP BY cell),
-        ${lp}fb AS (
+        ${lp}ent AS MATERIALIZED (
+          SELECT cell, min(vec_id) AS node FROM ${lp}p GROUP BY cell),
+        ${lp}fb AS MATERIALIZED (
           SELECT p.query_id, p.cell, e.node AS corpus_id,
             ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
               AS cosine
@@ -1046,9 +1049,9 @@ object SimilarityQueries {
           JOIN v q ON q.vec_id = p.query_id
           JOIN v c ON c.vec_id = e.node)"""
       val start = aboveVis match {
-        case None => s"""${lp}f0 AS (SELECT * FROM ${lp}fb)"""
+        case None => s"""${lp}f0 AS MATERIALIZED (SELECT * FROM ${lp}fb)"""
         case Some(av) =>
-          s"""${lp}f0 AS (
+          s"""${lp}f0 AS MATERIALIZED (
             SELECT query_id, cell, corpus_id, cosine FROM (
               SELECT w.*, row_number() OVER (PARTITION BY query_id, cell
                   ORDER BY cosine DESC, corpus_id ASC) AS rn
@@ -1064,7 +1067,7 @@ object SimilarityQueries {
     }.mkString(",\n      ")
     val upVis = aboveVis.get
     val g0 =
-      s"""${pfx}gf0 AS (
+      s"""${pfx}gf0 AS MATERIALIZED (
         SELECT query_id, cell, corpus_id, cosine FROM (
           SELECT w.*, row_number() OVER (PARTITION BY query_id, cell
               ORDER BY cosine DESC, corpus_id ASC) AS rn
@@ -1077,7 +1080,8 @@ object SimilarityQueries {
     s"""$layerCtes,
       $g0,
       $lowWalk,
-      $visName AS (SELECT DISTINCT query_id, cell, corpus_id, cosine
+      $visName AS MATERIALIZED (
+        SELECT DISTINCT query_id, cell, corpus_id, cosine
         FROM ($upVis UNION ALL SELECT * FROM f0 UNION ALL $lowVis))"""
   }
 
@@ -3556,7 +3560,6 @@ object SimilarityQueries {
   private val q275 = Q(
     "q275_rvq_ladder",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val emb = t.embeddings
       val km = graft.operators.KMeans
@@ -3574,11 +3577,9 @@ object SimilarityQueries {
       val cb2 = km.fitCentroidArrays(resid, "vec_id", "rvec",
         RVQ_K, RVQ_ITERS)
       val a2 = km.assign(resid, "vec_id", "rvec", cb2)
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
       def mseRow(stage: Int, df: org.apache.spark.sql.DataFrame,
           d: org.apache.spark.sql.Column) =
-        df.agg((sum(p8d(d)).cast("double") / count(lit(1))).as("m"),
+        df.agg((dsum8(d) / count(lit(1))).as("m"),
             count(lit(1)).as("n"))
           .select(lit(stage).as("stage"), col("n").as("n_vecs"),
             lit(stage * 4).as("code_bits"), pround(col("m"), 6).as("mse"))
@@ -3651,8 +3652,6 @@ object SimilarityQueries {
         JOIN ${p}fasg a ON a.vec_id = e.vec_id
         JOIN $cent c ON c.cluster = a.cluster AND c.pos = e.pos
         GROUP BY e.vec_id)"""
-      val ds8p = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       s"""WITH ev AS MATERIALIZED (
         SELECT vec_id, pos, CAST(embedding[CAST(pos + 1 AS INT)] AS DOUBLE)
           AS v
@@ -3674,10 +3673,10 @@ object SimilarityQueries {
           list_reduce(list_prepend(CAST(0 AS DOUBLE),
             list(v * v ORDER BY pos)), (x, y) -> x + y) AS d
         FROM ev GROUP BY vec_id),
-      m0 AS (SELECT ${ds8p("d")} / count(*) AS m, count(*) AS n FROM v0),
-      m1 AS (SELECT ${ds8p("d2c")} / count(*) AS m, count(*) AS n
+      m0 AS (SELECT ${dsum8Sql("d")} / count(*) AS m, count(*) AS n FROM v0),
+      m1 AS (SELECT ${dsum8Sql("d2c")} / count(*) AS m, count(*) AS n
         FROM s1d2),
-      m2 AS (SELECT ${ds8p("d2c")} / count(*) AS m, count(*) AS n
+      m2 AS (SELECT ${dsum8Sql("d2c")} / count(*) AS m, count(*) AS n
         FROM s2d2)
       SELECT 0 AS stage, n AS n_vecs, 0 AS code_bits,
         ${proundSql("m", 6)} AS mse FROM m0
@@ -3707,7 +3706,6 @@ object SimilarityQueries {
   private val q283 = Q(
     "q283_herding_coreset",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val sp = s
       import sp.implicits._
       val t = Tpch(s, dir)
@@ -3716,10 +3714,8 @@ object SimilarityQueries {
           posexplode(col("embedding")).as(Seq("pos", "vf")))
         .select(col("vec_id"), col("pos"), col("vf").cast("double").as("v"))
         .localCheckpoint(true)
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
       val mu = ev.groupBy(col("pos"))
-        .agg((sum(p8d(col("v"))).cast("double")
+        .agg((dsum8(col("v"))
           / count(lit(1)).cast("double")).as("mv"))
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val d = mu.size
@@ -3732,7 +3728,7 @@ object SimilarityQueries {
           .toDF("pos", "wv")
         val scored = ev.join(broadcast(wDf), Seq("pos"))
           .groupBy(col("vec_id"))
-          .agg(sum(p8d(col("v") * col("wv"))).cast("double").as("score"))
+          .agg(dsum8(col("v") * col("wv")).as("score"))
           .localCheckpoint(true)
         val ms = scored.agg(max(col("score"))).head.getDouble(0)
         val pid = scored.filter(col("score") === ms)
@@ -3750,11 +3746,9 @@ object SimilarityQueries {
         .orderBy(col("round"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val rounds = (1 to HERD_K).map { i =>
         s"""sc$i AS MATERIALIZED (
-        SELECT e.vec_id, ${ds8("e.v * w.wv")} AS score
+        SELECT e.vec_id, ${dsum8Sql("e.v * w.wv")} AS score
         FROM ev e JOIN hw${i - 1} w USING (pos)
         GROUP BY e.vec_id),
       pk$i AS MATERIALIZED (
@@ -3769,7 +3763,7 @@ object SimilarityQueries {
           AND e.vec_id = (SELECT pid FROM pk$i)),
       r$i AS (
         SELECT $i AS round, pid AS vec_id, score,
-          (SELECT ${ds8("wv * wv")} FROM hw$i) / ${i * i}.0 AS moment_gap
+          (SELECT ${dsum8Sql("wv * wv")} FROM hw$i) / ${i * i}.0 AS moment_gap
         FROM pk$i)"""
       }.mkString(",\n      ")
       val unionRows = (1 to HERD_K).map(i => s"SELECT * FROM r$i")
@@ -3781,7 +3775,7 @@ object SimilarityQueries {
         CROSS JOIN (SELECT unnest(generate_series(0, ${KM_DIMS - 1}))
           AS pos)),
       mu AS MATERIALIZED (
-        SELECT pos, ${ds8("v")} / CAST(count(*) AS DOUBLE) AS mv
+        SELECT pos, ${dsum8Sql("v")} / CAST(count(*) AS DOUBLE) AS mv
         FROM ev GROUP BY pos),
       hw0 AS MATERIALIZED (SELECT pos, mv AS wv FROM mu),
       $rounds,

@@ -1911,9 +1911,7 @@ object TextAnalysis {
             * abs(accRaw - confRaw)).as("term"),
           col("nn"), col("pp"))
         .groupBy(col("nn"), col("pp"))
-        .agg(sum(pround(col("term"), 8)
-          .cast(org.apache.spark.sql.types.DecimalType(28, 8)))
-          .cast("double").as("ece"))
+        .agg(dsum8(col("term")).as("ece"))
         .select(lit(-1).as("pbin"), col("nn").as("n"), col("pp").as("n_pos"),
           lit(null).cast("double").as("conf"),
           lit(null).cast("double").as("acc"),
@@ -1944,11 +1942,8 @@ object TextAnalysis {
       FROM bins
       UNION ALL
       SELECT -1, nn, pp, CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        ${proundSql(
-          s"""CAST(sum(CAST(${proundSql(
-            s"""CAST(n AS DOUBLE) / CAST(nn AS DOUBLE)
-               * abs(($acc) - ($conf))""", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE)""", 6)}
+        ${proundSql(dsum8Sql(s"""CAST(n AS DOUBLE) / CAST(nn AS DOUBLE)
+               * abs(($acc) - ($conf))"""), 6)}
       FROM bins CROSS JOIN tot
       GROUP BY nn, pp
       ORDER BY pbin"""
@@ -2115,9 +2110,9 @@ object TextAnalysis {
   //    short-doc tail moves). Platt = logistic on the centered bin
   //    feature (bin−32)/32 (exact binary ops), trained by
   //    Logistic.fitBatch — sigmoids on graft_expdet, so the fitted
-  //    (a0, a1) replay bit-exactly through the q268-style unrolled
-  //    oracle; isotonic reuses the minimax closed form on the
-  //    REVERSED score (PAV fits increasing curves; this one falls).
+  //    (a0, a1) replay bit-exactly through Logistic.fitBatchSqlCtes;
+  //    isotonic reuses the minimax closed form on the REVERSED score
+  //    (PAV fits increasing curves; this one falls).
   //    Output is the per-bin reliability table: empirical rate vs
   //    both fits plus each fit's per-bin mean Brier — the measured
   //    smooth-parametric vs stepwise-nonparametric trade (sf0.01
@@ -2153,14 +2148,12 @@ object TextAnalysis {
         .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"))
       val z = lit(a(0)) + ((col("bin").cast("double") - lit(32.0))
         / lit(32.0)) * lit(a(1))
-      val zc = when(z > 30.0, 30.0).when(z < -30.0, -30.0).otherwise(z)
       def brier(p: org.apache.spark.sql.Column) =
         p * p - lit(2.0) * p * col("ph") + col("ph")
       bins.join(iso, Seq("bin"))
         .withColumn("ph",
           col("n_pos").cast("double") / col("n").cast("double"))
-        .withColumn("p_platt",
-          lit(1.0) / (lit(1.0) + call_function("graft_expdet", -zc)))
+        .withColumn("p_platt", sigmoid(z))
         .select(col("bin"), col("n"), col("n_pos"),
           pround(col("ph"), 6).as("p_hat"),
           pround(col("p_cal"), 6).as("p_iso"),
@@ -2171,32 +2164,6 @@ object TextAnalysis {
     },
     Some {
       val ts2 = tokensSql("text")
-      // logistic iterations (q268's unroll, 2 features) over pd
-      val gdIters = (0 until PLT_T).map { i =>
-        s"""z$i AS (
-        SELECT y, x0, x1, (x0 * w0 + x1 * w1) AS z
-        FROM pfeats CROSS JOIN pw$i),
-      zc$i AS (
-        SELECT y, x0, x1, z,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM z$i),
-      ${expDetSqlCtes(s"pe$i", s"zc$i", "y, x0, x1, z", "-zc")},
-      sg$i AS (
-        SELECT y, x0, x1,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS s
-        FROM pe${i}expv),
-      pg$i AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(CAST(${proundSql("(s - y) * x0", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g0,
-          CAST(sum(CAST(${proundSql("(s - y) * x1", 8)}
-            AS DECIMAL(28,8))) AS DOUBLE) AS g1
-        FROM sg$i),
-      pw${i + 1} AS MATERIALIZED (
-        SELECT w0 - $PLT_LR * (g0 / n) AS w0,
-          w1 - $PLT_LR * (g1 / n) AS w1
-        FROM pw$i CROSS JOIN pg$i)"""
-      }.mkString(",\n      ")
       s"""WITH pd AS MATERIALIZED (
         SELECT CAST(least(99, len($ts2)) AS INT) AS bin,
           CASE WHEN CAST(len(list_distinct($ts2)) AS DOUBLE)
@@ -2223,22 +2190,15 @@ object TextAnalysis {
         SELECT CAST(pos AS DOUBLE) AS y, CAST(1 AS DOUBLE) AS x0,
           (CAST(bin AS DOUBLE) - 32.0) / 32.0 AS x1
         FROM pd),
-      pw0 AS (SELECT CAST(0 AS DOUBLE) AS w0, CAST(0 AS DOUBLE) AS w1),
-      $gdIters,
+      ${graft.operators.Logistic.fitBatchSqlCtes("p", "pfeats",
+        Seq("x0", "x1"), "y", PLT_LR, PLT_T)},
       bz AS (
         SELECT b.bin, b.n, b.np, c.p_cal,
-          CAST(b.np AS DOUBLE) / CAST(b.n AS DOUBLE) AS ph,
-          w0 + (CAST(b.bin AS DOUBLE) - 32.0) / 32.0 * w1 AS z
+          CAST(b.np AS DOUBLE) / CAST(b.n AS DOUBLE) AS ph, w0, w1
         FROM b JOIN cal c ON c.bin = b.bin CROSS JOIN pw$PLT_T),
-      bzc AS (
-        SELECT bin, n, np, p_cal, ph,
-          CASE WHEN z > 30 THEN 30 WHEN z < -30 THEN -30 ELSE z END AS zc
-        FROM bz),
-      ${expDetSqlCtes("ba", "bzc", "bin, n, np, p_cal, ph", "-zc")},
-      fin AS (
-        SELECT bin, n, np, p_cal, ph,
-          CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + expv) AS p_platt
-        FROM baexpv)
+      ${sigmoidSqlCtes("b", "bz", "bin, n, np, p_cal, ph",
+        "w0 + (CAST(bin AS DOUBLE) - 32.0) / 32.0 * w1")},
+      fin AS (SELECT *, s AS p_platt FROM bsig)
       SELECT bin, n, np AS n_pos,
         ${proundSql("ph", 6)} AS p_hat,
         ${proundSql("p_cal", 6)} AS p_iso,
@@ -2705,10 +2665,7 @@ object TextAnalysis {
   private val q304 = Q(
     "q304_jackknife_se",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
-      def ds8(c: org.apache.spark.sql.Column) =
-        sum(pround(c, 8).cast(DecimalType(28, 8))).cast("double")
       val toks = tokens(col("text"))
       val perSrc = t.documents
         .select(col("source"), size(toks).cast("long").as("m"))
@@ -2722,13 +2679,13 @@ object TextAnalysis {
       val wt = perSrc.crossJoin(broadcast(tot))
       val thI = (d(col("ss") - col("s_i"))) / (d(col("nn") - col("n_i")))
       val thBarDf = wt.groupBy(col("g"), col("nn"), col("ss"), col("qq"))
-        .agg(ds8(thI).as("sth"))
+        .agg(dsum8(thI).as("sth"))
       val withBar = wt.join(broadcast(thBarDf),
         Seq("g", "nn", "ss", "qq"))
         .withColumn("dev", thI - col("sth") / d(col("g")))
       val parts = withBar
         .groupBy(col("g"), col("nn"), col("ss"), col("qq"))
-        .agg(ds8(col("dev") * col("dev")).as("sdev2"))
+        .agg(dsum8(col("dev") * col("dev")).as("sdev2"))
       val theta = d(col("ss")) / d(col("nn"))
       val seJack = sqrt((d(col("g")) - 1.0) / d(col("g"))
         * col("sdev2"))
@@ -2742,8 +2699,6 @@ object TextAnalysis {
         pround(seJack / seIid, 4).as("se_ratio"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val toksSql = TextFns.tokensSql("text")
       val thI = """(CAST(ss - s_i AS DOUBLE) / CAST(nn - n_i AS DOUBLE))"""
       val seJ = """sqrt((CAST(g AS DOUBLE) - 1.0) / CAST(g AS DOUBLE)
@@ -2766,12 +2721,12 @@ object TextAnalysis {
           CAST(sum(q_i) AS BIGINT) AS qq
         FROM persrc),
       thbar AS (
-        SELECT g, nn, ss, qq, ${ds8(thI)} AS sth
+        SELECT g, nn, ss, qq, ${dsum8Sql(thI)} AS sth
         FROM persrc CROSS JOIN tot
         GROUP BY g, nn, ss, qq),
       parts AS (
         SELECT g, nn, ss, qq,
-          ${ds8(s"($thI - sth / CAST(g AS DOUBLE)) " +
+          ${dsum8Sql(s"($thI - sth / CAST(g AS DOUBLE)) " +
             s"* ($thI - sth / CAST(g AS DOUBLE))")} AS sdev2
         FROM persrc CROSS JOIN tot JOIN thbar USING (g, nn, ss, qq)
         GROUP BY g, nn, ss, qq)
@@ -2973,10 +2928,7 @@ object TextAnalysis {
   private val q298 = Q(
     "q298_brier_decomposition",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
-      def ds8(c: org.apache.spark.sql.Column) =
-        sum(pround(c, 8).cast(DecimalType(28, 8))).cast("double")
       val toks = tokens(col("text"))
       val perdoc = t.documents.select(
           least(lit(99), size(toks)).cast("long").as("bin"),
@@ -3002,7 +2954,7 @@ object TextAnalysis {
           (d(relNum * relNum) / (lit(400.0) * d(col("n")))).as("relterm"),
           (d(col("n")) * dev * dev).as("resterm"))
         .groupBy(col("nn"), col("pp"), col("sbs"))
-        .agg(ds8(col("relterm")).as("srel"), ds8(col("resterm")).as("sres"))
+        .agg(dsum8(col("relterm")).as("srel"), dsum8(col("resterm")).as("sres"))
       val bs = d(col("sbs")) / (lit(400.0) * d(col("nn")))
       val rel = col("srel") / d(col("nn"))
       val res = col("sres") / d(col("nn"))
@@ -3015,8 +2967,6 @@ object TextAnalysis {
         pround(bs - (rel - res + unc), 8).as("decomp_gap"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val toksSql = TextFns.tokensSql("text")
       val bs = "CAST(sbs AS DOUBLE) / (400.0 * CAST(nn AS DOUBLE))"
       val rel = "srel / CAST(nn AS DOUBLE)"
@@ -3039,11 +2989,11 @@ object TextAnalysis {
         CAST(sum(se2) AS BIGINT) AS sbs FROM bins),
       parts AS (
         SELECT nn, pp, sbs,
-          ${ds8(
+          ${dsum8Sql(
             """CAST(((2 * pbin + 1) * n - 20 * np)
                * ((2 * pbin + 1) * n - 20 * np) AS DOUBLE)
                / (400.0 * CAST(n AS DOUBLE))""")} AS srel,
-          ${ds8(
+          ${dsum8Sql(
             """CAST(n AS DOUBLE)
                * (CAST(np AS DOUBLE) / CAST(n AS DOUBLE)
                  - CAST(pp AS DOUBLE) / CAST(nn AS DOUBLE))
@@ -3078,12 +3028,9 @@ object TextAnalysis {
     "q293_naive_bayes",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val ln = (x: org.apache.spark.sql.Column) =>
         call_function("graft_lndet", x)
-      def ds8(c: org.apache.spark.sql.Column) =
-        sum(pround(c, 8).cast(DecimalType(28, 8))).cast("double")
       val toks = t.documents
         .select(col("doc_id"), col("lang"),
           explode(TextFns.tokens(lower(col("text")))).as("token"))
@@ -3118,7 +3065,7 @@ object TextAnalysis {
           (col("m").cast("double") * coalesce(col("llh"), col("miss")))
             .as("term"))
         .groupBy(col("doc_id"), col("lang"), col("l"), col("prior"))
-        .agg(ds8(col("term")).as("tscore"))
+        .agg(dsum8(col("term")).as("tscore"))
         .withColumn("score", col("prior") + col("tscore"))
       val w = Window.partitionBy(col("doc_id"))
         .orderBy(col("score").desc, col("l").asc)
@@ -3129,8 +3076,6 @@ object TextAnalysis {
         .orderBy(col("lang_true"), col("lang_pred"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val toksSql = TextFns.tokensSql("lower(text)")
       val hs = TextFns.rollingHashSql("token")
       s"""WITH toks AS MATERIALIZED (
@@ -3172,7 +3117,7 @@ object TextAnalysis {
         FROM toks GROUP BY doc_id, lang, h),
       sc AS (
         SELECT g.doc_id, g.lang, g.l, g.prior,
-          g.prior + ${ds8(
+          g.prior + ${dsum8Sql(
             "CAST(g.m AS DOUBLE) * COALESCE(ll.llh, g.miss)")} AS score
         FROM (SELECT dtm.*, lm.l, lm.miss, lm.prior
               FROM dtm CROSS JOIN lm) g

@@ -1320,7 +1320,6 @@ object TrainingPrepQueries {
     (s, dir) => {
       val sp = s
       import sp.implicits._
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val occ = t.documents
         .select(col("source"),
@@ -1338,8 +1337,7 @@ object TrainingPrepQueries {
       val losses = dh.join(bits, Seq("h"))
         .groupBy(col("source"))
         .agg(
-          sum(pround(col("c").cast("double") * col("b"), 8)
-            .cast(DecimalType(28, 8))).cast("double").as("lossnum"),
+          dsum8(col("c").cast("double") * col("b")).as("lossnum"),
           sum(col("c")).as("n_toks"))
         .select(col("source"),
           (col("lossnum") / col("n_toks").cast("double")).as("lossv"))
@@ -1372,11 +1370,9 @@ object TrainingPrepQueries {
         .orderBy(col("round"), col("source"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       val mwRounds = (1 to MW_T).map { i =>
         s"""lb$i AS MATERIALIZED (
-        SELECT ${ds8("w * lossv")} AS lbar FROM mw${i - 1}),
+        SELECT ${dsum8Sql("w * lossv")} AS lbar FROM mw${i - 1}),
       ex$i AS (
         SELECT source, lossv, w, lossv - lbar AS ex
         FROM mw${i - 1} CROSS JOIN lb$i),
@@ -1384,7 +1380,7 @@ object TrainingPrepQueries {
           s"$MW_ETA * (ex)")},
       u$i AS MATERIALIZED (
         SELECT source, lossv, w * expv AS u FROM me${i}expv),
-      z$i AS (SELECT ${ds8("u")} AS z FROM u$i),
+      z$i AS (SELECT ${dsum8Sql("u")} AS z FROM u$i),
       mw$i AS MATERIALIZED (
         SELECT source, lossv, u / z AS w FROM u$i CROSS JOIN z$i)"""
       }.mkString(",\n      ")
@@ -1408,7 +1404,7 @@ object TrainingPrepQueries {
         FROM occ GROUP BY 1, 2),
       losses AS MATERIALIZED (
         SELECT source,
-          ${ds8("CAST(c AS DOUBLE) * b")}
+          ${dsum8Sql("CAST(c AS DOUBLE) * b")}
             / CAST(CAST(sum(c) AS BIGINT) AS DOUBLE) AS lossv
         FROM dh JOIN bits USING (h) GROUP BY source),
       dcount AS (SELECT CAST(count(*) AS BIGINT) AS d FROM losses),

@@ -710,7 +710,6 @@ object WindowQueries {
     "q281_stl_strength",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types.DecimalType
       val t = Tpch(s, dir)
       val daily = t.eventsUs
         .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
@@ -727,19 +726,17 @@ object WindowQueries {
             - col("tsum").cast("double") / lit(7.0)).as("d"),
           pmod(col("day"), lit(7L)).as("wd"))
         .localCheckpoint(true)
-      val p8d = (c: org.apache.spark.sql.Column) =>
-        pround(c, 8).cast(DecimalType(28, 8))
       val sw = det.groupBy(col("event_type"), col("wd"))
-        .agg((sum(p8d(col("d"))).cast("double")
+        .agg((dsum8(col("d"))
           / count(lit(1)).cast("double")).as("s_w"))
       val full = det.join(sw, Seq("event_type", "wd"))
         .select(col("event_type"),
           (col("d") - col("s_w")).as("r"),
           col("d"), (col("x") - col("s_w")).as("q"))
       def varOf(c: String) =
-        ((sum(p8d(col(c) * col(c))).cast("double")
-          - sum(p8d(col(c))).cast("double")
-            * sum(p8d(col(c))).cast("double")
+        ((dsum8(col(c) * col(c))
+          - dsum8(col(c))
+            * dsum8(col(c))
             / count(lit(1)).cast("double"))
           / count(lit(1)).cast("double"))
       full.groupBy(col("event_type"))
@@ -754,10 +751,8 @@ object WindowQueries {
         .orderBy(col("event_type"))
     },
     Some {
-      val ds8 = (x: String) =>
-        s"CAST(sum(CAST(${proundSql(x, 8)} AS DECIMAL(28,8))) AS DOUBLE)"
       def varSql(c: String) =
-        s"""((${ds8(s"$c * $c")} - ${ds8(c)} * ${ds8(c)}
+        s"""((${dsum8Sql(s"$c * $c")} - ${dsum8Sql(c)} * ${dsum8Sql(c)}
            / CAST(count(*) AS DOUBLE)) / CAST(count(*) AS DOUBLE))"""
       s"""WITH daily AS MATERIALIZED (
         SELECT event_type, epoch_us(ts) // 86400000000 AS day,
@@ -777,7 +772,7 @@ object WindowQueries {
         WHERE cnt7 = 7),
       sw AS MATERIALIZED (
         SELECT event_type, wd,
-          ${ds8("d")} / CAST(count(*) AS DOUBLE) AS s_w
+          ${dsum8Sql("d")} / CAST(count(*) AS DOUBLE) AS s_w
         FROM det GROUP BY 1, 2),
       full0 AS (
         SELECT d.event_type, d.d - s.s_w AS r, d.d AS d,

@@ -74,6 +74,24 @@ class LogisticSpec extends SparkSpec {
     }
   }
 
+  test("fitBatchGrouped matches fitBatch where the sigmoid clamps") {
+    // large features: after one step |z| = |w0 + w1·x1| is far past 30,
+    // so every later pass runs through the ±30 clamp on both paths
+    val g = (for (k <- -5 to 5 if k != 0; _ <- 1 to 3)
+      yield (if (k > 0) 1.0 else 0.0, 1.0, k * 10.0))
+      .toDF("y", "x0", "x1").repartition(5)
+    val a = Logistic.fitBatch(g, Seq("x0", "x1"), "y", 1.0, 4)
+    val b = Logistic.fitBatchGrouped(g, Seq("x0", "x1"), "y", 1.0, 4)
+    assert(a.length === b.length)
+    a.zip(b).foreach { case (x, yy) =>
+      assert(x.nCorrect === yy.nCorrect, s"iter ${x.iter}")
+      assert(x.w === yy.w, s"iter ${x.iter}: ${x.w} vs ${yy.w}")
+    }
+    val maxAbsZ = (for (it <- a; k <- -5 to 5)
+      yield math.abs(1.0 * it.w(0) + k * 10.0 * it.w(1))).max
+    assert(maxAbsZ > 30.0, s"max |z| = $maxAbsZ never reaches the clamp")
+  }
+
   test("fitBatchGrouped refuses an unbounded grid") {
     val cont = (1 to 500).map(i => (i.toDouble / 500.0, 1.0, i * 0.001))
       .toDF("y", "x0", "x1")
