@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import graft.core.{GraftSession, ParquetTable}
 import graft.pipeline._
+import graft.pipeline.Warehouse.noGate
 import graft.quality.Expectations
 
 /** Pipeline runner — replaces the reference's Airflow DAG
@@ -14,42 +15,35 @@ import graft.quality.Expectations
   *     <airportsCsv> <carriersCsv> <warehouseDir> [--validate]
   *
   * Every table goes where `pipeline.Warehouse` declares it, with that
-  * entry's partitioning and write shaping.
+  * entry's partitioning and write shaping, and is published through
+  * `Warehouse.Table.publish`: written to `<table>._staged`, gated on
+  * what was written, then swapped in. Each layer is computed once: the
+  * gate reads the staged files, the fact joins the published dims, and
+  * the marts read the published fact and dims.
   *
   * `gate` is the per-stage quality hook (FlightSuites under
-  * --validate); stages are public so specs and schedulers can drive
-  * them against their own session.
+  * --validate, where a failing suite throws and the table keeps its
+  * previous version); stages are public so specs and schedulers can
+  * drive them against their own session.
   */
 object RunPipeline {
 
   type Gate = Warehouse.Gate
-  val noGate: Gate = (_, _, _) => ()
 
   def runBronze(spark: SparkSession, flightsCsv: String, airportsCsv: String,
-      carriersCsv: String, wh: String, gate: Gate = noGate): Unit = {
-    val bronze = Bronze.ingest(spark, flightsCsv, airportsCsv, carriersCsv)
-    Warehouse.bronze.gate(gate, bronze)
-    Warehouse.bronze.write(bronze, wh)
-  }
+      carriersCsv: String, wh: String, gate: Gate = noGate): Unit =
+    Warehouse.bronze.publish(
+      Bronze.ingest(spark, flightsCsv, airportsCsv, carriersCsv), wh, gate)
 
-  def runSilver(spark: SparkSession, wh: String, gate: Gate = noGate): Unit = {
-    val silver = Silver.transform(Warehouse.bronze.read(spark, wh))
-    Warehouse.silver.gate(gate, silver)
-    Warehouse.silver.write(silver, wh)
-  }
+  def runSilver(spark: SparkSession, wh: String, gate: Gate = noGate): Unit =
+    Warehouse.silver.publish(
+      Silver.transform(Warehouse.bronze.read(spark, wh)), wh, gate)
 
   def runGold(spark: SparkSession, wh: String, gate: Gate = noGate): Unit = {
     val silver = Warehouse.silver.read(spark, wh)
-    val dims = Warehouse.dims(spark, silver)
-    dims.tables.foreach { case (t, d) => t.write(d, wh) }
-    dims.tables.foreach { case (t, d) => t.gate(gate, d) }
-
-    val fact = dims.fact(silver)
-    Warehouse.fact.gate(gate, fact)
-    Warehouse.fact.write(fact, wh)
-
-    val factR = Warehouse.fact.read(spark, wh)
-    Warehouse.marts.foreach(m => m.table.write(m.build(factR, dims), wh))
+    val dims = Warehouse.dims(spark, silver).publish(wh, gate)
+    val fact = Warehouse.fact.publish(dims.fact(silver), wh, gate)
+    Warehouse.marts.foreach(m => m.table.publish(m.build(fact, dims), wh))
   }
 
   def runExport(spark: SparkSession, wh: String): Unit =
@@ -74,10 +68,10 @@ object RunPipeline {
       else (df, suite, name) => {
         val report = Expectations.validate(df, suite)
         println(s"[quality] $name: ${report.summary}")
-        if (!report.success) { spark.stop(); sys.exit(1) }
+        if (!report.success) sys.error(s"quality gate failed: $name")
       }
 
-    stage match {
+    try stage match {
       case "bronze" => runBronze(spark, flightsCsv, airportsCsv, carriersCsv, wh, gate)
       case "silver" => runSilver(spark, wh, gate)
       case "gold"   => runGold(spark, wh, gate)
@@ -91,11 +85,11 @@ object RunPipeline {
       // warehouse: affected mart partitions recomputed, history
       // untouched — see pipeline.Incremental
       case "incremental" =>
-        val months = Incremental.run(spark, wh, flightsCsv, airportsCsv, carriersCsv)
+        val months =
+          Incremental.run(spark, wh, flightsCsv, airportsCsv, carriersCsv, gate)
         println(s"[incremental] refreshed months: ${months.mkString(", ")}")
       case other =>
         System.err.println(s"unknown stage: $other"); spark.stop(); sys.exit(2)
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

@@ -22,6 +22,14 @@ object ParquetTable extends TableFormat {
   override def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** Read under a schema already known (partition columns last, the
+    * way Spark lays them out): skips the footer-inference job a plain
+    * [[read]] runs.
+    */
+  def read(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
   /** Whether anything exists at `path`, on whatever filesystem its
     * URI names (a bare path, `file:`, `hdfs:`, …).
     */
@@ -73,6 +81,28 @@ object ParquetTable extends TableFormat {
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", "true").csv(path)
 
+  /** Swap the table written at `staged` into `path`: rename the old
+    * table aside, rename the staged one in (putting the old one back if
+    * that fails), then delete the old one. Readers of `path` see the old
+    * table or the new one, never no table — unlike delete-then-rename.
+    * `staged` must sit next to `path`, so both renames stay on one
+    * filesystem.
+    */
+  def swap(spark: SparkSession, staged: String, path: String): Unit = {
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new org.apache.hadoop.fs.Path(path + "._swap_old")
+    fs.delete(old, true)
+    val hadOld = fs.exists(hPath)
+    if (hadOld && !fs.rename(hPath, old))
+      sys.error(s"swap: could not move $path aside")
+    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), hPath)) {
+      if (hadOld) fs.rename(old, hPath)
+      sys.error(s"swap: could not move $staged into $path")
+    }
+    fs.delete(old, true)
+  }
+
   /** Small-file compaction (the OPTIMIZE half of lakehouse table
     * maintenance; the reference's docs recommend it but never run it —
     * SURVEY.md §1.4). Rewrites the table so each output file is
@@ -82,9 +112,9 @@ object ParquetTable extends TableFormat {
     * and scheduler pressure, not IO.
     *
     * The rewrite is a normal distributed job: read → repartition to
-    * ceil(bytes/targetBytes) → write alongside → atomic directory
-    * swap. Uses on-disk size as the sizing proxy (same heuristic as
-    * file-format OPTIMIZE implementations).
+    * ceil(bytes/targetBytes) → write alongside → [[swap]]. Uses on-disk
+    * size as the sizing proxy (same heuristic as file-format OPTIMIZE
+    * implementations).
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
@@ -99,20 +129,9 @@ object ParquetTable extends TableFormat {
         // cluster by partition cols so each task writes into few dirs
         df.repartition(nFiles, partitionBy.map(df(_)): _*)
       else df.repartition(nFiles)
-    val tmp = new org.apache.hadoop.fs.Path(path + "._compact_tmp")
-    fs.delete(tmp, true)
-    val w = compacted.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(path + "._compact_old")
-    fs.delete(bak, true)
-    if (!fs.rename(hPath, bak))
-      sys.error(s"compact: could not stage $path aside")
-    if (!fs.rename(tmp, hPath)) { // restore on failure
-      fs.rename(bak, hPath)
-      sys.error(s"compact: could not swap in compacted $path")
-    }
-    fs.delete(bak, true)
+    val staged = path + "._staged"
+    write(compacted, staged, partitionBy)
+    swap(spark, staged, path)
   }
 
   /** Bucketed managed table: pre-hash-partitions (and optionally

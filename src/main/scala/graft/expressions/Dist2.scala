@@ -36,6 +36,17 @@ object Dist2Kernels {
       case _ => a.getLong(i).toDouble
     }
 
+  /** One step of the chain's fold, `(acc + x).cast(DECIMAL(38,8))`:
+    * the DECIMAL(38,7)-typed add rounds HALF_UP at scale 7, then the
+    * cast re-expresses it at scale 8, or gives null (non-ANSI) when it
+    * needs more than 38 digits there. The overflow check is at scale
+    * 8: a 38-digit scale-7 sum fits the add's type but not the cast's.
+    */
+  def addCast38x8(acc: JBigDecimal, x: JBigDecimal): JBigDecimal = {
+    val s = acc.add(x).setScale(7, RoundingMode.HALF_UP).setScale(8)
+    if (s.precision > 38) null else s
+  }
+
   /** [[Dist2Decimal]]'s loop; null result = null (poisoned). */
   def dist2Decimal(la: ArrayData, ra: ArrayData, lt: Int, rt: Int): Decimal = {
     if (la.numElements() != ra.numElements()) return null
@@ -100,9 +111,8 @@ object Dist2Kernels {
         } else {
           if (accB == null)
             accB = new JBigDecimal(java.math.BigInteger.valueOf(accL), 8)
-          accB = accB.add(bd).setScale(7, RoundingMode.HALF_UP)
-          if (accB.precision > 38) return null
-          accB = accB.setScale(8)
+          accB = addCast38x8(accB, bd)
+          if (accB == null) return null
         }
       }
       i += 1

@@ -397,6 +397,10 @@ object GraftExtensions {
         require(children.size == 2, "graft_idot takes two array arguments")
         IntDotProduct(children(0), children(1))
       }))
+    // graft_dist2q8 / graft_dist2 take float, double, int or long
+    // arrays only (Dist2Base.elemType): narrower than the zip_with
+    // chains they replaced, which cast any numeric element (byte,
+    // short, decimal) to double. Other element types fail analysis.
     ext.injectFunction((
       new FunctionIdentifier("graft_dist2q8"),
       new ExpressionInfo(classOf[Dist2Decimal].getName, "graft_dist2q8"),

@@ -18,6 +18,16 @@ import org.apache.spark.sql.functions._
   *
   * The audit clock is injectable so tests and hash-based verification
   * stay deterministic (current_timestamp in the reference).
+  *
+  * The lookups are read under the declared `FlightSchema.lookup` with
+  * the header checked against it (`enforceSchema=false`): no inference
+  * job, and a lookup whose header is not `Code,Description` fails
+  * loudly (FIXTURES.md §1.2). The flights CSV keeps inference by
+  * default, because it is not the same read: inference types a
+  * zero-padded HHMM `"0930"` as int 930, while `FlightSchema.flightData`
+  * keeps the string `"0930"`, and Silver's HH:MM rewrite then yields
+  * `"09:30"` instead of the reference's `"930"`. Reading the declared
+  * schema would change silver times, so the extra inference pass stays.
   */
 object Bronze {
 
@@ -48,9 +58,10 @@ object Bronze {
   }
 
   def readLookupCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    spark.read.option("header", "true").option("enforceSchema", "false")
+      .schema(FlightSchema.lookup).csv(path)
       .select(
-        trim(col("Code")).cast("string").as("Code"),
+        trim(col("Code")).as("Code"),
         trim(col("Description")).as("Description"))
 
   /** J1-J3: left-join lookups; int→string cast lives IN the join

@@ -54,7 +54,17 @@ import org.apache.spark.sql.functions._
   * Every table touched here, with its partitioning and write shaping,
   * is the [[Warehouse]] entry the batch stages write, so a fold and a
   * full rebuild produce the same layout; folded source files are
-  * recorded in [[Warehouse.foldLog]], a `core.MarkerLog`.
+  * recorded in [[Warehouse.foldLog]], a `core.MarkerLog`. The dims are
+  * published (`Warehouse.Table.publish`, no gate) and the published
+  * tables feed the fact rebuild and the mart refresh, so each dim
+  * aggregate over silver runs once.
+  *
+  * Gating: `gate` runs the silver suite over the rows about to be
+  * appended (the delta after the key anti-join) before anything is
+  * written, so a gate that throws leaves silver, fact and marts as they
+  * were. Under a suite that demands rows (the silver suite's
+  * `rowCountBetween(1)`), a re-delivered batch with nothing new fails
+  * that gate and writes nothing.
   */
 object Incremental {
 
@@ -70,11 +80,12 @@ object Incremental {
     * affected mart partitions. Returns the touched yyyyMM months.
     */
   def run(spark: SparkSession, wh: String, deltaFlightsCsv: String,
-      airportsCsv: String, carriersCsv: String): Seq[Int] = {
+      airportsCsv: String, carriersCsv: String,
+      gate: Warehouse.Gate = Warehouse.noGate): Seq[Int] = {
     val bronzeDelta = Bronze.ingest(spark, deltaFlightsCsv, airportsCsv, carriersCsv)
-    // delta-sized and used by two actions (the merge-append and the
-    // touched-date enumeration) — persist so the bronze CSV scan and
-    // silver transform run once, not per action
+    // delta-sized and used by several actions (the gate, the merge-
+    // append and the touched-date enumeration) — persist so the bronze
+    // CSV scan and silver transform run once, not per action
     val silverDelta = Silver.transform(bronzeDelta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -96,12 +107,13 @@ object Incremental {
             .reduce(_ && _),
           "left_anti")
       }
+    try Warehouse.silver.gate(gate, fresh)
+    catch { case e: Throwable => silverDelta.unpersist(blocking = false); throw e }
     Warehouse.silver.append(fresh, wh)
 
     // dims: tiny outputs, rebuilt from full silver (see object doc)
     val silver = Warehouse.silver.read(spark, wh)
-    val dims = Warehouse.dims(spark, silver)
-    dims.tables.foreach { case (t, d) => t.write(d, wh) }
+    val dims = Warehouse.dims(spark, silver).publish(wh)
 
     // fact rebuild for the touched days FROM MERGED SILVER (see object
     // doc). The date list is a bounded partition enumeration (≤ the

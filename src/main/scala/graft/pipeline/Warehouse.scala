@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.core.{MarkerLog, ParquetTable}
 import graft.quality.{CorpusSuites, FlightSuites}
 import graft.quality.Expectations.Expectation
@@ -34,16 +35,29 @@ import graft.quality.Expectations.Expectation
   * (`Incremental`), the validation sweep (`cli.RunValidations`) and
   * the q66/q73/q74 oracles all iterate these entries rather than
   * naming paths themselves.
+  *
+  * Whole-table writes go through [[Table.publish]], the writer half of
+  * Delta Lake's protocol (VLDB 2020, §3) on plain parquet: the data is
+  * written to `<table>._staged` first, the gate reads what was written,
+  * and only a pass swaps it in (`core.ParquetTable.swap`). Failing data
+  * never becomes the table, and each layer is computed once: the gate
+  * and every later build read the written files, not the lazy plan.
+  * Each table is swapped on its own; a multi-table commit (a gold build
+  * whose dim_route fails after dim_date was swapped in) waits for a
+  * commit log.
   */
 object Warehouse {
 
-  /** The per-stage quality hook: (rows, suite, table name). */
+  /** The per-stage quality hook: (rows, suite, table name). A gate
+    * that throws stops the build with the table as it was.
+    */
   type Gate = (DataFrame, Seq[Expectation], String) => Unit
+  val noGate: Gate = (_, _, _) => ()
 
   /** One warehouse table. `shape` is applied to every write (the
     * repartition/sort that keeps each task writing few files);
     * `gatedAtBuild` says whether the build stage runs `suite` as a
-    * gate before writing, not only the validation sweep.
+    * gate before publishing, not only the validation sweep.
     */
   final case class Table(path: String, partitionBy: Seq[String] = Nil,
       shape: DataFrame => DataFrame = identity,
@@ -57,8 +71,25 @@ object Warehouse {
       ParquetTable.exists(spark, at(wh))
     def read(spark: SparkSession, wh: String): DataFrame =
       ParquetTable.read(spark, at(wh))
-    def write(df: DataFrame, wh: String): Unit =
-      ParquetTable.write(shape(df), at(wh), partitionBy)
+    /** Publish `df` as this table: write it to `<table>._staged`, read
+      * that back under its known schema (partition columns last, all
+      * nullable, as a parquet read gives them), gate the read-back,
+      * swap it in, and return the published table. A gate that throws
+      * drops the staged files and leaves the previous table in place.
+      */
+    def publish(df: DataFrame, wh: String, g: Gate = noGate): DataFrame = {
+      val spark = df.sparkSession
+      val shaped = shape(df)
+      val staged = s"${at(wh)}._staged"
+      ParquetTable.write(shaped, staged, partitionBy)
+      val cols = shaped.schema
+      val schema = StructType((cols.filterNot(f => partitionBy.contains(f.name)) ++
+        partitionBy.map(cols(_))).map(_.copy(nullable = true)))
+      try gate(g, ParquetTable.read(spark, staged, schema))
+      catch { case e: Throwable => ParquetTable.drop(spark, staged); throw e }
+      ParquetTable.swap(spark, staged, at(wh))
+      ParquetTable.read(spark, at(wh), schema)
+    }
     def append(df: DataFrame, wh: String): Unit =
       ParquetTable.append(shape(df), at(wh), partitionBy)
     /** Replace only the partitions `df` holds (see ParquetTable). */
@@ -117,6 +148,14 @@ object Warehouse {
     def tables: Seq[(Table, DataFrame)] = Seq(dimDate -> date,
       dimTime -> time, dimAirline -> airline, dimAirport -> airport,
       dimRoute -> route)
+    /** Publish each dim in write order; the published dims, so the
+      * fact and marts join the written tables, not five lazy
+      * aggregates over silver.
+      */
+    def publish(wh: String, g: Gate = noGate): Dims = {
+      val Seq(d, t, al, ap, r) = tables.map { case (tbl, df) => tbl.publish(df, wh, g) }
+      Dims(d, t, al, ap, r)
+    }
     def fact(silver: DataFrame): DataFrame =
       FactFlights.build(silver, date, airport, airline, route)
   }

@@ -48,14 +48,6 @@ object Portable {
     s"floor(($x) * $p + 0.5) / $p"
   }
 
-  /** Oracle replay of [[graft.expressions.LnDet]] (the deterministic
-    * ln for x ≥ 1): emits the 6 binary range-reduction steps as
-    * chained CTEs plus the Horner atanh-series final, every op the
-    * same two-operand IEEE op the engine executes. Returns the CTE
-    * text (no leading/trailing comma); the final CTE `${pfx}lnv`
-    * carries `$carry` plus `lnp` = lnDet($xExpr). `src` must provide
-    * the carry columns and whatever $xExpr reads.
-    */
   /** Oracle replay of [[graft.expressions.ExpDet]] (deterministic exp,
     * domain |x| ≤ 43): k = floor(x/ln2 + 0.5), 12-term Horner on the
     * reduced r, then the six exact binary scale steps — every op the
@@ -102,6 +94,14 @@ object Portable {
         FROM ${pfx}sc6)"""
   }
 
+  /** Oracle replay of [[graft.expressions.LnDet]] (the deterministic
+    * ln for x ≥ 1): emits the 6 binary range-reduction steps as
+    * chained CTEs plus the Horner atanh-series final, every op the
+    * same two-operand IEEE op the engine executes. Returns the CTE
+    * text (no leading/trailing comma); the final CTE `${pfx}lnv`
+    * carries `$carry` plus `lnp` = lnDet($xExpr). `src` must provide
+    * the carry columns and whatever $xExpr reads.
+    */
   def lnDetSqlCtes(pfx: String, src: String, carry: String,
       xExpr: String): String = {
     val steps = Seq((4294967296L, 32), (65536L, 16), (256L, 8),

@@ -143,6 +143,27 @@ class Dist2Spec extends SparkSpec {
     assert(bad == 0L)
   }
 
+  test("Dist2Decimal fold step overflows to null at scale 8, as the cast") {
+    // one step of the chain's fold: (acc + x) typed DECIMAL(38,7), cast
+    // to DECIMAL(38,8). Just below the boundary the sum needs 38 digits
+    // at scale 8; at it, 38 digits at scale 7 (fits the add) but 39 at
+    // scale 8, so the cast gives null. No array reaches such a sum
+    // (each square is < 1e20), so the step is pinned directly.
+    val x = new java.math.BigDecimal("1.00000000")
+    Seq("99999999999999999999999999999.99999999",
+        "999999999999999999999999999999.99999999").foreach { a =>
+      val acc = new java.math.BigDecimal(a)
+      val chain = spark.range(1).select(
+        (lit(acc).cast(DecimalType(38, 8)) + lit(x).cast(DecimalType(28, 8)))
+          .cast(DecimalType(38, 8))).head()
+      val step = Dist2Kernels.addCast38x8(acc, x)
+      assert((step == null) === chain.isNullAt(0), s"null mismatch at $a")
+      if (step != null) assert(step.compareTo(chain.getDecimal(0)) == 0, a)
+    }
+    assert(Dist2Kernels.addCast38x8(
+      new java.math.BigDecimal("999999999999999999999999999999.99999999"), x) == null)
+  }
+
   test("Dist2Double ≡ aggregate∘zip_with double chain incl. NaN flow") {
     val df = cases.toDF("v", "c")
     val rows = df.select(

@@ -51,4 +51,16 @@ class BronzeSpec extends SparkSpec {
     assert(fixed.select(col("FL_DATE").cast("string")).head().getString(0)
       === "2025-01-15 00:00:00")
   }
+
+  test("a lookup whose header is not Code,Description fails loudly") {
+    val swapped = java.nio.file.Files.createTempFile("graft-lookup", ".csv")
+    java.nio.file.Files.writeString(swapped,
+      "Description,Code\n\"American Airlines Inc.\",AA\n")
+    val e = intercept[Exception](
+      Bronze.readLookupCsv(spark, swapped.toString).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("CSV header does not conform to the schema"),
+      messages)
+  }
 }
