@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** SparkSession factory with the engine's standard configuration.
   *
@@ -10,8 +11,31 @@ import org.apache.spark.sql.SparkSession
   * engine: shuffle partitions sized to the local core count instead of
   * the 200 default (on a real cluster this is set to ~2-3x total cores
   * via --conf; the builder here only provides local-mode defaults).
+  *
+  * Memory pages are sized to the heap ([[pageSizeBytes]]). Spark's
+  * default page is nextPow2(execution pool / cores / 16) clamped to
+  * 1–64 MB: 16 MB in a 3 GB driver, 64 MB in a 7 GB one. A broadcast
+  * hash relation on a non-long key (`UnsafeHashedRelation`: the string
+  * AIRLINE_CODE / AIRPORT_CODE / ROUTE_CODE dim joins) allocates one
+  * whole page however few rows it holds, and keeps it until the
+  * ContextCleaner drops the broadcast, so a gold build's seven such
+  * relations held 112 MB for dims of a few KB. The derived page is the
+  * smallest power of two ≥ 1 MB (Spark's floor) such that 8192 pages —
+  * `TaskMemoryManager`'s page-table size — cover the whole heap, so one
+  * task runs out of heap before it can hit "Have already allocated a
+  * maximum of 8192 pages": 1 MB up to an 8 GB heap, 16 MB at 128 GB.
+  * A `--conf spark.buffer.pageSize` (a system property by the time the
+  * driver builds its session) still overrides it; on a real cluster the
+  * value derives from the driver's heap, so size it for the executors'
+  * heap there.
   */
 object GraftSession {
+
+  /** Spark's memory-page size for a JVM with `maxHeap` bytes of heap
+    * (see the object doc): nextPow2(max(1 MB, ⌈maxHeap / 8192⌉)).
+    */
+  def pageSizeBytes(maxHeap: Long = Runtime.getRuntime.maxMemory): Long =
+    ByteArrayMethods.nextPowerOf2(math.max(1L << 20, (maxHeap + 8191) / 8192))
 
   /** Apply graft's standard confs to any builder (shared by mains and
     * tests so plans are identical everywhere).
@@ -71,6 +95,8 @@ object GraftSession {
       // projections (34-col silver, stacked percentile structs) exceed
       // the 25-field default and warn once per job otherwise
       .config("spark.sql.debug.maxToStringFields", "200")
+      .config("spark.buffer.pageSize",
+        sys.props.getOrElse("spark.buffer.pageSize", pageSizeBytes().toString))
 
   /** Local session: `cores` executor threads in-process. */
   def local(cores: Int = localCores, appName: String = "graft"): SparkSession = {

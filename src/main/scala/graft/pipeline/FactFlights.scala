@@ -11,7 +11,11 @@ import org.apache.spark.sql.functions._
   * of rows, so the fact build is a map-only stage over silver (no
   * shuffle at all until the partitioned write). The DATE_KEY join is a
   * computed-key join (date_format yyyyMMdd → int), matching the
-  * reference exactly.
+  * reference exactly. The string-keyed dim broadcasts (AIRLINE_CODE,
+  * AIRPORT_CODE, ROUTE_CODE) are `UnsafeHashedRelation`s, each holding
+  * one memory page however few rows it has; `core.GraftSession` sizes
+  * that page to the heap (1 MB below an 8 GB heap), not Spark's 16–64
+  * MB default.
   */
 object FactFlights {
 

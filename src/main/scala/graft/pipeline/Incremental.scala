@@ -107,22 +107,25 @@ object Incremental {
             .reduce(_ && _),
           "left_anti")
       }
-    try Warehouse.silver.gate(gate, fresh)
-    catch { case e: Throwable => silverDelta.unpersist(blocking = false); throw e }
-    Warehouse.silver.append(fresh, wh)
+    // The date list is a bounded partition enumeration (≤ the delta's
+    // distinct days); the touched months derive from the SAME driver-
+    // side list, so the fact-build lineage is never re-executed just
+    // to enumerate months. The cache is released on every path, before
+    // the dims and fact rebuild.
+    val touchedDates =
+      try {
+        Warehouse.silver.gate(gate, fresh)
+        Warehouse.silver.append(fresh, wh)
+        silverDelta.select(col("FLIGHT_DATE"))
+          .distinct().collect().map(_.getDate(0)).toSeq
+      } finally silverDelta.unpersist(blocking = false)
 
     // dims: tiny outputs, rebuilt from full silver (see object doc)
     val silver = Warehouse.silver.read(spark, wh)
     val dims = Warehouse.dims(spark, silver).publish(wh)
 
     // fact rebuild for the touched days FROM MERGED SILVER (see object
-    // doc). The date list is a bounded partition enumeration (≤ the
-    // delta's distinct days); the touched months derive from the SAME
-    // driver-side list, so the fact-build lineage is never re-executed
-    // just to enumerate months.
-    val touchedDates = silverDelta.select(col("FLIGHT_DATE"))
-      .distinct().collect().map(_.getDate(0)).toSeq
-    silverDelta.unpersist(blocking = false)
+    // doc)
     Warehouse.fact.overwritePartitions(
       dims.fact(silver.filter(col("FLIGHT_DATE").isin(touchedDates: _*))), wh)
 

@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   * hash aggregation whose only shuffle is its own group-by key. The
   * airport mart computes departures and arrivals as two aggs over the
   * same fact scan, then a full-outer join on the (date, airport) key.
+  * A string-keyed dim broadcast (AIRLINE_CODE, AIRPORT_CODE,
+  * ROUTE_CODE) costs one memory page, which `core.GraftSession` sizes
+  * to the heap (1 MB below an 8 GB heap).
   */
 object Marts {
 

@@ -1696,6 +1696,21 @@ object TextAnalysis {
       ORDER BY n_uses DESC, piece"""
     })
 
+  /** The per-document reliability frame of the calibration queries
+    * (q221, q229, q260, q298): `keep` columns, then `bin` = token count
+    * capped at 99 (an int, or a long when `longBin`) and `pos` = 1 when
+    * the document repeats a token.
+    */
+  private def reliability(docs: org.apache.spark.sql.DataFrame,
+      longBin: Boolean, keep: org.apache.spark.sql.Column*)
+      : org.apache.spark.sql.DataFrame = {
+    val toks = tokens(col("text"))
+    val bin = least(lit(99), size(toks))
+    docs.select(keep ++ Seq(
+      (if (longBin) bin.cast("long") else bin).as("bin"),
+      (size(array_distinct(toks)) < size(toks)).cast("long").as("pos")): _*)
+  }
+
   // -- T26: ISOTONIC score calibration (operators.Isotonic) — pool-
   //    adjacent-violators turns a ranking signal into a monotone
   //    probability, the standard calibration for the quality-gate
@@ -1713,11 +1728,7 @@ object TextAnalysis {
   private val q221 = Q(
     "q221_isotonic_calibration",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      val toks = tokens(col("text"))
-      val perdoc = t.documents.select(
-        least(lit(99), size(toks)).as("bin"),
-        (size(array_distinct(toks)) < size(toks)).cast("long").as("pos"))
+      val perdoc = reliability(Tpch(s, dir).documents, longBin = false)
       graft.operators.Isotonic.calibrate(perdoc, "bin", "pos")
         .select(col("bin"), col("n"), col("n_pos"),
           pround(col("p_hat"), 6).as("p_hat"),
@@ -1854,11 +1865,8 @@ object TextAnalysis {
   private val q229 = Q(
     "q229_isotonic_gate",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      val toks = tokens(col("text"))
-      val perdoc = t.documents.select(col("doc_id"),
-        least(lit(99), size(toks)).as("bin"),
-        (size(array_distinct(toks)) < size(toks)).cast("long").as("pos"))
+      val perdoc =
+        reliability(Tpch(s, dir).documents, longBin = false, col("doc_id"))
       val calib = graft.operators.Isotonic
         .calibrate(perdoc.select(col("bin"), col("pos")), "bin", "pos")
         .select(col("bin"), col("p_cal"))
@@ -1887,11 +1895,7 @@ object TextAnalysis {
   private val q260 = Q(
     "q260_ece_calibration",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      val toks = tokens(col("text"))
-      val perdoc = t.documents.select(
-          least(lit(99), size(toks)).cast("long").as("bin"),
-          (size(array_distinct(toks)) < size(toks)).cast("long").as("pos"))
+      val perdoc = reliability(Tpch(s, dir).documents, longBin = true)
         .withColumn("pbin",
           least(expr("(bin * 10) div 99"), lit(9L)).cast("int"))
       val bins = perdoc.groupBy(col("pbin"))
@@ -2928,11 +2932,7 @@ object TextAnalysis {
   private val q298 = Q(
     "q298_brier_decomposition",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      val toks = tokens(col("text"))
-      val perdoc = t.documents.select(
-          least(lit(99), size(toks)).cast("long").as("bin"),
-          (size(array_distinct(toks)) < size(toks)).cast("long").as("pos"))
+      val perdoc = reliability(Tpch(s, dir).documents, longBin = true)
         .withColumn("pbin",
           least(expr("(bin * 10) div 99"), lit(9L)))
         .withColumn("e", lit(2L) * col("pbin") + lit(1L)

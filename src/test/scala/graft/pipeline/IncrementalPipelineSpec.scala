@@ -74,6 +74,8 @@ class IncrementalPipelineSpec extends SparkSpec {
     RunPipeline.runGold(spark, whIncr)
     val months = Incremental.run(spark, whIncr, feb, airports, carriers)
     assert(months === Seq(202502), "exactly the delta's month is refreshed")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the fold left its silver delta cached")
 
     for (t <- Seq("gold/dim_airline", "gold/dim_airport", "gold/dim_route",
         "gold/fact_flights", "gold/daily_airline_performance",

@@ -123,6 +123,8 @@ class PublishSpec extends SparkSpec {
     val refuse = new Refuse("silver")
     intercept[Refused](Incremental.run(spark, wh, feb, airports, carriers, refuse))
     assert(refuse.seen === 12, "the gate sees the rows about to be appended")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a refused fold left its silver delta cached")
     assert((rows(wh, Warehouse.silver), rows(wh, Warehouse.fact), martFlights())
       === before)
 
