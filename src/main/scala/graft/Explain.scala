@@ -42,20 +42,35 @@ object Explain {
 
   /** Fingerprint of `df`'s static plans: the optimized logical plan and
     * the physical plan before adaptive execution, with expression and
-    * plan ids, object identities, the data, checkout and temp directories
-    * and the random suffix of temp names normalized, hashed to 16 hex
+    * plan ids, the JVM-wide counter in lambda variable names (`x_424`),
+    * object identities, the data, checkout and temp directories and the
+    * random suffix of temp names normalized, hashed to 16 hex
     * digits. The counters above read the final AQE plan, whose join
     * build sides depend on which stage finished first; this hash is
     * equal across runs and checkouts when the plan is.
+    *
+    * A file scan prints its `Location` cut at
+    * `spark.sql.maxMetadataStringLength` characters, so the cut would
+    * fall at a different place of the path in checkouts whose paths
+    * differ in length: the printed locations are dropped and every
+    * scan's root paths are hashed whole instead.
     */
   def planHash(df: org.apache.spark.sql.DataFrame, sfDir: String): String = {
     val qe = df.queryExecution
+    val roots = qe.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.mkString(", ")
+    }
+    val physical = qe.sparkPlan.toString
+      .replaceAll("Location: .*?(?=, PartitionFilters: )", "Location: ") +
+      roots.sorted.mkString("\n", "\n", "")
     val dirs = Seq(new java.io.File(sfDir).getAbsolutePath -> "<data>",
       sys.props("user.dir") -> "<checkout>",
       sys.props("java.io.tmpdir") -> "<tmp>")
-    val text = dirs.foldLeft(s"${qe.optimizedPlan}\n${qe.sparkPlan}") {
+    val text = dirs.foldLeft(s"${qe.optimizedPlan}\n$physical") {
       case (t, (dir, tag)) => t.replace(dir, tag)
     }.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("(lambda [A-Za-z]+)_\\d+", "$1_")
       .replaceAll("\\$\\$Lambda\\$[^ ,)\\]]*", "\\$\\$Lambda")
       .replaceAll("@[0-9a-f]{4,8}\\b", "@")
       .replaceAll("(<tmp>/[A-Za-z_]*)-?\\d{6,}", "$1")

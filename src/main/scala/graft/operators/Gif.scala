@@ -326,14 +326,7 @@ object Gif {
     StructField("media_id", LongType),
     StructField("width", IntegerType),
     StructField("height", IntegerType),
-    StructField("n_frames", IntegerType),
-    StructField("p_first_r", IntegerType),
-    StructField("p_first_g", IntegerType),
-    StructField("p_first_b", IntegerType),
-    StructField("p_last_r", IntegerType),
-    StructField("p_last_g", IntegerType),
-    StructField("p_last_b", IntegerType),
-    StructField("pix_sum", LongType)))
+    StructField("n_frames", IntegerType)) ++ Multimodal.cornerFields)
 
   /** Distributed decode: DataFrame(media_id, content) → dimensions,
     * frame count, first/last pixel RGB of the first frame, and the

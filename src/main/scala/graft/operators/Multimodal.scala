@@ -10,15 +10,17 @@ import org.apache.spark.sql.types._
   * amortize per-batch initialization (model load, JNI handles) the way
   * a Pandas-UDF batch would.
   *
-  * The decode step is a REAL pure-JVM container-header parser for the
+  * [[decodeFeatures]] is a pure-JVM container-header parser for the
   * public PNG / BMP / WAV formats (published specs: PNG RFC 2083 §3.1
-  * IHDR; BITMAPINFOHEADER; RIFF/WAVE fmt chunk) — it recovers
+  * IHDR; BITMAPINFOHEADER; RIFF/WAVE fmt chunk): it recovers
   * width/height/channels (sample-rate/bit-depth/channels for audio)
-  * from the leading bytes without any codec library. Full pixel/sample
-  * decode of compressed payloads would need an actual codec (libpng,
-  * ffmpeg) this container doesn't ship; the header path exercises the
-  * same plumbing — schema, batch shape, per-partition init point —
-  * that a full decoder plugs into.
+  * from the leading bytes. Full pixel and sample decode is pure JVM
+  * code too, with no codec library: PNG through java.util.zip's
+  * Inflater, BMP, and PCM / IMA-ADPCM / G.711 WAV here; baseline and
+  * progressive JPEG in [[Jpeg]], GIF/LZW in [[Gif]], TIFF/PackBits in
+  * [[Tiff]], AVI (raw and MJPEG) in [[VideoAvi]] and MP4 in
+  * [[VideoMp4]]. Each codec has its encoder next to its decoder, so
+  * queries synthesize media and specs round-trip it.
   *
   * Scale notes: payload bytes stay columnar parquet binary; frame
   * sampling is a narrow per-row expression; the mapPartitions decode
@@ -99,33 +101,40 @@ object Multimodal {
   /** Nearest-neighbor resize of an uncompressed 24bpp BMP — REAL pixel
     * manipulation, pure JVM: output pixel (x, y) copies input pixel
     * (⌊x·w/outW⌋, ⌊y·h/outH⌋). Emits a well-formed bottom-up 24bpp BMP
-    * (fresh 54-byte header, rows re-padded). Compressed formats (PNG,
-    * JPEG) need a codec and are not accepted here — this is the
-    * operation's distributed shape with the arithmetic done honestly
-    * on the one public format that needs no decompressor.
+    * ([[bmp24]]: fresh 54-byte header, rows re-padded). Only BMP is
+    * accepted here; decoded PNG pixels resize with [[resizePixels]].
     */
   def resizeBmp24(bytes: Array[Byte], outW: Int, outH: Int): Array[Byte] = {
     require(bytes.length >= 54 && bytes(0) == 'B' && bytes(1) == 'M' &&
       le16(bytes, 28) == 24, "uncompressed 24bpp BMP required")
     val w = le32(bytes, 18)
     val h = math.abs(le32(bytes, 22))
-    val outRow = ((3 * outW + 3) / 4) * 4
-    val out = new Array[Byte](54 + outRow * outH)
-    // header: BM, size, offset 54, BITMAPINFOHEADER(40), dims, 1 plane, 24bpp
+    bmp24(outW, outH, (x, y) => bmpPixel(bytes, x * w / outW, y * h / outH))
+  }
+
+  /** An uncompressed bottom-up 24bpp BMP of `w` x `h` pixels, (r, g, b)
+    * = `pixel(x, y)` with a top-left origin: BITMAPFILEHEADER (pixel
+    * offset 54), BITMAPINFOHEADER (size 40, 1 plane, 24 bpp), then BGR
+    * rows padded to 4 bytes, last image row first.
+    */
+  def bmp24(w: Int, h: Int, pixel: (Int, Int) => (Int, Int, Int))
+      : Array[Byte] = {
+    val rowSize = ((3 * w + 3) / 4) * 4
+    val out = new Array[Byte](54 + rowSize * h)
     def putLe32(o: Int, v: Int): Unit = {
       out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
       out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >> 24).toByte
     }
     out(0) = 'B'; out(1) = 'M'
     putLe32(2, out.length); putLe32(10, 54); putLe32(14, 40)
-    putLe32(18, outW); putLe32(22, outH)
+    putLe32(18, w); putLe32(22, h)
     out(26) = 1; out(28) = 24
     var y = 0
-    while (y < outH) {
+    while (y < h) {
       var x = 0
-      while (x < outW) {
-        val (r, g, b) = bmpPixel(bytes, x * w / outW, y * h / outH)
-        val p = 54 + (outH - 1 - y) * outRow + x * 3
+      while (x < w) {
+        val (r, g, b) = pixel(x, y)
+        val p = 54 + (h - 1 - y) * rowSize + x * 3
         out(p) = b.toByte; out(p + 1) = g.toByte; out(p + 2) = r.toByte
         x += 1
       }
@@ -231,6 +240,16 @@ object Multimodal {
     None
   }
 
+  /** The `fmt ` and `data` chunks, (offset, size) each, of a RIFF/WAVE
+    * file; None when the bytes are not RIFF/WAVE or lack either chunk.
+    */
+  private def wavChunks(bytes: Array[Byte])
+      : Option[((Int, Int), (Int, Int))] =
+    if (bytes == null || bytes.length < 12 ||
+        new String(bytes, 0, 4, "US-ASCII") != "RIFF" ||
+        new String(bytes, 8, 4, "US-ASCII") != "WAVE") None
+    else riffChunk(bytes, "fmt ").zip(riffChunk(bytes, "data"))
+
   /** 16-bit samples of a mono IMA-ADPCM (format 0x0011) RIFF/WAVE:
     * chunk-walked fmt + data, block-by-block nibble decode. Returns
     * empty on anything malformed (wrong tag, stereo, bad block align,
@@ -240,14 +259,7 @@ object Multimodal {
     * use.
     */
   def adpcmWavSamples(bytes: Array[Byte]): Array[Int] = {
-    if (bytes == null || bytes.length < 12 ||
-        new String(bytes, 0, 4, "US-ASCII") != "RIFF" ||
-        new String(bytes, 8, 4, "US-ASCII") != "WAVE") return Array.empty
-    val fmtOpt = riffChunk(bytes, "fmt ")
-    val dataOpt = riffChunk(bytes, "data")
-    if (fmtOpt.isEmpty || dataOpt.isEmpty) return Array.empty
-    val (fo, fs) = fmtOpt.get
-    val (do_, ds) = dataOpt.get
+    val ((fo, fs), (do_, ds)) = wavChunks(bytes).getOrElse(return Array.empty)
     if (fs < 16 || le16(bytes, fo) != 0x11 || le16(bytes, fo + 2) != 1)
       return Array.empty
     val blockAlign = le16(bytes, fo + 12)
@@ -292,16 +304,8 @@ object Multimodal {
     require(blockAlign >= 5, s"blockAlign $blockAlign too small")
     val spb = (blockAlign - 4) * 2 + 1
     val nBlocks = if (samples.isEmpty) 0 else (samples.length + spb - 1) / spb
-    val dataSize = nBlocks * blockAlign
-    val bos = java.nio.ByteBuffer.allocate(12 + 8 + 20 + 8 + dataSize)
+    val bos = java.nio.ByteBuffer.allocate(nBlocks * blockAlign)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bos.put("RIFF".getBytes("US-ASCII")).putInt(4 + 28 + 8 + dataSize)
-      .put("WAVE".getBytes("US-ASCII"))
-    bos.put("fmt ".getBytes("US-ASCII")).putInt(20)
-      .putShort(0x11).putShort(1).putInt(sampleRate)
-      .putInt(sampleRate * blockAlign / spb).putShort(blockAlign.toShort)
-      .putShort(4).putShort(2).putShort(spb.toShort)
-    bos.put("data".getBytes("US-ASCII")).putInt(dataSize)
     var s = 0
     while (s < samples.length) {
       var pred = clampSample(samples(s))
@@ -341,7 +345,29 @@ object Multimodal {
       }
       s += spb
     }
-    bos.array()
+    monoWav(0x11, sampleRate, sampleRate * blockAlign / spb, blockAlign, 4,
+      Seq(2, spb), bos.array())
+  }
+
+  /** A mono RIFF/WAVE file: the RIFF header, a `fmt ` chunk (format
+    * `tag`, 1 channel, `rate`, `byteRate`, `blockAlign`, `bits`, then
+    * the 16-bit `ext` words a non-PCM format appends, cbSize first) and
+    * one `data` chunk holding `data`, which starts at byte
+    * 44 + 2·|ext|.
+    */
+  def monoWav(tag: Int, rate: Int, byteRate: Int, blockAlign: Int,
+      bits: Int, ext: Seq[Int], data: Array[Byte]): Array[Byte] = {
+    val fmtLen = 16 + 2 * ext.size
+    val bb = java.nio.ByteBuffer.allocate(28 + fmtLen + data.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(20 + fmtLen + data.length)
+      .put("WAVE".getBytes("US-ASCII"))
+    bb.put("fmt ".getBytes("US-ASCII")).putInt(fmtLen)
+      .putShort(tag.toShort).putShort(1).putInt(rate).putInt(byteRate)
+      .putShort(blockAlign.toShort).putShort(bits.toShort)
+    ext.foreach(w => bb.putShort(w.toShort))
+    bb.put("data".getBytes("US-ASCII")).putInt(data.length).put(data)
+    bb.array()
   }
 
   // -- G.711 µ-law (format tag 0x0007) and A-law (0x0006) — the
@@ -382,14 +408,7 @@ object Multimodal {
     * can never inflate it.
     */
   def g711WavSamples(bytes: Array[Byte]): Array[Int] = {
-    if (bytes == null || bytes.length < 12 ||
-        new String(bytes, 0, 4, "US-ASCII") != "RIFF" ||
-        new String(bytes, 8, 4, "US-ASCII") != "WAVE") return Array.empty
-    val fmtOpt = riffChunk(bytes, "fmt ")
-    val dataOpt = riffChunk(bytes, "data")
-    if (fmtOpt.isEmpty || dataOpt.isEmpty) return Array.empty
-    val (fo, fs) = fmtOpt.get
-    val (do_, ds) = dataOpt.get
+    val ((fo, fs), (do_, ds)) = wavChunks(bytes).getOrElse(return Array.empty)
     if (fs < 16 || fo + 16 > bytes.length) return Array.empty
     val tag = le16(bytes, fo)
     if ((tag != 0x0006 && tag != 0x0007) || le16(bytes, fo + 2) != 1 ||
@@ -679,17 +698,19 @@ object Multimodal {
       }(enc)
   }
 
+  /** The pixel fingerprint an image decoder reports after its own
+    * columns: first and last pixel (r, g, b) and the sum of every
+    * channel sample.
+    */
+  private[operators] val cornerFields: Seq[StructField] =
+    Seq("p_first_r", "p_first_g", "p_first_b", "p_last_r", "p_last_g",
+      "p_last_b").map(StructField(_, IntegerType)) :+
+      StructField("pix_sum", LongType)
+
   val resizedSchema: StructType = StructType(Seq(
     StructField("media_id", LongType),
     StructField("out_w", IntegerType),
-    StructField("out_h", IntegerType),
-    StructField("p_first_r", IntegerType),
-    StructField("p_first_g", IntegerType),
-    StructField("p_first_b", IntegerType),
-    StructField("p_last_r", IntegerType),
-    StructField("p_last_g", IntegerType),
-    StructField("p_last_b", IntegerType),
-    StructField("pix_sum", LongType)))
+    StructField("out_h", IntegerType)) ++ cornerFields)
 
   /** Distributed resize: every BMP payload is resized to outW×outH
     * (nearest neighbor) per partition, then summarized as the corner
@@ -1142,14 +1163,7 @@ object Multimodal {
     StructField("media_id", LongType),
     StructField("width", IntegerType),
     StructField("height", IntegerType),
-    StructField("channels", IntegerType),
-    StructField("p_first_r", IntegerType),
-    StructField("p_first_g", IntegerType),
-    StructField("p_first_b", IntegerType),
-    StructField("p_last_r", IntegerType),
-    StructField("p_last_g", IntegerType),
-    StructField("p_last_b", IntegerType),
-    StructField("pix_sum", LongType)))
+    StructField("channels", IntegerType)) ++ cornerFields)
 
   /** Distributed full-pixel PNG decode: DataFrame(media_id, content) →
     * dimensions, first/last pixel RGB, and the checksum Σ over EVERY

@@ -342,6 +342,48 @@ object TrainingPrep {
           col(tokenCol).cast("long")) - col("seg_start"))
       .drop("first_seq", "last_seq", "n_seqs")
 
+  /** Assemble the training sequences [[packSegments]] plans: each
+    * non-empty segment slices its document's `ids` array, and each
+    * `seq_id` concatenates its slices in offset order into `ids`.
+    * Output: (seq_id, ids). Scale: the slices are narrow; assembly
+    * shuffles each id once, keyed by seq_id.
+    */
+  def packSequences(
+      df: DataFrame,
+      orderCol: String,
+      tokenCol: String,
+      seqLen: Int): DataFrame =
+    packSegments(df, orderCol, tokenCol, seqLen)
+      .filter(col("seg_len") > 0)
+      .select(col("seq_id"), col("offset"),
+        slice(col("ids"), (col("seg_start") + 1).cast("int"),
+          col("seg_len").cast("int")).as("piece"))
+      .groupBy(col("seq_id"))
+      .agg(flatten(transform(
+        array_sort(collect_list(struct(col("offset"), col("piece")))),
+        x => x.getField("piece"))).as("ids"))
+
+  /** Oracle twin of [[packSequences]]: DuckDB CTEs `segs`, `pieces`
+    * and `seqs(seq_id, ids)` over a CTE `offs` that holds each
+    * document's `ids`, their count `n` and its exclusive token prefix
+    * `off` in pack order.
+    */
+  def packSequencesSqlCtes(seqLen: Int): String =
+    s"""segs AS (
+        SELECT seq_id, off, ids, n,
+          GREATEST(seq_id * $seqLen - off, 0) AS seg_start,
+          LEAST((seq_id + 1) * $seqLen - off, n)
+            - GREATEST(seq_id * $seqLen - off, 0) AS seg_len
+        FROM (SELECT *, unnest(generate_series(off // $seqLen,
+                (off + n - 1) // $seqLen)) AS seq_id
+              FROM offs)),
+      pieces AS (
+        SELECT seq_id, off, ids[seg_start + 1 : seg_start + seg_len] AS piece
+        FROM segs WHERE seg_len > 0),
+      seqs AS (
+        SELECT seq_id, flatten(list(piece ORDER BY off)) AS ids
+        FROM pieces GROUP BY seq_id)"""
+
   /** Byte-targeted OUTPUT-SHARD manifest — the publishing step's size
     * planner (WebDataset/JSONL shards of ~targetBytes each, the ~1 GB
     * discipline every tar/WARC consumer assumes): documents stay

@@ -78,15 +78,7 @@ object DatasetPipeline {
     val ordered = TrainingPrep.shuffleOrder(ids, "doc_id", seed, numShards)
       .withColumn("ord",
         col("shard").cast("long") * lit(1L << 40) + col("pos"))
-    val seqs = TrainingPrep.packSegments(ordered, "ord", "n_tokens", seqLen)
-      .filter(col("seg_len") > 0)
-      .select(col("seq_id"), col("offset"),
-        slice(col("ids"), (col("seg_start") + 1).cast("int"),
-          col("seg_len").cast("int")).as("piece"))
-      .groupBy(col("seq_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("offset"), col("piece")))),
-        x => x.getField("piece"))).as("ids"))
+    val seqs = TrainingPrep.packSequences(ordered, "ord", "n_tokens", seqLen)
       .withColumn("n_ids", size(col("ids")))
     seqs.write.mode("overwrite").parquet(s"$outDir/sequences")
     spark.read.parquet(s"$outDir/sequences").count()
@@ -135,15 +127,7 @@ object DatasetPipeline {
       .withColumn("ord",
         col("shard").cast("long") * lit(1L << 40) + col("pos"))
       .localCheckpoint() // read by assembly AND alignment
-    val seqs = TrainingPrep.packSegments(ordered, "ord", "n_tokens", seqLen)
-      .filter(col("seg_len") > 0)
-      .select(col("seq_id"), col("offset"),
-        slice(col("ids"), (col("seg_start") + 1).cast("int"),
-          col("seg_len").cast("int")).as("piece"))
-      .groupBy(col("seq_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("offset"), col("piece")))),
-        x => x.getField("piece"))).as("ids"))
+    val seqs = TrainingPrep.packSequences(ordered, "ord", "n_tokens", seqLen)
       .withColumn("n_ids", size(col("ids")))
     val align = TrainingPrep.packOffsets(ordered, "ord", "n_tokens", seqLen)
       .select(col("doc_id"), col("offset"),

@@ -1,15 +1,18 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.Tpch
-import graft.operators.Multimodal
+import graft.operators.{Jpeg, Multimodal}
 import Portable._
 
-/** Multimodal binary-column plumbing exercised end-to-end over real
-  * data: documents.text encoded to a binary payload column, then
-  * byte-level features (length, md5 checksum, fixed-stride frame
-  * samples) — the schema/partitioning/slicing path a real image/audio
-  * pipeline rides, with the codec stubbed (see operators.Multimodal).
+/** Multimodal queries over real bytes: documents.text as a binary
+  * payload column with byte-level features (length, md5 checksum,
+  * fixed-stride frame samples), and per-doc synthetic media (PNG, BMP,
+  * baseline and progressive JPEG, GIF, TIFF, AVI raw and MJPEG, MP4,
+  * PCM / IMA-ADPCM / G.711 WAV) built from doc_id formulas and decoded
+  * back by the pure-JVM codecs in graft.operators. Each oracle
+  * recomputes the decoded values from the same formulas.
   *
   * Oracle note: DuckDB 1.0 has no BLOB substring, but the corpus is
   * ASCII, so the oracle slices text then encodes — byte-identical.
@@ -18,6 +21,26 @@ object MultimodalQueries {
 
   private val FRAME = 32
   private val STRIDE = 64
+
+  /** One synthesized media row (media_id, content, mime) per document
+    * that passes `keep`. The per-row encode is the compute, so the scan
+    * splits are fanned out first; `encoder()` runs once per partition
+    * (a codec's state, such as a Deflater, lives there) and returns the
+    * doc_id → (bytes, mime) encoder.
+    */
+  private def synthMedia(s: SparkSession, dir: String,
+      keep: Column = lit(true))(
+      encoder: () => Long => (Array[Byte], String)): DataFrame =
+    graft.core.Scan.fanOut(
+        Tpch(s, dir).documents.select(col("doc_id")).filter(keep))
+      .mapPartitions { rows =>
+        val enc = encoder()
+        rows.map { r =>
+          val d = r.getLong(0)
+          val (bytes, mime) = enc(d)
+          Row(d, bytes, mime)
+        }
+      }(Encoders.row(Multimodal.mediaSchema))
 
   private val q29 = Q(
     "q29_binary_features",
@@ -52,7 +75,6 @@ object MultimodalQueries {
   // reads, little-endian BITMAPINFOHEADER/fmt-chunk reads — while the
   // oracle recomputes them from the doc_id formulas. A decoder that
   // misreads any offset or endianness diverges from the oracle.
-  import org.apache.spark.sql.Column
   private def be32hex(c: Column): Column = lpad(hex(c), 8, "0")
   private def le32hex(c: Column): Column = {
     val h = be32hex(c)
@@ -174,17 +196,21 @@ object MultimodalQueries {
     * doc, samples s(i) = (d·31 + 17i) % 2003 − 1001 — shared by q61
     * (amplitude stats) and q225 (resonator band energies).
     */
-  private def pcmMedia(t: graft.core.Tables.Tpch)
-      : org.apache.spark.sql.DataFrame = {
-    val d = col("doc_id")
-    val sampleHex = (0 until 64).map { i =>
-      val sample = pmod(d * 31 + lit(17 * i), lit(2003)) - lit(1001)
+  private def pcmMedia(t: Tpch): DataFrame =
+    pcm16Wav(t, (0 until 64).map { i =>
+      val sample = pmod(col("doc_id") * 31 + lit(17 * i), lit(2003)) - lit(1001)
       le16hex(pmod(sample, lit(65536))) // two's complement 16-bit
-    }
+    })
+
+  /** Canonical mono 16-bit 8 kHz WAV per doc (media_id, content):
+    * `sampleHex` holds the 64 samples as little-endian hex.
+    */
+  private def pcm16Wav(t: Tpch, sampleHex: Seq[Column]): DataFrame = {
+    require(sampleHex.size == 64, "the header declares 64 samples")
     val header = lit("52494646" + "A4000000" + "57415645" + "666D7420" +
       "10000000" + "0100" + "0100" + "401F0000" + "803E0000" + "0200" +
       "1000" + "64617461" + "80000000")
-    t.documents.select(d.as("media_id"),
+    t.documents.select(col("doc_id").as("media_id"),
       unhex(concat(header +: sampleHex: _*)).as("content"))
   }
 
@@ -218,39 +244,38 @@ object MultimodalQueries {
   // alpha handling diverges.
   private val PW = 8
   private val PH = 6
+
+  /** q89's PNG of doc `d`: 8x6, RGB for even d and RGBA for odd, with
+    * scanline filter (d + y) % 5 on row y.
+    */
+  private def q89Png(d: Long, deflater: java.util.zip.Deflater)
+      : Array[Byte] = {
+    val c = if (d % 2 == 0) 3 else 4
+    val px = new Array[Byte](PW * PH * c)
+    var y = 0
+    while (y < PH) {
+      var x = 0
+      while (x < PW) {
+        val i = (y * PW + x) * c
+        px(i) = ((d + 7 * x + 13 * y) % 256).toByte
+        px(i + 1) = ((3 * d + 5 * x + y) % 256).toByte
+        px(i + 2) = ((d + x * y) % 256).toByte
+        if (c == 4) px(i + 3) = ((d + x + y) % 256).toByte
+        x += 1
+      }
+      y += 1
+    }
+    Multimodal.pngEncode(Multimodal.PngImage(PW, PH, c, px),
+      yy => ((d + yy) % 5).toInt, deflater)
+  }
+
   private val q89 = Q(
     "q89_png_pixels",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      // per-row deflate is the compute; restore scan splits locally
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          val deflater = new java.util.zip.Deflater()
-          rows.map { r =>
-            val d = r.getLong(0)
-            val c = if (d % 2 == 0) 3 else 4
-            val px = new Array[Byte](PW * PH * c)
-            var y = 0
-            while (y < PH) {
-              var x = 0
-              while (x < PW) {
-                val i = (y * PW + x) * c
-                px(i) = ((d + 7 * x + 13 * y) % 256).toByte
-                px(i + 1) = ((3 * d + 5 * x + y) % 256).toByte
-                px(i + 2) = ((d + x * y) % 256).toByte
-                if (c == 4) px(i + 3) = ((d + x + y) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            val bytes = Multimodal.pngEncode(
-              Multimodal.PngImage(PW, PH, c, px),
-              yy => ((d + yy) % 5).toInt, deflater)
-            Row(d, bytes, "image/png")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () =>
+        val deflater = new java.util.zip.Deflater()
+        d => (q89Png(d, deflater), "image/png")
+      }
       Multimodal.pngFeatures(media).orderBy(col("media_id"))
     },
     Some(s"""SELECT doc_id AS media_id,
@@ -285,62 +310,72 @@ object MultimodalQueries {
   // Clamping is exercised: R/B leave [0,255] for ~1/4 of blocks.
   private val JW = 16
   private val JH = 16
+  private val JFIF_SAMPLING = Seq((1, 1), (1, 1), (1, 1)) // 4:4:4
+  private val JFIF_QUANT = Seq.fill(3)(Array.fill(64)(8)) // flat Q=8
+
+  /** DC-only coefficients of the 16x16 JFIF model (q118, q127, and
+    * q200's frame `f`): component c's block (bx, by) holds only its DC
+    * term, Y = (5d + 31f + 7bx + 11by) % 200 − 100,
+    * Cb = (3d + 13f + bx + 2by) % 100 − 50, Cr = (7d + 19f + 2bx + by)
+    * % 100 − 50. Encode with [[JFIF_SAMPLING]] and [[JFIF_QUANT]].
+    */
+  private def jfifDcBlocks(d: Long, f: Int): (Int, Int, Int) => Array[Int] =
+    (c, by, bx) => {
+      val a = new Array[Int](64)
+      a(0) = c match {
+        case 0 => ((d * 5 + f * 31 + bx * 7 + by * 11) % 200).toInt - 100
+        case 1 => ((d * 3 + f * 13 + bx + 2 * by) % 100).toInt - 50
+        case _ => ((d * 7 + f * 19 + 2 * bx + by) % 100).toInt - 50
+      }
+      a
+    }
+
+  /** Oracle twin of [[jfifDcBlocks]]: the decoded (r, g, b) of frame
+    * `f`'s block (bx, by), the JFIF YCbCr→RGB doubles rounded half-up
+    * and clamped to [0, 255].
+    */
+  private def jfifRgbSql(f: String, bx: String, by: String)
+      : (String, String, String) = {
+    val y = s"(128 + (doc_id*5 + ($f)*31 + ($bx)*7 + ($by)*11) % 200 - 100)"
+    val cb = s"((doc_id*3 + ($f)*13 + ($bx) + 2*($by)) % 100 - 50)"
+    val cr = s"((doc_id*7 + ($f)*19 + 2*($bx) + ($by)) % 100 - 50)"
+    def clamp(e: String) =
+      s"LEAST(255, GREATEST(0, CAST(FLOOR($e + 0.5) AS BIGINT)))"
+    (clamp(s"$y + 1.402*$cr"),
+      clamp(s"$y - 0.344136*$cb - 0.714136*$cr"),
+      clamp(s"$y + 1.772*$cb"))
+  }
+
+  /** q118's and q127's oracle: both decode the same frame-0 pixels. */
+  private val jfifDcSql: String = {
+    val (r0, g0, b0) = jfifRgbSql("0", "0", "0")
+    val (r1, g1, b1) = jfifRgbSql("0", "1", "1")
+    val (rp, gp, bp) = jfifRgbSql("0", "x", "y")
+    s"""SELECT doc_id AS media_id,
+      CAST($JW AS INT) AS width, CAST($JH AS INT) AS height,
+      CAST(3 AS INT) AS channels,
+      CAST($r0 AS INT) AS p_first_r,
+      CAST($g0 AS INT) AS p_first_g,
+      CAST($b0 AS INT) AS p_first_b,
+      CAST($r1 AS INT) AS p_last_r,
+      CAST($g1 AS INT) AS p_last_g,
+      CAST($b1 AS INT) AS p_last_b,
+      (SELECT CAST(64 * SUM($rp + $gp + $bp) AS BIGINT)
+       FROM range(0, 2) tx(x), range(0, 2) ty(y)) AS pix_sum
+    FROM documents
+    ORDER BY media_id"""
+  }
+
   private val q118 = Q(
     "q118_jpeg_pixels",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val flat8 = Array.fill(64)(8)
-      // per-row huffman encode is the compute; restore scan splits
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            def dcOnly(dc: Int) = { val a = new Array[Int](64); a(0) = dc; a }
-            val bytes = graft.operators.Jpeg.jpegEncode(JW, JH,
-              Seq((1, 1), (1, 1), (1, 1)), Seq(flat8, flat8, flat8),
-              (c, by, bx) => dcOnly(c match {
-                case 0 => ((d * 5 + bx * 7 + by * 11) % 200).toInt - 100
-                case 1 => ((d * 3 + bx + 2 * by) % 100).toInt - 50
-                case _ => ((d * 7 + 2 * bx + by) % 100).toInt - 50
-              }))
-            Row(d, bytes, "image/jpeg")
-          }
-        }(mediaEnc)
-      graft.operators.Jpeg.jpegFeatures(media).orderBy(col("media_id"))
+      val media = synthMedia(s, dir) { () => d =>
+        (Jpeg.jpegEncode(JW, JH, JFIF_SAMPLING, JFIF_QUANT,
+          jfifDcBlocks(d, 0)), "image/jpeg")
+      }
+      Jpeg.jpegFeatures(media).orderBy(col("media_id"))
     },
-    Some {
-      // closed-form per-block channel values (bx, by ∈ {0,1})
-      def yv(bx: String, by: String) =
-        s"(128 + (doc_id*5 + ($bx)*7 + ($by)*11) % 200 - 100)"
-      def cb(bx: String, by: String) =
-        s"((doc_id*3 + ($bx) + 2*($by)) % 100 - 50)"
-      def cr(bx: String, by: String) =
-        s"((doc_id*7 + 2*($bx) + ($by)) % 100 - 50)"
-      def ch(e: String) =
-        s"LEAST(255, GREATEST(0, CAST(FLOOR($e + 0.5) AS BIGINT)))"
-      def r(bx: String, by: String) =
-        ch(s"${yv(bx, by)} + 1.402*${cr(bx, by)}")
-      def g(bx: String, by: String) =
-        ch(s"${yv(bx, by)} - 0.344136*${cb(bx, by)} - 0.714136*${cr(bx, by)}")
-      def b(bx: String, by: String) =
-        ch(s"${yv(bx, by)} + 1.772*${cb(bx, by)}")
-      s"""SELECT doc_id AS media_id,
-        CAST($JW AS INT) AS width, CAST($JH AS INT) AS height,
-        CAST(3 AS INT) AS channels,
-        CAST(${r("0", "0")} AS INT) AS p_first_r,
-        CAST(${g("0", "0")} AS INT) AS p_first_g,
-        CAST(${b("0", "0")} AS INT) AS p_first_b,
-        CAST(${r("1", "1")} AS INT) AS p_last_r,
-        CAST(${g("1", "1")} AS INT) AS p_last_g,
-        CAST(${b("1", "1")} AS INT) AS p_last_b,
-        (SELECT CAST(64 * SUM(${r("x", "y")} + ${g("x", "y")}
-                            + ${b("x", "y")}) AS BIGINT)
-         FROM range(0, 2) tx(x), range(0, 2) ty(y)) AS pix_sum
-      FROM documents
-      ORDER BY media_id"""
-    })
+    Some(jfifDcSql))
 
   // -- q119: REAL video-container decode + stride frame sampling ------
   // Each doc synthesizes an uncompressed AVI (RIFF hdrl/movi, one
@@ -360,22 +395,13 @@ object MultimodalQueries {
   private val q119 = Q(
     "q119_video_frames",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val n = (4 + d % 3).toInt
-            val bytes = graft.operators.VideoAvi.aviEncode(VW, VH, n,
-              (f, x, y) => (
-                ((d + f.toLong * x + 2L * y) % 256).toInt,
-                ((2 * d + f + 4L * x + y) % 256).toInt,
-                ((d + 3L * f + 5L * x + 7L * y) % 256).toInt))
-            Row(d, bytes, "video/avi")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () => d =>
+        (graft.operators.VideoAvi.aviEncode(VW, VH, (4 + d % 3).toInt,
+          (f, x, y) => (
+            ((d + f.toLong * x + 2L * y) % 256).toInt,
+            ((2 * d + f + 4L * x + y) % 256).toInt,
+            ((d + 3L * f + 5L * x + 7L * y) % 256).toInt)), "video/avi")
+      }
       graft.operators.VideoAvi.videoFeatures(media, VSTRIDE)
         .orderBy(col("media_id"))
     },
@@ -417,26 +443,16 @@ object MultimodalQueries {
   private val q123 = Q(
     "q123_gif_pixels",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val pal = Array.tabulate(16)(i =>
-              (((d * 7 + i * 13) % 256).toInt << 16) |
-                (((d * 11 + i * 17) % 256).toInt << 8) |
-                ((d * 3 + i * 29) % 256).toInt)
-            val f1 = Array.tabulate(GW * GH)(p => ((d + 5L * p) % 16).toInt)
-            val extra = (d % 3).toInt
-            val frames = (f1, d % 2 == 0) +: Seq.tabulate(extra)(fi =>
-              (Array.tabulate(GW * GH)(p => ((d + p + fi) % 16).toInt),
-                false))
-            Row(d, graft.operators.Gif.gifEncode(GW, GH, pal, frames),
-              "image/gif")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () => d =>
+        val pal = Array.tabulate(16)(i =>
+          (((d * 7 + i * 13) % 256).toInt << 16) |
+            (((d * 11 + i * 17) % 256).toInt << 8) |
+            ((d * 3 + i * 29) % 256).toInt)
+        val f1 = Array.tabulate(GW * GH)(p => ((d + 5L * p) % 16).toInt)
+        val frames = (f1, d % 2 == 0) +: Seq.tabulate((d % 3).toInt)(fi =>
+          (Array.tabulate(GW * GH)(p => ((d + p + fi) % 16).toInt), false))
+        (graft.operators.Gif.gifEncode(GW, GH, pal, frames), "image/gif")
+      }
       graft.operators.Gif.gifFeatures(media).orderBy(col("media_id"))
     },
     Some {
@@ -473,57 +489,13 @@ object MultimodalQueries {
   private val q127 = Q(
     "q127_jpeg_progressive",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val flat8 = Array.fill(64)(8)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            def dcOnly(dc: Int) = { val a = new Array[Int](64); a(0) = dc; a }
-            val bytes = graft.operators.Jpeg.jpegEncodeProgressive(JW, JH,
-              Seq((1, 1), (1, 1), (1, 1)), Seq(flat8, flat8, flat8),
-              (c, by, bx) => dcOnly(c match {
-                case 0 => ((d * 5 + bx * 7 + by * 11) % 200).toInt - 100
-                case 1 => ((d * 3 + bx + 2 * by) % 100).toInt - 50
-                case _ => ((d * 7 + 2 * bx + by) % 100).toInt - 50
-              }), dcAl = 1)
-            Row(d, bytes, "image/jpeg")
-          }
-        }(mediaEnc)
-      graft.operators.Jpeg.jpegFeatures(media).orderBy(col("media_id"))
+      val media = synthMedia(s, dir) { () => d =>
+        (Jpeg.jpegEncodeProgressive(JW, JH, JFIF_SAMPLING, JFIF_QUANT,
+          jfifDcBlocks(d, 0), dcAl = 1), "image/jpeg")
+      }
+      Jpeg.jpegFeatures(media).orderBy(col("media_id"))
     },
-    Some {
-      def yv(bx: String, by: String) =
-        s"(128 + (doc_id*5 + ($bx)*7 + ($by)*11) % 200 - 100)"
-      def cb(bx: String, by: String) =
-        s"((doc_id*3 + ($bx) + 2*($by)) % 100 - 50)"
-      def cr(bx: String, by: String) =
-        s"((doc_id*7 + 2*($bx) + ($by)) % 100 - 50)"
-      def ch(e: String) =
-        s"LEAST(255, GREATEST(0, CAST(FLOOR($e + 0.5) AS BIGINT)))"
-      def r(bx: String, by: String) =
-        ch(s"${yv(bx, by)} + 1.402*${cr(bx, by)}")
-      def g(bx: String, by: String) =
-        ch(s"${yv(bx, by)} - 0.344136*${cb(bx, by)} - 0.714136*${cr(bx, by)}")
-      def b(bx: String, by: String) =
-        ch(s"${yv(bx, by)} + 1.772*${cb(bx, by)}")
-      s"""SELECT doc_id AS media_id,
-        CAST($JW AS INT) AS width, CAST($JH AS INT) AS height,
-        CAST(3 AS INT) AS channels,
-        CAST(${r("0", "0")} AS INT) AS p_first_r,
-        CAST(${g("0", "0")} AS INT) AS p_first_g,
-        CAST(${b("0", "0")} AS INT) AS p_first_b,
-        CAST(${r("1", "1")} AS INT) AS p_last_r,
-        CAST(${g("1", "1")} AS INT) AS p_last_g,
-        CAST(${b("1", "1")} AS INT) AS p_last_b,
-        (SELECT CAST(64 * SUM(${r("x", "y")} + ${g("x", "y")}
-                            + ${b("x", "y")}) AS BIGINT)
-         FROM range(0, 2) tx(x), range(0, 2) ty(y)) AS pix_sum
-      FROM documents
-      ORDER BY media_id"""
-    })
+    Some(jfifDcSql))
 
   // -- q152: image NEAR-DUP via perceptual hash, oracle-gated ----------
   // The image member of the dedup matrix. Each subset doc (doc_id%5=0)
@@ -552,66 +524,25 @@ object MultimodalQueries {
   /** q152's crafted step-image corpus (see q152's comment), shared by
     * the pair query and the cluster query.
     */
-  private def stepMedia(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      graft.core.Scan.fanOut(
-        t.documents.select(col("doc_id")).filter(col("doc_id") % 5 === 0))
-        .mapPartitions { rows =>
-          val deflater = new java.util.zip.Deflater()
-          def bmp24(w: Int, h: Int, v: (Int, Int) => Int): Array[Byte] = {
-            val rowSize = ((3 * w + 3) / 4) * 4
-            val out = new Array[Byte](54 + rowSize * h)
-            def putLe32(o: Int, x: Int): Unit = {
-              out(o) = x.toByte; out(o + 1) = (x >> 8).toByte
-              out(o + 2) = (x >> 16).toByte; out(o + 3) = (x >> 24).toByte
-            }
-            out(0) = 'B'; out(1) = 'M'
-            putLe32(2, out.length); putLe32(10, 54); putLe32(14, 40)
-            putLe32(18, w); putLe32(22, h); out(26) = 1; out(28) = 24
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = 54 + (h - 1 - y) * rowSize + x * 3
-                val vv = v(x, y).toByte
-                out(p) = vv; out(p + 1) = vv; out(p + 2) = vv
-                x += 1
-              }
-              y += 1
-            }
-            out
-          }
-          rows.map { r =>
-            val d = r.getLong(0)
-            val px = 2 * (d % 16) + 1
-            val py = 2 * ((d / 16) % 16) + 1
-            def v(x: Int, y: Int): Int =
-              IBASE + (if (x >= 2 * px) ISTEP else 0) +
-                (if (y >= 2 * py) ISTEP else 0)
-            val bytes =
-              if (d % 2 == 0) {
-                val pxl = new Array[Byte](IW * IW * 3)
-                var y = 0
-                while (y < IW) {
-                  var x = 0
-                  while (x < IW) {
-                    val vv = v(x, y).toByte
-                    val i = (y * IW + x) * 3
-                    pxl(i) = vv; pxl(i + 1) = vv; pxl(i + 2) = vv
-                    x += 1
-                  }
-                  y += 1
-                }
-                Multimodal.pngEncode(Multimodal.PngImage(IW, IW, 3, pxl),
-                  yy => ((d + yy) % 5).toInt, deflater)
-              } else bmp24(IW, IW, v)
-            Row(d, bytes, if (d % 2 == 0) "image/png" else "image/bmp")
-          }
-        }(mediaEnc)
-  }
+  private def stepMedia(s: SparkSession, dir: String): DataFrame =
+    synthMedia(s, dir, col("doc_id") % 5 === 0) { () =>
+      val deflater = new java.util.zip.Deflater()
+      d => {
+        val px = 2 * (d % 16) + 1
+        val py = 2 * ((d / 16) % 16) + 1
+        def v(x: Int, y: Int): Int =
+          IBASE + (if (x >= 2 * px) ISTEP else 0) +
+            (if (y >= 2 * py) ISTEP else 0)
+        if (d % 2 == 0) {
+          val grey = Array.tabulate(IW * IW * 3)(i =>
+            v(i / 3 % IW, i / 3 / IW).toByte)
+          (Multimodal.pngEncode(Multimodal.PngImage(IW, IW, 3, grey),
+            yy => ((d + yy) % 5).toInt, deflater), "image/png")
+        } else (Multimodal.bmp24(IW, IW, (x, y) => {
+          val g = v(x, y); (g, g, g)
+        }), "image/bmp")
+      }
+    }
 
   /** q152's closed-form phash CTE (`p(doc_id, ph)`) — shared with the
     * q156 cluster oracle.
@@ -717,15 +648,8 @@ object MultimodalQueries {
           enc.withColumn("marks", marksExpr), "doc_id", "marks", imgId)
         .withColumn("n_tokens", size(col("ids")).cast("long"))
         .localCheckpoint() // read by assembly AND alignment below
-      val seqs = TrainingPrep.packSegments(inter, "doc_id", "n_tokens", MSEQ)
-        .filter(col("seg_len") > 0)
-        .select(col("seq_id"), col("offset"),
-          slice(col("ids"), (col("seg_start") + 1).cast("int"),
-            col("seg_len").cast("int")).as("piece"))
-        .groupBy(col("seq_id"))
-        .agg(flatten(transform(
-          array_sort(collect_list(struct(col("offset"), col("piece")))),
-          x => x.getField("piece"))).as("seq_ids"))
+      val seqs = TrainingPrep.packSequences(inter, "doc_id", "n_tokens", MSEQ)
+        .withColumnRenamed("ids", "seq_ids")
       val aligned = TrainingPrep.packOffsets(inter, "doc_id", "n_tokens", MSEQ)
         .select(col("doc_id"), col("offset"),
           posexplode(col("refs")).as(Seq("img_idx", "r")))
@@ -769,20 +693,7 @@ object MultimodalQueries {
             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
             AS off
         FROM iv2),
-      segs AS (
-        SELECT seq_id, off, ids, n,
-          GREATEST(seq_id * $MSEQ - off, 0) AS seg_start,
-          LEAST((seq_id + 1) * $MSEQ - off, n)
-            - GREATEST(seq_id * $MSEQ - off, 0) AS seg_len
-        FROM (SELECT *, unnest(generate_series(off // $MSEQ,
-                (off + n - 1) // $MSEQ)) AS seq_id
-              FROM offs)),
-      pieces AS (
-        SELECT seq_id, off, ids[seg_start + 1 : seg_start + seg_len] AS piece
-        FROM segs WHERE seg_len > 0),
-      seqs AS (
-        SELECT seq_id, flatten(list(piece ORDER BY off)) AS ids
-        FROM pieces GROUP BY seq_id),
+      ${graft.operators.TrainingPrep.packSequencesSqlCtes(MSEQ)},
       align AS (
         SELECT doc_id, CAST(r.jx AS INT) AS img_idx, r.ref AS media_ref,
           CAST(off + r.idx AS BIGINT) AS gpos,
@@ -811,22 +722,13 @@ object MultimodalQueries {
   private val q174 = Q(
     "q174_mp4_metadata",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val n = (3 + d % 4).toInt
-            val bytes = graft.operators.VideoMp4.mp4Encode(M4W, M4H, n,
-              M4TS, (f, x, y) => (
-                ((d + 2L * f + 3L * x + 5L * y) % 256).toInt,
-                ((3L * d + f + x + 2L * y) % 256).toInt,
-                ((d + f + 7L * x + y) % 256).toInt))
-            Row(d, bytes, "video/mp4")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () => d =>
+        (graft.operators.VideoMp4.mp4Encode(M4W, M4H, (3 + d % 4).toInt,
+          M4TS, (f, x, y) => (
+            ((d + 2L * f + 3L * x + 5L * y) % 256).toInt,
+            ((3L * d + f + x + 2L * y) % 256).toInt,
+            ((d + f + 7L * x + y) % 256).toInt)), "video/mp4")
+      }
       graft.operators.VideoMp4.mp4Features(media, M4STR)
         .orderBy(col("media_id"))
     },
@@ -872,69 +774,39 @@ object MultimodalQueries {
   // oracle mirrors the JFIF YCbCr→RGB literals per sampled frame.
   // A wrong chunk walk, stride index, DC prediction chain, or color
   // convert diverges.
-  private val MJW = 16
-  private val MJH = 16
   private val MJSTRIDE = 2
   private val q200 = Q(
     "q200_mjpeg_frames",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val flat8 = Array.fill(64)(8)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val n = (3 + d % 3).toInt
-            def dcOnly(dc: Int) = { val a = new Array[Int](64); a(0) = dc; a }
-            val frames = (0 until n).map(f =>
-              graft.operators.Jpeg.jpegEncode(MJW, MJH,
-                Seq((1, 1), (1, 1), (1, 1)), Seq(flat8, flat8, flat8),
-                (c, by, bx) => dcOnly(c match {
-                  case 0 => ((d * 5 + f * 31 + bx * 7 + by * 11) % 200).toInt - 100
-                  case 1 => ((d * 3 + f * 13 + bx + 2 * by) % 100).toInt - 50
-                  case _ => ((d * 7 + f * 19 + 2 * bx + by) % 100).toInt - 50
-                })))
-            Row(d, graft.operators.VideoAvi.aviEncodeMjpeg(MJW, MJH, frames),
-              "video/avi")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () => d =>
+        val frames = (0 until (3 + d % 3).toInt).map(f =>
+          Jpeg.jpegEncode(JW, JH, JFIF_SAMPLING, JFIF_QUANT,
+            jfifDcBlocks(d, f)))
+        (graft.operators.VideoAvi.aviEncodeMjpeg(JW, JH, frames), "video/avi")
+      }
       graft.operators.VideoAvi.videoFeatures(media, MJSTRIDE)
         .orderBy(col("media_id"))
     },
     Some {
-      def yv(f: String, bx: String, by: String) =
-        s"(128 + (doc_id*5 + ($f)*31 + ($bx)*7 + ($by)*11) % 200 - 100)"
-      def cb(f: String, bx: String, by: String) =
-        s"((doc_id*3 + ($f)*13 + ($bx) + 2*($by)) % 100 - 50)"
-      def cr(f: String, bx: String, by: String) =
-        s"((doc_id*7 + ($f)*19 + 2*($bx) + ($by)) % 100 - 50)"
-      def ch(e: String) =
-        s"LEAST(255, GREATEST(0, CAST(FLOOR($e + 0.5) AS BIGINT)))"
-      def r(f: String, bx: String, by: String) =
-        ch(s"${yv(f, bx, by)} + 1.402*${cr(f, bx, by)}")
-      def g(f: String, bx: String, by: String) =
-        ch(s"${yv(f, bx, by)} - 0.344136*${cb(f, bx, by)} - 0.714136*${cr(f, bx, by)}")
-      def b(f: String, bx: String, by: String) =
-        ch(s"${yv(f, bx, by)} + 1.772*${cb(f, bx, by)}")
+      val (r0, g0, b0) = jfifRgbSql("0", "0", "0")
       // last sampled frame: largest multiple of MJSTRIDE < n
       val fL = s"($MJSTRIDE * ((3 + doc_id % 3 - 1) // $MJSTRIDE))"
+      val (rL, gL, bL) = jfifRgbSql(fL, "1", "1")
+      val (rp, gp, bp) = jfifRgbSql("f", "x", "y")
       s"""SELECT doc_id AS media_id,
-        CAST($MJW AS INT) AS width, CAST($MJH AS INT) AS height,
+        CAST($JW AS INT) AS width, CAST($JH AS INT) AS height,
         CAST(3 + doc_id % 3 AS INT) AS n_frames,
         CAST((3 + doc_id % 3 + ${MJSTRIDE - 1}) // $MJSTRIDE AS INT)
           AS n_sampled,
-        CAST(${r("0", "0", "0")} AS INT) AS f_first_r,
-        CAST(${g("0", "0", "0")} AS INT) AS f_first_g,
-        CAST(${b("0", "0", "0")} AS INT) AS f_first_b,
-        CAST(${r(fL, "1", "1")} AS INT) AS l_last_r,
-        CAST(${g(fL, "1", "1")} AS INT) AS l_last_g,
-        CAST(${b(fL, "1", "1")} AS INT) AS l_last_b,
+        CAST($r0 AS INT) AS f_first_r,
+        CAST($g0 AS INT) AS f_first_g,
+        CAST($b0 AS INT) AS f_first_b,
+        CAST($rL AS INT) AS l_last_r,
+        CAST($gL AS INT) AS l_last_g,
+        CAST($bL AS INT) AS l_last_b,
         (SELECT CAST(64 * SUM(CASE
             WHEN f % $MJSTRIDE = 0 AND f < 3 + doc_id % 3
-            THEN ${r("f", "x", "y")} + ${g("f", "x", "y")}
-               + ${b("f", "x", "y")}
+            THEN $rp + $gp + $bp
             ELSE 0 END) AS BIGINT)
          FROM range(0, 5) tf(f), range(0, 2) tx(x), range(0, 2) ty(y))
           AS pix_sum
@@ -959,42 +831,27 @@ object MultimodalQueries {
   private val q213 = Q(
     "q213_adpcm_audio",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val nb = 2
-            val bb = java.nio.ByteBuffer
-              .allocate(12 + 28 + 8 + nb * ADP_BA)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            bb.put("RIFF".getBytes("US-ASCII"))
-              .putInt(4 + 28 + 8 + nb * ADP_BA)
-              .put("WAVE".getBytes("US-ASCII"))
-            bb.put("fmt ".getBytes("US-ASCII")).putInt(20)
-              .putShort(0x11).putShort(1).putInt(8000)
-              .putInt(8000 * ADP_BA / 65).putShort(ADP_BA.toShort)
-              .putShort(4).putShort(2).putShort(65)
-            bb.put("data".getBytes("US-ASCII")).putInt(nb * ADP_BA)
-            var b = 0
-            while (b < nb) {
-              val p0 = ((d * 31 + 997 * b) % 2003 - 1001).toInt
-              val i0 = ((d + 7 * b) % 89).toInt
-              bb.putShort(p0.toShort).put(i0.toByte).put(0.toByte)
-              var k = 0
-              while (k < ADP_BA - 4) {
-                val lo = ((d + 11 * b + 3 * (2 * k)) % 16).toInt
-                val hi = ((d + 11 * b + 3 * (2 * k + 1)) % 16).toInt
-                bb.put(((lo | (hi << 4)) & 0xff).toByte)
-                k += 1
-              }
-              b += 1
-            }
-            Row(d, bb.array(), "audio/wav")
+      val media = synthMedia(s, dir) { () => d =>
+        val nb = 2
+        val bb = java.nio.ByteBuffer.allocate(nb * ADP_BA)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        var b = 0
+        while (b < nb) {
+          val p0 = ((d * 31 + 997 * b) % 2003 - 1001).toInt
+          val i0 = ((d + 7 * b) % 89).toInt
+          bb.putShort(p0.toShort).put(i0.toByte).put(0.toByte)
+          var k = 0
+          while (k < ADP_BA - 4) {
+            val lo = ((d + 11 * b + 3 * (2 * k)) % 16).toInt
+            val hi = ((d + 11 * b + 3 * (2 * k + 1)) % 16).toInt
+            bb.put(((lo | (hi << 4)) & 0xff).toByte)
+            k += 1
           }
-        }(mediaEnc)
+          b += 1
+        }
+        (Multimodal.monoWav(0x11, 8000, 8000 * ADP_BA / 65, ADP_BA, 4,
+          Seq(2, 65), bb.array()), "audio/wav")
+      }
       Multimodal.audioFeatures(media).orderBy(col("media_id"))
     },
     Some {
@@ -1047,31 +904,12 @@ object MultimodalQueries {
   private val q217 = Q(
     "q217_g711_audio",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val n = (48 + d % 5).toInt
-            val tag = if (d % 2 == 0) 0x0007 else 0x0006
-            val bb = java.nio.ByteBuffer.allocate(12 + 8 + 16 + 8 + n)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + 24 + 8 + n)
-              .put("WAVE".getBytes("US-ASCII"))
-            bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-              .putShort(tag.toShort).putShort(1).putInt(8000)
-              .putInt(8000).putShort(1).putShort(8)
-            bb.put("data".getBytes("US-ASCII")).putInt(n)
-            var j = 0
-            while (j < n) {
-              bb.put(((d * 13 + 7 * j) % 256).toByte)
-              j += 1
-            }
-            Row(d, bb.array(), "audio/wav")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () => d =>
+        val tag = if (d % 2 == 0) 0x0007 else 0x0006
+        val data = Array.tabulate((48 + d % 5).toInt)(j =>
+          ((d * 13 + 7 * j) % 256).toByte)
+        (Multimodal.monoWav(tag, 8000, 8000, 1, 8, Nil, data), "audio/wav")
+      }
       Multimodal.audioFeatures(media).orderBy(col("media_id"))
     },
     Some {
@@ -1117,19 +955,15 @@ object MultimodalQueries {
   // s₁² + s₂² − c·s₁·s₂ bit-exactly. A wrong recurrence order, state
   // shift, or energy formula diverges.
   private val RES_COEFFS = Seq(1.5, 1.0, 0.0, -1.0)
-  private val q225 = Q(
-    "q225_resonator_bands",
-    (s, dir) => {
-      val t = Tpch(s, dir)
-      Multimodal.resonatorFeatures(pcmMedia(t), RES_COEFFS)
-        .select(col("media_id"), col("bin_idx"), col("coeff"),
-          pround(col("energy"), 6).as("energy"))
-        .orderBy(col("media_id"), col("bin_idx"))
-    },
-    Some {
-      val cs = RES_COEFFS.map(c => s"CAST($c AS DOUBLE)").mkString(", ")
-      val bis = RES_COEFFS.indices.mkString(", ")
-      s"""WITH RECURSIVE res(doc_id, bi, c, j, s1, s2) AS (
+
+  /** Oracle replay of the resonator bank over [[pcmMedia]]: the
+    * recursive CTE `res(doc_id, bi, c, j, s1, s2)`, band `bi`'s filter
+    * state after `j` samples.
+    */
+  private def pcmResonatorCte(coeffs: Seq[Double]): String = {
+    val cs = coeffs.map(c => s"CAST($c AS DOUBLE)").mkString(", ")
+    val bis = coeffs.indices.mkString(", ")
+    s"""res(doc_id, bi, c, j, s1, s2) AS (
         SELECT d.doc_id, b.bi, b.c, 0, CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)
         FROM documents d CROSS JOIN
           (SELECT unnest([$bis]) AS bi, unnest([$cs]) AS c) b
@@ -1139,12 +973,23 @@ object MultimodalQueries {
             + c * s1 - s2,
           s1
         FROM res WHERE j < 64
-      )
+      )"""
+  }
+
+  private val q225 = Q(
+    "q225_resonator_bands",
+    (s, dir) => {
+      val t = Tpch(s, dir)
+      Multimodal.resonatorFeatures(pcmMedia(t), RES_COEFFS)
+        .select(col("media_id"), col("bin_idx"), col("coeff"),
+          pround(col("energy"), 6).as("energy"))
+        .orderBy(col("media_id"), col("bin_idx"))
+    },
+    Some(s"""WITH RECURSIVE ${pcmResonatorCte(RES_COEFFS)}
       SELECT doc_id AS media_id, CAST(bi AS INT) AS bin_idx, c AS coeff,
         ${proundSql("s1 * s1 + s2 * s2 - c * s1 * s2", 6)} AS energy
       FROM res WHERE j = 64
-      ORDER BY media_id, bin_idx"""
-    })
+      ORDER BY media_id, bin_idx"""))
 
   // -- q232: MFCC-style cepstral features, oracle-gated ----------------
   // The full classic chain on q225's resonator lane: 13 RATIONAL
@@ -1176,22 +1021,10 @@ object MultimodalQueries {
     },
     Some {
       val nf = (MFCC_COEFFS.length - 1) / 2
-      val cs = MFCC_COEFFS.map(c => s"CAST($c AS DOUBLE)").mkString(", ")
-      val bis = MFCC_COEFFS.indices.mkString(", ")
       val dct = Multimodal.dctTable(MFCC_K, nf)
       val dctLit = dct.map(_.map(v => s"CAST($v AS DOUBLE)")
         .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-      s"""WITH RECURSIVE res(doc_id, bi, c, j, s1, s2) AS (
-        SELECT d.doc_id, b.bi, b.c, 0, CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)
-        FROM documents d CROSS JOIN
-          (SELECT unnest([$bis]) AS bi, unnest([$cs]) AS c) b
-        UNION ALL
-        SELECT doc_id, bi, c, j + 1,
-          CAST((doc_id * 31 + 17 * j) % 2003 - 1001 AS DOUBLE)
-            + c * s1 - s2,
-          s1
-        FROM res WHERE j < 64
-      ),
+      s"""WITH RECURSIVE ${pcmResonatorCte(MFCC_COEFFS)},
       bande AS (
         SELECT doc_id, bi, s1 * s1 + s2 * s2 - c * s1 * s2 AS en
         FROM res WHERE j = 64),
@@ -1248,23 +1081,17 @@ object MultimodalQueries {
     * x_t = (k·53 + (17 + 3·(k mod 29))·t) mod 2003 − 1001
     *       + 8·v·[t = 40],  k = doc div 8, v = doc mod 8.
     */
-  private def hkMedia(t: graft.core.Tables.Tpch)
-      : org.apache.spark.sql.DataFrame = {
+  private def hkMedia(t: Tpch): DataFrame = {
     val d = col("doc_id")
     val k = shiftrightunsigned(d, 3)
     val v = d.bitwiseAND(lit(7L))
     val slope = lit(17L) + pmod(k, lit(29L)) * lit(3L)
-    val sampleHex = (0 until 64).map { ti =>
+    pcm16Wav(t, (0 until 64).map { ti =>
       val base = pmod(k * lit(53L) + slope * lit(ti.toLong), lit(2003L)) -
         lit(1001L)
       val sample = if (ti == 40) base + v * lit(8L) else base
       le16hex(pmod(sample, lit(65536L)))
-    }
-    val header = lit("52494646" + "A4000000" + "57415645" + "666D7420" +
-      "10000000" + "0100" + "0100" + "401F0000" + "803E0000" + "0200" +
-      "1000" + "64617461" + "80000000")
-    t.documents.select(d.as("media_id"),
-      unhex(concat(header +: sampleHex: _*)).as("content"))
+    })
   }
 
   private val q308 = Q(
@@ -1349,22 +1176,13 @@ object MultimodalQueries {
   private val q258 = Q(
     "q258_tiff_pixels",
     (s, dir) => {
-      val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
-      val mediaEnc = Encoders.row(Multimodal.mediaSchema)
-      val media = graft.core.Scan.fanOut(t.documents.select(col("doc_id")))
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val d = r.getLong(0)
-            val c = if (d % 2 == 0) 3 else 1
-            val px = Array.tabulate(TW * TH * c)(i =>
-              ((d + 11L * i) % 256).toByte)
-            val bytes = graft.operators.Tiff.encode(
-              graft.operators.Tiff.TiffImage(TW, TH, c, px),
-              rowsPerStrip = 3, packBits = d % 3 == 0)
-            Row(d, bytes, "image/tiff")
-          }
-        }(mediaEnc)
+      val media = synthMedia(s, dir) { () => d =>
+        val c = if (d % 2 == 0) 3 else 1
+        val px = Array.tabulate(TW * TH * c)(i => ((d + 11L * i) % 256).toByte)
+        (graft.operators.Tiff.encode(
+          graft.operators.Tiff.TiffImage(TW, TH, c, px),
+          rowsPerStrip = 3, packBits = d % 3 == 0), "image/tiff")
+      }
       graft.operators.Tiff.tiffFeatures(media).orderBy(col("media_id"))
     },
     Some(s"""SELECT doc_id AS media_id,
@@ -1402,7 +1220,6 @@ object MultimodalQueries {
     "q279_ssim_pairs",
     (s, dir) => {
       val t = Tpch(s, dir)
-      import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.types._
       val sumSchema = StructType(Seq(
         StructField("media_id", LongType),
@@ -1415,29 +1232,10 @@ object MultimodalQueries {
         .mapPartitions { rows =>
           val deflater = new java.util.zip.Deflater()
           val inflater = new java.util.zip.Inflater()
-          def pngOf(d: Long): Array[Byte] = {
-            val c = if (d % 2 == 0) 3 else 4
-            val px = new Array[Byte](PW * PH * c)
-            var y = 0
-            while (y < PH) {
-              var x = 0
-              while (x < PW) {
-                val i = (y * PW + x) * c
-                px(i) = ((d + 7 * x + 13 * y) % 256).toByte
-                px(i + 1) = ((3 * d + 5 * x + y) % 256).toByte
-                px(i + 2) = ((d + x * y) % 256).toByte
-                if (c == 4) px(i + 3) = ((d + x + y) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            Multimodal.pngEncode(Multimodal.PngImage(PW, PH, c, px),
-              yy => ((d + yy) % 5).toInt, deflater)
-          }
           rows.map { r =>
             val d = r.getLong(0)
-            val a = Multimodal.pngDecode(pngOf(d), inflater)
-            val b = Multimodal.pngDecode(pngOf(d + 2), inflater)
+            val a = Multimodal.pngDecode(q89Png(d, deflater), inflater)
+            val b = Multimodal.pngDecode(q89Png(d + 2, deflater), inflater)
             var sx = 0L; var sy = 0L; var sxx = 0L; var syy = 0L
             var sxy = 0L
             var i = 0

@@ -644,6 +644,39 @@ object TextAnalysis {
   //    standing-DAG twin (OrchestratorSpec).
   private val SEQ_LEN = 64
 
+  /** q154's and q207's report over per-doc `ids` arrays (with their
+    * `n_tokens`): pack them into SEQ_LEN-id training sequences and give
+    * each sequence's length, first and last id and a polynomial fold
+    * of its ids.
+    */
+  private def packedSeqStats(docIds: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    graft.operators.TrainingPrep
+      .packSequences(docIds, "doc_id", "n_tokens", SEQ_LEN)
+      .select(col("seq_id"),
+        size(col("ids")).as("n_ids"),
+        element_at(col("ids"), 1).as("first_id"),
+        element_at(col("ids"), -1).as("last_id"),
+        aggregate(col("ids"), lit(0L),
+          (h, i) => (h * 31 + i) % lit(TextFns.P)).as("ids_hash"))
+      .orderBy(col("seq_id"))
+
+  /** Oracle twin of [[packedSeqStats]], over a CTE `docids(doc_id, ids)`. */
+  private def packedSeqStatsSql: String =
+    s"""offs AS (
+        SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n,
+          CAST(COALESCE(SUM(CAST(len(ids) AS BIGINT)) OVER (ORDER BY doc_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+            AS off
+        FROM docids),
+      ${graft.operators.TrainingPrep.packSequencesSqlCtes(SEQ_LEN)}
+      SELECT CAST(seq_id AS BIGINT) AS seq_id,
+        CAST(len(ids) AS INT) AS n_ids,
+        ids[1] AS first_id, ids[len(ids)] AS last_id,
+        CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), ids),
+          (h, i) -> (h * 31 + i) % ${TextFns.P}) AS BIGINT) AS ids_hash
+      FROM seqs ORDER BY seq_id"""
+
   /** Shared DuckDB CTE prefix: corpus → vocabulary → per-doc BPE id
     * arrays (`docids(doc_id, ids)`), mirroring
     * BpeTrainer.vocabTable + bpeEncodeIds. Used by q154's packing
@@ -688,7 +721,7 @@ object TextAnalysis {
     "q154_bpe_pack_ids",
     (s, dir) => {
       val t = Tpch(s, dir)
-      import graft.operators.{BpeTrainer, TrainingPrep}
+      import graft.operators.BpeTrainer
       // materialize the encoded ids ONCE: packSegments' two-phase
       // prefix sum and the final slice otherwise each re-evaluate the
       // whole BPE merge chain (measured: two serial single-task
@@ -704,52 +737,10 @@ object TextAnalysis {
           BPE_MERGES, vocab)
         .withColumn("n_tokens", size(col("ids")).cast("long"))
         .localCheckpoint(true)
-      val seqs = TrainingPrep.packSegments(ids, "doc_id", "n_tokens", SEQ_LEN)
-        .filter(col("seg_len") > 0)
-        .select(col("seq_id"), col("offset"),
-          slice(col("ids"), (col("seg_start") + 1).cast("int"),
-            col("seg_len").cast("int")).as("piece"))
-        .groupBy(col("seq_id"))
-        .agg(flatten(transform(
-          array_sort(collect_list(struct(col("offset"), col("piece")))),
-          x => x.getField("piece"))).as("ids"))
-      seqs.select(col("seq_id"),
-          size(col("ids")).as("n_ids"),
-          element_at(col("ids"), 1).as("first_id"),
-          element_at(col("ids"), -1).as("last_id"),
-          aggregate(col("ids"), lit(0L),
-            (h, i) => (h * 31 + i) % lit(TextFns.P)).as("ids_hash"))
-        .orderBy(col("seq_id"))
+      packedSeqStats(ids)
     },
-    Some {
-      s"""WITH $bpeDocIdsCtes,
-      offs AS (
-        SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n,
-          CAST(COALESCE(SUM(CAST(len(ids) AS BIGINT)) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-            AS off
-        FROM docids),
-      segs AS (
-        SELECT seq_id, off, ids, n,
-          GREATEST(seq_id * $SEQ_LEN - off, 0) AS seg_start,
-          LEAST((seq_id + 1) * $SEQ_LEN - off, n)
-            - GREATEST(seq_id * $SEQ_LEN - off, 0) AS seg_len
-        FROM (SELECT *, unnest(generate_series(off // $SEQ_LEN,
-                (off + n - 1) // $SEQ_LEN)) AS seq_id
-              FROM offs)),
-      pieces AS (
-        SELECT seq_id, off, ids[seg_start + 1 : seg_start + seg_len] AS piece
-        FROM segs WHERE seg_len > 0),
-      seqs AS (
-        SELECT seq_id, flatten(list(piece ORDER BY off)) AS ids
-        FROM pieces GROUP BY seq_id)
-      SELECT CAST(seq_id AS BIGINT) AS seq_id,
-        CAST(len(ids) AS INT) AS n_ids,
-        ids[1] AS first_id, ids[len(ids)] AS last_id,
-        CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), ids),
-          (h, i) -> (h * 31 + i) % ${TextFns.P}) AS BIGINT) AS ids_hash
-      FROM seqs ORDER BY seq_id"""
-    })
+    Some(s"""WITH $bpeDocIdsCtes,
+      $packedSeqStatsSql"""))
 
   // -- T15: END-TO-END curation funnel — the FineWeb/RefinedWeb stage
   //    chain in one DAG, reported per source: input → URL-canonical
@@ -1322,7 +1313,7 @@ object TextAnalysis {
     "q207_unigram_pack_ids",
     (s, dir) => {
       val t = Tpch(s, dir)
-      import graft.operators.{TrainingPrep, UnigramLm}
+      import graft.operators.UnigramLm
       val uniCosts = UNI_VOCAB.map(_ -> 1).toMap
       val uniIds = UNI_VOCAB.zipWithIndex.toMap
       val idLit = typedLit(uniIds)
@@ -1342,23 +1333,7 @@ object TextAnalysis {
           array_sort(collect_list(struct(col("pos"), col("wids")))),
           x => x.getField("wids"))).as("ids"))
         .withColumn("n_tokens", size(col("ids")).cast("long"))
-      val seqs = TrainingPrep.packSegments(docIds, "doc_id", "n_tokens",
-          SEQ_LEN)
-        .filter(col("seg_len") > 0)
-        .select(col("seq_id"), col("offset"),
-          slice(col("ids"), (col("seg_start") + 1).cast("int"),
-            col("seg_len").cast("int")).as("piece"))
-        .groupBy(col("seq_id"))
-        .agg(flatten(transform(
-          array_sort(collect_list(struct(col("offset"), col("piece")))),
-          x => x.getField("piece"))).as("ids"))
-      seqs.select(col("seq_id"),
-          size(col("ids")).as("n_ids"),
-          element_at(col("ids"), 1).as("first_id"),
-          element_at(col("ids"), -1).as("last_id"),
-          aggregate(col("ids"), lit(0L),
-            (h, i) => (h * 31 + i) % lit(TextFns.P)).as("ids_hash"))
-        .orderBy(col("seq_id"))
+      packedSeqStats(docIds)
     },
     Some {
       val in2 = UNI_PIECES2.map(p => s"'$p'").mkString(", ")
@@ -1402,32 +1377,7 @@ object TextAnalysis {
         SELECT doc_id, flatten(list(wids ORDER BY pos)) AS ids
         FROM tok JOIN wids USING (w)
         GROUP BY doc_id),
-      offs AS (
-        SELECT doc_id, ids, CAST(len(ids) AS BIGINT) AS n,
-          CAST(COALESCE(SUM(CAST(len(ids) AS BIGINT)) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-            AS off
-        FROM docids),
-      segs AS (
-        SELECT seq_id, off, ids, n,
-          GREATEST(seq_id * $SEQ_LEN - off, 0) AS seg_start,
-          LEAST((seq_id + 1) * $SEQ_LEN - off, n)
-            - GREATEST(seq_id * $SEQ_LEN - off, 0) AS seg_len
-        FROM (SELECT *, unnest(generate_series(off // $SEQ_LEN,
-                (off + n - 1) // $SEQ_LEN)) AS seq_id
-              FROM offs)),
-      pieces AS (
-        SELECT seq_id, off, ids[seg_start + 1 : seg_start + seg_len] AS piece
-        FROM segs WHERE seg_len > 0),
-      seqs AS (
-        SELECT seq_id, flatten(list(piece ORDER BY off)) AS ids
-        FROM pieces GROUP BY seq_id)
-      SELECT CAST(seq_id AS BIGINT) AS seq_id,
-        CAST(len(ids) AS INT) AS n_ids,
-        ids[1] AS first_id, ids[len(ids)] AS last_id,
-        CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), ids),
-          (h, i) -> (h * 31 + i) % ${TextFns.P}) AS BIGINT) AS ids_hash
-      FROM seqs ORDER BY seq_id"""
+      $packedSeqStatsSql"""
     })
 
   // -- T22: pairwise Cohen's KAPPA between the Gopher gates — the

@@ -281,6 +281,41 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.adpcmWavSamples(wav.take(30)).isEmpty)
   }
 
+  test("monoWav: RIFF size, fmt length and data offset with and without ext words") {
+    def le(b: Array[Byte], o: Int, n: Int): Int =
+      (0 until n).map(i => (b(o + i) & 0xff) << (8 * i)).sum
+    val g711Data = Array.tabulate(50)(_.toByte)
+    val adpcmData = Array.tabulate(72)(i => (3 * i).toByte)
+    val g711 = Multimodal.monoWav(7, 8000, 8000, 1, 8, Nil, g711Data)
+    val adpcm = Multimodal.monoWav(0x11, 11025, 11025 * 36 / 65, 36, 4,
+      Seq(2, 65), adpcmData)
+    // (bytes, data, RIFF size, fmt length, data offset)
+    for ((wav, data, riff, fmtLen, at) <- Seq(
+        (g711, g711Data, 36 + 50, 16, 44),
+        (adpcm, adpcmData, 40 + 72, 20, 48))) {
+      assert(new String(wav, 0, 4, "US-ASCII") === "RIFF")
+      assert(le(wav, 4, 4) === riff)
+      assert(wav.length === riff + 8)
+      assert(new String(wav, 8, 8, "US-ASCII") === "WAVEfmt ")
+      assert(le(wav, 16, 4) === fmtLen)
+      assert(new String(wav, at - 8, 4, "US-ASCII") === "data")
+      assert(le(wav, at - 4, 4) === data.length)
+      assert(wav.drop(at).sameElements(data))
+    }
+    // format tag, block align and bits, then ADPCM's cbSize and
+    // samples-per-block words
+    assert(Seq(20, 32, 34).map(le(g711, _, 2)) === Seq(7, 1, 8))
+    assert(Seq(20, 32, 34, 36, 38).map(le(adpcm, _, 2)) ===
+      Seq(0x11, 36, 4, 2, 65))
+    val feats = Multimodal.decodeFeatures(
+        Seq((1L, g711, "audio/wav"), (2L, adpcm, "audio/wav"))
+          .toDF("media_id", "content", "mime"))
+      .orderBy("media_id").collect()
+    // WAV features: width = sample rate, channels = channel count
+    assert(feats.map(r => (r.getAs[Int]("width"), r.getAs[Int]("channels")))
+      .toSeq === Seq((8000, 1), (11025, 1)))
+  }
+
   private def testImage(w: Int, h: Int, c: Int): Multimodal.PngImage = {
     val px = Array.tabulate(w * h * c) { i =>
       ((i * 2654435761L + (i % c) * 40503L) % 256).toByte
