@@ -13,10 +13,13 @@ package graft.cli
   * as the reference's DAG body is separable from its `schedule`
   * field. No new daemon, no external dependency.
   *
-  * Tasks run sequentially in dependency order: pipeline stages already
-  * saturate the cluster internally (every stage is a distributed job),
-  * so intra-DAG task parallelism would only contend for executors —
-  * same reasoning as the reference's linear Airflow chain.
+  * Tasks run sequentially in dependency order, as in the reference's
+  * linear Airflow chain. The overlap lives inside the stages: each one
+  * writes its independent tables at the same time (`core.Overlap`;
+  * gold's dims, then its marts, export's three CSVs), which fills the
+  * cores that one small write leaves idle. At scale those writes share
+  * the executors under Spark's FIFO scheduler, so the first-submitted
+  * job still gets the slots first and the overlap only back-fills.
   */
 object Orchestrator {
 

@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.core.{GraftSession, ParquetTable}
+import graft.core.{GraftSession, Overlap, ParquetTable}
 import graft.pipeline._
 import graft.pipeline.Warehouse.noGate
 import graft.quality.Expectations
@@ -16,10 +16,10 @@ import graft.quality.Expectations
   *
   * Every table goes where `pipeline.Warehouse` declares it, with that
   * entry's partitioning and write shaping, and is published through
-  * `Warehouse.Table.publish`: written to `<table>._staged`, gated on
-  * what was written, then swapped in. Each layer is computed once: the
-  * gate reads the staged files, the fact joins the published dims, and
-  * the marts read the published fact and dims.
+  * `Warehouse.commit`: written to `<table>._staged`, gated on what was
+  * written, then swapped in; gold's nine tables are one commit. Each
+  * layer is computed once: the gate reads the staged files, the fact
+  * joins the staged dims, and the marts read the staged fact and dims.
   *
   * `gate` is the per-stage quality hook (FlightSuites under
   * --validate, where a failing suite throws and the table keeps its
@@ -39,17 +39,25 @@ object RunPipeline {
     Warehouse.silver.publish(
       Silver.transform(Warehouse.bronze.read(spark, wh)), wh, gate)
 
+  /** Gold as one [[Warehouse.commit]]: the five dims are staged at once,
+    * the fact from the staged dims, then the three marts at once from
+    * the staged fact and dims, while the caller gates each table as it
+    * lands. Nothing is swapped in unless every gate passes.
+    */
   def runGold(spark: SparkSession, wh: String, gate: Gate = noGate): Unit = {
     val silver = Warehouse.silver.read(spark, wh)
-    val dims = Warehouse.dims(spark, silver).publish(wh, gate)
-    val fact = Warehouse.fact.publish(dims.fact(silver), wh, gate)
-    Warehouse.marts.foreach(m => m.table.publish(m.build(fact, dims), wh))
+    Warehouse.commit(spark, wh, gate) { c =>
+      def dims = Warehouse.Dims.staged(c)
+      Warehouse.dims(spark, silver).stage(c) ++
+        Seq(c.stage(Warehouse.fact)(dims.fact(silver))) ++
+        Warehouse.marts.map(m => c.stage(m.table)(m.build(c(Warehouse.fact), dims)))
+    }
   }
 
   def runExport(spark: SparkSession, wh: String): Unit =
-    Warehouse.marts.foreach { m =>
+    Overlap.together(Warehouse.marts.map { m => () =>
       ParquetTable.exportCsv(m.table.read(spark, wh), m.exportAt(wh))
-    }
+    })
 
   def main(args: Array[String]): Unit = {
     if (args.length < 5) {

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.util.concurrent.{Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.{ExecutionException, Executors, ThreadFactory, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
@@ -22,6 +22,12 @@ import scala.concurrent.duration._
   *   - the first arm to fail fails the call with its own exception;
   *   - the threads are interrupted, and waited for up to a minute,
   *     before the call returns.
+  *
+  * [[beside]] and [[together]] are for arms that write: an arm cut off
+  * in the middle of a Spark write leaves its job running and its
+  * half-written files behind, so those calls interrupt nothing and
+  * wait for every arm, with no deadline, as the writes would be waited
+  * for one after another.
   */
 object Overlap {
 
@@ -46,6 +52,30 @@ object Overlap {
     all(Seq(() => a, () => b)) match {
       case Seq(x, y) => (x.asInstanceOf[A], y.asInstanceOf[B])
     }
+
+  /** Runs `body` on the calling thread while `arms` run beside it, one
+    * thread each, created by the caller; returns the body's result once
+    * every arm has ended. A failing body still waits for every arm
+    * before its exception leaves the call. The exception that leaves is
+    * the body's, else the first failed arm's in argument order, as
+    * thrown, never wrapped.
+    */
+  def beside[T](arms: Seq[() => Unit])(body: => T): T = {
+    if (arms.isEmpty) return body
+    val pool = Executors.newFixedThreadPool(arms.size, daemonArms)
+    val ran = arms.map(a => pool.submit((() => a()): Runnable))
+    pool.shutdown()
+    val out = try body finally pool.awaitTermination(Long.MaxValue, TimeUnit.DAYS)
+    ran.foreach { f =>
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
+    }
+    out
+  }
+
+  /** Runs `arms` at once and waits for every one ([[beside]] with
+    * nothing on the calling thread).
+    */
+  def together(arms: Seq[() => Unit]): Unit = beside(arms)(())
 
   private val daemonArms: ThreadFactory = { r =>
     val t = new Thread(r, "overlap-arm")

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Overlap
 
 /** Incremental pipeline refresh — the capability the reference CLAIMS
   * ("incremental processing", README.md:75) but implements as a full
@@ -55,9 +56,14 @@ import org.apache.spark.sql.functions._
   * is the [[Warehouse]] entry the batch stages write, so a fold and a
   * full rebuild produce the same layout; folded source files are
   * recorded in [[Warehouse.foldLog]], a `core.MarkerLog`. The dims are
-  * published (`Warehouse.Table.publish`, no gate) and the published
-  * tables feed the fact rebuild and the mart refresh, so each dim
-  * aggregate over silver runs once.
+  * published as one unit (`Warehouse.Dims.publish`, no gate, the five
+  * writes at once) and the published tables feed the fact rebuild and
+  * the mart refresh, so each dim aggregate over silver runs once.
+  *
+  * Writes that do not depend on each other overlap (`core.Overlap`):
+  * the silver append runs beside the touched-date collect, which reads
+  * only the cached delta, and the three mart partition refreshes run
+  * at once.
   *
   * Gating: `gate` runs the silver suite over the rows about to be
   * appended (the delta after the key anti-join) before anything is
@@ -115,9 +121,10 @@ object Incremental {
     val touchedDates =
       try {
         Warehouse.silver.gate(gate, fresh)
-        Warehouse.silver.append(fresh, wh)
-        silverDelta.select(col("FLIGHT_DATE"))
-          .distinct().collect().map(_.getDate(0)).toSeq
+        Overlap.beside(Seq(() => Warehouse.silver.append(fresh, wh))) {
+          silverDelta.select(col("FLIGHT_DATE"))
+            .distinct().collect().map(_.getDate(0)).toSeq
+        }
       } finally silverDelta.unpersist(blocking = false)
 
     // dims: tiny outputs, rebuilt from full silver (see object doc)
@@ -171,8 +178,8 @@ object Incremental {
     val monthFacts = Warehouse.fact.read(spark, wh).filter(
       months.map(ym => col("DATE_KEY").between(ym * 100L + 1, ym * 100L + 31))
         .reduce(_ || _))
-    Warehouse.marts.foreach(m =>
-      m.table.overwritePartitions(m.build(monthFacts, dims), wh))
+    Overlap.together(Warehouse.marts.map(m => () =>
+      m.table.overwritePartitions(m.build(monthFacts, dims), wh)))
     months
   }
 }

@@ -48,4 +48,55 @@ class OverlapSpec extends AnyFunSuite {
     assert(e eq boom)
     assert(armThreadsAlive === 0)
   }
+
+  test("beside: the body runs on the calling thread, each arm on its own") {
+    val caller = Thread.currentThread
+    val latch = new CountDownLatch(3)
+    val armThreads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val arm: () => Unit = () => {
+      armThreads.add(Thread.currentThread)
+      latch.countDown()
+      assert(latch.await(30, TimeUnit.SECONDS), "an arm ran without the others")
+    }
+    val on = Overlap.beside(Seq(arm, arm)) {
+      latch.countDown()
+      assert(latch.await(30, TimeUnit.SECONDS), "the body ran without the arms")
+      Thread.currentThread
+    }
+    assert(on eq caller)
+    assert(armThreads.asScala.toSet.size === 2 && !armThreads.contains(caller))
+    assert(armThreads.asScala.forall(_.getName == "overlap-arm"))
+    assert(armThreadsAlive === 0)
+  }
+
+  test("beside: a failing arm reaches the caller, unwrapped, after the body") {
+    val boom = new IllegalStateException("boom")
+    var bodyRan = false
+    val e = intercept[IllegalStateException] {
+      Overlap.beside(Seq(() => (), () => throw boom)) { bodyRan = true }
+    }
+    assert(e eq boom)
+    assert(bodyRan)
+    assert(intercept[IllegalStateException](Overlap.together(Seq(() => throw boom))) eq boom)
+    assert(armThreadsAlive === 0)
+  }
+
+  test("beside: a failing body waits for its arms, uninterrupted, then throws") {
+    val started = new CountDownLatch(1)
+    @volatile var finished, interrupted = false
+    val boom = new IllegalStateException("body")
+    val e = intercept[IllegalStateException] {
+      Overlap.beside(Seq(() => {
+        started.countDown()
+        try Thread.sleep(1000) catch { case _: InterruptedException => interrupted = true }
+        finished = true
+      })) {
+        assert(started.await(30, TimeUnit.SECONDS))
+        throw boom
+      }
+    }
+    assert(e eq boom)
+    assert(finished && !interrupted, "the call returned before its arm ended")
+    assert(armThreadsAlive === 0)
+  }
 }

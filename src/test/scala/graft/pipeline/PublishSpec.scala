@@ -63,6 +63,15 @@ class PublishSpec extends SparkSpec {
     Files.walk(Paths.get(wh)).iterator().asScala.map(_.getFileName.toString)
       .filter(n => n.endsWith("._staged") || n.endsWith("._swap_old")).toSeq
 
+  /** Part-file names of every gold table: the dims, the fact, the marts. */
+  private def goldFiles(wh: String): Map[String, Set[String]] =
+    (Seq(Warehouse.dimDate, Warehouse.dimTime, Warehouse.dimAirline,
+      Warehouse.dimAirport, Warehouse.dimRoute, Warehouse.fact) ++
+      Warehouse.marts.map(_.table)).map { t =>
+      t.name -> Files.walk(Paths.get(t.at(wh))).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("part-")).toSet
+    }.toMap
+
   private def fails(wh: String)(build: => Unit): Unit = {
     intercept[Refused](build)
     assert(leftovers(wh).isEmpty, "a refused build left staged files")
@@ -96,14 +105,19 @@ class PublishSpec extends SparkSpec {
     def febFacts(): Long = Warehouse.fact.read(spark, wh)
       .filter(col("DATE_KEY") >= 20250201).count()
 
+    val january = goldFiles(wh)
+    assert(january.values.forall(_.nonEmpty))
+
     fails(wh)(RunPipeline.runGold(spark, wh, new Refuse("dim_route")))
+    assert(goldFiles(wh) === january, "a gold table changed under a refused dim_route")
     assert(routeFlights() === 12)
     assert(rows(wh, Warehouse.fact) === 12)
 
     val refuseFact = new Refuse("fact_flights")
     fails(wh)(RunPipeline.runGold(spark, wh, refuseFact))
     assert(refuseFact.seen === 24)
-    assert(routeFlights() === 24, "the dims passed and were published")
+    assert(goldFiles(wh) === january, "a gold table changed under a refused fact")
+    assert(routeFlights() === 12, "the dims passed their gates but the unit failed")
     assert(rows(wh, Warehouse.fact) === 12)
     assert(febFacts() === 0)
 
@@ -131,6 +145,34 @@ class PublishSpec extends SparkSpec {
     assert(Incremental.run(spark, wh, feb, airports, carriers) === Seq(202502))
     assert(rows(wh, Warehouse.silver) === 24 && rows(wh, Warehouse.fact) === 24)
     assert(martFlights() === 2 * before._3)
+    assert(leftovers(wh).isEmpty)
+  }
+
+  test("a staged write that throws surfaces its own exception and leaves no staged directory") {
+    val wh = tmp.resolve("wh_write").toString
+    val (kept, other) = (Warehouse.Table("t/kept"), Warehouse.Table("t/other"))
+    kept.publish(spark.range(3).toDF("id"), wh)
+    val before = kept.read(spark, wh).inputFiles.toSet
+    val boom = udf((i: Long) => if (i >= 0) throw new IllegalStateException("boom") else i)
+
+    val e = intercept[Exception] {
+      Warehouse.commit(spark, wh, Warehouse.noGate) { c => Seq(
+        c.stage(kept)(spark.range(5).toDF("id")),
+        c.stage(other)(spark.range(5).select(boom(col("id")).as("id"))))
+      }
+    }
+    assert(e.isInstanceOf[org.apache.spark.SparkException], e)
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(kept.read(spark, wh).inputFiles.toSet === before, "kept was swapped in")
+    assert(!other.exists(spark, wh))
+    assert(leftovers(wh).isEmpty, "a failed write left staged files")
+
+    val thrown = new IllegalStateException("no frame")
+    assert(intercept[IllegalStateException] {
+      Warehouse.commit(spark, wh, Warehouse.noGate)(c => Seq(
+        c.stage(kept)(spark.range(5).toDF("id")), c.stage(other)(throw thrown)))
+    } eq thrown)
+    assert(kept.read(spark, wh).count() === 3)
     assert(leftovers(wh).isEmpty)
   }
 
